@@ -733,8 +733,9 @@ def main() -> None:
         # 32-core timings tripped a spurious suspect_cpus_ignored in r12
         # (the contract was honored: master below proves it). Headline
         # scaling should be read at a SF where compute dominates
-        # (bench_scale.py's growth curves are that measurement).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # (bench_scale.py's growth curves are that measurement). Read
+        # from the live session, the one source of the core count.
+        "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "aqe": spark.conf.get("spark.sql.adaptive.enabled"),

@@ -1,5 +1,7 @@
-"""Distributed connected components over an edge list — the transitive-
-closure step of near-duplicate deduplication.
+"""Distributed graph operators over an edge list: connected components
+(the transitive-closure step of near-duplicate deduplication), PageRank,
+BFS / weighted shortest paths, reachability closure, k-core, HyperBall,
+triangles and the link/clustering statistics built on them.
 
 The reference's dedup guarantees transitivity only within a block
 (per-block ``np.unique``, ``docs/tutorial/ranking/taobao/data/
@@ -9,22 +11,43 @@ a pair) is wrong whenever a non-minimal node is only ever the SMALLER
 member of its edges — e.g. edges (1,3),(2,3): node 2 survives absorption
 but is in component {1,2,3}.
 
-Algorithm: iterative min-label propagation. labels start as own id; each
-round every node takes the min of its own label and its neighbors'
-labels; stop when no label changes. Rounds needed = graph diameter
-(near-dup clusters are shallow; the worst case is a path). Each round is
-one join + one groupBy — both shuffles on the node id, partial-agg
-combined. Lineage is cut with an eager localCheckpoint per round so the
-plan does not grow with iterations.
+Every iterative operator is the same skeleton:
+
+- **Edge prologue.** The caller's edge plan is projected and cut ONCE
+  before anything references it twice, so an expensive edge frame (a
+  verified near-dup pair join, a fuzzy-match verify) is never computed
+  twice. :func:`_sym_edges` gives the directed-or-symmetrized adjacency
+  ``(_n, _m[, _w])`` — cut, union with its reversal, ``distinct``, cut
+  again — used by components, BFS, shortest paths, k-core and HyperBall.
+  :func:`_canonical_edges` gives the undirected simple-graph form
+  ``(a, b)`` with ``a < b`` (self-loops and reversals gone), cut once —
+  used by the triangle, clustering and link-prediction statistics and by
+  star contraction.
+- **Loop.** One state-to-state step per round, each step ending in an
+  eager ``localCheckpoint`` so the plan does not grow with the round
+  count. :func:`_fixed_point` runs the steps until a cheap scalar
+  measure (one aggregate job) stops changing and reports whether it
+  did; each caller decides what exhaustion means (BFS returns, shortest
+  paths checks its ``max_dist`` certificate, the rest raise). Labels and
+  distances only ever decrease, so an exact ``(count, sum)`` pair is a
+  strictly monotone measure (:func:`_count_sum`). Fixed-round operators
+  (PageRank, label propagation, k-core, HyperBall) run a plain ``for``.
+- **Where lineage is cut, and why.** Each cut is a job boundary, and
+  the round-12 A/B notes beside them show that moving one moves wall
+  time: PageRank cuts only every 4th iteration (each rank state has one
+  consumer, so the uncut plan grows linearly and a 3-5 iteration call
+  runs as one job); BFS and shortest paths cut after every single
+  relaxation (two per cut recomputes the shared state); label
+  propagation's cuts are lazy; HyperBall's last round feeds the readout
+  uncut.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "connected_components",
-    "connected_components_fast",
     "connected_components_star",
     "pagerank",
     "personalized_pagerank",
@@ -38,6 +61,68 @@ __all__ = [
     "clustering_coefficient",
     "link_prediction",
 ]
+
+
+def _sym_edges(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    weight: str | None = None,
+    directed: bool = False,
+) -> DataFrame:
+    """Distinct adjacency ``(_n, _m)`` (plus ``_w`` as BIGINT when
+    ``weight`` is given), each input pair in both directions unless
+    ``directed``. The projected edge frame is materialized ONCE before
+    the union references it twice (round-12, guide §1.2; 16 bytes/row,
+    and the eager cut folds into the jobs the caller's loop runs
+    anyway), and the deduped result is materialized again."""
+    cols = [F.col(src).alias("_n"), F.col(dst).alias("_m")]
+    if weight is not None:
+        cols.append(F.col(weight).cast("long").alias("_w"))
+    e = edges.select(*cols).localCheckpoint(eager=True)
+    if not directed:
+        rev = [F.col("_m").alias("_n"), F.col("_n").alias("_m"), *e.columns[2:]]
+        e = e.union(e.select(*rev))
+    return e.distinct().localCheckpoint(eager=True)
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Undirected simple-graph edges ``(a, b)`` with ``a < b``:
+    reversals and duplicates collapse, self-loops drop. Materialized."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _fixed_point(state: DataFrame, step, measure, max_iter: int):
+    """Apply ``step`` up to ``max_iter`` times, stopping as soon as
+    ``measure`` (a driver-side scalar) repeats. Returns ``(state,
+    converged)``."""
+    prev = measure(state)
+    for _ in range(max_iter):
+        state = step(state)
+        cur = measure(state)
+        if cur == prev:
+            return state, True
+        prev = cur
+    return state, False
+
+
+def _count_sum(df: DataFrame, col: str) -> tuple:
+    """Exact, overflow-free ``(count, sum(col))`` in one aggregate — a
+    strictly monotone convergence measure for a state whose values only
+    decrease and whose rows only appear (newly reached nodes move the
+    count)."""
+    return tuple(
+        df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col(col).cast("decimal(38,0)")).alias("s"),
+        ).collect()[0]
+    )
 
 
 def connected_components(
@@ -72,17 +157,7 @@ def connected_components(
     every tentative label is a member of the node's own component, so
     the fixpoint is unchanged). Output is identical in all cases.
     """
-    # materialize the caller's edge plan ONCE before symmetrizing: the
-    # union references it in both directions, so without this cut an
-    # expensive edge frame (a verified near-dup pair join, a fuzzy-match
-    # verify) would be computed twice (round-12, guide §1.2; 16
-    # bytes/row, and the eager cut folds into the jobs the loop runs
-    # anyway)
-    e0 = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m")
-    ).localCheckpoint(eager=True)
-    sym = e0.union(e0.select(F.col("_m").alias("_n"), F.col("_n").alias("_m")))
-    sym = sym.distinct().localCheckpoint(eager=True)
+    sym = _sym_edges(edges, src, dst)
 
     # one-pass tentative labeling: min(node, neighbors(node))
     labels = (
@@ -103,14 +178,6 @@ def connected_components(
     if violations == 0:
         return labels
 
-    def _label_sum(lbl: DataFrame):
-        # labels only ever decrease, so the (exact, overflow-free) sum of
-        # components is a strictly decreasing convergence measure — one
-        # cheap aggregate per round instead of a join-and-compare
-        return lbl.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
     def _propagate(lbl: DataFrame) -> DataFrame:
         nbr_min = (
             sym.join(
@@ -129,49 +196,22 @@ def connected_components(
             ).alias("component"),
         )
 
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
-        # two propagation steps per materialization/convergence check:
-        # the checkpoint + sum-collect are the fixed per-round cost
-        # (each is a full job), and labels are monotone decreasing, so
-        # checking every other step can at most do one redundant round
-        labels = _propagate(_propagate(labels)).localCheckpoint(eager=True)
-        cur_sum = _label_sum(labels)
-        if cur_sum == prev_sum:
-            return labels
-        prev_sum = cur_sum
+    # two propagation steps per materialization/convergence check: the
+    # checkpoint + measure collect are the fixed per-round cost (each is
+    # a full job), and labels are monotone decreasing, so checking every
+    # other step can at most do one redundant round
+    labels, done = _fixed_point(
+        labels,
+        lambda lbl: _propagate(_propagate(lbl)).localCheckpoint(eager=True),
+        lambda lbl: _count_sum(lbl, "component"),
+        max_iter,
+    )
+    if done:
+        return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds of "
         f"two propagations each (effective diameter bound {2 * max_iter})"
     )
-
-
-def connected_components_fast(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """One-pass components with a proven fallback: compute each node's
-    tentative label ``min(node, neighbors(node))``, then CHECK it — if
-    every edge has equal endpoint labels, the labeling is uniform per
-    component and therefore equals the component minimum (the min node
-    m labels itself m), so it is exactly :func:`connected_components`'s
-    answer after ONE join+agg instead of multi-round propagation.
-    Otherwise fall back to the iterative algorithm.
-
-    This is the cheap path for entity-resolution workloads where
-    candidate pairs overwhelmingly form 2-node (original, duplicate)
-    components: the full star-contraction machinery pays a fixed
-    multi-job round cost even when no chains exist. The check is one
-    aggregate (a single driver-side scalar), so correctness never rests
-    on an assumption about the input.
-
-    Round-12: :func:`connected_components` itself now runs this
-    one-pass-then-check plan first and warm-starts its propagation loop
-    from the tentative labels on the rare fallback, so this function is
-    a straight delegate kept for API stability.
-    """
-    return connected_components(edges, src, dst)
 
 
 def _local_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -275,15 +315,8 @@ def connected_components_star(
     # a star forest, so the loop runs ONE verification round instead of
     # ~6 contraction rounds; cc_star_event_chains 9.8 -> 3.0 s).
     # Then canonical (hi, lo) representation, self-loops dropped.
-    e = (
-        _local_contract(edges, src, dst)
-        .select(
-            F.greatest(F.col("_ln"), F.col("_lm")).alias("_hi"),
-            F.least(F.col("_ln"), F.col("_lm")).alias("_lo"),
-        )
-        .filter(F.col("_hi") != F.col("_lo"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = _canonical_edges(_local_contract(edges, src, dst), "_ln", "_lm").select(
+        F.col("b").alias("_hi"), F.col("a").alias("_lo")
     )
     nodes = (
         e.select(F.col("_hi").alias("id"))
@@ -341,14 +374,13 @@ def connected_components_star(
         ).collect()[0]
         return row["n"], row["h"]
 
-    prev = _sig(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        cur = _sig(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
+    e, done = _fixed_point(
+        e,
+        lambda ed: _small_star(_large_star(ed)).localCheckpoint(eager=True),
+        _sig,
+        max_iter,
+    )
+    if not done:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} "
             "large-star/small-star rounds"
@@ -394,48 +426,8 @@ def pagerank(
     formulation; symmetrize the edge list for the strongly-connected
     variant. Distributed analog of the reference's iterative collective
     loops (``distribute/tests/allreduce_test.py``).
-
-    The projected edge frame is materialized ONCE at entry: the degree
-    aggregate, the degree join and the node-set union otherwise each
-    re-evaluate the caller's edge plan (up to 4 evaluations — and the
-    usual symmetrize-by-union caller doubles that), which for the
-    registered consumers is an orders-lineitem join + distinct, or the
-    frequent-bigram graph. 16 bytes/row, and the cut folds into the
-    jobs the prologue runs anyway — same rationale as the edge cut in
-    :func:`connected_components` et al.
     """
-    e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=True)
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    ed = e.join(deg, "_s").localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .union(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
-    for it in range(iterations):
-        contrib = ed.join(
-            ranks.select(F.col("node").alias("_s"), "rank"), "_s"
-        ).select(
-            F.col("_d").alias("node"), F.expr("rank div _deg").alias("_c")
-        )
-        sums = contrib.groupBy("node").agg(F.sum("_c").alias("_sum"))
-        ranks = nodes.join(sums, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(_sum, 0)) div 100")
-            )
-            .cast("long")
-            .alias("rank"),
-        )
-        if (it + 1) % 4 == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return _pagerank(edges, src, dst, None, iterations, damping_pct, scale)
 
 
 def personalized_pagerank(
@@ -456,28 +448,55 @@ def personalized_pagerank(
     adds the ``(100-d)%`` restart only on seed nodes. Same per-round
     shuffle shape (and round-12 every-4th-iteration lineage-cut policy)
     as pagerank; nodes never reached by seed mass keep rank 0 (and are
-    still emitted, making the output spine the full node set). The
-    projected edge frame is materialized once at entry, same as
-    :func:`pagerank` (the prologue otherwise re-evaluates the caller's
-    edge plan up to 4 times)."""
+    still emitted, making the output spine the full node set). With
+    every node seeded it is bit-identical to :func:`pagerank`."""
+    seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
+    return _pagerank(edges, src, dst, seed_nodes, iterations, damping_pct, scale)
+
+
+def _pagerank(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    seed_nodes: DataFrame | None,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+) -> DataFrame:
+    """The exact-integer iteration shared by :func:`pagerank` and
+    :func:`personalized_pagerank`. ``seed_nodes`` (one ``node`` column)
+    selects where restart mass lands; ``None`` seeds every node with a
+    literal 1 and no join, which folds ``seed * base`` to pagerank's
+    plain ``base``.
+
+    The projected edge frame is materialized ONCE at entry: the degree
+    aggregate, the degree join and the node-set union otherwise each
+    re-evaluate the caller's edge plan (up to 4 evaluations — and the
+    usual symmetrize-by-union caller doubles that), which for the
+    registered consumers is an orders-lineitem join + distinct, or the
+    frequent-bigram graph. 16 bytes/row, and the cut folds into the
+    jobs the prologue runs anyway — same rationale as :func:`_sym_edges`.
+    """
     e = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d")
     ).localCheckpoint(eager=True)
     deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
     ed = e.join(deg, "_s").localCheckpoint(eager=True)
-    seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
     nodes = (
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
         .distinct()
-        .join(seed_nodes.select("node", F.lit(1).alias("_seed")), "node", "left")
-        .select("node", F.coalesce("_seed", F.lit(0)).alias("_seed"))
-        .localCheckpoint(eager=True)
     )
+    if seed_nodes is None:
+        seed = F.lit(1)
+    else:
+        nodes = nodes.join(
+            seed_nodes.select("node", F.lit(1).alias("_seed")), "node", "left"
+        ).select("node", F.coalesce("_seed", F.lit(0)).alias("_seed"))
+        seed = F.col("_seed")
+    nodes = nodes.localCheckpoint(eager=True)
     base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select(
-        "node", (F.col("_seed").cast("long") * scale).alias("rank")
-    )
+    ranks = nodes.select("node", (seed.cast("long") * scale).alias("rank"))
     for it in range(iterations):
         contrib = ed.join(
             ranks.select(F.col("node").alias("_s"), "rank"), "_s"
@@ -488,7 +507,7 @@ def personalized_pagerank(
         ranks = nodes.join(sums, "node", "left").select(
             "node",
             (
-                F.col("_seed").cast("long") * base
+                seed.cast("long") * base
                 + F.expr(f"({damping_pct} * coalesce(_sum, 0)) div 100")
             )
             .cast("long")
@@ -521,15 +540,7 @@ def triangle_count(
     of power-law graphs at the cost of one extra degree pass + join.
     The default id order skips that pass (fine for near-uniform degree).
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     if orient_by_degree:
         deg = (
             e.select(F.col("a").alias("n"))
@@ -586,9 +597,9 @@ def label_propagation(
 
     Returns (id, community).
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
+    # not _sym_edges: votes count every parallel edge, so the adjacency
+    # stays a multiset (unionAll, no distinct), and both cuts are lazy.
+    # The edge plan is still cut once before the two-direction union.
     e0 = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=False)
@@ -649,31 +660,27 @@ def transitive_closure(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = paths.count()
-    for _ in range(max_rounds):
-        l = paths.select(
-            F.col("a"), F.col("b").alias("_m"), F.col("d").alias("_dl")
-        )
-        r = paths.select(
-            F.col("a").alias("_m"), F.col("b"), F.col("d").alias("_dr")
-        )
+
+    def _double(p: DataFrame) -> DataFrame:
+        l = p.select(F.col("a"), F.col("b").alias("_m"), F.col("d").alias("_dl"))
+        r = p.select(F.col("a").alias("_m"), F.col("b"), F.col("d").alias("_dr"))
         doubled = l.join(r, "_m").select(
             "a", "b", (F.col("_dl") + F.col("_dr")).alias("d")
         )
-        paths = (
-            paths.unionAll(doubled)
+        return (
+            p.unionAll(doubled)
             .groupBy("a", "b")
             .agg(F.min("d").alias("d"))
             .localCheckpoint(eager=True)
         )
-        m = paths.count()
-        if m == n:
-            return paths.select(
-                F.col("a").alias("ancestor"),
-                F.col("b").alias("descendant"),
-                F.col("d").alias("depth"),
-            )
-        n = m
+
+    paths, done = _fixed_point(paths, _double, lambda p: p.count(), max_rounds)
+    if done:
+        return paths.select(
+            F.col("a").alias("ancestor"),
+            F.col("b").alias("descendant"),
+            F.col("d").alias("depth"),
+        )
     raise RuntimeError(
         f"transitive_closure did not converge in {max_rounds} doubling "
         "rounds — cyclic input or pathological depth"
@@ -697,11 +704,11 @@ def bfs_distances(
     distances to the adjacency list and keeps the per-node minimum —
     the same join + partial-agg shape as :func:`connected_components`,
     with lineage cut per round via ``localCheckpoint``. Distances are
-    monotone non-increasing and bounded below, so the exact integer sum
-    of (dist + 1) is a strictly-decreasing convergence measure; the
-    loop stops early once a round changes nothing. Rounds needed =
-    eccentricity of the seed set, each round one co-partitioned join +
-    agg — never an all-pairs product.
+    monotone non-increasing and bounded below, so the exact (count,
+    sum) pair is a convergence measure; the loop stops early once a
+    round changes nothing. Rounds needed = eccentricity of the seed set,
+    each round one co-partitioned join + agg — never an all-pairs
+    product. Shares its relaxation with :func:`shortest_paths`.
 
     Round-12 note: batching TWO relaxations per checkpoint was tried
     and measured SLOWER (bfs_hops_suppliers 2.7 -> 3.9 s): the relaxed
@@ -709,54 +716,54 @@ def bfs_distances(
     the per-round materialization that shared subtree runs twice per
     relaxation. One relaxation per checkpoint stands.
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    sym = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m")
-    ).localCheckpoint(eager=True)
-    if not directed:
-        sym = sym.union(
-            sym.select(F.col("_m").alias("_n"), F.col("_n").alias("_m"))
-        )
-    sym = sym.distinct().localCheckpoint(eager=True)
+    dist, _ = _min_plus_paths(
+        _sym_edges(edges, src, dst, directed=directed),
+        seeds.select(F.col(seed_col).alias("id")),
+        F.lit(0),
+        F.lit(1),
+        max_hops,
+    )
+    return dist
 
+
+def _min_plus_paths(
+    sym: DataFrame,
+    seeds: DataFrame,
+    zero: Column,
+    cost: Column,
+    max_rounds: int,
+    max_dist: int | None = None,
+):
+    """The relaxation loop shared by :func:`bfs_distances` and
+    :func:`shortest_paths`: seeds start at ``zero``; each round adds the
+    edge ``cost`` to every frontier distance, keeps the per-node minimum
+    (dropping relaxations beyond ``max_dist``) and cuts lineage. The
+    literal types of ``zero`` and ``cost`` fix the ``dist`` type (INT
+    for BFS, BIGINT for weighted paths). Returns ``(dist, converged)``."""
     dist = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .select("id", F.lit(0).alias("dist"))
+        seeds.distinct()
+        .select("id", zero.alias("dist"))
         .localCheckpoint(eager=True)
     )
 
-    def _measure(d: DataFrame):
-        # count is part of the measure: newly-reached nodes must move it
-        return tuple(
-            d.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("dist").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-
-    prev = _measure(dist)
-    for _ in range(max_hops):
+    def _relax(d: DataFrame) -> DataFrame:
         relaxed = (
             sym.join(
-                dist.select(F.col("id").alias("_n"), F.col("dist").alias("_d")), "_n"
+                d.select(F.col("id").alias("_n"), F.col("dist").alias("_d")), "_n"
             )
             .groupBy(F.col("_m").alias("id"))
-            .agg((F.min("_d") + 1).alias("dist"))
+            .agg(F.min(F.col("_d") + cost).alias("dist"))
         )
-        dist = (
-            dist.unionByName(relaxed)
+        if max_dist is not None:
+            relaxed = relaxed.filter(F.col("dist") <= max_dist)
+        return (
+            d.unionByName(relaxed)
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        cur = _measure(dist)
-        if cur == prev:
-            return dist
-        prev = cur
-    return dist
+
+    return _fixed_point(dist, _relax, lambda d: _count_sum(d, "dist"), max_rounds)
 
 
 def shortest_paths(
@@ -804,58 +811,17 @@ def shortest_paths(
     twice per relaxation (exchange reuse does not fire across the
     union/join pair under AQE). One relaxation per checkpoint stands.
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    sym = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m"),
-        F.col(weight).cast("long").alias("_w"),
-    ).localCheckpoint(eager=True)
-    if not directed:
-        sym = sym.union(
-            sym.select(
-                F.col("_m").alias("_n"), F.col("_n").alias("_m"), "_w"
-            )
-        )
-    sym = sym.distinct().localCheckpoint(eager=True)
-
-    dist = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
+    sym = _sym_edges(edges, src, dst, weight, directed)
+    dist, done = _min_plus_paths(
+        sym,
+        seeds.select(F.col(seed_col).alias("id")),
+        F.lit(0).cast("long"),
+        F.col("_w"),
+        max_rounds,
+        max_dist,
     )
-
-    def _measure(d: DataFrame):
-        return tuple(
-            d.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("dist").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-
-    prev = _measure(dist)
-    for _ in range(max_rounds):
-        relaxed = (
-            sym.join(
-                dist.select(F.col("id").alias("_n"), F.col("dist").alias("_d")),
-                "_n",
-            )
-            .groupBy(F.col("_m").alias("id"))
-            .agg(F.min(F.col("_d") + F.col("_w")).alias("dist"))
-        )
-        if max_dist is not None:
-            relaxed = relaxed.filter(F.col("dist") <= max_dist)
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        cur = _measure(dist)
-        if cur == prev:
-            return dist
-        prev = cur
+    if done:
+        return dist
     if max_dist is not None:
         # Exhausted max_rounds without a fixed point. The result is
         # still EXACT iff every distance-<=max_dist path fits in the
@@ -899,17 +865,7 @@ def kcore(
     (all shuffles keyed on node ids), lineage cut per round. Never
     materializes anything bigger than the (shrinking) edge list.
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    e0 = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m")
-    ).localCheckpoint(eager=True)
-    sym = (
-        e0.union(e0.select(F.col("_m").alias("_n"), F.col("_n").alias("_m")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(edges, src, dst)
     for _ in range(rounds):
         keep = (
             sym.groupBy("_n")
@@ -970,21 +926,10 @@ def hyperball_reach(
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    sym = edges.select(
-        F.col(src).alias("_a"), F.col(dst).alias("_b")
-    ).localCheckpoint(eager=True)
-    if not directed:
-        sym = sym.union(
-            sym.select(F.col("_b").alias("_a"), F.col("_a").alias("_b"))
-        )
-    sym = sym.distinct().localCheckpoint(eager=True)
-
+    sym = _sym_edges(edges, src, dst, directed=directed)
     nodes = (
-        sym.select(F.col("_a").alias("id"))
-        .union(sym.select(F.col("_b").alias("id")))
+        sym.select(F.col("_n").alias("id"))
+        .union(sym.select(F.col("_m").alias("id")))
         .distinct()
     )
     # one-hot init: node's own (reg, rho) as a single set bit. (reg,
@@ -1023,8 +968,8 @@ def hyperball_reach(
 
     bcols = [f"_b{j}" for j in range(n_longs)]
     for r in range(k):
-        prop = sym.join(state.withColumnRenamed("id", "_a"), "_a").select(
-            F.col("_b").alias("id"), *bcols
+        prop = sym.join(state.withColumnRenamed("id", "_n"), "_n").select(
+            F.col("_m").alias("id"), *bcols
         )
         state = (
             state.unionByName(prop)
@@ -1111,13 +1056,7 @@ def clustering_coefficient(
     node-keyed aggs — no cross join, no per-node neighbor lists
     materialized. Returns (id, degree, triangles, lcc).
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
@@ -1181,13 +1120,7 @@ def link_prediction(
     Returns (id_a, id_b, common, jaccard, pref_attach) for non-edges
     with ``common >= min_common``.
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     adj = e.select(F.col("a").alias("z"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("z"), F.col("a").alias("n"))
     )

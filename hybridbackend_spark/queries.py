@@ -9338,12 +9338,12 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     name (ties lexicographic), plurality segment (ties lexicographic),
     max balance. The oracle brute-forces the full distance matrix and a
     recursive-CTE closure, so clusters AND survivorship are hash-proven.
-    Composition of `joins.fuzzy_join` + `graph.connected_components_fast`
-    — the candidate pairs here form 2-node components, so the one-pass
+    Composition of `joins.fuzzy_join` + `graph.connected_components`
+    — the candidate pairs here form 2-node components, so its one-pass
     min-neighbor labeling (with its executable all-edges-consistent
-    check, falling back to iterative CC if chains appear) replaces the
+    check, falling back to iteration if chains appear) replaces the
     fixed multi-round propagation cost."""
-    from .operators.graph import connected_components_fast
+    from .operators.graph import connected_components
     from .operators.joins import fuzzy_join
 
     c = _t(spark, sf_dir, "customer")
@@ -9363,7 +9363,7 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         a, b, "name_a", "name_b", max_distance=1,
         left_id="rid_a", right_id="rid_b",
     ).select("rid_a", "rid_b")
-    comp = connected_components_fast(edges, "rid_a", "rid_b")
+    comp = connected_components(edges, "rid_a", "rid_b")
 
     recs = c.select(
         F.col("c_custkey").alias("rid"),

@@ -18,7 +18,6 @@ __all__ = [
     "get_session",
     "DEFAULT_CONF",
     "cluster_conf",
-    "streaming_state_conf",
     "register_tables",
 ]
 
@@ -133,66 +132,6 @@ def cluster_conf(
         "spark.shuffle.spill.compress": "true",
         "spark.executor.memory": f"{executor_mem_gb}g",
         "spark.memory.fraction": "0.6",
-    }
-
-
-def streaming_state_conf(
-    state_bytes_total: int,
-    executor_mem_gb: int = 32,
-    cores_per_executor: int = 8,
-    shuffle_partitions: int | None = None,
-) -> dict[str, str]:
-    """State-store provider conf keyed on the MEASURED state footprint —
-    never on core count (round-13, VERDICT item 5).
-
-    The decision input is the number the bench already records per
-    stream shape (``BENCH.json stream_cost_split``: ``state_rows_final``
-    / ``state_mem_peak_mb`` plus an HDFS-vs-RocksDB steady-s/batch A/B).
-    The measured rule it encodes:
-
-    - **HDFS-backed in-memory provider (Spark's default) wins while
-      state fits on-heap.** Every captured shape (state 0.01 - 67 MB)
-      reads faster on the default: 0.31-1.64 s/batch steady vs
-      0.45-2.40 on RocksDB — at small state the JNI + local-disk round
-      trip is pure overhead. So below the memory bound this returns
-      ``{}`` and the default stands.
-    - **RocksDB is the only correct choice once state stops fitting.**
-      The in-memory provider keeps every loaded partition's state
-      on-heap (plus one snapshot); when the per-executor share of total
-      state approaches the executor's storage headroom the job dies in
-      GC/OOM rather than slowing down gracefully. RocksDB keeps state on
-      local disk with a bounded block cache. The threshold uses the
-      storage half of the unified memory model (~0.6 * 0.5 = 30% of
-      heap) across the partitions one executor hosts concurrently
-      (``cores_per_executor`` of ``shuffle_partitions``): above it this
-      returns the RocksDB provider plus changelog checkpointing (commit
-      uploads the per-batch delta, not a full snapshot).
-
-    Local sessions (tiny state) therefore keep the measured winner; a
-    100 TB deployment with e.g. 500 GB of join/session state flips to
-    RocksDB by the same arithmetic instead of by folklore.
-    """
-    parts = int(shuffle_partitions or cores_per_executor)
-    per_part = state_bytes_total / max(1, parts)
-    resident = per_part * cores_per_executor
-    headroom = executor_mem_gb * (1 << 30) * 0.6 * 0.5
-    if resident <= headroom:
-        return {}
-    return {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider"
-        ),
-        # upload the per-batch changelog instead of a full snapshot at
-        # every commit; snapshots happen in the background maintenance
-        # thread (big-state commit latency win; no semantic change)
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
-        ".enabled": "true",
-        # bound the off-heap block cache so state >> memory cannot evict
-        # the executor (RocksDB spills to local disk past this)
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": (
-            "true"
-        ),
     }
 
 

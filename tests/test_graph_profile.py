@@ -3,7 +3,7 @@ profiling."""
 
 from pyspark.sql import functions as F
 
-from hybridbackend_spark.operators.graph import pagerank
+from hybridbackend_spark.operators.graph import pagerank, personalized_pagerank
 from hybridbackend_spark.operators.profile import profile_columns
 
 
@@ -133,39 +133,53 @@ def test_pagerank_random_graphs_match_reference(spark):
         assert got == _expected_pagerank(
             edges, iterations=4, damping_pct=80
         ), f"seed {seed}"
+        # personalized PageRank with every node seeded is pagerank, bit
+        # for bit
+        nodes = spark.createDataFrame(
+            [(n,) for n in {x for ed in edges for x in ed}], ["id"]
+        )
+        ppr = {
+            r["node"]: r["rank"]
+            for r in personalized_pagerank(
+                df, nodes, iterations=4, damping_pct=80
+            ).collect()
+        }
+        assert ppr == got, f"seed {seed}"
 
 
-def test_connected_components_fast_pairwise_one_pass(spark):
-    """Pure 2-node components: the one-pass min-neighbor labeling is
-    exact and must match the iterative algorithm."""
-    from hybridbackend_spark.operators.graph import (
-        connected_components,
-        connected_components_fast,
-    )
+def test_connected_components_pairwise_one_pass(spark):
+    """Pure 2-node components: the one-pass min-neighbor labeling passes
+    its check and is the answer, with no propagation round."""
+    from hybridbackend_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 11), (2, 12), (3, 13), (40, 4)], "id_a long, id_b long"
     )
-    fast = {(r.id, r.component)
-            for r in connected_components_fast(edges).collect()}
-    slow = {(r.id, r.component)
-            for r in connected_components(edges).collect()}
-    assert fast == slow
-    assert (11, 1) in fast and (40, 4) in fast
+    # max_iter=0 leaves no propagation round: only the one-pass path
+    # can return, so this also checks that the path was taken
+    got = {(r.id, r.component)
+           for r in connected_components(edges, max_iter=0).collect()}
+    assert got == {(1, 1), (11, 1), (2, 2), (12, 2), (3, 3), (13, 3),
+                   (4, 4), (40, 4)}
 
 
-def test_connected_components_fast_chain_falls_back(spark):
+def test_connected_components_chain_falls_back(spark):
     """A 4-node chain breaks the one-pass labeling (label(4)=3 but
     label(3)=2): the consistency check must detect it and fall back to
-    the full algorithm, labeling the whole chain 1."""
-    from hybridbackend_spark.operators.graph import connected_components_fast
+    propagation, labeling the whole chain 1."""
+    from hybridbackend_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (9, 19)], "id_a long, id_b long"
     )
     got = {(r.id, r.component)
-           for r in connected_components_fast(edges).collect()}
+           for r in connected_components(edges).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (9, 9), (19, 9)}
+    # with no propagation round the fallback has nothing to run
+    import pytest
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iter=0)
 
 
 def test_star_contraction_matches_propagation_labels(spark):
@@ -399,9 +413,13 @@ def test_shortest_paths_matches_bfs_on_unit_weights(spark):
         "id_a long, id_b long, w long",
     )
     seeds = spark.createDataFrame([(0,)], "id long")
-    sp = {r.id: r.dist for r in shortest_paths(edges, seeds).collect()}
-    bf = {r.id: r.dist
-          for r in bfs_distances(edges, seeds, max_hops=10).collect()}
+    sp_df = shortest_paths(edges, seeds)
+    bf_df = bfs_distances(edges, seeds, max_hops=10)
+    # the shared relaxation keeps each declared dist type
+    assert sp_df.schema["dist"].dataType.simpleString() == "bigint"
+    assert bf_df.schema["dist"].dataType.simpleString() == "int"
+    sp = {r.id: r.dist for r in sp_df.collect()}
+    bf = {r.id: r.dist for r in bf_df.collect()}
     assert sp == bf
 
 

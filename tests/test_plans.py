@@ -645,49 +645,6 @@ def test_cluster_conf_scales_with_size_and_cores():
     assert big["spark.sql.adaptive.enabled"] == "true"
 
 
-def test_streaming_state_conf_keyed_on_state_size():
-    """Provider selection is keyed on MEASURED state bytes, never core
-    count: tiny state (every locally captured shape) keeps the measured
-    winner (default HDFS-backed -> empty conf); state past the
-    executor's storage headroom flips to RocksDB + changelog
-    checkpointing. Same state, more cores must not flip the decision
-    back to default."""
-    from hybridbackend_spark.session import streaming_state_conf
-
-    # the largest locally measured shape (stream_session_user, ~67 MB)
-    assert streaming_state_conf(67 << 20, executor_mem_gb=32) == {}
-    # 2 TB of join/session state across 1000 partitions on 32 GB
-    # executors: 2 GB/partition x 8 resident = 16 GB > the ~9.6 GB
-    # storage headroom (32 GB x 0.6 x 0.5) -> RocksDB
-    big = streaming_state_conf(
-        2 << 40, executor_mem_gb=32, cores_per_executor=8,
-        shuffle_partitions=1000,
-    )
-    assert "RocksDBStateStoreProvider" in big.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    assert (
-        big[
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        ]
-        == "true"
-    )
-    # keying on state, not cores: huge state picks RocksDB across core
-    # counts; tiny state with many cores still picks default
-    assert "RocksDBStateStoreProvider" in streaming_state_conf(
-        4 << 40, executor_mem_gb=32, cores_per_executor=4,
-        shuffle_partitions=1000,
-    ).get("spark.sql.streaming.stateStore.providerClass", "")
-    assert (
-        streaming_state_conf(
-            1 << 20, executor_mem_gb=32, cores_per_executor=64,
-            shuffle_partitions=64,
-        )
-        == {}
-    )
-
-
 def test_sort_key_advisor_exact_run_bound(spark):
     """min_runs equals the hand-computed sum of per-group distincts, and
     sorting by the better candidate genuinely produces fewer runs."""
