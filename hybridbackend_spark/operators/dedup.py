@@ -23,7 +23,7 @@ affine maps (standard MinHash construction, cf. Broder '97).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -760,6 +760,143 @@ def prefix_setsim_join(
     )
 
 
+def _md5_shards(
+    cells: DataFrame, cell: str, id_col: str, max_cell_rows: int | None
+) -> DataFrame:
+    """Add ``_shard`` to rows keyed by ``cell``: a cell larger than
+    ``max_cell_rows`` rows is sub-split into ``ceil(|cell| /
+    max_cell_rows)`` shards by a deterministic md5 hash of the id (so an
+    oracle can replay the split bit-for-bit at any scale); smaller
+    cells, and every cell when ``max_cell_rows`` is None, are shard 0.
+    Comparing pairs only within a shard bounds the work at
+    ``max_cell_rows / 2`` pairs per row and probed cell, LINEAR in n
+    where a fixed cell count makes it O(n^2 / k); pairs across shards of
+    an oversized cell go uncompared."""
+    if max_cell_rows is None:
+        return cells.withColumn("_shard", F.lit(0))
+    if max_cell_rows < 1:
+        raise ValueError("max_cell_rows must be >= 1")
+    counts = cells.groupBy(cell).agg(F.count(F.lit(1)).alias("_cn"))
+    return (
+        cells.join(F.broadcast(counts), cell)
+        .withColumn(
+            "_nsh",
+            F.expr(
+                f"CAST((_cn + {max_cell_rows - 1}) DIV {max_cell_rows} "
+                "AS INT)"
+            ),
+        )
+        .withColumn(
+            "_shard",
+            F.pmod(
+                F.conv(
+                    F.substring(F.md5(F.col(id_col).cast("string")), 1, 4),
+                    16,
+                    10,
+                ).cast("int"),
+                F.col("_nsh"),
+            ),
+        )
+        .drop("_cn", "_nsh")
+    )
+
+
+def _int8_sketch(vecs: DataFrame, *keep: str) -> DataFrame:
+    """The int8 sketch ``(*keep, _s, _q)`` of ``(_v, _nrm)`` rows,
+    checkpointed: the UNIT vector quantized to int8 bytes (8x smaller
+    than doubles) plus its per-vector scale ``_s = max|u|``.
+
+    NaN-proof guards throughout: Spark evaluates NaN > 0 as TRUE (NaN
+    orders above everything), and round(NaN).cast("byte") ABORTS under
+    ANSI. Zero/NaN norms quantize to all-zero and take
+    :func:`_int8_bound`'s always-pass margin, so a corrupt embedding
+    falls through to the exact verify (which NULLs its cosine): it is
+    never pruned, never accepted early, and never kills the job."""
+    nrm_ok = (F.col("_nrm") > 0) & ~F.isnan(F.col("_nrm"))
+    u = F.transform(
+        F.col("_v"),
+        lambda x: F.when(nrm_ok, x / F.col("_nrm")).otherwise(F.lit(0.0)),
+    )
+    lite = vecs.withColumn("_u", u).withColumn(
+        "_s", F.array_max(F.transform(F.col("_u"), F.abs))
+    )
+    q = F.when(
+        (F.col("_s") > 0) & ~F.isnan(F.col("_s")),
+        F.transform(
+            F.col("_u"),
+            lambda x: F.round(x / F.col("_s") * 127).cast("byte"),
+        ),
+    ).otherwise(F.transform(F.col("_u"), lambda x: F.lit(0).cast("byte")))
+    # materialize the per-id sketch ONCE (round-12, found via the
+    # bucketed near-dup arm: 6x wall regression without it): projection
+    # collapse inlines the _s subtree (array_max over the unit vector)
+    # into q's per-element lambda — a dim^2 blowup per row — and
+    # re-evaluates the sketch on both sides of the pair join. Bounded:
+    # n x (dim + ~40) bytes.
+    return lite.select(*keep, "_s", q.alias("_q")).localCheckpoint(eager=True)
+
+
+def _int8_bound(
+    qa: Column, qb: Column, sa: Column, sb: Column
+) -> tuple[Column, Column]:
+    """``(approx, margin)`` for two :func:`_int8_sketch` rows: the
+    quantized cosine and a PROVABLE bound on its error. With
+    u = v/|v|, s = max|u| and per-element error <= s/254,
+    |cos - approx| <= sqrt(d)*(s_a + s_b)/254 + d*s_a*s_b/254^2, so
+    keeping ``approx >= threshold - margin`` can never drop a pair the
+    exact verify would keep."""
+    dq = F.aggregate(
+        F.zip_with(qa, qb, lambda x, y: x.cast("int") * y.cast("int")),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    ).cast("double")
+    d = F.size(qa).cast("double")
+    approx = dq * sa * sb / F.lit(127.0 * 127.0)
+    # zero/NaN-scale rows always pass to the exact verify, which alone
+    # decides their fate (NULL cosine -> dropped): cos is in [-1, 1], so
+    # margin 2 is an always-pass, and a NaN approx lands there via the
+    # isnan() terms — Spark's NaN-orders-above-all comparisons can't
+    # sneak a corrupt pair past
+    margin = F.when(
+        (sa == 0) | (sb == 0) | F.isnan(sa) | F.isnan(sb), F.lit(2.0)
+    ).otherwise(
+        F.sqrt(d) * (sa + sb) / F.lit(254.0)
+        + d * sa * sb / F.lit(254.0 * 254.0)
+        # the exact verify rounds cos to 6 dp half-up, so a pair at
+        # cos = threshold - 5e-7 still rounds up to threshold and is
+        # KEPT there — the filter's slack must cover that too or the
+        # superset claim has a 5e-7 hole
+        + F.lit(5e-7)
+    )
+    return approx, margin
+
+
+def _exact_cos(pairs: DataFrame, vecs: DataFrame, id_col: str) -> DataFrame:
+    """``(id_a, id_b, cos)``: ``(id_a, id_b)`` pairs joined on both ids
+    to the ``(_v, _nrm)`` rows of ``vecs`` (each vector shipped once
+    per pair, keyed by id) and scored with the 6-dp guarded cosine."""
+    from .similarity import _cos6
+
+    def side(s: str) -> DataFrame:
+        return vecs.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("_v").alias(f"_v{s}"),
+            F.col("_nrm").alias(f"_n{s}"),
+        )
+
+    return (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            _cos6(
+                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
+            ).alias("cos"),
+        )
+    )
+
+
 def cosine_near_dup_pairs(
     df: DataFrame,
     vec_col: str,
@@ -843,8 +980,9 @@ def cosine_near_dup_pairs(
     cells stay under the cap when recall matters; ``None`` disables.
     """
     from .similarity import (
+        _as_double_vec,
+        _cos6,
         _resolve_ann_strategy,
-        dot,
         l2_norm,
         random_hyperplane_key,
     )
@@ -854,13 +992,12 @@ def cosine_near_dup_pairs(
     # norm precomputed once per vector (bit-identical to the inline form,
     # which would recompute it per candidate pair)
     v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        F.col(id_col), _as_double_vec(vec_col).alias("_v")
     ).withColumn("_nrm", l2_norm(F.col("_v")))
     if bucket_bits > 0:
         resolved = _resolve_ann_strategy(blocking, dim)
         if resolved == "ivf":
-            from .similarity import _argmin_pairs_sql, kmeans_train
+            from .similarity import _ivf_probe, kmeans_train
 
             if centroids is None:
                 centroids = kmeans_train(
@@ -870,51 +1007,11 @@ def cosine_near_dup_pairs(
                     iters=kmeans_iters,
                     id_col=id_col,
                 )
-            # n_probe nearest cells per vector, rendered as ONE parsed
-            # SQL expression (the round-12 change-21 pattern — zero
-            # py4j round trips for the k x dim centroid literals)
-            probe = F.expr(
-                "transform(slice(array_sort("
-                f"{_argmin_pairs_sql('`_v`', centroids)}"
-                f"), 1, {int(n_probe)}), s -> s.i)"
-            )
             keyed = v.select(
-                F.col(id_col), F.explode(probe).alias("_bkt")
+                F.col(id_col),
+                F.explode(_ivf_probe("`_v`", centroids, n_probe)).alias("_bkt"),
             )
-            if max_cell_rows is not None:
-                if max_cell_rows < 1:
-                    raise ValueError("max_cell_rows must be >= 1")
-                counts = keyed.groupBy("_bkt").agg(
-                    F.count(F.lit(1)).alias("_cn")
-                )
-                keyed = (
-                    keyed.join(F.broadcast(counts), "_bkt")
-                    .withColumn(
-                        "_nsh",
-                        F.expr(
-                            f"CAST((_cn + {max_cell_rows - 1}) DIV "
-                            f"{max_cell_rows} AS INT)"
-                        ),
-                    )
-                    .withColumn(
-                        "_sh",
-                        F.pmod(
-                            F.conv(
-                                F.substring(
-                                    F.md5(F.col(id_col).cast("string")),
-                                    1,
-                                    4,
-                                ),
-                                16,
-                                10,
-                            ).cast("int"),
-                            F.col("_nsh"),
-                        ),
-                    )
-                    .select(F.col(id_col), "_bkt", "_sh")
-                )
-            else:
-                keyed = keyed.withColumn("_sh", F.lit(0))
+            keyed = _md5_shards(keyed, "_bkt", id_col, max_cell_rows)
         else:
             keys = [
                 random_hyperplane_key("_v", bucket_bits, seed + t, dim)
@@ -927,7 +1024,7 @@ def cosine_near_dup_pairs(
         a, b = keyed.alias("a"), keyed.alias("b")
         same_block = F.col("a._bkt") == F.col("b._bkt")
         if resolved == "ivf":
-            same_block = same_block & (F.col("a._sh") == F.col("b._sh"))
+            same_block = same_block & (F.col("a._shard") == F.col("b._shard"))
         else:
             same_block = same_block & (F.col("a._tbl") == F.col("b._tbl"))
         pairs = (
@@ -942,39 +1039,9 @@ def cosine_near_dup_pairs(
             .distinct()
         )
         if use_int8:
-            # int8 sketch per id: the UNIT vector quantized to bytes
-            # plus its per-vector scale — identical construction and
-            # guards to _semantic_dedup_cells (zero/NaN norms quantize
-            # to all-zero and take the always-pass margin, so corrupt
-            # vectors fall through to the exact verify, which NULLs
-            # their cosine; they can never be pruned OR pass early)
-            nrm_ok = (F.col("_nrm") > 0) & ~F.isnan(F.col("_nrm"))
-            u = F.transform(
-                F.col("_v"),
-                lambda x: F.when(nrm_ok, x / F.col("_nrm")).otherwise(
-                    F.lit(0.0)
-                ),
-            )
-            lite = v.withColumn("_u", u).withColumn(
-                "_s", F.array_max(F.transform(F.col("_u"), F.abs))
-            )
-            q8 = F.when(
-                (F.col("_s") > 0) & ~F.isnan(F.col("_s")),
-                F.transform(
-                    F.col("_u"),
-                    lambda x: F.round(x / F.col("_s") * 127).cast("byte"),
-                ),
-            ).otherwise(
-                F.transform(F.col("_u"), lambda x: F.lit(0).cast("byte"))
-            )
-            # materialize the per-id sketch ONCE: projection collapse
-            # would otherwise inline the _s subtree (array_max over the
-            # unit vector) into q8's per-element lambda — a dim^2 blowup
-            # per row — and re-evaluate the whole sketch on both sides
-            # of the pair join. Bounded: n x (dim + 16) bytes.
-            lite = lite.select(
-                F.col(id_col), F.col("_s"), q8.alias("_q")
-            ).localCheckpoint(eager=True)
+            # prune with the _int8_sketch of each side before the exact
+            # re-join ships the double vectors
+            lite = _int8_sketch(v, id_col)
             sk = pairs.join(
                 lite.select(
                     F.col(id_col).alias("id_a"),
@@ -990,65 +1057,13 @@ def cosine_near_dup_pairs(
                 ),
                 "id_b",
             )
-            dq = F.aggregate(
-                F.zip_with(
-                    F.col("_qa"),
-                    F.col("_qb"),
-                    lambda x, y: x.cast("int") * y.cast("int"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).cast("double")
-            sa, sb = F.col("_sa"), F.col("_sb")
-            d_w = F.size(F.col("_qa")).cast("double")
-            approx = dq * sa * sb / F.lit(127.0 * 127.0)
-            # margin covers the quantization error bound plus the
-            # exact verify's 6-dp half-up rounding slack (5e-7); the
-            # 2.0 branch makes zero/NaN-scale rows an always-pass
-            # (cos is in [-1, 1]) — NaN approx also lands there via
-            # the isnan() terms, so Spark's NaN-orders-above-all
-            # comparison semantics can't sneak a corrupt pair past
-            margin = F.when(
-                (sa == 0) | (sb == 0) | F.isnan(sa) | F.isnan(sb),
-                F.lit(2.0),
-            ).otherwise(
-                F.sqrt(d_w) * (sa + sb) / F.lit(254.0)
-                + d_w * sa * sb / F.lit(254.0 * 254.0)
-                + F.lit(5e-7)
+            approx, margin = _int8_bound(
+                F.col("_qa"), F.col("_qb"), F.col("_sa"), F.col("_sb")
             )
             pairs = sk.filter(approx >= F.lit(threshold) - margin).select(
                 "id_a", "id_b"
             )
-        joined = pairs.join(
-            v.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_v").alias("_va"),
-                F.col("_nrm").alias("_na"),
-            ),
-            "id_a",
-        ).join(
-            v.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_v").alias("_vb"),
-                F.col("_nrm").alias("_nb"),
-            ),
-            "id_b",
-        )
-        scored = joined.select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.when(
-                    F.col("_na") * F.col("_nb") != 0,
-                    F.nanvl(
-                        dot(F.col("_va"), F.col("_vb"))
-                        / (F.col("_na") * F.col("_nb")),
-                        F.lit(None).cast("double"),
-                    ),
-                ),
-                6,
-            ).alias("cos"),
-        )
+        scored = _exact_cos(pairs, v, id_col)
     else:
         a, b = v.alias("a"), v.alias("b")
         scored = (
@@ -1057,16 +1072,8 @@ def cosine_near_dup_pairs(
             .select(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
-                F.round(
-                    F.when(
-                        F.col("a._nrm") * F.col("b._nrm") != 0,
-                        F.nanvl(
-                            dot(F.col("a._v"), F.col("b._v"))
-                            / (F.col("a._nrm") * F.col("b._nrm")),
-                            F.lit(None).cast("double"),
-                        ),
-                    ),
-                    6,
+                _cos6(
+                    F.col("a._v"), F.col("b._v"), F.col("a._nrm"), F.col("b._nrm")
                 ).alias("cos"),
             )
         )
@@ -1287,16 +1294,16 @@ def semantic_dedup(
     """
     from .similarity import ivf_assign
 
-    use_int8 = _resolve_int8_filter(
-        int8_filter, len(centroids[0]) if centroids else 0
-    )
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    cells = ivf_assign(v, "_v", centroids, "_cell")
     return _semantic_dedup_cells(
-        cells, id_col, threshold, n_blocks, max_cell_rows, use_int8
+        df,
+        vec_col,
+        id_col,
+        lambda v: ivf_assign(v, "_v", centroids, "_cell"),
+        len(centroids[0]) if centroids else 0,
+        threshold,
+        n_blocks,
+        max_cell_rows,
+        int8_filter,
     )
 
 
@@ -1322,69 +1329,49 @@ def semantic_dedup_tree(
     including the ``int8_filter="auto"`` vector-width default."""
     from .similarity import ivf_assign_tree
 
-    use_int8 = _resolve_int8_filter(
-        int8_filter, len(coarse[0]) if coarse else 0
-    )
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    cells = ivf_assign_tree(v, "_v", coarse, sub, "_cell")
     return _semantic_dedup_cells(
-        cells, id_col, threshold, n_blocks, max_cell_rows, use_int8
+        df,
+        vec_col,
+        id_col,
+        lambda v: ivf_assign_tree(v, "_v", coarse, sub, "_cell"),
+        len(coarse[0]) if coarse else 0,
+        threshold,
+        n_blocks,
+        max_cell_rows,
+        int8_filter,
     )
 
 
 def _semantic_dedup_cells(
-    assigned: DataFrame,
+    df: DataFrame,
+    vec_col: str,
     id_col: str,
+    assign: Callable[[DataFrame], DataFrame],
+    dim: int,
     threshold: float,
     n_blocks: int,
     max_cell_rows: int | None,
-    int8_filter: bool = False,
+    int8_filter: bool | str,
 ) -> DataFrame:
-    """Shared in-cell near-dup pipeline over (id, _v, _cell) rows: hash
-    sub-blocks, optional shard cap, blocked self-join, cosine verify,
-    CC closure, smallest-id survivors (see :func:`semantic_dedup`)."""
+    """Shared in-cell near-dup pipeline: cast vectors to doubles, add
+    ``_cell`` to the ``(id, _v)`` rows with ``assign``, hash sub-blocks,
+    optional shard cap, blocked self-join, cosine verify, CC closure,
+    smallest-id survivors (see :func:`semantic_dedup`). ``dim`` resolves
+    ``int8_filter="auto"``."""
     from .graph import connected_components
-    from .similarity import dot, l2_norm
+    from .similarity import _as_double_vec, _cos6, l2_norm
 
+    use_int8 = _resolve_int8_filter(int8_filter, dim)
+    v = df.select(F.col(id_col), _as_double_vec(vec_col).alias("_v"))
     cells = (
-        assigned
+        assign(v)
         .withColumn("_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)))
         # norm precomputed ONCE per vector (identical double to the
         # inline form, so scores are unchanged); the pair join would
         # otherwise recompute it per candidate pair
         .withColumn("_nrm", l2_norm(F.col("_v")))
     )
-    if max_cell_rows is not None:
-        if max_cell_rows < 1:
-            raise ValueError("max_cell_rows must be >= 1")
-        counts = cells.groupBy("_cell").agg(F.count(F.lit(1)).alias("_cn"))
-        cells = (
-            cells.join(F.broadcast(counts), "_cell")
-            .withColumn(
-                "_nsh",
-                F.expr(
-                    f"CAST((_cn + {max_cell_rows - 1}) DIV {max_cell_rows} "
-                    "AS INT)"
-                ),
-            )
-            .withColumn(
-                "_shard",
-                F.pmod(
-                    F.conv(
-                        F.substring(F.md5(F.col(id_col).cast("string")), 1, 4),
-                        16,
-                        10,
-                    ).cast("int"),
-                    F.col("_nsh"),
-                ),
-            )
-            .drop("_cn", "_nsh")
-        )
-    else:
-        cells = cells.withColumn("_shard", F.lit(0))
+    cells = _md5_shards(cells, "_cell", id_col, max_cell_rows)
     cells = cells.localCheckpoint(eager=True)
 
     def blocked_pairs(side: DataFrame):
@@ -1407,99 +1394,26 @@ def _semantic_dedup_cells(
             ),
         )
 
-    # ANSI-guarded cosine: a zero vector (norm 0) yields NULL, so its
-    # pairs drop at the >= threshold filter instead of aborting the job
-    # with DIVIDE_BY_ZERO (Spark 4.1 ANSI raises even on double
-    # division) — and matches the oracle's NaN-compares-false semantics
-    def safe_cos(dp, na, nb):
-        den = na * nb
-        # NaN -> NULL too: Spark orders NaN above all values, so an
-        # unguarded NaN cosine would pass every >= threshold filter
-        return F.round(F.when(den != 0, F.nanvl(dp / den, F.lit(None).cast("double"))), 6)
-
-    exact_cos = safe_cos(
-        dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
+    pair_ids = (
+        F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
+        F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
     )
-    if int8_filter:
+    if use_int8:
         # int8 candidate pass: the blocked self-join ships every vector
-        # ~n_blocks/2 times, so it shuffles sketches instead — the UNIT
-        # vector quantized to int8 bytes (8x smaller than doubles) plus
-        # its per-vector quantization scale. The approximate filter is a
-        # PROVABLE superset of the true pairs: with u = v/|v|, s = max|u|
-        # and per-element error <= s/254, |cos - approx| <=
-        # sqrt(d)*(s_a + s_b)/254 + d*s_a*s_b/254^2; margin adds the
-        # verify's 6-dp rounding slack (5e-7) on top, so keeping
-        # approx >= threshold - margin can never drop a pair the exact
-        # path would keep.
-        # Survivors re-join the exact doubles (keyed by id — shipped
-        # ONCE, not B/2 times) and pass the IDENTICAL rounded-cosine
-        # verify, so the output is bit-for-bit the exact path's.
-        # NaN-proof guards throughout: Spark evaluates NaN > 0 as TRUE
-        # (NaN orders above everything), and round(NaN).cast("byte")
-        # ABORTS under ANSI — a corrupt embedding must fall through to
-        # the exact verify (which NULLs it), never kill the job.
-        nrm_ok = (F.col("_nrm") > 0) & ~F.isnan(F.col("_nrm"))
-        u = F.transform(
-            F.col("_v"),
-            lambda x: F.when(nrm_ok, x / F.col("_nrm"))
-            .otherwise(F.lit(0.0)),
-        )
-        lite = cells.withColumn("_u", u).withColumn(
-            "_s", F.array_max(F.transform(F.col("_u"), F.abs))
-        )
-        q = F.when(
-            (F.col("_s") > 0) & ~F.isnan(F.col("_s")),
-            F.transform(
-                F.col("_u"),
-                lambda x: F.round(x / F.col("_s") * 127).cast("byte"),
-            ),
-        ).otherwise(F.transform(F.col("_u"), lambda x: F.lit(0).cast("byte")))
-        # materialize the per-id sketch ONCE (round-12, found via the
-        # bucketed near-dup arm: 6x wall regression without it):
-        # projection collapse inlines the _s subtree (array_max over
-        # the unit vector) into q's per-element lambda — a dim^2 blowup
-        # per row — and re-evaluates the sketch on both sides of the
-        # blocked self-join. Bounded: n x (dim + ~40) bytes.
-        lite = lite.select(
-            id_col, "_cell", "_shard", "_blk", "_s", q.alias("_q")
-        ).localCheckpoint(eager=True)
-        dq = F.aggregate(
-            F.zip_with(
-                F.col("a._q"),
-                F.col("b._q"),
-                lambda x, y: x.cast("int") * y.cast("int"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-        sa, sb = F.col("a._s"), F.col("b._s")
-        d = F.size(F.col("a._q")).cast("double")
-        approx = dq * sa * sb / F.lit(127.0 * 127.0)
-        # zero vectors (s = 0) always pass to the exact verify, which
-        # alone decides their fate (NULL cosine -> dropped) — the
-        # filter must never decide differently from the verify
-        # (cos in [-1, 1] makes margin 2 an always-pass)
-        margin = F.when(
-            (sa == 0) | (sb == 0) | F.isnan(sa) | F.isnan(sb), F.lit(2.0)
-        ).otherwise(
-            F.sqrt(d) * (sa + sb) / F.lit(254.0)
-            + d * sa * sb / F.lit(254.0 * 254.0)
-            # the exact verify rounds cos to 6 dp half-up, so a pair at
-            # cos = threshold - 5e-7 still rounds up to threshold and is
-            # KEPT there — the filter's slack must cover that too or the
-            # superset claim has a 5e-7 hole
-            + F.lit(5e-7)
+        # ~n_blocks/2 times, so it shuffles the _int8_sketch instead and
+        # keeps the provable superset _int8_bound admits. Survivors
+        # re-join the exact doubles (keyed by id — shipped ONCE, not B/2
+        # times) and pass the IDENTICAL rounded-cosine verify, so the
+        # output is bit-for-bit the exact path's.
+        lite = _int8_sketch(cells, id_col, "_cell", "_shard", "_blk")
+        approx, margin = _int8_bound(
+            F.col("a._q"), F.col("b._q"), F.col("a._s"), F.col("b._s")
         )
         cand = (
             blocked_pairs(lite)
             .filter(approx >= F.lit(threshold) - margin)
             .select(
-                F.least(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_a"),
-                F.greatest(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_b"),
+                *pair_ids,
                 # accept-sure flag: approx - margin >= threshold means
                 # cos >= threshold + 5e-7 (margin already carries the
                 # 6-dp rounding slack), so round6(cos) >= threshold is
@@ -1533,25 +1447,9 @@ def _semantic_dedup_cells(
         # small even when most in-cell pairs are candidates)
         cand = cand.localCheckpoint(eager=True)
         band = (
-            cand.filter(~F.col("_sure"))
-            .select("id_a", "id_b")
-            .join(
-                cells.select(
-                    F.col(id_col).alias("id_a"),
-                    F.col("_v").alias("_va"),
-                    F.col("_nrm").alias("_na"),
-                ),
-                "id_a",
+            _exact_cos(
+                cand.filter(~F.col("_sure")).select("id_a", "id_b"), cells, id_col
             )
-            .join(
-                cells.select(
-                    F.col(id_col).alias("id_b"),
-                    F.col("_v").alias("_vb"),
-                    F.col("_nrm").alias("_nb"),
-                ),
-                "id_b",
-            )
-            .select("id_a", "id_b", exact_cos.alias("cos"))
             .filter(F.col("cos") >= threshold)
             .select("id_a", "id_b")
         )
@@ -1564,16 +1462,9 @@ def _semantic_dedup_cells(
         pairs = (
             blocked_pairs(cells)
             .select(
-                F.least(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_a"),
-                F.greatest(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_b"),
-                safe_cos(
-                    dot(F.col("a._v"), F.col("b._v")),
-                    F.col("a._nrm"),
-                    F.col("b._nrm"),
+                *pair_ids,
+                _cos6(
+                    F.col("a._v"), F.col("b._v"), F.col("a._nrm"), F.col("b._nrm")
                 ).alias("cos"),
             )
             .filter(F.col("cos") >= threshold)

@@ -1,11 +1,22 @@
 """Similarity search over embedding columns: brute-force cosine top-k
-(exact baseline) and LSH / IVF bucketed approximate variants (scale path).
+(exact baseline) and LSH / IVF / PQ approximate variants (scale path).
 
 Expression-only dot products (``zip_with`` + ``aggregate`` — JVM, codegen)
 so the kernels run without Python. At 100 TB the exact path is only for
 a broadcast-able query set (queries x corpus partition-local score +
 per-query top-k via window); the LSH/IVF paths bound the candidate set
 per query by bucket.
+
+The kernels every top-k here (and the vector near-dup operators in
+:mod:`.dedup`) share live once, as private helpers:
+
+- :func:`_cos` / :func:`_cos6`: the NaN- and zero-guarded cosine over
+  precomputed norms, and its 6-dp rounded score;
+- :func:`_topk_per_query`: the ``exclude_self`` filter, ``row_number``
+  window over the query id and ``rnk <= k`` projection;
+- :func:`_ivf_probe`: the ``n_probe`` nearest-centroid probe list as one
+  parsed SQL expression;
+- :func:`_as_double_vec`: the ``array<double>`` cast prologue.
 """
 
 from __future__ import annotations
@@ -37,12 +48,6 @@ __all__ = [
 ]
 
 
-def _null_d() -> Column:
-    """Typed NULL for nanvl guards (NaN -> NULL); built lazily — lit()
-    needs an active session, so no module-level Column constants."""
-    return F.lit(None).cast("double")
-
-
 def dot(a: Column, b: Column) -> Column:
     """Element-wise dot product of two array<double> columns."""
     return F.aggregate(
@@ -64,8 +69,22 @@ def cosine(a: Column, b: Column) -> Column:
     NULL instead drops at filters and sorts last under desc ordering,
     matching DuckDB's NaN-compares-false. One zero/NaN embedding in
     100 TB must not kill (or silently destroy) the run."""
-    den = l2_norm(a) * l2_norm(b)
-    return F.when(den != 0, F.nanvl(dot(a, b) / den, _null_d()))
+    return _cos(a, b, l2_norm(a), l2_norm(b))
+
+
+def _cos(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """:func:`cosine` over the vectors' precomputed norms ``na``, ``nb``
+    (a norm computed once per vector is the identical double to the
+    inline form, so scores are unchanged while a pair join stops
+    recomputing it per pair)."""
+    den = na * nb
+    return F.when(den != 0, F.nanvl(dot(a, b) / den, F.lit(None).cast("double")))
+
+
+def _cos6(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The score every cosine top-k and near-dup verify emits:
+    :func:`_cos` rounded to 6 dp."""
+    return F.round(_cos(a, b, na, nb), 6)
 
 
 def normalize_vec(a: Column) -> Column:
@@ -202,30 +221,36 @@ def cosine_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         "_qid",
         "_cid",
-        F.round(
-            # guards: zero-norm -> NULL (ANSI-safe), NaN -> NULL (Spark
-            # orders NaN above all, it would pass every filter)
-            F.when(
-                F.col("_qn") * F.col("_cn") != 0,
-                F.nanvl(
-                    dot(F.col("_qv"), F.col("_cv"))
-                    / (F.col("_qn") * F.col("_cn")),
-                    _null_d(),
-                ),
-            ),
-            6,
-        ).alias("cos"),
+        _cos6(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn"))
+        .alias("cos"),
     )
+    return _topk_per_query(scored, query_id, k, exclude_self)
+
+
+def _topk_per_query(
+    scored: DataFrame,
+    query_id: str,
+    k: int,
+    exclude_self: bool,
+    score: str = "cos",
+    ascending: bool = False,
+) -> DataFrame:
+    """Per-query top-k over ``(_qid, _cid, <score>)`` rows: drop self
+    matches when ``exclude_self``, rank each query's rows by ``score``
+    (descending, or ascending for a distance), ties to the smaller
+    ``_cid``, and keep ranks ``<= k``. Returns ``(query_id,
+    neighbor_id, <score>, rnk)``."""
     if exclude_self:
         scored = scored.filter(F.col("_qid") != F.col("_cid"))
-    w = Window.partitionBy("_qid").orderBy(F.col("cos").desc(), F.col("_cid"))
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("_qid").orderBy(order, F.col("_cid"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
             F.col("_qid").alias(query_id),
             F.col("_cid").alias("neighbor_id"),
-            "cos",
+            score,
             "rnk",
         )
     )
@@ -293,22 +318,10 @@ def cosine_topk_lsh(
         F.broadcast(qk),
         (F.col("_tbl") == F.col("_qtbl")) & (F.col("_cbkt") == F.col("_qbkt")),
     )
-    if exclude_self:
-        cands = cands.filter(F.col("_qid") != F.col("_cid"))
     scored = cands.select(
         "_qid", "_cid", F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cos")
     ).distinct()
-    w = Window.partitionBy("_qid").orderBy(F.col("cos").desc(), F.col("_cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_cid").alias("neighbor_id"),
-            "cos",
-            "rnk",
-        )
-    )
+    return _topk_per_query(scored, query_id, k, exclude_self)
 
 
 def _dvec_sql(name: str) -> str:
@@ -354,6 +367,21 @@ def _argmin_pairs_sql(vexpr: str, centroids: list[list[float]]) -> str:
         for i, cent in enumerate(centroids)
     )
     return f"array({pairs})"
+
+
+def _ivf_probe(vexpr: str, centroids: list[list[float]], n_probe: int) -> Column:
+    """Ids of the ``n_probe`` centroids nearest to the vector SQL
+    expression ``vexpr``, nearest first. Rendered as ONE parsed SQL
+    expression (the :func:`ivf_assign` argmin struct array, sorted and
+    sliced): the Column-builder form issued ~k*dim py4j round trips of
+    driver time."""
+    if n_probe < 1:
+        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
+    return F.expr(
+        "transform(slice(array_sort("
+        f"{_argmin_pairs_sql(vexpr, centroids)}"
+        f"), 1, {int(n_probe)}), s -> s.i)"
+    )
 
 
 def ivf_assign(
@@ -432,36 +460,17 @@ def cosine_topk_ivf(
         centroids,
         "_cell",
     )
-    # probe-cell list rendered as ONE parsed SQL expression (same
-    # argmin struct array, sorted and sliced — see ivf_assign): the
-    # Column-builder form issued ~k*dim py4j round trips of driver time
-    probe_cells = F.expr(
-        "transform(slice(array_sort("
-        f"{_argmin_pairs_sql(_dvec_sql(query_vec), centroids)}"
-        f"), 1, {int(n_probe)}), s -> s.i)"
-    )
     q_probed = queries.select(
         F.col(query_id).alias("_qid"),
         v.alias("_qv"),
-        F.explode(probe_cells).alias("_cell"),
+        F.explode(
+            _ivf_probe(_dvec_sql(query_vec), centroids, n_probe)
+        ).alias("_cell"),
     )
-    cands = c_assigned.join(F.broadcast(q_probed), "_cell")
-    if exclude_self:
-        cands = cands.filter(F.col("_qid") != F.col("_cid"))
-    scored = cands.select(
+    scored = c_assigned.join(F.broadcast(q_probed), "_cell").select(
         "_qid", "_cid", F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cos")
     )
-    w = Window.partitionBy("_qid").orderBy(F.col("cos").desc(), F.col("_cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_cid").alias("neighbor_id"),
-            "cos",
-            "rnk",
-        )
-    )
+    return _topk_per_query(scored, query_id, k, exclude_self)
 
 
 # strategy="auto" routes cosine top-k to IVF at or above this vector
@@ -1028,18 +1037,8 @@ def pq_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         "_qid", "_cid", F.round(adist, 6).alias("adist")
     )
-    if exclude_self:
-        scored = scored.filter(F.col("_qid") != F.col("_cid"))
-    w = Window.partitionBy("_qid").orderBy(F.col("adist").asc(), F.col("_cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_cid").alias("neighbor_id"),
-            "adist",
-            "rnk",
-        )
+    return _topk_per_query(
+        scored, query_id, k, exclude_self, score="adist", ascending=True
     )
 
 

@@ -90,6 +90,13 @@ def test_cosine_topk_bruteforce(spark):
     out = cosine_topk(v.filter("vec_id = 0"), v, "vec_id", "vec_id", "v", "v", k=2)
     rows = sorted((r["rnk"], r["neighbor_id"]) for r in out.collect())
     assert rows[0] == (1, 1)  # nearest neighbor of 0 is 1
+    # exclude_self=False: the query ranks itself first at cos 1.0
+    out = cosine_topk(
+        v.filter("vec_id = 0"), v, "vec_id", "vec_id", "v", "v", k=2,
+        exclude_self=False,
+    )
+    rows = sorted((r["rnk"], r["neighbor_id"], r["cos"]) for r in out.collect())
+    assert [r[:2] for r in rows] == [(1, 0), (2, 1)] and rows[0][2] == 1.0
 
 
 def test_cosine_topk_lsh_recall(spark, sf_dir):
@@ -118,6 +125,33 @@ def test_ivf_assign_and_topk(spark):
     )
     got = {r["neighbor_id"] for r in out.collect()}
     assert 1 in got  # near-dup in the same probed cell
+
+
+def test_ivf_n_probe_must_be_positive(spark):
+    # n_probe=0 sliced an empty probe list: both IVF callers returned no
+    # rows instead of raising
+    import pytest
+
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [0.99, 0.1, 0.0]), (2, [0.0, 0.0, 1.0])]
+    v = spark.createDataFrame(rows, "vec_id: long, v: array<float>")
+    cents = [[1.0, 0.0, 0.0], [0.0, 0.0, 1.0]]
+
+    def topk(n_probe):
+        return cosine_topk_ivf(
+            v, v, "vec_id", "vec_id", "v", "v",
+            centroids=cents, k=1, n_probe=n_probe,
+        )
+
+    def pairs(n_probe):
+        return cosine_near_dup_pairs(
+            v, "v", "vec_id", threshold=0.9, bucket_bits=1, dim=3,
+            blocking="ivf", centroids=cents, n_probe=n_probe,
+        )
+
+    assert topk(1).count() == 2 and pairs(1).count() == 1
+    for build in (topk, pairs):
+        with pytest.raises(ValueError, match="n_probe"):
+            build(0)
 
 
 def test_resolve_ann_strategy():
@@ -216,17 +250,22 @@ def test_cosine_near_dup_bucketed_int8_parity(spark):
         (7, [-math.inf] + near[1:]),
     ]
     df = spark.createDataFrame(rows, "vec_id: long, v: array<double>")
-    kw = dict(
-        threshold=0.9, bucket_bits=2, seed=3, dim=d, n_tables=4
-    )
-    off = cosine_near_dup_pairs(df, "v", "vec_id", int8_filter=False, **kw)
-    on = cosine_near_dup_pairs(df, "v", "vec_id", int8_filter=True, **kw)
-    off_rows = sorted(map(tuple, off.collect()))
-    on_rows = sorted(map(tuple, on.collect()))
-    assert off_rows == on_rows
-    ids_in_pairs = {i for r in on_rows for i in r[:2]}
-    assert (0, 1) in {r[:2] for r in on_rows}  # the planted near-dup
-    assert not ids_in_pairs & {4, 5, 6, 7}  # corrupt rows never merge
+    # both blocking arms prune with the same int8 sketch
+    for kw in (
+        dict(threshold=0.9, bucket_bits=2, seed=3, dim=d, n_tables=4),
+        dict(
+            threshold=0.9, bucket_bits=2, dim=d, blocking="ivf",
+            centroids=[base, rows[3][1]], n_probe=1,
+        ),
+    ):
+        off = cosine_near_dup_pairs(df, "v", "vec_id", int8_filter=False, **kw)
+        on = cosine_near_dup_pairs(df, "v", "vec_id", int8_filter=True, **kw)
+        off_rows = sorted(map(tuple, off.collect()))
+        on_rows = sorted(map(tuple, on.collect()))
+        assert off_rows == on_rows
+        ids_in_pairs = {i for r in on_rows for i in r[:2]}
+        assert (0, 1) in {r[:2] for r in on_rows}  # the planted near-dup
+        assert not ids_in_pairs & {4, 5, 6, 7}  # corrupt rows never merge
 
 
 def test_cosine_near_dup_int8_auto_resolution(spark):
@@ -258,6 +297,8 @@ def test_cosine_near_dup_blocking_router(spark):
     blocking, whose pairs are exactly-scored (subset of brute force,
     identical cosines) and find the planted high-dim near-dup."""
     import random
+
+    import pytest
 
     from hybridbackend_spark.operators.dedup import cosine_near_dup_pairs
     from hybridbackend_spark.operators.similarity import (
@@ -306,23 +347,35 @@ def test_cosine_near_dup_blocking_router(spark):
             df, "v", "vec_id", threshold=0.9
         ).collect()
     }
-    got = {
-        (r["id_a"], r["id_b"], r["cos"])
-        for r in cosine_near_dup_pairs(
-            df,
-            "v",
-            "vec_id",
-            threshold=0.9,
-            bucket_bits=8,
-            dim=d,
-            blocking="auto",
-            centroids=[c1, c2],
-            n_probe=1,
-        ).collect()
-    }
+
+    def ivf_pairs(**kw):
+        return {
+            (r["id_a"], r["id_b"], r["cos"])
+            for r in cosine_near_dup_pairs(
+                df,
+                "v",
+                "vec_id",
+                threshold=0.9,
+                bucket_bits=8,
+                dim=d,
+                blocking="auto",
+                centroids=[c1, c2],
+                n_probe=1,
+                **kw,
+            ).collect()
+        }
+
+    got = ivf_pairs()
     assert got <= exact  # exactly-scored subset
     # within-cluster near-dups land in the same trained cell
     assert {(p[0], p[1]) for p in got} >= {(0, 1), (0, 2), (3, 4), (3, 5)}
+    # md5 shard cap: a no-op at or above every cell's size (3 rows), a
+    # pair subset below it, and rejected below 1
+    assert ivf_pairs(max_cell_rows=None) == got == ivf_pairs(max_cell_rows=3)
+    capped = ivf_pairs(max_cell_rows=2)
+    assert capped and capped < got
+    with pytest.raises(ValueError, match="max_cell_rows"):
+        ivf_pairs(max_cell_rows=0)
 
 
 def test_cosine_near_dup_pairs_bucketed(spark):
