@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..operators.structural import _range_prefix
+
 __all__ = ["streaming_mean", "accuracy", "auc", "auc_histogram", "gauc"]
 
 
@@ -52,71 +54,22 @@ def auc(df: DataFrame, label: str, score: str, alias: str = "auc") -> DataFrame:
 
     Plan shape: one partial+final aggregation on distinct scores (map-side
     combine shrinks the shuffle to |distinct scores|), then a DISTRIBUTED
-    prefix sum over the score histogram: range-partition by score,
-    partition-local cumulative sums, plus per-partition offsets (one tiny
+    exclusive prefix sum of negatives over the score histogram
+    (``structural._range_prefix``: range-partition by score,
+    partition-local cumulative sums, plus per-partition offsets — one tiny
     driver collect bounded by the partition count, not data size). A naive
     global-order window would drag the whole histogram through a single
     partition — the classic scale trap this avoids; at 100 TB with
     continuous scores the histogram is row-count-sized.
     """
     hist = _score_histogram(df, label, score)
-    swept = _distributed_prefix_sum(hist, "_s", "_n", "_n_below")
+    swept, _ = _range_prefix(hist, ["_s"], F.col("_n"), "_n_below", exclusive=True)
     return swept.agg(
         (
             F.sum(F.col("_p") * (F.col("_n_below") + F.col("_n") / 2))
             / (F.sum("_p") * F.sum("_n"))
         ).alias(alias)
     )
-
-
-def _distributed_prefix_sum(
-    df: DataFrame, order_col: str, value_col: str, out_col: str,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """``out = sum(value) over rows strictly before this one in order_col``
-    without a single-partition window: range-partition on the order column,
-    local exclusive cumsum inside each partition, then add the prefix of
-    whole-partition totals (collected to the driver — bounded by the
-    partition count). ``checkpoint=False`` skips the eager materialization
-    (plan-inspection/testing only: the offsets are then not guaranteed to
-    match a recomputed layout)."""
-    from pyspark.sql import Window as W
-
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = df.repartitionByRange(parts, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = ranged.withColumn(
-        "_local_below", F.coalesce(F.sum(value_col).over(w_local), F.lit(0.0))
-    )
-    # Eager localCheckpoint, not persist: the offsets collected below must
-    # see the exact partition layout the downstream plan reads (range
-    # sampling could differ on recompute), and checkpoint blocks are freed
-    # when the DataFrame is dropped — cache entries would leak for the
-    # session lifetime.
-    if checkpoint:
-        local = local.localCheckpoint(eager=True)
-    totals = dict(
-        local.groupBy("_pid").agg(F.sum(value_col).alias("_t")).collect()
-    )
-    offsets, acc = {}, 0.0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += float(totals[pid] or 0.0)
-    offset_expr = F.element_at(
-        F.create_map(
-            *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-        ),
-        F.col("_pid"),
-    ) if offsets else F.lit(0.0)
-    return local.withColumn(
-        out_col, F.col("_local_below") + F.coalesce(offset_expr, F.lit(0.0))
-    ).drop("_pid", "_local_below")
 
 
 def auc_histogram(

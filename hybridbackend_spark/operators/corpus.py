@@ -15,8 +15,9 @@ loops, no driver-side data:
 - ``repetition_signals``: explode grams -> two key-partial aggregations.
   Shuffle keys are (doc_id, gram) then doc_id; both combine map-side, so
   shuffled bytes scale with distinct grams, not corpus bytes.
-- ``pack_sequences``: distributed prefix sum (range partition + local
-  window + per-partition offsets), never a single-partition window.
+- ``pack_sequences``: the shared distributed prefix sum
+  ``structural._range_prefix`` (range partition + local window +
+  per-partition offsets), never a single-partition window.
 - ``chunk_documents``: per-row array expressions + one explode; no
   shuffle at all.
 """
@@ -27,7 +28,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .text import spread_small_scan, tokens, word_shingles
+from .structural import _range_prefix
+from .text import _c, spread_small_scan, tokens, word_shingles
 
 __all__ = [
     "hash_bucket",
@@ -63,10 +65,6 @@ __all__ = [
     "uniform_sample_exact",
     "decontaminate_spans",
 ]
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def hash_bucket(
@@ -190,64 +188,12 @@ def repetition_signals(
     )
 
 
-def _global_running_sum(
-    df: DataFrame,
-    value_col: str,
-    order_by: Sequence[str],
-    out_col: str,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Inclusive running sum of ``value_col`` in ``order_by`` order,
-    computed distributed: range-partition on the order columns, window-sum
-    locally, then add per-partition totals as offsets (driver collect
-    bounded by partition count — same scheme as
-    ``structural.with_batch_id``; no single-partition window)."""
-    order = [F.col(c) for c in order_by]
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = df.repartitionByRange(parts, *order).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("_local_sum", F.sum(value_col).over(w_local))
-    if checkpoint:
-        # eager localCheckpoint pins the partition layout the collected
-        # offsets came from; checkpoint=False keeps the range-partitioned
-        # plan visible for plan-shape tests
-        local = local.localCheckpoint(eager=True)
-    totals = dict(
-        local.groupBy("_pid").agg(F.sum(value_col).alias("_s")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += int(totals[pid] or 0)
-    offset_expr = (
-        F.element_at(
-            F.create_map(
-                *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-            ),
-            F.col("_pid"),
-        )
-        if offsets
-        else F.lit(0)
-    )
-    return local.withColumn(
-        out_col,
-        (F.coalesce(offset_expr, F.lit(0)) + F.col("_local_sum")).cast("long"),
-    ).drop("_pid", "_local_sum")
-
-
 def pack_sequences(
     df: DataFrame,
     id_col: str,
     token_count_col: str,
     budget: int,
     order_by: Sequence[str] | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Contiguous concat-and-chunk sequence packing: documents in
     ``order_by`` order are laid end-to-end in token space and cut into
@@ -255,12 +201,15 @@ def pack_sequences(
     lands (documents may spill across bin boundaries — the standard
     LLM-pretraining packing, zero padding waste).
 
-    Adds ``cum_tokens`` (inclusive running total), ``bin_id``, and
-    ``bin_offset`` (start position of the document within its bin).
+    Adds ``cum_tokens`` (inclusive running total, the distributed prefix
+    sum :func:`structural._range_prefix`; a NULL token count adds 0),
+    ``bin_id``, and ``bin_offset`` (start position of the document within
+    its bin).
     """
-    order = list(order_by or [id_col])
-    out = _global_running_sum(
-        df, token_count_col, order, "cum_tokens", checkpoint
+    if budget < 1:
+        raise ValueError(f"budget must be >= 1, got {budget}")
+    out, _ = _range_prefix(
+        df, order_by or [id_col], F.col(token_count_col), "cum_tokens"
     )
     start = F.col("cum_tokens") - F.col(token_count_col)
     # exact integer div/mod — float division drifts above 2^53 total tokens

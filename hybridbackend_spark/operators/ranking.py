@@ -35,7 +35,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Rank documents against a bag-of-terms query with BM25.
 
@@ -67,12 +66,11 @@ def bm25_topk(
         .groupBy("_id", "_term")
         .agg(F.count(F.lit(1)).alias("_tf"), F.min("_dl").alias("_dl"))
     )
-    if checkpoint:
-        # postings feeds BOTH the score join and the document-frequency
-        # agg; without materialization Spark evaluates the corpus scan +
-        # explode twice. The filtered postings set is small (query terms
-        # only), so an eager localCheckpoint halves the corpus passes.
-        postings = postings.localCheckpoint(eager=True)
+    # postings feeds BOTH the score join and the document-frequency
+    # agg; without materialization Spark evaluates the corpus scan +
+    # explode twice. The filtered postings set is small (query terms
+    # only), so an eager localCheckpoint halves the corpus passes.
+    postings = postings.localCheckpoint(eager=True)
     df_per_term = postings.groupBy("_term").agg(
         F.count(F.lit(1)).alias("_df")
     )

@@ -127,64 +127,89 @@ def seeded_shuffle(df: DataFrame, seed: int, partitions: int | None = None) -> D
     return out
 
 
+def _range_prefix(
+    df: DataFrame,
+    order: Sequence[str],
+    value: Column,
+    out_col: str,
+    exclusive: bool = False,
+) -> tuple[DataFrame, int | float]:
+    """Global running sum of ``value`` in ``order`` order, computed
+    DISTRIBUTED: range-partition on the order columns, window-sum within
+    each partition (``_pid``), then add the totals of all lower partitions
+    as offsets (one driver collect bounded by the partition count,
+    accumulated in partition-id order). No single-partition window — the
+    plan scales with the data.
+
+    ``out_col`` sums the rows up to and including this one, or strictly
+    before it when ``exclusive``. NULL values count as 0, so the result
+    does not depend on where the range partitioning cuts. The sum keeps
+    Spark's ``sum`` type (bigint for integral input, double for double).
+    Returns ``(df with out_col, grand total)``.
+    """
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    ranged = df.repartitionByRange(parts, *order).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    w_local = (
+        Window.partitionBy("_pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
+    )
+    # Eager localCheckpoint, not persist: the offsets collected below must
+    # see the exact partition layout the downstream plan reads (range
+    # sampling could differ on recompute), and checkpoint blocks are freed
+    # with the DataFrame (cache entries leak for the session lifetime).
+    local = ranged.withColumn(
+        "_local", F.coalesce(F.sum(value).over(w_local), F.lit(0))
+    ).localCheckpoint(eager=True)
+    totals = dict(local.groupBy("_pid").agg(F.sum(value)).collect())
+    offsets, acc = {}, 0
+    for pid in sorted(totals):
+        offsets[pid] = acc
+        acc += totals[pid] or 0
+    sum_type = local.schema["_local"].dataType
+    offset = F.element_at(
+        F.create_map(
+            *[
+                x
+                for pid, off in offsets.items()
+                for x in (F.lit(pid), F.lit(off).cast(sum_type))
+            ]
+        ),
+        F.col("_pid"),
+    ) if offsets else F.lit(0)
+    out = local.withColumn(out_col, F.col("_local") + offset)
+    return out.drop("_pid", "_local"), acc
+
+
 def with_batch_id(
     df: DataFrame,
     batch_size: int,
     order_by: Sequence[str] | None = None,
     drop_remainder: bool = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Assign a ``batch_id`` column grouping rows into exact
     ``batch_size``-row batches — the relational rendering of the reference's
     ``rebatch`` (``data/rebatch/``). Requires a total order to be
     deterministic; pass ``order_by`` (defaults to all columns).
 
-    Global row numbering is computed DISTRIBUTED: range-partition on the
-    order columns, number rows locally per partition, then add
-    per-partition row-count offsets (driver collect bounded by partition
-    count). No single-partition window — the plan scales with the data.
-    (For training-feed export without exact global numbering, prefer
-    per-partition batching via ``maxRecordsPerBatch`` on the Arrow
+    Global row numbering is the distributed prefix sum
+    :func:`_range_prefix` over a constant 1 (range partition, local
+    count, per-partition offsets); its grand total sizes
+    ``drop_remainder``. No single-partition window — the plan scales with
+    the data. (For training-feed export without exact global numbering,
+    prefer per-partition batching via ``maxRecordsPerBatch`` on the Arrow
     boundary — zero shuffle.)
     """
-    order = [F.col(c) for c in (order_by or df.columns)]
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = df.repartitionByRange(parts, *order).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order)
-    # Eager localCheckpoint, not persist: the offsets collected below must
-    # see the exact partition layout the downstream plan reads, and
-    # checkpoint blocks are freed with the DataFrame (cache entries leak
-    # for the session lifetime). checkpoint=False is for plan inspection
-    # in tests only.
-    local = ranged.withColumn("_local_rn", F.row_number().over(w_local))
-    if checkpoint:
-        local = local.localCheckpoint(eager=True)
-    counts = dict(
-        local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_expr = (
-        F.element_at(
-            F.create_map(
-                *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-            ),
-            F.col("_pid"),
-        )
-        if offsets
-        else F.lit(0)
-    )
-    rn = F.coalesce(offset_expr, F.lit(0)) + F.col("_local_rn")
-    out = local.withColumn("batch_id", ((rn - 1) / batch_size).cast("long"))
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
+    out, total = _range_prefix(df, order_by or df.columns, F.lit(1), "_rn")
+    rn = F.col("_rn")
+    out = out.withColumn("batch_id", ((rn - 1) / batch_size).cast("long"))
     if drop_remainder:
-        total = acc
-        n_full = (total // batch_size) * batch_size
-        out = out.filter(rn <= n_full)
-    return out.drop("_pid", "_local_rn")
+        out = out.filter(rn <= (total // batch_size) * batch_size)
+    return out.drop("_rn")
 
 
 def arrow_training_feed(
@@ -205,6 +230,8 @@ def arrow_training_feed(
     per-partition, so no data moves and the whole operator is a single
     Arrow-boundary pass.
     """
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     import pyarrow as pa
     from pyspark.sql import types as T
 

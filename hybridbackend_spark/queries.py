@@ -76,24 +76,28 @@ def _pin_utc(spark: SparkSession) -> None:
         _UTC_PINNED.add(spark)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a test table. ``events.ts`` is written as Parquet TIMESTAMP(NANOS).
+def _event_ts(df: DataFrame) -> DataFrame:
+    """Normalize ``events.ts``, written as Parquet TIMESTAMP(NANOS).
     Depending on the Spark build that arrives as either a long of nanos
     (legacy ``nanosAsLong``) or a ``timestamp_ntz`` truncated to micros;
-    normalize both to a session-zone TIMESTAMP (session TZ is pinned to
-    UTC via :func:`_pin_utc`, so the NTZ wall clock maps 1:1 and values
-    match DuckDB's naive timestamps truncated to Spark's microsecond
-    precision)."""
+    map both to a session-zone TIMESTAMP (session TZ is pinned to UTC via
+    :func:`_pin_utc`, so the NTZ wall clock maps 1:1 and values match
+    DuckDB's naive timestamps truncated to Spark's microsecond precision).
+    Works on batch and streaming frames alike."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load a test table; ``events`` goes through :func:`_event_ts`."""
     _pin_utc(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return _event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

@@ -97,7 +97,7 @@ def read_event_stream(
     # pin the session zone so window alignment and hour buckets match the
     # naive-timestamp oracles regardless of the caller's session zone
     # (same once-per-session contract as queries._pin_utc)
-    from ..queries import _pin_utc
+    from ..queries import _event_ts, _pin_utc
 
     _pin_utc(spark)
     if schema is None:
@@ -112,12 +112,7 @@ def read_event_stream(
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    df = reader.load(path)
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return _event_ts(reader.load(path))
 
 
 def tumbling_agg(

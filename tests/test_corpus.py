@@ -91,6 +91,26 @@ def test_pack_sequences_matches_single_partition_window(spark, sf_dir):
         assert r["cum_tokens"] == pairs[r["doc_id"]]
 
 
+def test_pack_sequences_null_token_count_layout_independent(spark):
+    # a NULL token count adds 0 whether or not its row sits alone in a
+    # range partition — the single-partition-window answer in every layout
+    df = spark.createDataFrame(
+        [(1, 3), (2, None), (3, 2)], "doc_id long, n_tok long"
+    )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for parts in (1, 8):
+            spark.conf.set(key, str(parts))
+            got = {
+                r["doc_id"]: r["cum_tokens"]
+                for r in pack_sequences(df, "doc_id", "n_tok", budget=4).collect()
+            }
+            assert got == {1: 3, 2: 3, 3: 5}, parts
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_chunk_documents_boundaries(spark):
     text = " ".join(f"w{i}" for i in range(10))
     df = spark.createDataFrame([(1, text), (2, "a b"), (3, "")],

@@ -1,6 +1,7 @@
 """Plan-shape regression gates: the scale properties the engine promises
 (pushdown, pruning, broadcast, bounded shuffles) asserted on real plans."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hybridbackend_spark.plans.inspect import (
@@ -76,29 +77,44 @@ def test_filter_pushdown_reaches_parquet(spark, sf_dir):
     assert set(scan_read_schema(df)) == {"o_orderkey", "o_totalprice"}
 
 
-def test_auc_no_global_window(spark, sf_dir):
-    # the AUC sweep must range-partition, not funnel through one partition
-    # (checkpoint=False keeps the sweep lineage visible for inspection; the
-    # production path eagerly checkpoints the identical plan)
-    from hybridbackend_spark.functions.metrics import (
-        _distributed_prefix_sum,
-        _score_histogram,
-    )
+@pytest.fixture
+def checkpointed_plans(monkeypatch):
+    """Physical plans of every frame passed to ``localCheckpoint``,
+    recorded before the original checkpoint runs: the eagerly cut
+    lineage of a production call stays inspectable."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from hybridbackend_spark.plans.inspect import physical_plan
+
+    plans = []
+    original = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(physical_plan(self))
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return plans
+
+
+def _assert_range_prefix_plan(plan):
+    assert "rangepartitioning" in plan
+    # every window partitions by _pid — no global single-partition window
+    for ln in plan.splitlines():
+        if "Window " in ln:
+            assert "_pid" in ln
+
+
+def test_auc_no_global_window(spark, sf_dir, checkpointed_plans):
+    # the AUC sweep must range-partition, not funnel through one partition
+    from hybridbackend_spark.functions.metrics import auc
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
         "cast(event_id % 2 as double) as label", "value as score"
     )
-    swept = _distributed_prefix_sum(
-        _score_histogram(ev, "label", "score"), "_s", "_n", "_n_below",
-        checkpoint=False,
-    )
-    plan = physical_plan(swept)
-    assert "rangepartitioning" in plan
-    # every window partitions by _pid — no global single-partition window
-    windows = [ln for ln in plan.splitlines() if "Window " in ln or "Window\n" in ln]
-    for ln in windows:
-        assert "_pid" in ln
+    auc(ev, "label", "score")
+    [plan] = checkpointed_plans
+    _assert_range_prefix_plan(plan)
 
 
 def test_asof_single_shuffle_on_key(spark, sf_dir):
@@ -110,13 +126,12 @@ def test_asof_single_shuffle_on_key(spark, sf_dir):
     assert count_exchanges(df) <= 2
 
 
-def test_batch_id_distributed(spark):
+def test_batch_id_distributed(spark, checkpointed_plans):
     from hybridbackend_spark.operators.structural import with_batch_id
-    from hybridbackend_spark.plans.inspect import physical_plan
 
-    df = with_batch_id(spark.range(100), 10, order_by=["id"], checkpoint=False)
-    plan = physical_plan(df)
-    assert "rangepartitioning" in plan
+    with_batch_id(spark.range(100), 10, order_by=["id"])
+    [plan] = checkpointed_plans
+    _assert_range_prefix_plan(plan)
 
 
 def test_cosine_bucketed_no_cartesian(spark, sf_dir):
@@ -157,19 +172,15 @@ def test_bucketed_join_shuffle_free(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_pack_sequences_distributed(spark):
+def test_pack_sequences_distributed(spark, checkpointed_plans):
     # the packing prefix sum must range-partition, never funnel through a
     # single-partition window
     from hybridbackend_spark.operators.corpus import pack_sequences
-    from hybridbackend_spark.plans.inspect import physical_plan
 
     df = spark.range(1000).selectExpr("id AS doc_id", "id % 7 + 1 AS n_tok")
-    out = pack_sequences(df, "doc_id", "n_tok", budget=64, checkpoint=False)
-    plan = physical_plan(out)
-    assert "rangepartitioning" in plan
-    for ln in plan.splitlines():
-        if "Window " in ln:
-            assert "_pid" in ln
+    pack_sequences(df, "doc_id", "n_tok", budget=64)
+    [plan] = checkpointed_plans
+    _assert_range_prefix_plan(plan)
 
 
 def test_repetition_signals_partial_agg(spark, sf_dir):

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from hybridbackend_spark.operators.structural import (
@@ -78,6 +79,32 @@ def test_with_batch_id(spark):
     assert counts == {0: 4, 1: 4, 2: 2}
     dropped = with_batch_id(df, 4, order_by=["id"], drop_remainder=True)
     assert dropped.count() == 8
+
+
+def test_batch_sizes_must_be_positive(spark):
+    # rejected at call time, before any range-sample or collect job runs
+    from hybridbackend_spark.operators.corpus import pack_sequences
+    from hybridbackend_spark.operators.structural import (
+        arrow_training_feed,
+        block_dedup_encode,
+    )
+
+    df = spark.range(10).selectExpr("id", "id % 3 AS n")
+    sc = spark.sparkContext
+    sc.setJobGroup("bad_batch_sizes", "batch size validation")
+    try:
+        for size in (0, -1):
+            for call in (
+                lambda: with_batch_id(df, size, order_by=["id"]),
+                lambda: block_dedup_encode(df, ["n"], size, order_by=["id"]),
+                lambda: arrow_training_feed(df, size),
+                lambda: pack_sequences(df, "id", "n", budget=size),
+            ):
+                with pytest.raises(ValueError, match=">= 1"):
+                    call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bad_batch_sizes") == []
 
 
 def test_unbatch(spark):

@@ -1,9 +1,15 @@
-"""Regenerate API.md: one line per public function/class, from docstrings."""
+"""Regenerate API.md: one line per public function/class, from docstrings.
+
+Run ``python tools/gen_api_index.py`` from anywhere; it rewrites the
+repository's API.md. ``render()`` returns the text without writing it.
+"""
 import importlib
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MODS = [
     "hybridbackend_spark.session",
@@ -47,7 +53,7 @@ MODS = [
 ]
 
 
-def main() -> None:
+def render() -> str:
     out = [
         "# API index",
         "",
@@ -67,8 +73,12 @@ def main() -> None:
             doc = (inspect.getdoc(obj) or "").strip().split("\n")[0].rstrip()
             out.append(f"- **`{n}`** — {doc}")
         out.append("")
-    with open("API.md", "w") as f:
-        f.write("\n".join(out) + "\n")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    with open(os.path.join(ROOT, "API.md"), "w") as f:
+        f.write(render())
 
 
 if __name__ == "__main__":
