@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..operators.structural import _range_prefix
+from ..operators.structural import _group_prefix, _range_prefix
 
 __all__ = ["streaming_mean", "accuracy", "auc", "auc_histogram", "gauc"]
 
@@ -177,7 +177,8 @@ def gauc(
     """Grouped AUC (reference ``metrics/gauc.cc:39-80``, ``gauc.py:32-71``):
     exact AUC per group, then weighted mean over groups that contain both
     classes. ``weight``: 'count' (group row count, the reference's
-    impression weighting) or 'uniform'.
+    impression weighting) or 'uniform'; any other ``weight`` or
+    ``tie_mode`` raises ``ValueError``.
 
     Single shuffle on (group, score); the per-group sweep is a window
     within the group — no applyInPandas, no per-group collect.
@@ -198,6 +199,12 @@ def gauc(
       both modes, mirroring the kernel's ``-0.5`` marker / caller-side
       ``auc >= 0`` filter (``gauc.cc:56-60, gauc.py:57-63``).
     """
+    if weight not in ("count", "uniform"):
+        raise ValueError(f"weight must be 'count' or 'uniform', got {weight!r}")
+    if tie_mode not in ("half", "reference"):
+        raise ValueError(
+            f"tie_mode must be 'half' or 'reference', got {tie_mode!r}"
+        )
     if tie_mode == "reference":
         if order_col is None:
             raise ValueError(
@@ -206,16 +213,14 @@ def gauc(
                 "it unspecified)"
             )
         lab = F.col(label).cast("double")
-        row_w = (
-            Window.partitionBy(F.col(group))
-            .orderBy(F.col(score).asc(), F.col(order_col).asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
+        order = (F.col(score).asc(), F.col(order_col).asc())
+        tp2, _ = _group_prefix(lab, group, *order)
+        fp2, _ = _group_prefix(F.lit(1.0) - lab, group, *order)
         swept = df.select(
             F.col(group).alias("_g"),
             lab.alias("_l"),
-            F.sum(lab).over(row_w).alias("_tp2"),
-            F.sum(F.lit(1.0) - lab).over(row_w).alias("_fp2"),
+            tp2.alias("_tp2"),
+            fp2.alias("_fp2"),
         )
         # per-row trapezoid: (fp2-fp1)*(tp2+tp1) with fp1/tp1 the
         # previous row's totals == current minus this row's contribution
@@ -239,30 +244,26 @@ def gauc(
             "_auc",
             F.lit(1.0) - F.col("_raw") / (2.0 * F.col("_pos") * F.col("_neg")),
         )
-        w_expr = F.col("_cnt") if weight == "count" else F.lit(1.0)
-        return valid.agg(
-            (F.sum(F.col("_auc") * w_expr) / F.sum(w_expr)).alias(alias)
+    else:
+        hist = df.groupBy(
+            F.col(group).alias("_g"), F.col(score).alias("_s")
+        ).agg(
+            F.sum(F.col(label).cast("double")).alias("_p"),
+            F.sum(F.lit(1.0) - F.col(label).cast("double")).alias("_n"),
         )
-    hist = df.groupBy(F.col(group).alias("_g"), F.col(score).alias("_s")).agg(
-        F.sum(F.col(label).cast("double")).alias("_p"),
-        F.sum(F.lit(1.0) - F.col(label).cast("double")).alias("_n"),
-    )
-    w = (
-        Window.partitionBy("_g")
-        .orderBy("_s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    swept = hist.withColumn("_n_below", F.coalesce(F.sum("_n").over(w), F.lit(0.0)))
-    per_group = swept.groupBy("_g").agg(
-        (
-            F.sum(F.col("_p") * (F.col("_n_below") + F.col("_n") / 2))
-            / (F.sum("_p") * F.sum("_n"))
-        ).alias("_auc"),
-        (F.sum("_p") + F.sum("_n")).alias("_cnt"),
-        F.sum("_p").alias("_pos"),
-        F.sum("_n").alias("_neg"),
-    )
-    valid = per_group.filter((F.col("_pos") > 0) & (F.col("_neg") > 0))
+        swept = hist.withColumn(
+            "_n_below", _group_prefix("_n", "_g", "_s", exclusive=True)[0]
+        )
+        per_group = swept.groupBy("_g").agg(
+            (
+                F.sum(F.col("_p") * (F.col("_n_below") + F.col("_n") / 2))
+                / (F.sum("_p") * F.sum("_n"))
+            ).alias("_auc"),
+            (F.sum("_p") + F.sum("_n")).alias("_cnt"),
+            F.sum("_p").alias("_pos"),
+            F.sum("_n").alias("_neg"),
+        )
+        valid = per_group.filter((F.col("_pos") > 0) & (F.col("_neg") > 0))
     w_expr = F.col("_cnt") if weight == "count" else F.lit(1.0)
     return valid.agg(
         (F.sum(F.col("_auc") * w_expr) / F.sum(w_expr)).alias(alias)

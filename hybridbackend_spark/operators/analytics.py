@@ -20,11 +20,30 @@ Scale shapes (all verified by plan tests):
   aggregations over exact integer (decimal) sufficient statistics;
   the closed forms are evaluated on scalars after aggregation, so
   float summation order can never flip a value hash.
+
+The rank statistics (MWU, KS and their mergeable state, Spearman,
+robust stats, quantile normalization, log-rank, Gini, weighted
+quantiles) and the cents-valued DiD / IPS readouts share one set of
+private kernels, so each exactness argument lives in one place:
+
+- ``_grid``: values quantize to the integer cents grid ``_SCALE`` (the
+  oracles' ``round(x * 100)``) before any rank, histogram or sum, so
+  every statistic is integer arithmetic with one final division.
+- ``structural._group_prefix``: the running sum (and total) per group,
+  walked over a per-group distinct-value histogram — never the raw
+  rows, never a global sort.
+- ``_grid_hist`` / ``_ranked_hist``: the (group, value, count, count
+  strictly below, group size) histogram behind every positional
+  selection.
+- ``_tie_rank2``: the doubled average rank ``2b + c + 1`` of a tied
+  block — an integer, so rank sums never go through float ranks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from .structural import _group_prefix, merge_partial_aggregates
 
 __all__ = [
     "cohort_retention",
@@ -353,6 +372,45 @@ def equidepth_bins(
 
 def _dec(c: Column) -> Column:
     return c.cast("decimal(38,0)")
+
+
+# the integer grid every rank statistic quantizes to (cents)
+_SCALE = 100
+
+
+def _grid(col: str) -> Column:
+    """``col`` quantized to the ``_SCALE`` grid as BIGINT (NULL stays
+    NULL). Ranks, ties and sums on the grid are exact integers in both
+    engines; a caller divides by ``_SCALE`` once, on output."""
+    return F.round(F.col(col).cast("double") * _SCALE).cast("long")
+
+
+def _tie_rank2(b: Column, c: Column) -> Column:
+    """Doubled average rank of a tied block of ``c`` equal values above
+    ``b`` strictly smaller ones: the block holds ranks ``b+1 .. b+c``,
+    whose mean doubled is the integer ``2b + c + 1`` — so rank sums are
+    exact integers, with no float ranks and no summation-order drift."""
+    return 2 * b + c + 1
+
+
+def _ranked_hist(hist: DataFrame, v: str) -> DataFrame:
+    """(_g, v, _c) histogram -> (_g, v, _c, _b, _n): ``_b`` counts the
+    group's values strictly below ``v``, ``_n`` is the group size, so
+    value ``v`` holds positional ranks ``_b+1 .. _b+_c`` of ``_n``."""
+    b, n = _group_prefix("_c", "_g", v, exclusive=True)
+    return hist.select("_g", v, "_c", b.alias("_b"), n.alias("_n"))
+
+
+def _grid_hist(
+    df: DataFrame, group_col: str, value_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(base, hist)``: the non-NULL gridded values (_g, _v) and their
+    per-group :func:`_ranked_hist` (_g, _v, _c, _b, _n)."""
+    base = df.select(
+        F.col(group_col).alias("_g"), _grid(value_col).alias("_v")
+    ).filter(F.col("_v").isNotNull())
+    hist = base.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_c"))
+    return base, _ranked_hist(hist, "_v")
 
 
 def ols_trend(
@@ -872,7 +930,6 @@ def rank_histogram_state(
     value_col: str,
     control: str = "A",
     treatment: str = "B",
-    scale: int = 100,
 ) -> DataFrame:
     """MERGEABLE partial state for the rank/ECDF two-sample test family
     (Mann-Whitney U, Kolmogorov-Smirnov): the per-(group, quantized
@@ -891,11 +948,10 @@ def rank_histogram_state(
     Rows in other variants and NULL values carry no rank/ECDF mass and
     are excluded here once, so every downstream consumer agrees.
     """
-    q = F.round(F.col(value_col).cast("double") * scale).cast("long")
     base = df.select(
         F.col(group_col).alias("_g"),
         F.col(variant_col).alias("_v"),
-        q.alias("_q"),
+        _grid(value_col).alias("_q"),
     ).filter(F.col("_v").isin(control, treatment) & F.col("_q").isNotNull())
     return (
         base.groupBy("_g", "_q")
@@ -923,8 +979,6 @@ def merge_rank_histograms(
     delegates to :func:`~..operators.structural.merge_partial_
     aggregates`). Associative and commutative, so states can be merged
     in any tree order across workers/batches."""
-    from .structural import merge_partial_aggregates
-
     return merge_partial_aggregates(
         state, delta, keys=[group_col, "q"],
         counters=["n_control", "n_treatment"],
@@ -935,30 +989,23 @@ def mann_whitney_u_from_state(
     state: DataFrame, group_col: str, dp: int = 6
 ) -> DataFrame:
     """Finalize Mann-Whitney U from a :func:`rank_histogram_state`
-    table: the per-value doubled tie rank ``2b + c + 1`` comes from one
-    group-partitioned window over the histogram; all rank sums are
-    exact integers (see :func:`mann_whitney_u` for the arithmetic
-    contract — this IS its final phase, split out so merged incremental
-    states finalize identically to a one-shot batch run)."""
+    table (the final phase of :func:`mann_whitney_u`, split out so
+    merged incremental states finalize identically to a one-shot batch
+    run)."""
     per_val = state.select(
         F.col(group_col).alias("_g"),
         F.col("q").alias("_q"),
         (F.col("n_control") + F.col("n_treatment")).alias("c"),
         F.col("n_control").alias("c1"),
     )
-    w_below = (
-        Window.partitionBy("_g")
-        .orderBy("_q")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     ranked = per_val.withColumn(
-        "b", F.coalesce(F.sum("c").over(w_below), F.lit(0))
+        "b", _group_prefix("c", "_g", "_q", exclusive=True)[0]
     )
     agg = ranked.groupBy("_g").agg(
         F.sum("c1").alias("n1"),
         F.sum(F.col("c") - F.col("c1")).alias("n2"),
         F.sum(
-            _dec(F.col("c1")) * _dec(2 * F.col("b") + F.col("c") + 1)
+            _dec(F.col("c1")) * _dec(_tie_rank2(F.col("b"), F.col("c")))
         ).alias("r1x2"),
         F.sum(
             _dec(F.col("c")) * _dec(F.col("c")) * _dec(F.col("c"))
@@ -1014,18 +1061,10 @@ def ks_from_state(
         F.col("n_control").alias("ca"),
         F.col("n_treatment").alias("cb"),
     )
-    w_cum = (
-        Window.partitionBy("_g")
-        .orderBy("_q")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("_g")
+    fa, n1 = _group_prefix("ca", "_g", "_q")
+    fb, n2 = _group_prefix("cb", "_g", "_q")
     cum = per_val.select(
-        "_g",
-        F.sum("ca").over(w_cum).alias("fa"),
-        F.sum("cb").over(w_cum).alias("fb"),
-        F.sum("ca").over(w_all).alias("n1"),
-        F.sum("cb").over(w_all).alias("n2"),
+        "_g", fa.alias("fa"), fb.alias("fb"), n1.alias("n1"), n2.alias("n2")
     )
     agg = cum.groupBy("_g").agg(
         F.max("n1").alias("n_a"),
@@ -1059,23 +1098,20 @@ def mann_whitney_u(
     control: str = "A",
     treatment: str = "B",
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test per experiment group —
     the non-parametric companion to :func:`~hybridbackend_spark.
     functions.metrics.ab_ztest` for heavy-tailed metrics where a mean
     difference is the wrong readout (revenue, latency).
 
-    Engine-exact rank arithmetic: values quantize to an integer grid
-    (``round(value*scale)``), then for each distinct value the *doubled*
-    average tie rank is the integer ``2b + c + 1`` (``b`` = count of
-    strictly smaller values, ``c`` = tie count: the tied ranks are
-    ``b+1 .. b+c``), so the doubled control rank sum ``r1x2`` and the
-    doubled U statistic ``u_x2 = r1x2 - n1*(n1+1)`` are exact integers —
-    no float ranks, no summation-order drift. The tie-corrected normal
-    approximation ``z = (U - n1*n2/2) / sqrt(n1*n2/12 * ((n+1) -
-    T/(n*(n-1))))`` with ``T = sum(c^3 - c)`` is a fixed-shape scalar
-    expression of those integers, identical across engines.
+    Engine-exact rank arithmetic: on the cents grid (:func:`_grid`)
+    each distinct value's doubled tie rank is the integer
+    :func:`_tie_rank2`, so the doubled control rank sum ``r1x2`` and the
+    doubled U statistic ``u_x2 = r1x2 - n1*(n1+1)`` are exact integers.
+    The tie-corrected normal approximation ``z = (U - n1*n2/2) /
+    sqrt(n1*n2/12 * ((n+1) - T/(n*(n-1))))`` with ``T = sum(c^3 - c)``
+    is a fixed-shape scalar expression of those integers, identical
+    across engines.
 
     Scale shape: one (group, value) partial+final aggregation compresses
     the fact table to the distinct-value histogram, a window partitioned
@@ -1094,7 +1130,7 @@ def mann_whitney_u(
     """
     return mann_whitney_u_from_state(
         rank_histogram_state(
-            df, group_col, variant_col, value_col, control, treatment, scale
+            df, group_col, variant_col, value_col, control, treatment
         ),
         group_col,
         dp,
@@ -1109,15 +1145,14 @@ def ks_two_sample(
     control: str = "A",
     treatment: str = "B",
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov distance per group: the maximum
     gap between the two variants' empirical CDFs — the standard
     whole-distribution shift detector (vs the mean-only z-test and the
     binned-only PSI).
 
-    Engine-exact: values quantize to an integer grid; per distinct value
-    the cumulative variant counts ``fa, fb`` come from one ordered
+    Engine-exact: on the cents grid (:func:`_grid`), the cumulative
+    variant counts ``fa, fb`` per distinct value come from one ordered
     window over the (group, value) histogram, and the KS numerator
     ``d_num = max|fa*n_b - fb*n_a|`` is pure BIGINT (the true distance
     is the rational ``d_num / (n_a*n_b)`` — reported both as the exact
@@ -1137,7 +1172,7 @@ def ks_two_sample(
     """
     return ks_from_state(
         rank_histogram_state(
-            df, group_col, variant_col, value_col, control, treatment, scale
+            df, group_col, variant_col, value_col, control, treatment
         ),
         group_col,
         dp,
@@ -1151,7 +1186,6 @@ def robust_stats(
     trim_pct: int = 10,
     k_mad: int = 3,
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Per-group robust location/spread/outlier summary — the
     data-cleaning readout (median, MAD, trimmed mean, Hampel-style
@@ -1164,11 +1198,10 @@ def robust_stats(
                       from EACH tail (positionally)
         n_outliers    rows with |x - median| > k_mad * MAD
 
-    Engine-exact, zero float ranks: values quantize to the ``scale``
-    grid; each positional selection works on the per-group value
-    histogram with a partitioned cumulative window, and medians are
-    kept DOUBLED (lo-rank value + hi-rank value) so half-grid medians
-    stay integers. The absolute deviations ``a = |2x - 2*median|`` and
+    Engine-exact, zero float ranks: each positional selection works on
+    the per-group cents-grid histogram (:func:`_grid_hist`), and
+    medians are kept DOUBLED (lo-rank value + hi-rank value) so
+    half-grid medians stay integers. The absolute deviations ``a = |2x - 2*median|`` and
     their doubled median ``m2a = 4*MAD`` are integers too, so the
     outlier test is the pure-integer comparison ``2a > k_mad * m2a``
     and every emitted double is one final division.
@@ -1183,24 +1216,7 @@ def robust_stats(
     """
     if not 0 <= trim_pct < 50:
         raise ValueError("trim_pct must be in [0, 50)")
-    q = F.round(F.col(value_col).cast("double") * scale).cast("long")
-    base = df.select(
-        F.col(group_col).alias("_g"), q.alias("_v")
-    ).filter(F.col("_v").isNotNull())
-    hist = base.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_c"))
-    w_cum = (
-        Window.partitionBy("_g")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy("_g")
-    h = hist.select(
-        "_g",
-        "_v",
-        "_c",
-        F.coalesce(F.sum("_c").over(w_cum), F.lit(0)).alias("_b"),
-        F.sum("_c").over(w_all).alias("_n"),
-    )
+    _, h = _grid_hist(df, group_col, value_col)
 
     def dual_rank_median(hh: DataFrame, vcol: str) -> DataFrame:
         """Doubled positional median: value_at(floor((n+1)/2)) +
@@ -1226,21 +1242,7 @@ def robust_stats(
         .groupBy("_g", "_a")
         .agg(F.sum("_c").alias("_c"))
     )
-    dh = dev.select(
-        "_g",
-        "_a",
-        "_c",
-        F.coalesce(
-            F.sum("_c").over(
-                Window.partitionBy("_g")
-                .orderBy("_a")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("_b"),
-        F.sum("_c").over(w_all).alias("_n"),
-    )
-    mad2 = dual_rank_median(dh, "_a").select(
+    mad2 = dual_rank_median(_ranked_hist(dev, "_a"), "_a").select(
         "_g", F.col("_d2").alias("_m2a")
     )  # m2a = 4*MAD_cents
     # outliers: integer comparison 2a > k * m2a, counted on the
@@ -1270,7 +1272,7 @@ def robust_stats(
         F.sum(_dec(c_eff * F.col("_v"))).alias("_tsum"),
         F.sum(c_eff).cast("long").alias("_tn"),
     )
-    fs = float(scale)
+    fs = float(_SCALE)
     out = (
         med.join(mad2, "_g").join(outs, "_g").join(trim, "_g")
     )
@@ -1298,21 +1300,19 @@ def spearman_corr(
     x_col: str,
     y_col: str,
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Per-group Spearman rank correlation — the monotone-association
     companion to Pearson :func:`corr_pairs` (robust to outliers and
     nonlinearity; the standard readout when either metric is
     heavy-tailed).
 
-    Engine-exact rank arithmetic: both variables quantize to integer
-    grids; each value's DOUBLED tie-average rank is the integer
-    ``2b + c + 1`` from the per-group value histogram (the
-    :func:`mann_whitney_u` identity), and Spearman = Pearson over
-    those doubled ranks (the x2 scaling cancels in the correlation).
-    All sufficient statistics (rank sums, squares, cross products)
-    accumulate as DECIMAL(38,0), so rho is one fixed-shape expression
-    of exact integers — no float ranks, no summation-order drift.
+    Engine-exact rank arithmetic: both variables quantize to the cents
+    grid (:func:`_grid`); each value's doubled tie rank
+    (:func:`_tie_rank2`) comes from the per-group value histogram, and
+    Spearman = Pearson over those doubled ranks (the x2 scaling cancels
+    in the correlation). All sufficient statistics (rank sums, squares,
+    cross products) accumulate as DECIMAL(38,0), so rho is one
+    fixed-shape expression of exact integers.
 
     Scale shape: two (group, value)-keyed histograms with partitioned
     windows (never a global sort), one fact-side broadcast-or-shuffle
@@ -1324,26 +1324,15 @@ def spearman_corr(
     """
     base = df.select(
         F.col(group_col).alias("_g"),
-        F.round(F.col(x_col).cast("double") * scale).cast("long").alias("_x"),
-        F.round(F.col(y_col).cast("double") * scale).cast("long").alias("_y"),
+        _grid(x_col).alias("_x"),
+        _grid(y_col).alias("_y"),
     ).filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
 
     def ranks(col: str, out: str) -> DataFrame:
         hist = base.groupBy("_g", col).agg(F.count(F.lit(1)).alias("_c"))
-        w = (
-            Window.partitionBy("_g")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        return hist.select(
-            "_g",
-            col,
-            (
-                2 * F.coalesce(F.sum("_c").over(w), F.lit(0))
-                + F.col("_c")
-                + 1
-            ).alias(out),
-        )
+        b, _ = _group_prefix("_c", "_g", col, exclusive=True)
+        return hist.select("_g", col, _tie_rank2(b, F.col("_c")).alias(out))
+
     rx = ranks("_x", "_rx")
     ry = ranks("_y", "_ry")
     ranked = base.join(rx, ["_g", "_x"]).join(ry, ["_g", "_y"])
@@ -1607,7 +1596,6 @@ def quantile_normalize(
     group_col: str,
     value_col: str,
     k: int = 1024,
-    scale: int = 100,
     grid_col: str | None = None,
 ) -> DataFrame:
     """Cross-slice quantile normalization — the batch-effect correction
@@ -1620,14 +1608,14 @@ def quantile_normalize(
     comparisons stop measuring acquisition artifacts.
 
     Engine-exactness: within-slice ranks are POSITIONAL from the
-    (slice, value) histogram (ties share their group's upper rank, the
-    standard tie rule), and the pooled grid comes from ONE fused
-    ``percentile`` aggregate at the DYADIC fractions j/k with k a power
-    of two — on the integer ``scale`` grid the interpolation
-    ``a + (b-a)*f`` is exact in double for dyadic f (the equidepth_bins
-    argument), so both engines produce bit-identical grid values. The
-    per-row map is the integer index ``ceil(rank*k/n_slice)`` into the
-    broadcast k-element grid.
+    (slice, value) histogram (:func:`_grid_hist`; ties share their
+    group's upper rank, the standard tie rule), and the pooled grid
+    comes from ONE fused ``percentile`` aggregate at the DYADIC
+    fractions j/k with k a power of two — on the integer cents grid the
+    interpolation ``a + (b-a)*f`` is exact in double for dyadic f (the
+    equidepth_bins argument), so both engines produce bit-identical
+    grid values. The per-row map is the integer index
+    ``ceil(rank*k/n_slice)`` into the broadcast k-element grid.
 
     Scale shape: one aggregate-sized histogram per slice (partitioned
     windows only), one fused pooled-percentile agg broadcast as a
@@ -1635,35 +1623,17 @@ def quantile_normalize(
     row — no per-slice sort, no global window, no unbounded state.
 
     Returns per-row (group, value, normalized). BOTH value columns are
-    QUANTIZED to the ``scale`` grid (value = round(input*scale)/scale;
-    normalized = grid value/scale) — callers with finer-grained data
-    must raise ``scale`` or carry the original column themselves. When
-    ``grid_col`` is set, the raw interpolated grid value in SCALE UNITS
-    (a double; e.g. cents at scale=100) is also returned under that
-    name, so integer-exact downstream comparisons can round ONCE on the
-    grid unit instead of round-tripping through ``/scale`` (a division
-    that can land 1 ulp below a .5 tie and flip the rounded integer).
+    QUANTIZED to cents (value = round(input*100)/100; normalized = grid
+    value/100) — callers with finer-grained data carry the original
+    column themselves. When ``grid_col`` is set, the raw interpolated
+    grid value in CENTS (a double) is also returned under that name, so
+    integer-exact downstream comparisons can round ONCE on the grid
+    unit instead of round-tripping through ``/100`` (a division that can
+    land 1 ulp below a .5 tie and flip the rounded integer).
     """
     if k < 2 or (k & (k - 1)) != 0:
         raise ValueError("k must be a power of two >= 2 (dyadic grid)")
-    q = F.round(F.col(value_col).cast("double") * scale).cast("long")
-    base = df.select(
-        F.col(group_col).alias("_g"), q.alias("_v")
-    ).filter(F.col("_v").isNotNull())
-    hist = base.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_c"))
-    w_cum = (
-        Window.partitionBy("_g")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy("_g")
-    h = hist.select(
-        "_g",
-        "_v",
-        "_c",
-        F.coalesce(F.sum("_c").over(w_cum), F.lit(0)).alias("_b"),
-        F.sum("_c").over(w_all).alias("_n"),
-    )
+    base, h = _grid_hist(df, group_col, value_col)
     fracs = ", ".join(repr(j / k) for j in range(1, k + 1))
     grid = base.agg(
         F.expr(f"percentile(_v, array({fracs}))").alias("_grid")
@@ -1677,8 +1647,8 @@ def quantile_normalize(
     gval = F.element_at(F.col("_grid"), idx).cast("double")
     cols = [
         F.col("_g").alias(group_col),
-        (F.col("_v").cast("double") / scale).alias(value_col),
-        (gval / scale).alias("normalized"),
+        (F.col("_v").cast("double") / _SCALE).alias(value_col),
+        (gval / _SCALE).alias("normalized"),
     ]
     if grid_col is not None:
         cols.append(gval.alias(grid_col))
@@ -1692,7 +1662,6 @@ def diff_in_diff(
     post_col: Column,
     value_col: str,
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Difference-in-differences estimator per group — the workhorse
     quasi-experimental readout when treatment was NOT randomized (a
@@ -1706,7 +1675,7 @@ def diff_in_diff(
     parallel-trends assumption is the caller's to defend — this is the
     arithmetic, stated exactly).
 
-    Engine-exactness: values quantize to the ``scale`` grid; each
+    Engine-exactness: values quantize to cents (:func:`_grid`); each
     cell's n / sum / sum-of-squares accumulate as BIGINT / DECIMAL(38,0)
     in ONE conditional-aggregation pass, so DiD is exact integer-cents
     arithmetic divided once, and SE/z are fixed-shape expressions of
@@ -1717,12 +1686,11 @@ def diff_in_diff(
     Returns (group, n_tp, n_tq, n_cp, n_cq, did, se, z) where
     t/c = treated/control and p/q = post/pre.
     """
-    qv = F.round(F.col(value_col).cast("double") * scale).cast("long")
     base = df.select(
         F.col(group_col).alias("_g"),
         treated_col.cast("boolean").alias("_tr"),
         post_col.cast("boolean").alias("_po"),
-        qv.alias("_v"),
+        _grid(value_col).alias("_v"),
     ).filter(
         F.col("_v").isNotNull()
         & F.col("_tr").isNotNull()
@@ -1746,7 +1714,7 @@ def diff_in_diff(
         *cell(False, True, "cp"),
         *cell(False, False, "cq"),
     )
-    fs = float(scale)
+    fs = float(_SCALE)
 
     def mean(tag: str):
         return F.col(f"s_{tag}").cast("double") / (
@@ -2026,18 +1994,11 @@ def logrank_test(
                 f"logrank_test: {n_dur} distinct durations exceed "
                 f"max_durations={max_durations}; quantize durations first"
             )
-    w = (
-        Window.partitionBy("_g")
-        .orderBy(F.desc("_t"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # at-risk counts: everyone whose duration is >= t
+    n1, _ = _group_prefix("r1", "_g", F.desc("_t"))
+    n, _ = _group_prefix("r", "_g", F.desc("_t"))
     risk = counts.select(
-        "_g",
-        "_t",
-        "d1",
-        "d",
-        F.sum("r1").over(w).alias("n1"),
-        F.sum("r").over(w).alias("n"),
+        "_g", "_t", "d1", "d", n1.alias("n1"), n.alias("n")
     ).filter(F.col("d") > 0)
     n1d = F.col("n1").cast("double")
     nd = F.col("n").cast("double")
@@ -2081,7 +2042,6 @@ def gini_coefficient(
     group_col: str,
     value_col: str,
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Per-group Gini coefficient of a non-negative value — the
     standard concentration/inequality readout (revenue concentration,
@@ -2094,33 +2054,39 @@ def gini_coefficient(
     tied block contributes (sum of its ranks) * x, which no intra-block
     permutation can change.
 
-    Engine-exact: values quantize to the integer grid; the fact table
+    Engine-exact: on the cents grid (:func:`_grid`) the fact table
     compresses to the per-group distinct-value histogram, where a tied
-    block's rank sum is the exact integer ``c*b + c*(c+1)/2`` (``b`` =
-    count of strictly smaller values), so S0/S1 and the Gini numerator
-    are pure DECIMAL(38,0) — one final division. The cumulative window
-    partitions by group over the histogram, never the raw rows.
+    block's doubled rank sum is the exact integer ``c`` times its
+    :func:`_tie_rank2`, so S0/S1 and the Gini numerator are pure
+    DECIMAL(38,0) — one final division.
 
-    Returns (group, n, total, gini); gini is NULL when n = 0 or
+    Values must be non-negative: a negative value raises (an executable
+    guard on the raw value, so one that rounds to 0 cents is caught
+    too). Returns (group, n, total, gini); gini is NULL when n = 0 or
     S0 = 0 (all-zero values — undefined share distribution).
     """
-    q = F.round(F.col(value_col).cast("double") * scale).cast("long")
+    raw = F.col(value_col).cast("double")
+    q = F.when(
+        raw < 0,
+        F.raise_error(
+            F.concat(
+                F.lit("gini_coefficient: negative value "),
+                raw.cast("string"),
+                F.lit(f" in column {value_col!r}"),
+            )
+        ).cast("long"),
+    ).otherwise(_grid(value_col))
     # NULL values hold no share: excluded from n as well as S0/S1 (else
     # n counts rows the sums skip, skewing G)
     base = df.select(F.col(group_col).alias("_g"), q.alias("_q")).filter(
         F.col("_q").isNotNull()
     )
     per_val = base.groupBy("_g", "_q").agg(F.count(F.lit(1)).alias("c"))
-    w_below = (
-        Window.partitionBy("_g")
-        .orderBy("_q")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     ranked = per_val.withColumn(
-        "b", F.coalesce(F.sum("c").over(w_below), F.lit(0))
+        "b", _group_prefix("c", "_g", "_q", exclusive=True)[0]
     )
-    # rank sum of the tied block: c*b + c*(c+1)/2; doubled to stay integral
-    rs2 = _dec(F.col("c")) * _dec(2 * F.col("b") + F.col("c") + 1)
+    # c * (2b + c + 1) = 2 * (the block's rank sum), integral
+    rs2 = _dec(F.col("c")) * _dec(_tie_rank2(F.col("b"), F.col("c")))
     agg = ranked.groupBy("_g").agg(
         F.sum("c").alias("n"),
         F.sum(_dec(F.col("c")) * _dec(F.col("_q"))).alias("s0"),
@@ -2134,7 +2100,7 @@ def gini_coefficient(
     return agg.select(
         F.col("_g").alias(group_col),
         n.cast("long").alias("n"),
-        (s0d / F.lit(float(scale))).alias("total"),
+        (s0d / F.lit(float(_SCALE))).alias("total"),
         F.when((n > 0) & (F.col("s0") != 0), F.round(gini, dp)).alias(
             "gini"
         ),
@@ -2148,7 +2114,6 @@ def offpolicy_ips(
     propensity_w60: Column,
     policies: dict[str, Column],
     dp: int = 6,
-    scale: int = 100,
 ) -> DataFrame:
     """Off-policy evaluation of target policies from logged bandit
     feedback: inverse-propensity scoring (Horvitz-Thompson) and its
@@ -2163,7 +2128,7 @@ def offpolicy_ips(
     Engine-exactness contract: the caller supplies ``propensity_w60``
     = 60/p_i as an exact INTEGER column (any logged propensity on the
     1/60 grid — e.g. uniform-over-K or the 1/15..5/15 family — has an
-    integer 60/p), and rewards quantize to the ``scale`` grid, so both
+    integer 60/p), and rewards quantize to cents (:func:`_grid`), so both
     numerators and the SNIPS denominator accumulate as DECIMAL(38,0);
     each estimate is one final division. ``policies`` maps a policy
     name to a Column holding the action that policy would take.
@@ -2177,7 +2142,7 @@ def offpolicy_ips(
     """
     if not policies:
         raise ValueError("policies must be non-empty")
-    r = F.round(F.col(reward_col).cast("double") * scale).cast("long")
+    r = _grid(reward_col)
     # Integrality gate: a propensity off the 1/60 grid would silently
     # truncate under cast('long') and bias IPS/SNIPS — raise instead
     # (NULL propensities also raise; they have no valid weight).
@@ -2227,7 +2192,7 @@ def offpolicy_ips(
             )
         ).alias("_den"),
     )
-    fs = float(scale)
+    fs = float(_SCALE)
     ips = F.col("_num").cast("double") / (
         F.lit(60.0) * fs * F.col("n").cast("double")
     )
@@ -2248,7 +2213,6 @@ def weighted_quantiles(
     group_col: str,
     value_col: str,
     weight_col: str,
-    scale: int = 100,
 ) -> DataFrame:
     """Per-group EXACT weighted quantiles (p25/p50/p75) by the
     lower-weighted-quantile rule: the smallest value v whose inclusive
@@ -2257,7 +2221,7 @@ def weighted_quantiles(
     quantity, a latency weighted by request count) — the unweighted
     median silently re-weights every row to 1.
 
-    Engine-exactness: values quantize to the ``scale`` grid (BIGINT),
+    Engine-exactness: values quantize to cents (:func:`_grid`),
     weights cast to BIGINT, one (group, value)-keyed histogram agg, one
     partitioned cumulative window over the histogram, and the quantile
     comparisons stay in integers (``4*cum >= W`` for p25, ``2*cum >= W``
@@ -2265,7 +2229,7 @@ def weighted_quantiles(
     engine selects the identical grid values.
 
     Scale shape: the window runs over the per-group HISTOGRAM (bounded
-    by distinct values on the scale grid), never the raw rows; the only
+    by distinct values on the cents grid), never the raw rows; the only
     fact-sized pass is the partial-agg histogram build.
 
     Weights must be non-negative (a negative weight silently corrupts
@@ -2277,7 +2241,7 @@ def weighted_quantiles(
 
     Returns (group, total_weight, wp25, wp50, wp75) on the value scale.
     """
-    v = F.round(F.col(value_col).cast("double") * scale).cast("long")
+    v = _grid(value_col)
     # guard the RAW weight, not the rounded one: weights in (-0.5, 0)
     # round to 0 and would silently bypass a post-rounding check
     wraw = F.col(weight_col).cast("double")
@@ -2298,23 +2262,13 @@ def weighted_quantiles(
         .groupBy("_g", "_v")
         .agg(F.sum("_w").alias("_wv"))
     )
-    w_cum = (
-        Window.partitionBy("_g")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("_g")
-    cum = hist.select(
-        "_g",
-        "_v",
-        F.sum("_wv").over(w_cum).alias("_cw"),
-        F.sum("_wv").over(w_all).alias("_tw"),
-    )
+    cw, tw = _group_prefix("_wv", "_g", "_v")
+    cum = hist.select("_g", "_v", cw.alias("_cw"), tw.alias("_tw"))
     c, t = F.col("_cw"), F.col("_tw")
     pick = lambda cond: F.min(F.when(cond, F.col("_v")))  # noqa: E731
     return cum.groupBy(F.col("_g").alias(group_col)).agg(
         F.max(t).cast("long").alias("total_weight"),
-        (pick(4 * c >= t).cast("double") / scale).alias("wp25"),
-        (pick(2 * c >= t).cast("double") / scale).alias("wp50"),
-        (pick(4 * c >= 3 * t).cast("double") / scale).alias("wp75"),
+        (pick(4 * c >= t).cast("double") / _SCALE).alias("wp25"),
+        (pick(2 * c >= t).cast("double") / _SCALE).alias("wp50"),
+        (pick(4 * c >= 3 * t).cast("double") / _SCALE).alias("wp75"),
     )

@@ -183,6 +183,32 @@ def _range_prefix(
     return out.drop("_pid", "_local"), acc
 
 
+def _group_prefix(
+    value: Column | str,
+    group: Column | str,
+    *order: Column | str,
+    exclusive: bool = False,
+) -> tuple[Column, Column]:
+    """Running sum of ``value`` within each ``group`` in ``order`` order,
+    and the group total, as two window Columns — the per-group
+    counterpart of :func:`_range_prefix`: the sum restarts in every
+    group, so one window partition is one group (at the rank-statistics
+    callers, one group's distinct-value histogram, never raw rows).
+
+    The running sum covers the rows up to and including this one, or
+    strictly before it when ``exclusive`` (then 0, not NULL, on a
+    group's first row)."""
+    w = (
+        Window.partitionBy(group)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
+    )
+    run = F.sum(value).over(w)
+    if exclusive:
+        run = F.coalesce(run, F.lit(0))
+    return run, F.sum(value).over(Window.partitionBy(group))
+
+
 def with_batch_id(
     df: DataFrame,
     batch_size: int,

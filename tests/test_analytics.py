@@ -913,6 +913,14 @@ def test_gini_matches_python_and_edge_cases(spark):
     assert got["mix"].gini == round((2 * s1 - (n + 1) * s0) / (n * s0), 6)
     assert got["mix"].total == s0 / 100.0
     assert got["zero"].gini is None  # all-zero -> undefined, not a /0 abort
+    # negative values have no share: (-1, 2) used to return gini 1.5;
+    # -0.001 rounds to 0 cents and must raise too
+    for bad in (-1.0, -0.001):
+        neg = spark.createDataFrame(
+            [("neg", bad), ("neg", 2.0)], "g string, x double"
+        )
+        with pytest.raises(Exception, match="gini_coefficient: negative value"):
+            gini_coefficient(neg, "g", "x").collect()
 
 
 def test_gini_tie_rule_free(spark):

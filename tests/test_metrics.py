@@ -241,6 +241,19 @@ def test_gauc_reference_mode_requires_order_col(spark):
         gauc(df, "g", "label", "score", tie_mode="reference")
 
 
+def test_gauc_rejects_unknown_options(spark):
+    # a typo used to fall through to uniform weighting / half credit
+    df = spark.createDataFrame(
+        [(0, 1, 0.5, 0)], "g: long, label: int, score: double, ord: long"
+    )
+    for kw in ({"weight": "counts"}, {"weight": "uniform "}):
+        with pytest.raises(ValueError, match="weight must be"):
+            gauc(df, "g", "label", "score", **kw)
+    for kw in ({"tie_mode": "ref"}, {"tie_mode": "Half", "order_col": "ord"}):
+        with pytest.raises(ValueError, match="tie_mode must be"):
+            gauc(df, "g", "label", "score", **kw)
+
+
 def test_ab_ztest_matches_numpy(spark):
     import math
 
