@@ -28,6 +28,7 @@ from .functions.windows import (
     sliding_time_window,
 )
 from .operators.joins import asof_join, left_join_with_default, lookup_join, pooled_lookup
+from .sources.tabular import _load, _stamp
 
 def _money_sum(expr):
     """Exact money aggregation: quantize each row to integer cents (the
@@ -93,12 +94,22 @@ def _event_ts(df: DataFrame) -> DataFrame:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a test table; ``events`` goes through :func:`_event_ts`."""
+    """Load a test table through the package loader
+    (``sources.tabular._load``): the first load of a file in a session
+    infers its schema from the footer (one Spark job), later loads of the
+    same ``(abspath, st_mtime_ns, st_size)`` stamp reuse it and submit
+    none. Each call still builds a fresh relation, so self-joins keep
+    distinct attribute ids; a rewritten file gets a new stamp and is
+    re-inferred; a non-local ``sf_dir`` bypasses the memo. Changing a
+    Parquet-inference conf mid-session is out of contract (as the time
+    zone is for :func:`_pin_utc`). ``events`` goes through
+    :func:`_event_ts`."""
     _pin_utc(spark)
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return _event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return _event_ts(_load(spark, path))
+    return _load(spark, path)
 
 
 # ---------------------------------------------------------------------------
@@ -6137,13 +6148,15 @@ def substring_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # readouts, and at 100 TB re-paying the co-occurrence self-join per
 # consumer doubles the most expensive non-iterative job in the suite.
 # Keyed by Spark application id so a new session never sees another
-# session's cached plan. Both consumers stay independently oracled —
-# the DuckDB SQL recomputes from scratch by construction; only the
-# ENGINE shares work. The cache holds AT MOST ONE entry (the most
-# recent (app, sf_dir)): a long-lived session sweeping many sf_dirs
-# unpersists the evicted state instead of accumulating executor
-# memory, and a lock serializes the first build so concurrent callers
-# can't double-build and orphan a persisted pair.
+# session's cached plan, and by the loader's file stamps of orders and
+# lineitem (``sources.tabular._stamp``) so a rewritten table rebuilds the
+# state instead of serving the old rows. Both consumers stay
+# independently oracled — the DuckDB SQL recomputes from scratch by
+# construction; only the ENGINE shares work. The cache holds AT MOST ONE
+# entry (the most recent key): a long-lived session sweeping many
+# sf_dirs or rewriting a table unpersists the evicted state instead of
+# accumulating executor memory, and a lock serializes the first build so
+# concurrent callers can't double-build and orphan a persisted pair.
 _I2I_CACHE: dict = {}
 _I2I_LOCK = __import__("threading").Lock()
 _I2I_CAP, _I2I_K = 50, 5
@@ -6154,7 +6167,12 @@ def _i2i_state_cached(spark: SparkSession, sf_dir: str):
     the top-_I2I_K item-item similarity table, both persisted."""
     from .operators.ranking import item_similarity
 
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        _stamp(f"{sf_dir}/orders.parquet"),
+        _stamp(f"{sf_dir}/lineitem.parquet"),
+    )
     with _I2I_LOCK:
         state = _I2I_CACHE.get(key)
         if state is None:

@@ -141,7 +141,13 @@ def register_tables(spark, sf_dir: str, names=None) -> list[str]:
     DataFrame API — the full query surface is available either way,
     since every operator here compiles to the same Catalyst plans.
     ``events.ts`` gets the same nanos/NTZ normalization as the
-    DataFrame loaders. Returns the registered view names.
+    DataFrame loaders. Each table loads through ``queries._t``, so the
+    per-session schema memo of ``sources.tabular._load`` applies: keyed
+    on the file's ``(abspath, st_mtime_ns, st_size)``, a re-registration
+    of an unchanged file submits no Spark job, a rewritten file is
+    re-inferred, a non-local ``sf_dir`` bypasses the memo, and changing
+    a Parquet-inference conf mid-session is out of contract. Returns the
+    registered view names.
     """
     from .queries import _t
 

@@ -12,13 +12,45 @@ What the reference does imperatively — row-group partitioning across
 workers, multi-file interleave, thread budgets — Spark's split planning
 does natively (`spark.sql.files.maxPartitionBytes` governs split size), so
 none of it is re-implemented here.
+
+Every table read of the package goes through one private loader,
+:func:`_load` (``queries._t`` and so ``session.register_tables``,
+:func:`read_tabular`, :func:`read_parquet_with_provenance` and the
+events-schema probe of ``streaming.ops.read_event_stream``). Like the
+reference, it resolves a Parquet file's schema from its footer once and
+afterwards only projects and reads:
+
+- a per-session memo (weakly keyed on the ``SparkSession``, so it dies
+  with the session) maps a file's ``(abspath, st_mtime_ns, st_size)``
+  stamp to the schema Spark inferred for it. A hit reads with
+  ``spark.read.schema(memo).parquet(path)``, which submits no Spark job;
+  a miss infers as a plain read does (one job) and stores the result.
+  The same entry also holds the footer's :class:`~..schema.Field` list,
+  so ``read_tabular(fields=...)`` reads it with pyarrow once per stamp;
+- every load still builds a fresh relation, so a self-join of two loads
+  keeps distinct attribute ids;
+- directories, multi-path reads, glob patterns, URIs with a scheme
+  (``hdfs://``, ``s3a://``, ``file:``) and non-Parquet formats bypass the
+  memo and read exactly as a plain read does;
+- a rewrite is seen through the stamp. One that keeps both the size and
+  the mtime (same filesystem clock tick) is not;
+- the memo does not watch the session's Parquet-inference confs
+  (``spark.sql.legacy.parquet.nanosAsLong``, ``binaryAsString``,
+  ``int96AsTimestamp``, ...): changing one mid-session is out of
+  contract, the rule ``queries._pin_utc`` sets for the session time
+  zone.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..schema import Field, infer_fields, merge_fields
 
@@ -53,8 +85,6 @@ def narrow_uint64(
     ``columns=None`` narrows every DECIMAL(20, 0) column (the exact type
     uint64 widens to); pass names to narrow a subset.
     """
-    from pyspark.sql import types as T
-
     if columns is not None:
         missing = [c for c in columns if c not in df.columns]
         if missing:
@@ -99,8 +129,84 @@ def narrow_uint64(
     return out
 
 
-def _first_path(paths: str | Sequence[str]) -> str:
-    return paths if isinstance(paths, str) else paths[0]
+@dataclass
+class _Footer:
+    """One memo entry: a file's stamp, the schema Spark inferred for it
+    and the footer's pyarrow field list (each filled on first use)."""
+
+    stamp: tuple[str, int, int]
+    schema: T.StructType | None = None
+    fields: list[Field] | None = None
+
+
+# No lock: two threads that miss on one file at once each infer it, and
+# the later store wins with the same schema.
+_FOOTERS: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Footer]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _stamp(path: str) -> tuple[str, int, int] | None:
+    """``(abspath, st_mtime_ns, st_size)`` of a local regular file; None
+    for a URI, a directory, a glob or a missing path."""
+    if ":" in path.split("/", 1)[0]:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return os.path.abspath(path), st.st_mtime_ns, st.st_size
+
+
+def _footer(spark: SparkSession, path: str) -> _Footer | None:
+    """The session's memo entry for ``path`` at its current stamp (a
+    stale entry is replaced); None when ``path`` bypasses the memo."""
+    stamp = _stamp(path)
+    if stamp is None:
+        return None
+    memo = _FOOTERS.setdefault(spark, {})
+    entry = memo.get(stamp[0])
+    if entry is None or entry.stamp != stamp:
+        entry = memo[stamp[0]] = _Footer(stamp)
+    return entry
+
+
+def _load(
+    spark: SparkSession,
+    paths: str | Sequence[str],
+    fmt: str = "parquet",
+    **options: str,
+) -> DataFrame:
+    """The package's one table loader (module docstring: memo key, scope
+    and bypass cases). Parquet goes through ``DataFrameReader.parquet``,
+    other formats through ``format(fmt).load``."""
+    path_list = [paths] if isinstance(paths, str) else list(paths)
+    reader = spark.read
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    if fmt != "parquet":
+        return reader.format(fmt).load(path_list)
+    entry = _footer(spark, path_list[0]) if len(path_list) == 1 else None
+    if entry is None:
+        return reader.parquet(*path_list)
+    if entry.schema is not None:
+        return reader.schema(entry.schema).parquet(path_list[0])
+    df = reader.parquet(path_list[0])
+    entry.schema = df.schema
+    return df
+
+
+def _footer_fields(spark: SparkSession, path: str) -> list[Field]:
+    """:func:`~..schema.infer_fields` of ``path``, served from the
+    session memo when ``path`` is a local file."""
+    entry = _footer(spark, path)
+    if entry is None:
+        return infer_fields(path)
+    if entry.fields is None:
+        entry.fields = infer_fields(path)
+    return entry.fields
 
 
 def read_tabular(
@@ -142,15 +248,16 @@ def read_tabular(
     if widen_uint64_to not in ("decimal", "long"):
         raise ValueError("widen_uint64_to must be 'decimal' or 'long'")
     path_list = [paths] if isinstance(paths, str) else list(paths)
-    reader = spark.read.format(fmt)
     if skip_corrupted_data:
-        reader = reader.option("ignoreCorruptFiles", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.load(path_list)
+        options = {"ignoreCorruptFiles": "true", **options}
+    df = _load(spark, path_list, fmt, **options)
 
     if fields:
-        inferred = infer_fields(_first_path(path_list)) if fmt in ("parquet", "orc") else None
+        inferred = (
+            _footer_fields(spark, path_list[0])
+            if fmt in ("parquet", "orc")
+            else None
+        )
         if inferred is not None:
             merged = merge_fields(fields, inferred, ignore_case=field_ignore_case)
         else:
@@ -272,10 +379,7 @@ def read_parquet_with_provenance(
     partitionings, and engines, so (file, row) is a durable row address
     for audits, lineage joins, and incremental reprocessing).
     """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(*([paths] if isinstance(paths, str) else list(paths)))
-    return df.select(
+    return _load(spark, paths).select(
         "*",
         F.regexp_extract(F.col("_metadata.file_path"), r"([^/]+)$", 1).alias(
             file_col

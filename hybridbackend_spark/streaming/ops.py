@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ..sources.tabular import _load
+
 __all__ = [
     "read_event_stream",
     "tumbling_agg",
@@ -58,8 +60,10 @@ def _probed_events_schema(spark: SparkSession, path: str) -> T.StructType:
     """EVENTS_SCHEMA with the ``ts`` field typed as a batch read of
     ``path`` actually surfaces it on this Spark build (int64 nanos vs
     timestamp_ntz) — file-source streams require a declared schema, and
-    declaring the wrong variant makes every batch unreadable."""
-    probed = dict(spark.read.parquet(path).dtypes).get("ts")
+    declaring the wrong variant makes every batch unreadable. The probe
+    goes through the package loader, so a file ``queries._t`` already
+    loaded in this session costs no Spark job."""
+    probed = dict(_load(spark, path).dtypes).get("ts")
     ts_type = T.LongType() if probed == "bigint" else T.TimestampNTZType()
     return T.StructType(
         [

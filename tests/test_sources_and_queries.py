@@ -283,3 +283,125 @@ def test_raw_sql_interface_matches_dataframe(spark, sf_dir):
     got = {tuple(r) for r in sql.collect()}
     want = {tuple(r) for r in df.collect()}
     assert got == want and len(got) > 0
+
+
+# --- the loader's per-session schema memo (sources.tabular._load) ---------
+
+
+def _jobs_of(spark, group, fn):
+    """Run ``fn`` in its own job group; return (result, job ids), read
+    after the listener bus has drained so a job cannot be missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_table(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), path)
+
+
+def test_load_memo_second_load_submits_no_job(spark, sf_dir):
+    from hybridbackend_spark.queries import _event_ts, _t
+
+    for name in ("lineitem", "events"):
+        _t(spark, sf_dir, name)
+        df, jobs = _jobs_of(spark, f"memo_hit_{name}", lambda: _t(spark, sf_dir, name))
+        assert jobs == []
+        fresh = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            fresh = _event_ts(fresh)
+        assert df.schema == fresh.schema
+
+
+def test_load_memo_self_join_keeps_distinct_relations(spark, sf_dir):
+    # two loads of one file must be two relations, or the join condition
+    # compares a column with itself
+    from hybridbackend_spark.queries import _t
+
+    def pairs(a, b):
+        return a.join(
+            b,
+            (a.l_orderkey == b.l_orderkey) & (a.l_linenumber < b.l_linenumber),
+        ).count()
+
+    path = f"{sf_dir}/lineitem.parquet"
+    want = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    assert want > 0
+    assert pairs(_t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "lineitem")) == want
+
+
+def test_load_memo_sees_rewritten_file(spark, tmp_path):
+    from hybridbackend_spark.sources.tabular import _load
+
+    p = str(tmp_path / "t.parquet")
+    _write_table(p, a=[1, 2, 3])
+    assert _load(spark, p).columns == ["a"]
+    df, jobs = _jobs_of(spark, "memo_tmp_hit", lambda: _load(spark, p))
+    assert jobs == [] and df.columns == ["a"]
+
+    _write_table(p, a=[1, 2, 3], b=["x", "y", "z"])
+    df = _load(spark, p)
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
+
+
+def test_load_memo_bypasses_directories(spark, tmp_path):
+    from hybridbackend_spark.sources.tabular import _FOOTERS, _load
+
+    d = str(tmp_path / "dir")
+    spark.range(3).write.parquet(d)
+    _load(spark, d)
+    df, jobs = _jobs_of(spark, "memo_dir", lambda: _load(spark, d))
+    assert jobs != [] and df.count() == 3
+    assert not any(k.startswith(d) for k in _FOOTERS.get(spark, {}))
+
+
+def test_read_tabular_fields_reads_footer_once(spark, tmp_path, monkeypatch):
+    import pyarrow.dataset as pads
+
+    from hybridbackend_spark.sources import read_tabular
+
+    p = str(tmp_path / "f.parquet")
+    _write_table(p, id=[1, 2], v=[0.5, 1.5])
+    calls = []
+    real = pads.dataset
+    monkeypatch.setattr(pads, "dataset", lambda *a, **k: calls.append(a) or real(*a, **k))
+    for _ in range(2):
+        df = read_tabular(spark, p, fields=[Field("id", "int64"), Field("v", "float64")])
+        assert df.columns == ["id", "v"]
+    assert len(calls) == 1
+
+
+def test_i2i_state_rebuilt_when_table_rewritten(spark, tmp_path):
+    from hybridbackend_spark.queries import _I2I_CACHE, _i2i_state_cached
+
+    d = str(tmp_path)
+    _write_table(f"{d}/lineitem.parquet", l_orderkey=[1, 1, 2, 3], l_partkey=[10, 11, 10, 12])
+    _write_table(f"{d}/orders.parquet", o_orderkey=[1, 2, 3], o_custkey=[100, 101, 101])
+    ui, sim = _i2i_state_cached(spark, d)
+    assert _i2i_state_cached(spark, d)[0] is ui
+    assert ui.is_cached and sim.is_cached
+    assert {tuple(r) for r in ui.collect()} == {(100, 10), (100, 11), (101, 10), (101, 12)}
+
+    # same path, new content: every order now belongs to customer 100
+    _write_table(f"{d}/orders.parquet", o_orderkey=[1, 2, 3], o_custkey=[100, 100, 100])
+    try:
+        ui2, sim2 = _i2i_state_cached(spark, d)
+        assert ui2 is not ui and sim2 is not sim
+        # is_cached is cleared by unpersist; storageLevel cannot tell the
+        # pairs apart, the cache manager matches them by their equal plans
+        assert not ui.is_cached and not sim.is_cached
+        assert ui2.is_cached and sim2.is_cached
+        assert {tuple(r) for r in ui2.collect()} == {(100, 10), (100, 11), (100, 12)}
+    finally:
+        for old in list(_I2I_CACHE):
+            for df in _I2I_CACHE.pop(old):
+                df.unpersist()
