@@ -12,6 +12,8 @@ from typing import Any
 
 from pyspark.sql import Column, functions as F
 
+from .._fixed import CENTS, MICRO, grid, grid_moments, ungrid
+
 __all__ = [
     "impute",
     "log1p_feature",
@@ -64,14 +66,11 @@ def concat_features(*cols: Column | str) -> Column:
     return F.array(*[_c(c).cast("double") for c in cols])
 
 
-def standard_scale(df, cols, dp: int = 6, scale: int = 100):
+def standard_scale(df, cols, dp: int = 6):
     """Fitted z-score scaling ``(x - mean) / std`` with ENGINE-EXACT
-    statistics: each value quantizes to integer units (``round(x *
-    scale)`` as long), and sum / sum-of-squares accumulate as exact
-    integers (DECIMAL(38,0) for the squares — a 100 TB fact sum of
-    squared cents overflows a long), so the fitted mean/std are
-    bit-identical across partitionings and engines; only the final
-    division/sqrt touch floats, in a fixed expression order.
+    statistics: sum and sum-of-squares accumulate on the integer cents
+    grid (:mod:`hybridbackend_spark._fixed`), so the fitted mean/std are
+    bit-identical across partitionings and engines.
 
     Plan shape: ONE fused aggregation job for all columns' stats (tiny
     1-row result), broadcast cross-joined back — the standard fit/apply
@@ -86,17 +85,15 @@ def standard_scale(df, cols, dp: int = 6, scale: int = 100):
 
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
-        q = F.round(F.col(c).cast("double") * scale).cast("long")
+        q = grid(c, CENTS)
         aggs.append(F.sum(q).alias(f"_s_{c}"))
         aggs.append(F.sum((q * q).cast("decimal(38,0)")).alias(f"_ss_{c}"))
     stats = df.agg(*aggs)
     out = df.crossJoin(F.broadcast(stats))
-    fscale = float(scale)
     for c in cols:
-        n = F.col("_n").cast("double")
-        mean = (F.col(f"_s_{c}") / fscale) / n
-        ex2 = (F.col(f"_ss_{c}").cast("double") / (fscale * fscale)) / n
-        var = ex2 - mean * mean
+        mean, var = grid_moments(
+            F.col("_n"), F.col(f"_s_{c}"), F.col(f"_ss_{c}"), CENTS
+        )
         out = out.withColumn(
             f"{c}_z",
             F.when(
@@ -115,7 +112,6 @@ def target_encode(
     loo: bool = True,
     out_col: str | None = None,
     dp: int = 6,
-    scale: int = 100,
 ):
     """Smoothed target (mean) encoding of a categorical column — the
     high-cardinality-categorical workhorse the reference handles with
@@ -129,7 +125,7 @@ def target_encode(
     encoding; ``loo=False`` gives the plain smoothed category mean for
     serving.
 
-    All sums are exact scaled integers (same cents discipline as
+    All sums are exact integers on the cents grid (as in
     :func:`standard_scale`), so encodings are bit-identical across
     engines and layouts. One category aggregate + one scalar prior,
     both broadcast back; the fact table never reshuffles.
@@ -137,21 +133,20 @@ def target_encode(
     from pyspark.sql import functions as F
 
     out_col = out_col or f"{cat_col}_te"
-    q = F.round(F.col(target_col).cast("double") * scale).cast("long")
+    q = grid(target_col, CENTS)
     cat = df.groupBy(cat_col).agg(
         F.sum(q).alias("_cs"), F.count(F.lit(1)).alias("_cn")
     )
     tot = df.agg(
         F.sum(q).alias("_ts"), F.count(F.lit(1)).alias("_tn")
     )
-    fs = float(scale)
     joined = df.join(F.broadcast(cat), cat_col).join(F.broadcast(tot))
-    prior = (F.col("_ts") / fs) / F.col("_tn").cast("double")
+    prior = ungrid(F.col("_ts"), CENTS) / F.col("_tn").cast("double")
     if loo:
-        num = (F.col("_cs") - q) / fs + prior * smoothing
+        num = ungrid(F.col("_cs") - q, CENTS) + prior * smoothing
         den = (F.col("_cn") - 1).cast("double") + F.lit(smoothing)
     else:
-        num = F.col("_cs") / fs + prior * smoothing
+        num = ungrid(F.col("_cs"), CENTS) + prior * smoothing
         den = F.col("_cn").cast("double") + F.lit(smoothing)
     return joined.withColumn(out_col, F.round(num / den, dp)).drop(
         "_cs", "_cn", "_ts", "_tn"
@@ -206,10 +201,7 @@ def woe_iv(
     defined = (F.col("pos_c") > 0) & (F.col("neg_c") > 0)
     iv_term = F.when(
         defined,
-        F.round(rate_diff * woe.cast("double") * 1000000)
-        .cast("long")
-        .cast("double")
-        / 1000000.0,
+        ungrid(grid(rate_diff * woe.cast("double"), MICRO), MICRO),
     ).otherwise(0.0)
     return (
         counts.crossJoin(F.broadcast(totals))

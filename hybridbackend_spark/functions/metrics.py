@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .._fixed import CENTS, MICRO, grid, grid_moments, ungrid
 from ..operators.structural import _group_prefix, _range_prefix
 
 __all__ = ["streaming_mean", "accuracy", "auc", "auc_histogram", "gauc"]
@@ -278,7 +279,6 @@ def ab_ztest(
     control: str = "A",
     treatment: str = "B",
     dp: int = 6,
-    scale: int = 100,
 ):
     """Two-sample z-test per experiment group: mean difference between
     ``treatment`` and ``control`` variants with its pooled standard
@@ -287,19 +287,18 @@ def ab_ztest(
 
     ONE conditional-aggregation pass computes both variants' n / sum /
     sum-of-squares together (map-side combine; no pivot, no second
-    scan). Sums quantize to integer units and squares accumulate as
-    DECIMAL(38,0) (exact at fact scale, like
+    scan). Sums and squares accumulate on the integer cents grid
+    (:mod:`hybridbackend_spark._fixed`, as in
     :func:`~hybridbackend_spark.functions.feature.standard_scale`), so
-    means and variances are bit-identical across engines/partitionings;
-    only the final SE/z division touches floats, in a fixed expression
-    order. Population variances (divide by n), Welch-style unpooled SE.
+    means and variances are bit-identical across engines/partitionings.
+    Population variances (divide by n), Welch-style unpooled SE.
 
     Returns (group, n_a, n_b, mean_a, mean_b, diff, se, z) rounded to
     ``dp``.
     """
     from pyspark.sql import functions as F
 
-    q = F.round(F.col(value_col).cast("double") * scale).cast("long")
+    q = grid(value_col, CENTS)
     is_a = F.col(variant_col) == control
     is_b = F.col(variant_col) == treatment
 
@@ -317,19 +316,8 @@ def ab_ztest(
         na.alias("_na"), sa.alias("_sa"), ssa.alias("_ssa"),
         nb.alias("_nb"), sb.alias("_sb"), ssb.alias("_ssb"),
     )
-    fs = float(scale)
-
-    def mean(s, n):
-        return (s / fs) / n.cast("double")
-
-    def var(ss, s, n):
-        m = mean(s, n)
-        return (ss.cast("double") / (fs * fs)) / n.cast("double") - m * m
-
-    ma = mean(F.col("_sa"), F.col("_na"))
-    mb = mean(F.col("_sb"), F.col("_nb"))
-    va = var(F.col("_ssa"), F.col("_sa"), F.col("_na"))
-    vb = var(F.col("_ssb"), F.col("_sb"), F.col("_nb"))
+    ma, va = grid_moments(F.col("_na"), F.col("_sa"), F.col("_ssa"), CENTS)
+    mb, vb = grid_moments(F.col("_nb"), F.col("_sb"), F.col("_ssb"), CENTS)
     se = F.sqrt(va / F.col("_na").cast("double") + vb / F.col("_nb").cast("double"))
     return agg.select(
         F.col(group_col),
@@ -349,14 +337,14 @@ def calibration_bins(
     score: str = "p",
     bins: int = 10,
     dp: int = 6,
-    scale: int = 1_000_000,
 ):
     """Reliability diagram + expected-calibration-error terms: scores in
     [0, 1] bucket into ``bins`` equal-width bins; each bin reports its
     count, mean predicted confidence, observed positive rate, and its
     ECE contribution ``n_b / N * |acc_b - conf_b|`` (sum the column for
-    the scalar ECE). Confidence means use exact micro-unit integer sums
-    (the engine's cents discipline), so the curve is engine-identical.
+    the scalar ECE). Confidence means are exact sums on the integer
+    micro grid (:mod:`hybridbackend_spark._fixed`), so the curve is
+    engine-identical.
     One partial-agg shuffle on the bin id — |bins| rows out regardless
     of scale."""
     from pyspark.sql import functions as F
@@ -366,7 +354,7 @@ def calibration_bins(
     b = F.least(
         F.floor(s * bins).cast("int"), F.lit(bins - 1)
     )
-    q = F.round(s * scale).cast("long")
+    q = grid(s, MICRO)
     agg = (
         df.select(b.alias("bin"), q.alias("_q"), y.alias("_y"))
         .groupBy("bin")
@@ -377,8 +365,7 @@ def calibration_bins(
         )
     )
     total = agg.agg(F.sum("n").alias("_tot"))
-    fs = float(scale)
-    conf = (F.col("_sq") / fs) / F.col("n").cast("double")
+    conf = ungrid(F.col("_sq"), MICRO) / F.col("n").cast("double")
     acc = F.col("_pos").cast("double") / F.col("n").cast("double")
     return (
         agg.join(F.broadcast(total))

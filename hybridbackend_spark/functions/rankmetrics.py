@@ -41,16 +41,18 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .._fixed import DYADIC
+
 __all__ = [
     "dcg_weights",
     "ranking_metrics",
 ]
 
 
-def dcg_weights(k: int, scale_bits: int = 20) -> list[int]:
-    """The integer DCG rank weights ``round(2^scale_bits / log2(p+1))``
-    for p = 1..k — embed the SAME list as literals in oracle SQL."""
-    return [round((1 << scale_bits) / math.log2(p + 1)) for p in range(1, k + 1)]
+def dcg_weights(k: int) -> list[int]:
+    """The integer DCG rank weights ``round(2^20 / log2(p+1))`` for
+    p = 1..k — embed the SAME list as literals in oracle SQL."""
+    return [round(DYADIC / math.log2(p + 1)) for p in range(1, k + 1)]
 
 
 def ranking_metrics(

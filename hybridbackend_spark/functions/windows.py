@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._fixed import CENTS, grid
+
 __all__ = [
     "ordered_collect",
     "sliding_time_window",
@@ -166,7 +168,7 @@ def time_decayed_sum(
     comes from a window max over the same partitioning the final
     aggregate reuses.
     """
-    scale = float((1 << horizon_days) * 100)
+    scale = float((1 << horizon_days) * CENTS)
     d = F.datediff(F.to_date("_t_last"), F.to_date(ts))
     # the PySpark shiftleft wrapper takes only literal bit counts; the SQL
     # function accepts a column expression
@@ -175,7 +177,7 @@ def time_decayed_sum(
         d <= horizon_days,
         F.expr(f"shiftleft(CAST(1 AS BIGINT), {horizon_days} - {d_sql})"),
     ).otherwise(F.lit(0).cast("long"))
-    cents = F.round(F.col(value) * 100).cast("long")
+    cents = grid(value, CENTS)
     return (
         df.withColumn("_t_last", F.max(ts).over(Window.partitionBy(key)))
         .groupBy(key)

@@ -26,7 +26,7 @@ robust stats, quantile normalization, log-rank, Gini, weighted
 quantiles) and the cents-valued DiD / IPS readouts share one set of
 private kernels, so each exactness argument lives in one place:
 
-- ``_grid``: values quantize to the integer cents grid ``_SCALE`` (the
+- ``_fixed.grid``: values quantize to the integer cents grid (the
   oracles' ``round(x * 100)``) before any rank, histogram or sum, so
   every statistic is integer arithmetic with one final division.
 - ``structural._group_prefix``: the running sum (and total) per group,
@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._fixed import CENTS, MICRO, grid, grid_nonneg, grid_sum, ungrid
 from .structural import _group_prefix, merge_partial_aggregates
 
 __all__ = [
@@ -374,17 +375,6 @@ def _dec(c: Column) -> Column:
     return c.cast("decimal(38,0)")
 
 
-# the integer grid every rank statistic quantizes to (cents)
-_SCALE = 100
-
-
-def _grid(col: str) -> Column:
-    """``col`` quantized to the ``_SCALE`` grid as BIGINT (NULL stays
-    NULL). Ranks, ties and sums on the grid are exact integers in both
-    engines; a caller divides by ``_SCALE`` once, on output."""
-    return F.round(F.col(col).cast("double") * _SCALE).cast("long")
-
-
 def _tie_rank2(b: Column, c: Column) -> Column:
     """Doubled average rank of a tied block of ``c`` equal values above
     ``b`` strictly smaller ones: the block holds ranks ``b+1 .. b+c``,
@@ -407,7 +397,7 @@ def _grid_hist(
     """``(base, hist)``: the non-NULL gridded values (_g, _v) and their
     per-group :func:`_ranked_hist` (_g, _v, _c, _b, _n)."""
     base = df.select(
-        F.col(group_col).alias("_g"), _grid(value_col).alias("_v")
+        F.col(group_col).alias("_g"), grid(value_col, CENTS).alias("_v")
     ).filter(F.col("_v").isNotNull())
     hist = base.groupBy("_g", "_v").agg(F.count(F.lit(1)).alias("_c"))
     return base, _ranked_hist(hist, "_v")
@@ -516,9 +506,7 @@ def chi_square(
     return (
         terms.groupBy()
         .agg(
-            (F.sum(F.round(term * 1000000).cast("long")) / F.lit(1000000.0)).alias(
-                "_stat"
-            ),
+            grid_sum(term, MICRO).alias("_stat"),
             F.count_distinct("r").alias("_nr"),
             F.count_distinct("c").alias("_nc"),
             F.max("grand").alias("n"),
@@ -655,13 +643,12 @@ def touch_attribution(
             )
         )
     )
-    micro = lambda c: F.sum(F.round(c * 1000000).cast("long")) / F.lit(1000000.0)
     return (
         jj.groupBy("channel")
         .agg(
             F.count(F.lit(1)).alias("n_touches"),
-            F.round(micro(linear), 4).alias("linear_credit"),
-            F.round(micro(ushape), 4).alias("ushape_credit"),
+            F.round(grid_sum(linear, MICRO), 4).alias("linear_credit"),
+            F.round(grid_sum(ushape, MICRO), 4).alias("ushape_credit"),
         )
     )
 
@@ -801,11 +788,11 @@ def psi_bits(
         )
 
     spark = ref.sparkSession
-    grid = spark.range(1, n_bins + 1).select(F.col("id").cast("int").alias("bin"))
+    bins = spark.range(1, n_bins + 1).select(F.col("id").cast("int").alias("bin"))
     r = binned(ref).withColumnRenamed("n", "ref_n")
     c = binned(cur).withColumnRenamed("n", "cur_n")
     cells = (
-        grid.join(r, "bin", "left")
+        bins.join(r, "bin", "left")
         .join(c, "bin", "left")
         .select(
             "bin",
@@ -825,10 +812,7 @@ def psi_bits(
     defined = (F.col("ref_n") > 0) & (F.col("cur_n") > 0)
     term = F.when(
         defined,
-        F.round((p_ref - p_cur) * woe.cast("double") * 1000000)
-        .cast("long")
-        .cast("double")
-        / 1000000.0,
+        ungrid(grid((p_ref - p_cur) * woe.cast("double"), MICRO), MICRO),
     ).otherwise(0.0)
     return cells.crossJoin(F.broadcast(tot)).select(
         "bin",
@@ -879,10 +863,10 @@ def cuped_adjust(
     # i.e. the unadjusted readout, instead of a /0 abort
     theta = F.when(den != 0, (n * sxy - sx * sy) / den).otherwise(F.lit(0.0))
     xbar = sx / n
-    adj_micro = F.round(
-        (post.cast("double") - F.col("_theta") * (pre.cast("double") - F.col("_xbar")))
-        * 1000000
-    ).cast("long")
+    adj_micro = grid(
+        post.cast("double") - F.col("_theta") * (pre.cast("double") - F.col("_xbar")),
+        MICRO,
+    )
     per = (
         subjects.crossJoin(
             F.broadcast(stats.select(theta.alias("_theta"), xbar.alias("_xbar")))
@@ -951,7 +935,7 @@ def rank_histogram_state(
     base = df.select(
         F.col(group_col).alias("_g"),
         F.col(variant_col).alias("_v"),
-        _grid(value_col).alias("_q"),
+        grid(value_col, CENTS).alias("_q"),
     ).filter(F.col("_v").isin(control, treatment) & F.col("_q").isNotNull())
     return (
         base.groupBy("_g", "_q")
@@ -1104,7 +1088,7 @@ def mann_whitney_u(
     functions.metrics.ab_ztest` for heavy-tailed metrics where a mean
     difference is the wrong readout (revenue, latency).
 
-    Engine-exact rank arithmetic: on the cents grid (:func:`_grid`)
+    Engine-exact rank arithmetic: on the cents grid (:func:`grid`)
     each distinct value's doubled tie rank is the integer
     :func:`_tie_rank2`, so the doubled control rank sum ``r1x2`` and the
     doubled U statistic ``u_x2 = r1x2 - n1*(n1+1)`` are exact integers.
@@ -1151,7 +1135,7 @@ def ks_two_sample(
     whole-distribution shift detector (vs the mean-only z-test and the
     binned-only PSI).
 
-    Engine-exact: on the cents grid (:func:`_grid`), the cumulative
+    Engine-exact: on the cents grid (:func:`grid`), the cumulative
     variant counts ``fa, fb`` per distinct value come from one ordered
     window over the (group, value) histogram, and the KS numerator
     ``d_num = max|fa*n_b - fb*n_a|`` is pure BIGINT (the true distance
@@ -1272,7 +1256,7 @@ def robust_stats(
         F.sum(_dec(c_eff * F.col("_v"))).alias("_tsum"),
         F.sum(c_eff).cast("long").alias("_tn"),
     )
-    fs = float(_SCALE)
+    fs = float(CENTS)
     out = (
         med.join(mad2, "_g").join(outs, "_g").join(trim, "_g")
     )
@@ -1307,7 +1291,7 @@ def spearman_corr(
     heavy-tailed).
 
     Engine-exact rank arithmetic: both variables quantize to the cents
-    grid (:func:`_grid`); each value's doubled tie rank
+    grid (:func:`grid`); each value's doubled tie rank
     (:func:`_tie_rank2`) comes from the per-group value histogram, and
     Spearman = Pearson over those doubled ranks (the x2 scaling cancels
     in the correlation). All sufficient statistics (rank sums, squares,
@@ -1324,8 +1308,8 @@ def spearman_corr(
     """
     base = df.select(
         F.col(group_col).alias("_g"),
-        _grid(x_col).alias("_x"),
-        _grid(y_col).alias("_y"),
+        grid(x_col, CENTS).alias("_x"),
+        grid(y_col, CENTS).alias("_y"),
     ).filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
 
     def ranks(col: str, out: str) -> DataFrame:
@@ -1635,7 +1619,7 @@ def quantile_normalize(
         raise ValueError("k must be a power of two >= 2 (dyadic grid)")
     base, h = _grid_hist(df, group_col, value_col)
     fracs = ", ".join(repr(j / k) for j in range(1, k + 1))
-    grid = base.agg(
+    pooled = base.agg(
         F.expr(f"percentile(_v, array({fracs}))").alias("_grid")
     )
     # per-row: upper tie rank b+c -> grid index ceil(rank*k/n), in 1..k
@@ -1647,12 +1631,12 @@ def quantile_normalize(
     gval = F.element_at(F.col("_grid"), idx).cast("double")
     cols = [
         F.col("_g").alias(group_col),
-        (F.col("_v").cast("double") / _SCALE).alias(value_col),
-        (gval / _SCALE).alias("normalized"),
+        (F.col("_v").cast("double") / CENTS).alias(value_col),
+        (gval / CENTS).alias("normalized"),
     ]
     if grid_col is not None:
         cols.append(gval.alias(grid_col))
-    return ranked.crossJoin(F.broadcast(grid)).select(*cols)
+    return ranked.crossJoin(F.broadcast(pooled)).select(*cols)
 
 
 def diff_in_diff(
@@ -1675,7 +1659,7 @@ def diff_in_diff(
     parallel-trends assumption is the caller's to defend — this is the
     arithmetic, stated exactly).
 
-    Engine-exactness: values quantize to cents (:func:`_grid`); each
+    Engine-exactness: values quantize to cents (:func:`grid`); each
     cell's n / sum / sum-of-squares accumulate as BIGINT / DECIMAL(38,0)
     in ONE conditional-aggregation pass, so DiD is exact integer-cents
     arithmetic divided once, and SE/z are fixed-shape expressions of
@@ -1690,7 +1674,7 @@ def diff_in_diff(
         F.col(group_col).alias("_g"),
         treated_col.cast("boolean").alias("_tr"),
         post_col.cast("boolean").alias("_po"),
-        _grid(value_col).alias("_v"),
+        grid(value_col, CENTS).alias("_v"),
     ).filter(
         F.col("_v").isNotNull()
         & F.col("_tr").isNotNull()
@@ -1714,7 +1698,7 @@ def diff_in_diff(
         *cell(False, True, "cp"),
         *cell(False, False, "cq"),
     )
-    fs = float(_SCALE)
+    fs = float(CENTS)
 
     def mean(tag: str):
         return F.col(f"s_{tag}").cast("double") / (
@@ -1929,7 +1913,7 @@ def eb_shrink_rates(
         F.col("_k").alias(key_col),
         F.col("_s").alias("successes"),
         F.col("_n").alias("trials"),
-        F.round(F.col("_ru").cast("double") / 1e6, dp).alias("rate"),
+        F.round(ungrid(F.col("_ru").cast("double"), MICRO), dp).alias("rate"),
         F.round(F.col("_alpha"), dp).alias("alpha"),
         F.round(F.col("_beta"), dp).alias("beta"),
         F.round(shrunk, dp).alias("shrunk_rate"),
@@ -2022,8 +2006,8 @@ def logrank_test(
         F.sum(F.when(is_c, 1).otherwise(0)).cast("long").alias("n_a"),
         F.sum(F.when(~is_c, 1).otherwise(0)).cast("long").alias("n_b"),
     )
-    e1 = F.col("_e1u").cast("double") / 1e6
-    v1 = F.col("_vu").cast("double") / 1e6
+    e1 = ungrid(F.col("_e1u").cast("double"), MICRO)
+    v1 = ungrid(F.col("_vu").cast("double"), MICRO)
     z = (F.col("o1").cast("double") - e1) / F.sqrt(v1)
     return sizes.join(agg, "_g", "left").select(
         F.col("_g").alias(group_col),
@@ -2054,7 +2038,7 @@ def gini_coefficient(
     tied block contributes (sum of its ranks) * x, which no intra-block
     permutation can change.
 
-    Engine-exact: on the cents grid (:func:`_grid`) the fact table
+    Engine-exact: on the cents grid (:func:`grid`) the fact table
     compresses to the per-group distinct-value histogram, where a tied
     block's doubled rank sum is the exact integer ``c`` times its
     :func:`_tie_rank2`, so S0/S1 and the Gini numerator are pure
@@ -2065,17 +2049,7 @@ def gini_coefficient(
     too). Returns (group, n, total, gini); gini is NULL when n = 0 or
     S0 = 0 (all-zero values — undefined share distribution).
     """
-    raw = F.col(value_col).cast("double")
-    q = F.when(
-        raw < 0,
-        F.raise_error(
-            F.concat(
-                F.lit("gini_coefficient: negative value "),
-                raw.cast("string"),
-                F.lit(f" in column {value_col!r}"),
-            )
-        ).cast("long"),
-    ).otherwise(_grid(value_col))
+    q = grid_nonneg(value_col, CENTS, "gini_coefficient")
     # NULL values hold no share: excluded from n as well as S0/S1 (else
     # n counts rows the sums skip, skewing G)
     base = df.select(F.col(group_col).alias("_g"), q.alias("_q")).filter(
@@ -2100,7 +2074,7 @@ def gini_coefficient(
     return agg.select(
         F.col("_g").alias(group_col),
         n.cast("long").alias("n"),
-        (s0d / F.lit(float(_SCALE))).alias("total"),
+        (s0d / F.lit(float(CENTS))).alias("total"),
         F.when((n > 0) & (F.col("s0") != 0), F.round(gini, dp)).alias(
             "gini"
         ),
@@ -2128,7 +2102,7 @@ def offpolicy_ips(
     Engine-exactness contract: the caller supplies ``propensity_w60``
     = 60/p_i as an exact INTEGER column (any logged propensity on the
     1/60 grid — e.g. uniform-over-K or the 1/15..5/15 family — has an
-    integer 60/p), and rewards quantize to cents (:func:`_grid`), so both
+    integer 60/p), and rewards quantize to cents (:func:`grid`), so both
     numerators and the SNIPS denominator accumulate as DECIMAL(38,0);
     each estimate is one final division. ``policies`` maps a policy
     name to a Column holding the action that policy would take.
@@ -2142,7 +2116,7 @@ def offpolicy_ips(
     """
     if not policies:
         raise ValueError("policies must be non-empty")
-    r = _grid(reward_col)
+    r = grid(reward_col, CENTS)
     # Integrality gate: a propensity off the 1/60 grid would silently
     # truncate under cast('long') and bias IPS/SNIPS — raise instead
     # (NULL propensities also raise; they have no valid weight).
@@ -2192,7 +2166,7 @@ def offpolicy_ips(
             )
         ).alias("_den"),
     )
-    fs = float(_SCALE)
+    fs = float(CENTS)
     ips = F.col("_num").cast("double") / (
         F.lit(60.0) * fs * F.col("n").cast("double")
     )
@@ -2221,7 +2195,7 @@ def weighted_quantiles(
     quantity, a latency weighted by request count) — the unweighted
     median silently re-weights every row to 1.
 
-    Engine-exactness: values quantize to cents (:func:`_grid`),
+    Engine-exactness: values quantize to cents (:func:`grid`),
     weights cast to BIGINT, one (group, value)-keyed histogram agg, one
     partitioned cumulative window over the histogram, and the quantile
     comparisons stay in integers (``4*cum >= W`` for p25, ``2*cum >= W``
@@ -2241,7 +2215,7 @@ def weighted_quantiles(
 
     Returns (group, total_weight, wp25, wp50, wp75) on the value scale.
     """
-    v = _grid(value_col)
+    v = grid(value_col, CENTS)
     # guard the RAW weight, not the rounded one: weights in (-0.5, 0)
     # round to 0 and would silently bypass a post-rounding check
     wraw = F.col(weight_col).cast("double")
@@ -2268,7 +2242,7 @@ def weighted_quantiles(
     pick = lambda cond: F.min(F.when(cond, F.col("_v")))  # noqa: E731
     return cum.groupBy(F.col("_g").alias(group_col)).agg(
         F.max(t).cast("long").alias("total_weight"),
-        (pick(4 * c >= t).cast("double") / _SCALE).alias("wp25"),
-        (pick(2 * c >= t).cast("double") / _SCALE).alias("wp50"),
-        (pick(4 * c >= 3 * t).cast("double") / _SCALE).alias("wp75"),
+        (pick(4 * c >= t).cast("double") / CENTS).alias("wp25"),
+        (pick(2 * c >= t).cast("double") / CENTS).alias("wp50"),
+        (pick(4 * c >= 3 * t).cast("double") / CENTS).alias("wp75"),
     )

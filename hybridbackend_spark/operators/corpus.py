@@ -28,6 +28,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._fixed import CENTS, MICRO, grid, grid_moments, ungrid
 from .structural import _range_prefix
 from .text import _c, spread_small_scan, tokens, word_shingles
 
@@ -1002,7 +1003,6 @@ def neyman_sample(
     value: str,
     total_n: int,
     seed: int = 0,
-    scale: int = 100,
 ) -> DataFrame:
     """Optimal (Neyman) allocation stratified sampling: stratum h gets
     quota ``n_h = floor(total_n * N_h * sigma_h / sum_g(N_g sigma_g))``
@@ -1010,24 +1010,20 @@ def neyman_sample(
     estimating the mean of ``value`` (high-variance strata earn more
     samples than proportional allocation gives them).
 
-    Statistics are engine-exact (integer units + DECIMAL(38,0) squares,
-    as in ``standard_scale``): sigma is quantized to integer micro-units
-    BEFORE the cross-stratum sum, so allocation never depends on float
-    summation order. Membership is the deterministic md5 hash order of
+    Statistics are engine-exact (cents-grid sums and squares,
+    :mod:`hybridbackend_spark._fixed`): sigma is quantized to integer
+    micro-units BEFORE the cross-stratum sum, so allocation never
+    depends on float summation order. Membership is the deterministic md5 hash order of
     :func:`stratified_topn`. One stats aggregate + one windowed top-n_h;
     the corpus shuffles once on the stratum key.
     """
-    q = F.round(F.col(value).cast("double") * scale).cast("long")
+    q = grid(value, CENTS)
     stats = df.groupBy(strata).agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(q).alias("_s"),
         F.sum((q * q).cast("decimal(38,0)")).alias("_ss"),
     )
-    fs = float(scale)
-    mean = (F.col("_s") / fs) / F.col("_n").cast("double")
-    var = (F.col("_ss").cast("double") / (fs * fs)) / F.col(
-        "_n"
-    ).cast("double") - mean * mean
+    _, var = grid_moments(F.col("_n"), F.col("_s"), F.col("_ss"), CENTS)
     # quantize N_h * sigma_h to integer micro-units before summing
     weight = F.floor(
         F.sqrt(F.greatest(var, F.lit(0.0))) * F.col("_n") * 1_000_000
@@ -1286,7 +1282,6 @@ def hashed_linear_classifier(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 1 << 16,
-    weight_scale: int = 1000,
     seed: int = 1,
     dp: int = 6,
 ) -> DataFrame:
@@ -1299,7 +1294,7 @@ def hashed_linear_classifier(
     the MEAN bucket weight, and the score is its sigmoid.
 
     Weights here are derived deterministically from the bucket id
-    (md5 again, integers in [-weight_scale, +weight_scale]) — a stand-in
+    (md5 again, integer milli-units in [-1000, +1000]) — a stand-in
     with the exact production plumbing: swap in trained weights as a
     broadcast (bucket, weight) table joined onto the token stream and
     NOTHING else changes (the weight side is <= n_buckets rows, always
@@ -1317,20 +1312,21 @@ def hashed_linear_classifier(
     ).select(
         id_col, hash_bucket(F.col("_tok"), n_buckets, seed).alias("_b")
     )
+    w_unit = 1000  # weight 1.0
     w = (
         hash_bucket(
             F.concat(F.lit("w:"), F.col("_b").cast("string")),
-            2 * weight_scale + 1,
+            2 * w_unit + 1,
             seed,
         )
-        - weight_scale
+        - w_unit
     )
     scored = toks.select(F.col(id_col), w.alias("_w")).groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_toks"),
         F.sum("_w").cast("long").alias("w_sum"),
     )
     logit = F.col("w_sum").cast("double") / (
-        F.col("n_toks").cast("double") * float(weight_scale)
+        F.col("n_toks").cast("double") * float(w_unit)
     )
     return scored.select(
         id_col,
@@ -1517,7 +1513,6 @@ def ipf_rake_weights(
     row_targets: DataFrame,
     col_targets: DataFrame,
     rounds: int = 3,
-    weight_scale: int = 1_000_000,
 ) -> DataFrame:
     """Iterative proportional fitting (raking) of cell weights so the
     weighted (row, col) contingency table matches BOTH target margins —
@@ -1532,10 +1527,10 @@ def ipf_rake_weights(
     geometrically; the residual max margin error is reported per cell
     so the cut-off is visible, not hidden).
 
-    Engine-exactness: weights live on an integer grid (``weight_scale``
-    units = weight 1.0; the default 1e6 keeps ``cell_rows *
-    weight_scale`` inside BIGINT up to ~9e12 rows per cell) and each
-    rescale is the exact integral division
+    Engine-exactness: weights live on the integer micro grid
+    (:data:`~hybridbackend_spark._fixed.MICRO` units = weight 1.0, which
+    keeps ``cell_rows * MICRO`` inside BIGINT up to ~9e12 rows per
+    cell) and each rescale is the exact integral division
     ``(w * target_units) div margin_units`` in DECIMAL(38,0) — margin
     sums are BIGINT sums of integers, so no float accumulation ever
     happens and both engines walk identical integer states. Targets are
@@ -1546,7 +1541,7 @@ def ipf_rake_weights(
     any corpus scale.
 
     Returns (row, col, n, weight, row_err, col_err) where weight is the
-    fitted per-cell weight (double, = integer units / scale) and the
+    fitted per-cell weight (double, = integer units / MICRO) and the
     errs are the final signed margin residuals in weight units.
     """
     cells = df.groupBy(
@@ -1554,15 +1549,11 @@ def ipf_rake_weights(
     ).agg(F.count(F.lit(1)).alias("_n"))
     rt = row_targets.select(
         F.col(row_targets.columns[0]).alias("_r"),
-        F.round(F.col("target").cast("double") * weight_scale)
-        .cast("long")
-        .alias("_rt"),
+        grid("target", MICRO).alias("_rt"),
     )
     ct = col_targets.select(
         F.col(col_targets.columns[0]).alias("_c"),
-        F.round(F.col("target").cast("double") * weight_scale)
-        .cast("long")
-        .alias("_ct"),
+        grid("target", MICRO).alias("_ct"),
     )
     # state: per-cell weighted mass in integer units, start at n * 1.0.
     # The state is consumed TWICE per round (margin agg + rescale join),
@@ -1571,7 +1562,7 @@ def ipf_rake_weights(
     # aggregate-sized (|rows| x |cols|) state instead, the same cut the
     # iterative graph operators apply.
     state = cells.select(
-        "_r", "_c", "_n", (F.col("_n") * weight_scale).alias("_wu")
+        "_r", "_c", "_n", (F.col("_n") * MICRO).alias("_wu")
     ).localCheckpoint(eager=True)
     for _ in range(rounds):
         rm = state.groupBy("_r").agg(F.sum("_wu").alias("_rm"))
@@ -1611,21 +1602,17 @@ def ipf_rake_weights(
         .join(F.broadcast(rt), "_r")
         .join(F.broadcast(ct), "_c")
     )
-    ws = float(weight_scale)
     return out.select(
         F.col("_r").alias(row_col),
         F.col("_c").alias(col_col),
         F.col("_n").cast("long").alias("n"),
         F.round(
-            F.col("_wu").cast("double") / (F.col("_n").cast("double") * ws),
+            F.col("_wu").cast("double")
+            / (F.col("_n").cast("double") * float(MICRO)),
             6,
         ).alias("weight"),
-        F.round(
-            (F.col("_rmf") - F.col("_rt")).cast("double") / ws, 6
-        ).alias("row_err"),
-        F.round(
-            (F.col("_cmf") - F.col("_ct")).cast("double") / ws, 6
-        ).alias("col_err"),
+        F.round(ungrid(F.col("_rmf") - F.col("_rt"), MICRO), 6).alias("row_err"),
+        F.round(ungrid(F.col("_cmf") - F.col("_ct"), MICRO), 6).alias("col_err"),
     )
 
 

@@ -31,17 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .._fixed import DYADIC, grid, spark_round
+
 __all__ = ["covariance_matrix", "pca_project", "power_pca_project"]
-
-
-def _round_half_away(x: float) -> int:
-    """Round-half-away-from-zero on the SHORTEST-DECIMAL representation
-    of the double — the exact semantics of Spark's round() (BigDecimal of
-    Double.toString, HALF_UP) and DuckDB's round(). Python's builtin
-    round() is banker's and would diverge at .5 boundaries."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(x)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
 
 
 def _gramian_stats(q: DataFrame, dim: int) -> DataFrame:
@@ -153,17 +145,16 @@ def covariance_matrix(
     df: DataFrame,
     vec_col: str,
     dim: int,
-    scale_bits: int = 20,
     dp: int = 8,
 ) -> DataFrame:
     """Exact sample covariance of a fixed-dim array column.
 
-    Quantizes each component to ``round(x * 2^scale_bits)`` (long), so
-    every sufficient statistic (component sums and pairwise product
-    sums) is an exact DECIMAL(38,0). Covariance is evaluated on the
-    aggregated scalars in double and rescaled by the exact power of two
-    2^(2*scale_bits). Returns (i, j, cov) for the upper triangle
-    (i <= j), rounded to ``dp``.
+    Quantizes each component to the 2^20 grid
+    (:data:`~hybridbackend_spark._fixed.DYADIC`), so every sufficient
+    statistic (component sums and pairwise product sums) is an exact
+    DECIMAL(38,0). Covariance is evaluated on the aggregated scalars in
+    double and rescaled by the exact power of two 2^40. Returns
+    (i, j, cov) for the upper triangle (i <= j), rounded to ``dp``.
 
     A single-row input yields NULL cov (sample covariance is undefined
     for n < 2) instead of an ANSI-mode DIVIDE_BY_ZERO abort. ``dim`` is
@@ -177,13 +168,12 @@ def covariance_matrix(
             "(4096); d*(d+1)/2 shuffle cells and driver-side d^2 "
             "consumers stop being 'bounded by dimension' past that"
         )
-    scale = 1 << scale_bits
     # exclude NULL-vector rows BEFORE counting: they contribute nothing
     # to the sums/products, so letting them inflate n would silently
     # shrink every covariance by (n_valid-1)/(n-1)
     q = df.filter(F.col(vec_col).isNotNull()).select(
         F.transform(
-            F.col(vec_col), lambda x: F.round(x * scale).cast("long")
+            F.col(vec_col), lambda x: F.round(x * DYADIC).cast("long")
         ).alias("_v")
     )
     # all three sufficient statistics from ONE Arrow pass (see
@@ -205,7 +195,7 @@ def covariance_matrix(
     cov = (
         F.col("spp").cast("double")
         - F.col("si").cast("double") * F.col("sj").cast("double") / nd
-    ) / (nd - 1) / F.lit(float(scale * scale))
+    ) / (nd - 1) / F.lit(float(DYADIC * DYADIC))
     # n <= 1: sample covariance undefined -> NULL, not an ANSI /0 abort
     cov = F.when(nd > 1, cov)
     return (
@@ -221,7 +211,6 @@ def pca_project(
     vec_col: str,
     dim: int,
     k: int = 4,
-    scale_bits: int = 20,
     out_col: str = "pc",
     dp: int = 6,
 ) -> DataFrame:
@@ -245,7 +234,7 @@ def pca_project(
             f"pca_project: dim={dim} exceeds the driver-eigensolve bound "
             "(512): this path collects dim^2 covariance cells"
         )
-    cells = covariance_matrix(df, vec_col, dim, scale_bits, dp=12).collect()
+    cells = covariance_matrix(df, vec_col, dim, dp=12).collect()
     cov = np.zeros((dim, dim))
     for r in cells:
         cov[r.i, r.j] = r.cov
@@ -283,14 +272,13 @@ def power_pca_project(
     dim: int,
     k: int = 2,
     iters: int = 5,
-    scale_bits: int = 20,
 ) -> DataFrame:
     """Dominant-subspace projection by FIXED-ROUND quantized power
     iteration — the oracle-replayable variant of :func:`pca_project`.
 
     The data-proportional work is one distributed pass building the
     exact integer Gramian sufficient statistics (component sums s_i and
-    pairwise product sums spp_ij of the 2^scale_bits-quantized vectors;
+    pairwise product sums spp_ij of the 2^20-quantized vectors;
     shuffle bounded by d(d+1)/2 cells after map-side combine). The
     scaled scatter matrix M = n*spp - s s^T (exact integers) then runs
     ``iters`` power-iteration rounds per component on the DRIVER
@@ -320,15 +308,11 @@ def power_pca_project(
             f"power_pca_project: dim={dim} exceeds the driver bound (512):"
             " this path collects dim^2 Gramian cells"
         )
-    scale = 1 << scale_bits
     # NULL-vector rows carry no Gramian mass and would crash the
     # bounded driver collect (int(NULL sum)); exclude them, SQL-style
     q = df.filter(F.col(vec_col).isNotNull()).select(
         "*",
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * scale).cast("long"),
-        ).alias("_xq"),
+        F.transform(F.col(vec_col), lambda x: grid(x, DYADIC)).alias("_xq"),
     )
     # one Arrow pass + ONE collect for all three sufficient statistics
     # (previously: cells collect + sums collect + count = three actions,
@@ -362,7 +346,7 @@ def power_pca_project(
                     "power_pca_project: zero matvec (degenerate input)"
                 )
             v = [
-                _round_half_away(float(y[i]) / float(mx) * 1000000.0)
+                int(spark_round(float(y[i]) / float(mx) * 1000000.0))
                 for i in range(dim)
             ]
         return v
@@ -386,7 +370,7 @@ def power_pca_project(
         m2 = max(abs(d_mat[i][j]) for i in range(dim) for j in range(dim))
         cur = [
             [
-                _round_half_away(d_mat[i][j] / m2 * 1000000000000.0)
+                int(spark_round(d_mat[i][j] / m2 * 1000000000000.0))
                 for j in range(dim)
             ]
             for i in range(dim)

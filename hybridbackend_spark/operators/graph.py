@@ -46,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .._fixed import RANK
+
 __all__ = [
     "connected_components",
     "connected_components_star",
@@ -402,14 +404,14 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping_pct: int = 85,
-    scale: int = 1_000_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list, computed in
     EXACT integer arithmetic so the result is bit-identical on any engine
-    (no float summation-order drift): ranks are BIGINTs at ``scale``,
-    each node's contribution is ``rank div out_degree`` (truncating
-    integer division), and the damped update is
-    ``((100-d)*scale) div 100 + (d * sum_contrib) div 100``.
+    (no float summation-order drift): ranks are BIGINTs on the integer
+    grid (:data:`~hybridbackend_spark._fixed.RANK` = 1.0), each node's
+    contribution is ``rank div out_degree`` (truncating integer
+    division), and the damped update is
+    ``((100-d)*RANK) div 100 + (d * sum_contrib) div 100``.
 
     Per iteration: one equi-join of edges against ranks on the source id
     and one partial-agg groupBy on the destination id — both shuffles on
@@ -427,7 +429,7 @@ def pagerank(
     variant. Distributed analog of the reference's iterative collective
     loops (``distribute/tests/allreduce_test.py``).
     """
-    return _pagerank(edges, src, dst, None, iterations, damping_pct, scale)
+    return _pagerank(edges, src, dst, None, iterations, damping_pct)
 
 
 def personalized_pagerank(
@@ -438,20 +440,19 @@ def personalized_pagerank(
     seed_col: str = "id",
     iterations: int = 3,
     damping_pct: int = 85,
-    scale: int = 1_000_000_000,
 ) -> DataFrame:
     """Personalized PageRank: identical exact-integer iteration scheme
     to :func:`pagerank`, but restart mass teleports ONLY to the seed
     set — ranks measure proximity to the seeds, the recommendation /
     related-entity primitive (seeds = a user's items -> ranks =
-    candidates). Seeds start at ``scale``; non-seeds at 0; each update
+    candidates). Seeds start at ``RANK``; non-seeds at 0; each update
     adds the ``(100-d)%`` restart only on seed nodes. Same per-round
     shuffle shape (and round-12 every-4th-iteration lineage-cut policy)
     as pagerank; nodes never reached by seed mass keep rank 0 (and are
     still emitted, making the output spine the full node set). With
     every node seeded it is bit-identical to :func:`pagerank`."""
     seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-    return _pagerank(edges, src, dst, seed_nodes, iterations, damping_pct, scale)
+    return _pagerank(edges, src, dst, seed_nodes, iterations, damping_pct)
 
 
 def _pagerank(
@@ -461,7 +462,6 @@ def _pagerank(
     seed_nodes: DataFrame | None,
     iterations: int,
     damping_pct: int,
-    scale: int,
 ) -> DataFrame:
     """The exact-integer iteration shared by :func:`pagerank` and
     :func:`personalized_pagerank`. ``seed_nodes`` (one ``node`` column)
@@ -495,8 +495,8 @@ def _pagerank(
         ).select("node", F.coalesce("_seed", F.lit(0)).alias("_seed"))
         seed = F.col("_seed")
     nodes = nodes.localCheckpoint(eager=True)
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select("node", (seed.cast("long") * scale).alias("rank"))
+    base = (100 - damping_pct) * RANK // 100
+    ranks = nodes.select("node", (seed.cast("long") * RANK).alias("rank"))
     for it in range(iterations):
         contrib = ed.join(
             ranks.select(F.col("node").alias("_s"), "rank"), "_s"

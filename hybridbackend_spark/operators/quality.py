@@ -23,6 +23,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .._fixed import CENTS, grid
+
 __all__ = ["Check", "dq_audit", "k_anonymize", "benford_audit", "BENFORD_EXPECTED"]
 
 
@@ -178,7 +180,7 @@ def benford_audit(df: DataFrame, value_col: str, dp: int = 6) -> DataFrame:
     with no observations are densified to 0 so the audit always shows
     all nine rows.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = grid(value_col, CENTS)
     obs = (
         df.filter(cents > 0)
         .select(F.substring(cents.cast("string"), 1, 1).cast("int").alias("digit"))
@@ -186,13 +188,13 @@ def benford_audit(df: DataFrame, value_col: str, dp: int = 6) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     spark = df.sparkSession
-    grid = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
+    digits = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
     exp_map = F.element_at(
         F.array(*[F.lit(p) for p in BENFORD_EXPECTED]), F.col("digit")
     )
     total = obs.agg(F.sum("n").alias("_t"))
     return (
-        grid.join(obs, "digit", "left")
+        digits.join(obs, "digit", "left")
         .crossJoin(F.broadcast(total))
         .select(
             "digit",

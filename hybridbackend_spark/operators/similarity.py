@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._fixed import MICRO, grid
+
 __all__ = [
     "dot",
     "l2_norm",
@@ -397,8 +399,9 @@ def ivf_assign(
     form issued ~k*dim py4j round trips (one per ``F.lit`` coefficient),
     which dominated the WALL time of the driver-bound IVF/PQ queries.
     Identical expression tree (same fold, same repr-round-trip
-    literals), pinned bit-identical by test_ivf_assign_sql_parity;
-    Column inputs keep the builder path."""
+    literals), pinned bit-identical by
+    ``tests/test_dedup_similarity.py::test_ivf_pq_sql_parity``; Column
+    inputs keep the builder path."""
     if isinstance(vec_col, str):
         return df.withColumn(
             out_col,
@@ -574,7 +577,6 @@ def kmeans_train(
     iters: int = 2,
     init: list[list[float]] | None = None,
     id_col: str | None = None,
-    scale: int = 1_000_000,
 ) -> list[list[float]]:
     """Distributed Lloyd k-means over an embedding column — trains the
     IVF coarse quantizer (:func:`ivf_assign` / :func:`cosine_topk_ivf`
@@ -588,9 +590,9 @@ def kmeans_train(
 
     Determinism: init is either explicit or the k smallest-``id_col``
     rows; argmin tie-breaks on the lower cell id; per-element means sum
-    exact scaled integers (``round(x * scale)`` as long), so the trained
-    centroids are bit-reproducible across partitionings — and across
-    engines (the DuckDB oracle unrolls the same iterations).
+    exact integers on the micro grid (:mod:`hybridbackend_spark._fixed`),
+    so the trained centroids are bit-reproducible across partitionings —
+    and across engines (the DuckDB oracle unrolls the same iterations).
     """
     # NULL-vector rows can neither seed nor move a centroid — exclude
     # them up front (a NULL seed would crash list(None) on the driver)
@@ -619,7 +621,7 @@ def kmeans_train(
             )
             .groupBy("_cell", "_pos")
             .agg(
-                F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
+                F.sum(grid("_x", MICRO)).alias("_s"),
                 F.count(F.lit(1)).alias("_n"),
             )
             .collect()
@@ -627,7 +629,7 @@ def kmeans_train(
         by_cell: dict[int, dict[int, float]] = {}
         for r in sums:
             by_cell.setdefault(r["_cell"], {})[r["_pos"]] = r["_s"] / (
-                float(scale) * r["_n"]
+                float(MICRO) * r["_n"]
             )
         centroids = [
             [by_cell[c][p] for p in sorted(by_cell[c])]
@@ -715,7 +717,6 @@ def kmeans_train_tree(
     k1: int,
     k2: int,
     iters: int = 2,
-    scale: int = 1_000_000,
     train_frac: float | None = None,
 ) -> tuple[list[list[float]], dict[int, list[list[float]]]]:
     """Hierarchical two-level Lloyd k-means: K = k1*k2 total cells at
@@ -731,7 +732,7 @@ def kmeans_train_tree(
     is bounded by k1*k2*d rows (the centroids must fit on the driver by
     definition). Same determinism contract as :func:`kmeans_train`:
     id-seeded init (k2 smallest ids per coarse cell), argmin ties to the
-    lower index, exact integer-scaled means — bit-reproducible across
+    lower index, exact integer-grid means — bit-reproducible across
     partitionings. Cells with fewer than k2 rows train fewer
     sub-centroids; empty updates carry the previous value.
 
@@ -774,9 +775,7 @@ def kmeans_train_tree(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_000))
             < int(train_frac * 1_000_000)
         )
-    coarse = kmeans_train(
-        df, vec_col, k=k1, iters=iters, id_col=id_col, scale=scale
-    )
+    coarse = kmeans_train(df, vec_col, k=k1, iters=iters, id_col=id_col)
     a = ivf_assign(
         df.select(
             F.col(id_col).alias("_id"), _as_double_vec(vec_col).alias("_v")
@@ -804,7 +803,7 @@ def kmeans_train_tree(
             )
             .groupBy("_c1", "_j", "_p")
             .agg(
-                F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
+                F.sum(grid("_x", MICRO)).alias("_s"),
                 F.count(F.lit(1)).alias("_n"),
             )
             .collect()
@@ -812,7 +811,7 @@ def kmeans_train_tree(
         means: dict[tuple[int, int], dict[int, float]] = {}
         for r in upd:
             means.setdefault((r["_c1"], r["_j"]), {})[r["_p"]] = r["_s"] / (
-                float(scale) * r["_n"]
+                float(MICRO) * r["_n"]
             )
         for (c1, j), dims in means.items():
             sub[c1][j] = [dims[p] for p in sorted(dims)]
@@ -1047,7 +1046,6 @@ def kcenter_select(
     vec_col: str,
     id_col: str,
     k: int = 8,
-    scale: int = 1_000_000,
 ) -> list:
     """Greedy k-center coreset selection (farthest-point traversal):
     start from the smallest id, then repeatedly add the point FARTHEST
@@ -1060,8 +1058,8 @@ def kcenter_select(
     (per-row expression, zero shuffle) and takes an ordered ``take(1)``
     argmax (distance desc, id asc — deterministic). k rounds = k bounded
     driver round trips, like the Lloyd trainer. Distances quantize to
-    integer units before the argmax so selection is bit-reproducible
-    across layouts and engines.
+    the integer micro grid before the argmax so selection is
+    bit-reproducible across layouts and engines.
 
     Returns the ordered list of selected ids.
     """
@@ -1080,7 +1078,7 @@ def kcenter_select(
         # identical fold/seed/literals, so the quantized distances are
         # bit-equal and the selection unchanged
         d2 = F.expr(_sqdist_sql("`_v`", [float(x) for x in cent]))
-        return F.round(F.sqrt(d2) * scale).cast("long")
+        return grid(F.sqrt(d2), MICRO)
 
     cur = base.withColumn("_mind", qdist_to(center_vec)).localCheckpoint(
         eager=True

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .._fixed import CENTS, grid_nonneg, ungrid
 from .corpus import hash_bucket
 
 __all__ = [
@@ -125,18 +126,21 @@ def quantile_sketch_build(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    scale: int = 100,
 ) -> DataFrame:
     """Mergeable quantile sketch: per group, exact counts in power-of-two
-    buckets of the scaled value (``bucket = floor(log2(round(v *
-    scale)))`` via the binary-digit-count trick — pure integer
-    arithmetic, engine-portable). At most ~64 buckets per group
-    regardless of data volume, so the sketch shuffles a fixed few rows
-    per group and merges by cell-wise addition, like the CMS/HLL
-    states. Estimation error is bounded by the bucket width (a factor-2
-    relative band, interpolated inside). Non-negative values only
-    (quantile screens on money/duration/size columns)."""
-    c = F.round(F.col(value_col).cast("double") * scale).cast("long")
+    buckets of the value in cents (``bucket = floor(log2(cents))`` via
+    the binary-digit-count trick — pure integer arithmetic,
+    engine-portable). At most ~64 buckets per group regardless of data
+    volume, so the sketch shuffles a fixed few rows per group and merges
+    by cell-wise addition, like the CMS/HLL states. Estimation error is
+    bounded by the bucket width (a factor-2 relative band, interpolated
+    inside).
+
+    Non-negative values only (quantile screens on money/duration/size
+    columns): a negative value raises, since ``bin()`` of a negative
+    BIGINT is its two's complement and would land in bucket 63.
+    """
+    c = grid_nonneg(value_col, CENTS, "quantile_sketch_build")
     bucket = F.length(F.bin(c)) - 1
     return (
         df.select(*group_cols, bucket.alias("bucket"))
@@ -159,7 +163,6 @@ def quantile_sketch_estimate(
     sketch: DataFrame,
     group_cols: list[str],
     q: float,
-    scale: int = 100,
     dp: int = 4,
 ) -> DataFrame:
     """Estimate the q-quantile per group from the sketch: find the
@@ -184,12 +187,15 @@ def quantile_sketch_estimate(
         F.row_number().over(w),
     ).filter(F.col("_rn") == 1)
     # shiftleft with a COLUMN bit count only exists in SQL form
-    lo = F.expr(
-        "cast(if(bucket >= 1, shiftleft(cast(1 as bigint), bucket), 0) as double)"
-    ) / scale
-    hi = F.expr(
-        "cast(shiftleft(cast(1 as bigint), bucket + 1) as double)"
-    ) / scale
+    lo = ungrid(
+        F.expr(
+            "cast(if(bucket >= 1, shiftleft(cast(1 as bigint), bucket), 0) as double)"
+        ),
+        CENTS,
+    )
+    hi = ungrid(
+        F.expr("cast(shiftleft(cast(1 as bigint), bucket + 1) as double)"), CENTS
+    )
     prev = F.col("_cum") - F.col("cnt")
     frac = (rank - prev).cast("double") / F.col("cnt").cast("double")
     return hit.select(

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._fixed import CENTS, MICRO, grid, ungrid
+
 __all__ = ["resample_fill", "transition_matrix", "sequence_pattern_match", "ewma", "seasonal_dow", "cusum_changepoint", "forecast_backtest", "holt_linear", "theil_sen", "mann_kendall", "kendall_tau_b"]
 
 
@@ -290,7 +292,7 @@ def seasonal_dow(
     daily = (
         df.select(
             F.col(ts_col).cast("date").alias("day"),
-            F.round(F.col(value_col) * 100).cast("long").alias("_c"),
+            grid(value_col, CENTS).alias("_c"),
         )
         .groupBy("day")
         .agg(F.sum("_c").alias("_cents"))
@@ -303,20 +305,18 @@ def seasonal_dow(
     glob = daily.agg(
         F.sum("_cents").alias("_gc"), F.count(F.lit(1)).alias("_gn")
     )
-    dow_mean = F.col("_dc").cast("double") / F.col("_dn").cast("double") / 100.0
-    glob_mean = F.col("_gc").cast("double") / F.col("_gn").cast("double") / 100.0
+    dow_mean = ungrid(F.col("_dc").cast("double") / F.col("_dn").cast("double"), CENTS)
+    glob_mean = ungrid(F.col("_gc").cast("double") / F.col("_gn").cast("double"), CENTS)
     return (
         daily.join(F.broadcast(dow_stats), "dow")
         .crossJoin(F.broadcast(glob))
         .select(
             "day",
             "dow",
-            (F.col("_cents") / F.lit(100.0)).alias("day_total"),
+            ungrid(F.col("_cents"), CENTS).alias("day_total"),
             F.round(dow_mean, dp).alias("dow_mean"),
             F.round(dow_mean - glob_mean, dp).alias("seasonal"),
-            F.round(F.col("_cents") / F.lit(100.0) - dow_mean, dp).alias(
-                "residual"
-            ),
+            F.round(ungrid(F.col("_cents"), CENTS) - dow_mean, dp).alias("residual"),
         )
     )
 
@@ -343,7 +343,7 @@ def cusum_changepoint(
         df.select(
             F.col(group_col).alias("_g"),
             F.col(ts_col).cast("date").alias("_d"),
-            F.round(F.col(value_col) * 100).cast("long").alias("_c"),
+            grid(value_col, CENTS).alias("_c"),
         )
         .groupBy("_g", "_d")
         .agg(F.sum("_c").alias("_cents"))
@@ -368,7 +368,7 @@ def cusum_changepoint(
         .select(
             F.col("_g").alias(group_col),
             F.col("_d").alias("change_day"),
-            F.round(F.col("_cusum") / 100.0, dp).alias("cusum_at_change"),
+            F.round(ungrid(F.col("_cusum"), CENTS), dp).alias("cusum_at_change"),
             F.col("_n").alias("n_days"),
         )
     )
@@ -396,7 +396,7 @@ def forecast_backtest(
         df.select(
             F.col(group_col).alias("_g"),
             F.col(ts_col).cast("date").alias("_d"),
-            F.round(F.col(value_col) * 100).cast("long").alias("_c"),
+            grid(value_col, CENTS).alias("_c"),
         )
         .groupBy("_g", "_d")
         .agg(F.sum("_c").alias("_cents"))
@@ -422,14 +422,12 @@ def forecast_backtest(
             .groupBy(F.col("_g").alias(group_col))
             .agg(
                 F.count(F.lit(1)).alias("n_scored"),
-                (
-                    F.sum(F.abs(F.col("_cents") - F.col(fcol))) / F.count(F.lit(1))
-                    / F.lit(100.0)
+                ungrid(
+                    F.sum(F.abs(F.col("_cents") - F.col(fcol))) / F.count(F.lit(1)),
+                    CENTS,
                 ).alias("_mae"),
-                (
-                    F.sum(F.round(smape * 1000000).cast("long"))
-                    / F.count(F.lit(1))
-                    / F.lit(1000000.0)
+                ungrid(
+                    F.sum(grid(smape, MICRO)) / F.count(F.lit(1)), MICRO
                 ).alias("_smape"),
             )
             .select(

@@ -18,6 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ._fixed import CENTS, DYADIC, MICRO, grid, grid_moments, grid_sum, ungrid
 from .functions.feature import log1p_feature, mod_bucket
 from .functions.metrics import auc as _auc
 from .functions.metrics import gauc as _gauc
@@ -29,14 +30,6 @@ from .functions.windows import (
 )
 from .operators.joins import asof_join, left_join_with_default, lookup_join, pooled_lookup
 from .sources.tabular import _load, _stamp
-
-def _money_sum(expr):
-    """Exact money aggregation: quantize each row to integer cents (the
-    per-row double is bit-identical across engines since the expression
-    tree is identical), sum as integers, divide once. Immune to
-    summation-order half-boundary flips that plain round(sum(x),2) has."""
-    return F.sum(F.round(expr * 100).cast("long")) / F.lit(100.0)
-
 
 _SQL_MONEY = "sum(CAST(round(({expr}) * 100) AS BIGINT)) / 100.0"
 
@@ -141,8 +134,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            _money_sum(F.col("l_extendedprice")).alias("sum_base_price"),
-            _money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            grid_sum("l_extendedprice", CENTS).alias("sum_base_price"),
+            grid_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS).alias(
                 "sum_disc_price"
             ),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
@@ -188,8 +181,8 @@ def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            _money_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            grid_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS
             ).alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
@@ -231,8 +224,8 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name", "r_name")
         .agg(
-            _money_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            grid_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS
             ).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
@@ -280,7 +273,7 @@ def rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(
-            _money_sum(F.col("l_extendedprice")).alias("sum_price"),
+            grid_sum("l_extendedprice", CENTS).alias("sum_price"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -445,8 +438,8 @@ def left_join_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     history-merge: missing history -> empty/zero)."""
     o = _t(spark, sf_dir, "orders").select("o_orderkey")
     li = _t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
-        _money_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        grid_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS
         ).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
@@ -1527,7 +1520,7 @@ def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month("o_orderdate").alias("order_month"),
     ).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _money_sum(F.col("o_totalprice")).alias("total_price"),
+        grid_sum("o_totalprice", CENTS).alias("total_price"),
     )
 
 
@@ -1575,7 +1568,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity") < F.col("half_avg_qty")
     )
     return joined.agg(
-        (_money_sum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly")
+        (grid_sum("l_extendedprice", CENTS) / 7.0).alias("avg_yearly")
     )
 
 
@@ -2241,7 +2234,7 @@ def label_centroid_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pos", "x"),
     )
     per = e.groupBy("label", "pos").agg(
-        F.sum(F.round(F.col("x") * 1_000_000).cast("long")).alias("s"),
+        F.sum(grid("x", MICRO)).alias("s"),
         F.count(F.lit(1)).alias("n"),
     )
     cent = per.select(
@@ -2278,7 +2271,7 @@ def salted_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     salted = ev.withColumn("_sk", salted_key("event_type", 8)).withColumn(
-        "_cents", F.round(F.col("value") * 100).cast("long")
+        "_cents", grid("value", CENTS)
     )
     partial = salted.groupBy("_sk").agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_cents").alias("_s")
@@ -2287,7 +2280,7 @@ def salted_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial.groupBy(F.col("_sk.key").alias("event_type"))
         .agg(
             F.sum("_n").alias("n_events"),
-            (F.sum("_s") / F.lit(100.0)).alias("sum_value"),
+            ungrid(F.sum("_s"), CENTS).alias("sum_value"),
         )
     )
 
@@ -2529,7 +2522,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
         )
         .agg(
-            _money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            grid_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS).alias(
                 "revenue"
             )
         )
@@ -2580,8 +2573,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.round((F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100)
-                .cast("long")
+                grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS)
             ).alias("revenue_cents")
         )
     )
@@ -2593,7 +2585,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_name",
             "n_name",
             "c_acctbal",
-            (F.col("revenue_cents") / 100.0).alias("revenue"),
+            ungrid(F.col("revenue_cents"), CENTS).alias("revenue"),
         )
     )
 
@@ -2716,7 +2708,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
         .select("o_custkey")
     )
-    cents = F.round(F.col("c_acctbal") * 100).cast("long")
+    cents = grid("c_acctbal", CENTS)
     stats = c.agg(
         F.sum(cents).alias("s"), F.count(F.lit(1)).alias("n")
     )
@@ -2728,7 +2720,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            (F.sum("cents") / 100.0).alias("totacctbal"),
+            ungrid(F.sum("cents"), CENTS).alias("totacctbal"),
         )
     )
 
@@ -3250,7 +3242,7 @@ def unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            _money_sum(F.col("l_extendedprice")).alias("sum_price"),
+            grid_sum("l_extendedprice", CENTS).alias("sum_price"),
         )
     )
     return wide.selectExpr(
@@ -3293,10 +3285,10 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & F.round(F.col("l_discount") * 100).cast("long").between(5, 7)
+            & grid("l_discount", CENTS).between(5, 7)
             & (F.col("l_quantity") < 24)
         ).agg(
-            _money_sum(F.col("l_extendedprice") * F.col("l_discount")).alias(
+            grid_sum(F.col("l_extendedprice") * F.col("l_discount"), CENTS).alias(
                 "revenue"
             ),
             F.count(F.lit(1)).alias("n_items"),
@@ -3360,9 +3352,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").join(
         F.broadcast(asia_nations), F.col("c_nationkey") == F.col("asia_nk")
     ).select("c_custkey")
-    cents = F.round((F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100).cast(
-        "long"
-    )
+    cents = grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS)
     return (
         li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
         .join(F.broadcast(sn), li.l_suppkey == sn.s_suppkey)
@@ -3417,7 +3407,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), li.l_suppkey == sn.s_suppkey)
         .groupBy("nation", F.year("l_shipdate").alias("o_year"))
         .agg(
-            _money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            grid_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS).alias(
                 "sum_profit"
             )
         )
@@ -3489,9 +3479,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    cents = F.round((F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100).cast(
-        "long"
-    )
+    cents = grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS)
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .agg(
@@ -3535,9 +3523,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rev = li.groupBy("l_suppkey").agg(
         F.sum(
-            F.round((F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100).cast(
-                "long"
-            )
+            grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS)
         ).alias("rc")
     )
     best = rev.agg(F.max("rc").alias("best_rc"))
@@ -3545,7 +3531,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         rev.join(F.broadcast(best), rev.rc == F.col("best_rc"))
         .join(F.broadcast(s), rev.l_suppkey == s.s_suppkey)
-        .select("s_suppkey", "s_name", (F.col("rc") / 100.0).alias("total_revenue"))
+        .select(
+            "s_suppkey", "s_name", ungrid(F.col("rc"), CENTS).alias("total_revenue")
+        )
     )
 
 
@@ -3599,7 +3587,7 @@ def q19_bracket_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return joined.filter(bracket).agg(
-        _money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+        grid_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS).alias(
             "revenue"
         ),
         F.count(F.lit(1)).alias("n_items"),
@@ -4557,9 +4545,7 @@ def incremental_sales_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _agg(d: DataFrame) -> DataFrame:
         return d.groupBy("o_orderpriority").agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_cents"
-            ),
+            F.sum(grid("o_totalprice", CENTS)).alias("total_cents"),
         )
 
     base = _agg(orders.filter(F.col("o_orderdate") < cut))
@@ -4711,8 +4697,8 @@ def value_deciles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority", "decile")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.min("o_totalprice") * 100).cast("long").alias("min_cents"),
-            F.round(F.max("o_totalprice") * 100).cast("long").alias("max_cents"),
+            grid(F.min("o_totalprice"), CENTS).alias("min_cents"),
+            grid(F.max("o_totalprice"), CENTS).alias("max_cents"),
         )
     )
 
@@ -4967,7 +4953,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             "n_name",
             F.round("s_acctbal", 2).alias("s_acctbal"),
-            (F.col("ps_supplycost_cents") / 100.0).alias("supplycost"),
+            ungrid(F.col("ps_supplycost_cents"), CENTS).alias("supplycost"),
         )
     )
 
@@ -5019,7 +5005,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         val.join(F.broadcast(tot))
         .filter(F.col("value_cents") * 1000 > F.col("total_cents"))
-        .select("ps_partkey", (F.col("value_cents") / 100.0).alias("part_value"))
+        .select("ps_partkey", ungrid(F.col("value_cents"), CENTS).alias("part_value"))
     )
 
 
@@ -6497,7 +6483,7 @@ def t_closeness_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, nothing row-proportional past the first agg."""
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        grid("o_totalprice", CENTS).alias("cents"),
     )
     mx = o.agg(F.max("cents").alias("mc"))
     b = o.crossJoin(F.broadcast(mx)).select(
@@ -6611,7 +6597,7 @@ def conformal_interval_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-wide ops are two scans and two partial aggs."""
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        grid("o_totalprice", CENTS).alias("cents"),
         (
             F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")),
                                1, 8), 16, 10).cast("long") % 2
@@ -6730,7 +6716,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            (_money_sum(F.col("value"))).alias("revenue"),
+            grid_sum("value", CENTS).alias("revenue"),
         )
     )
     return out
@@ -6764,7 +6750,7 @@ def pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; rows are |customers|, not |orders|."""
     o = _t(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
-        _money_sum(F.col("o_totalprice")).alias("revenue")
+        grid_sum("o_totalprice", CENTS).alias("revenue")
     )
     w = Window.orderBy(F.col("revenue").desc(), "o_custkey")
     wall = Window.partitionBy()
@@ -7072,7 +7058,7 @@ def rolling_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-cents sums and decimal squares inside the window frame keep
     the statistics engine-exact; one key-partitioned ordered window."""
     ev = _t(spark, sf_dir, "events")
-    q = F.round(F.col("value") * 100).cast("long")
+    q = grid("value", CENTS)
     win = (
         Window.partitionBy("event_type")
         .orderBy("ts", "event_id")
@@ -7081,12 +7067,11 @@ def rolling_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     wn = F.count(F.lit(1)).over(win)
     ws = F.sum(q).over(win)
     wss = F.sum((q * q).cast("decimal(38,0)")).over(win)
-    mean = (ws / 100.0) / wn.cast("double")
-    var = (wss.cast("double") / 10000.0) / wn.cast("double") - mean * mean
+    mean, var = grid_moments(wn, ws, wss, CENTS)
     flag = (
         F.when(
             (wn >= 20) & (var > 0),
-            F.abs(q / F.lit(100.0) - mean) > F.lit(4.0) * F.sqrt(var),
+            F.abs(ungrid(q, CENTS) - mean) > F.lit(4.0) * F.sqrt(var),
         ).otherwise(F.lit(False))
     )
     return ev.select(
@@ -7218,17 +7203,17 @@ def embedding_drift_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "pos", "x"
         ),
-    ).withColumn("q", F.round(F.col("x") * 1_000_000).cast("long"))
+    ).withColumn("q", grid("x", MICRO))
     cent = e.groupBy("label", "period", "pos").agg(
         F.sum("q").alias("s"), F.count(F.lit(1)).alias("n")
     )
     a = cent.filter(F.col("period") == 0).select(
         "label", "pos",
-        ((F.col("s") / 1_000_000.0) / F.col("n").cast("double")).alias("ca"),
+        (ungrid(F.col("s"), MICRO) / F.col("n").cast("double")).alias("ca"),
     )
     b = cent.filter(F.col("period") == 1).select(
         F.col("label").alias("lb"), F.col("pos").alias("pb"),
-        ((F.col("s") / 1_000_000.0) / F.col("n").cast("double")).alias("cb"),
+        (ungrid(F.col("s"), MICRO) / F.col("n").cast("double")).alias("cb"),
     )
     paired = a.join(
         b, (a.label == b.lb) & (a.pos == F.col("pb"))
@@ -7774,7 +7759,7 @@ def bloom_prune_join_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = bloom_filter_join(li, p, "l_partkey", "p_partkey")
     return joined.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_items"),
-        _money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+        grid_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS).alias(
             "revenue"
         ),
     )
@@ -8048,7 +8033,7 @@ def equidepth_bins_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.analytics import equidepth_bins
 
     li = _t(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("v")
+        grid("l_extendedprice", CENTS).alias("v")
     )
     out = equidepth_bins(li, "v", n_bins=8)
     return out.select(
@@ -8144,7 +8129,7 @@ def covariance_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.decomp import covariance_matrix
 
     emb = _t(spark, sf_dir, "embeddings")
-    return covariance_matrix(emb, "embedding", dim=64, scale_bits=20)
+    return covariance_matrix(emb, "embedding", dim=64)
 
 
 def _pca_power_oracle(iters: int = 5) -> str:
@@ -8465,7 +8450,7 @@ def provenance_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.min("_source_row").alias("min_row"),
         F.max("_source_row").alias("max_row"),
-        _money_sum(F.col("l_extendedprice")).alias("sum_price"),
+        grid_sum("l_extendedprice", CENTS).alias("sum_price"),
     )
 
 
@@ -8609,7 +8594,7 @@ def winsorize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
+        grid("l_extendedprice", CENTS).alias("v"),
     )
     out = winsorize(li, "v", 1, 127)
     return out.select(
@@ -9100,7 +9085,7 @@ def psi_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("v"),
+        grid("o_totalprice", CENTS).alias("v"),
     )
     split = F.lit("1998-01-01 00:00:00").cast("timestamp")
     ref = o.filter(F.col("o_orderdate") < split).select("v")
@@ -9200,7 +9185,7 @@ def cuped_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = grid("value", CENTS)
     per_user = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("ts") < split, cents).otherwise(0)).alias("pre"),
         F.sum(F.when(F.col("ts") >= split, cents).otherwise(0)).alias("post"),
@@ -9391,7 +9376,7 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("rid"),
         F.col("c_name").alias("name"),
         F.col("c_mktsegment").alias("seg"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal"),
+        grid("c_acctbal", CENTS).alias("bal"),
     ).unionByName(
         c.select(
             (F.col("c_custkey") + 1000000).alias("rid"),
@@ -9431,7 +9416,7 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_members",
         F.col("_w.nm").alias("name"),
         "segment",
-        (F.col("_mb").cast("double") / 100.0).alias("max_bal"),
+        ungrid(F.col("_mb").cast("double"), CENTS).alias("max_bal"),
     )
 
 
@@ -9488,7 +9473,7 @@ def embedding_outliers_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.transform("embedding", lambda x: x.cast("double"))
         ).alias("pos", "x"),
-    ).withColumn("xq", F.round(F.col("x") * 1000000).cast("long"))
+    ).withColumn("xq", grid("x", MICRO))
     per = e.groupBy("label", "pos").agg(
         F.sum("xq").alias("s"), F.count(F.lit(1)).alias("n")
     )
@@ -9510,9 +9495,7 @@ def embedding_outliers_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "rank",
             "vec_id",
-            F.round(F.sqrt(F.col("s2").cast("double")) / 1000000.0, 6).alias(
-                "dist"
-            ),
+            F.round(ungrid(F.sqrt(F.col("s2").cast("double")), MICRO), 6).alias("dist"),
         )
     )
 
@@ -9617,9 +9600,7 @@ def mips_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators (Shrivastava & Li 2014) — the reduction, not a new index.
     """
     emb = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 1048576).cast("long")
-    )
+    qv = F.transform("embedding", lambda x: grid(x, DYADIC))
     q = emb.filter(F.col("vec_id").isin(1, 2, 3)).select(
         F.col("vec_id").alias("qid"), qv.alias("qv")
     )
@@ -9682,7 +9663,7 @@ def stream_enrich_user_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     tiers = ev.groupBy("user_id").agg(
         F.when(
-            F.sum(F.round(F.col("value") * 100).cast("long")) >= 330000, "high"
+            F.sum(grid("value", CENTS)) >= 330000, "high"
         )
         .otherwise("standard")
         .alias("tier")
@@ -9691,9 +9672,7 @@ def stream_enrich_user_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(tiers), "user_id")
     agg = enriched.groupBy("tier", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        (
-            F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)
-        ).alias("sum_value"),
+        grid_sum("value", CENTS).alias("sum_value"),
     )
     return run_available_now(agg).select(
         "tier", "event_type", "n_events", "sum_value"
@@ -9818,9 +9797,7 @@ def array_ops_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^20 integer grid (exact sums/comparisons; first-match argmax), no
     explode, no shuffle, no Python."""
     emb = _t(spark, sf_dir, "embeddings")
-    v = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 1048576).cast("long")
-    )
+    v = F.transform("embedding", lambda x: grid(x, DYADIC))
     q = emb.select("vec_id", v.alias("v"))
     sumsq = F.aggregate(
         F.transform("v", lambda x: x * x),
@@ -9830,10 +9807,10 @@ def array_ops_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = F.array_max("v")
     return q.select(
         "vec_id",
-        F.round(F.sqrt(sumsq.cast("double")) / 1048576.0, 6).alias("l2_norm"),
+        F.round(ungrid(F.sqrt(sumsq.cast("double")), DYADIC), 6).alias("l2_norm"),
         F.size(F.filter("v", lambda x: x > 0)).alias("n_positive"),
         (F.array_position("v", mx) - 1).cast("long").alias("argmax"),
-        F.round(mx.cast("double") / 1048576.0, 6).alias("max_v"),
+        F.round(ungrid(mx.cast("double"), DYADIC), 6).alias("max_v"),
     )
 
 
@@ -10838,9 +10815,11 @@ def ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("num_term").alias("ewma_num"),
         F.sum("den_term").alias("ewma_den"),
         F.round(
-            F.sum("num_term").cast("double")
-            / F.sum("den_term").cast("double")
-            / 100.0,
+            ungrid(
+                F.sum("num_term").cast("double")
+                / F.sum("den_term").cast("double"),
+                CENTS,
+            ),
             4,
         ).alias("ewma"),
     )
@@ -11152,7 +11131,7 @@ def halfsample_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table."""
     o = _t(spark, sf_dir, "orders")
     base = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        grid("o_totalprice", CENTS).alias("cents"),
         F.conv(
             F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
             16,
@@ -11596,7 +11575,7 @@ def dataset_shift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     cut = F.lit("1997-01-01 00:00:00").cast("timestamp")
     is_pre = F.col("o_orderdate") < cut
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = grid("o_totalprice", CENTS)
     one = o.agg(
         F.sum(F.when(is_pre, 1).otherwise(0)).alias("pre_n"),
         F.sum(F.when(~is_pre, 1).otherwise(0)).alias("post_n"),
@@ -11650,7 +11629,7 @@ def _daily_cents_series(
     scan), matching the chi_square/kaplan_meier guard discipline."""
     ev = _t(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.round(F.coalesce("value", F.lit(0.0)) * 100).cast("long"))
+        F.sum(grid(F.coalesce("value", F.lit(0.0)), CENTS))
         .alias("v")
     )
     if max_days is not None:
@@ -11790,9 +11769,7 @@ def bandit_replay_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     logged = ev.select(
         (F.col("user_id") % 3).alias("segment"),
         F.col("event_type").alias("arm"),
-        F.round(F.coalesce("value", F.lit(0.0)) * 100).cast("long").alias(
-            "reward"
-        ),
+        grid(F.coalesce("value", F.lit(0.0)), CENTS).alias("reward"),
         "ts",
     )
     split = F.lit("2024-01-21 00:00:00").cast("timestamp")
@@ -11864,7 +11841,7 @@ def _skyline_2d(
 ) -> DataFrame:
     p = _t(spark, sf_dir, "part").select(
         "p_partkey",
-        F.round(F.col("p_retailprice") * 100).cast("long").alias("cents"),
+        grid("p_retailprice", CENTS).alias("cents"),
         "p_size",
     )
     g = p.groupBy("cents").agg(F.min("p_size").alias("_msize"))
@@ -12818,7 +12795,7 @@ def quantile_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = quantile_normalize(ev, "event_type", "value", k=256, grid_col="_gc")
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(grid("value", CENTS))
         .cast("long")
         .alias("sum_raw_cents"),
         F.sum(F.round(F.col("_gc")).cast("long"))
@@ -12888,9 +12865,7 @@ def rfm_segments_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("_gm"), F.max(F.col("o_orderdate").cast("date"))
             ).alias("r"),
             F.count(F.lit(1)).alias("f"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "m"
-            ),
+            F.sum(grid("o_totalprice", CENTS)).alias("m"),
         )
     )
     q = per.agg(
@@ -12975,10 +12950,7 @@ def kendall_tau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
         .alias("x"),
     ).agg(
-        (
-            F.sum(F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
-                  .cast("long")).cast("double") / 100.0
-        ).alias("y")
+        grid_sum(F.coalesce(F.col("value"), F.lit(0.0)), CENTS).alias("y")
     )
     return kendall_tau_b(daily, "event_type", "x", "y")
 
@@ -13203,7 +13175,7 @@ def incremental_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = view_old.unionAll(delta)
     return view.groupBy("c_nationkey", "o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+        F.sum(grid("o_totalprice", CENTS))
         .cast("long")
         .alias("sum_cents"),
     )
@@ -14452,14 +14424,7 @@ def _daily_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(
-        (
-            F.sum(
-                F.round(F.coalesce(F.col("value"), F.lit(0)) * 100).cast(
-                    "long"
-                )
-            ).cast("double")
-            / F.lit(100.0)
-        ).alias("v")
+        grid_sum(F.coalesce(F.col("value"), F.lit(0)), CENTS).alias("v")
     )
 
 
@@ -15081,9 +15046,7 @@ def hhi_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     cents = F.sum(
-        F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-        ).cast("long")
+        grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS)
     ).alias("e")
     rev = (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
@@ -15103,7 +15066,7 @@ def hhi_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "nation",
         F.col("n_suppliers").cast("long").alias("n_suppliers"),
-        (td / F.lit(100.0)).alias("total_rev"),
+        ungrid(td, CENTS).alias("total_rev"),
         F.when(
             F.col("total") != 0,
             F.round(F.col("sumsq").cast("double") / (td * td), 6),
@@ -15177,15 +15140,15 @@ def cmh_test_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = F.col("n").cast("double")
     n1d = F.col("n1").cast("double")
     m1d = F.col("m1").cast("double")
-    e_micro = F.round(n1d * m1d / nd * 1000000).cast("long")
-    v_micro = F.round(
+    e_micro = grid(n1d * m1d / nd, MICRO)
+    v_micro = grid(
         n1d
         * (F.col("n") - F.col("n1")).cast("double")
         * m1d
         * (F.col("n") - F.col("m1")).cast("double")
-        / (nd * nd * (F.col("n") - 1).cast("double"))
-        * 1000000
-    ).cast("long")
+        / (nd * nd * (F.col("n") - 1).cast("double")),
+        MICRO,
+    )
     terms = per.filter(F.col("n") > 1).select(
         "a", e_micro.alias("e_micro"), v_micro.alias("v_micro")
     )
@@ -15195,10 +15158,11 @@ def cmh_test_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("e_micro").alias("sum_e_micro"),
         F.sum("v_micro").alias("sum_v_micro"),
     )
-    diff = (
+    diff = ungrid(
         F.col("sum_a").cast("double") * F.lit(1000000.0)
-        - F.col("sum_e_micro").cast("double")
-    ) / F.lit(1000000.0)
+        - F.col("sum_e_micro").cast("double"),
+        MICRO,
+    )
     return agg.select(
         F.col("k_strata").cast("long").alias("k_strata"),
         F.col("sum_a").cast("long").alias("sum_a"),
@@ -15208,7 +15172,7 @@ def cmh_test_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_v_micro") > 0,
             F.round(
                 diff * diff
-                / (F.col("sum_v_micro").cast("double") / F.lit(1000000.0)),
+                / ungrid(F.col("sum_v_micro").cast("double"), MICRO),
                 6,
             ),
         ).alias("cmh"),

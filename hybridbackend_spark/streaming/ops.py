@@ -22,6 +22,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .._fixed import CENTS, grid_sum
 from ..sources.tabular import _load
 
 __all__ = [
@@ -135,8 +136,7 @@ def tumbling_agg(
     # hazard gate in tests/test_oracle_hazards.py forbids it)
     aggs = aggs or {
         "n_events": F.count(F.lit(1)),
-        "sum_value": F.sum(F.round(F.col("value") * 100).cast("long"))
-        / F.lit(100.0),
+        "sum_value": grid_sum("value", CENTS),
     }
     return (
         events.withWatermark(ts, watermark)

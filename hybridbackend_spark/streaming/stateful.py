@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .._fixed import CENTS, spark_round
+
 __all__ = [
     "running_counter", "RUNNING_COUNTER_SCHEMA",
     "session_emitter", "SESSION_EMIT_SCHEMA",
@@ -30,20 +32,19 @@ _STATE_SCHEMA = "n long, c long"
 
 
 def _exact_cents(v: "pd.Series"):
-    """SQL ``round half away from zero`` cents as an int64 array, with
-    the same LOUD failure contract as the batch engines' ANSI
-    ``CAST(round(x*100) AS BIGINT)``: a non-finite or out-of-int64-range
-    value raises a named guard instead of pandas' behavior — which
-    silently WRAPS finite overflow (1e300 becomes int64 min, corrupting
-    the running sum) and kills the stream with an opaque
+    """The batch engines' ``CAST(round(x*100) AS BIGINT)`` cents as an
+    int64 array (:func:`~hybridbackend_spark._fixed.spark_round`), with
+    the same LOUD failure contract as that ANSI cast: a non-finite or
+    out-of-int64-range value raises a named guard instead of pandas'
+    behavior — which silently WRAPS finite overflow (1e300 becomes int64
+    min, corrupting the running sum) and kills the stream with an opaque
     IntCastingNaNError on ±inf. Callers fillna(0.0) first, so NaN never
     reaches this; a raise here is the designed response to corrupt-scale
     input (|x| > ~9.2e16), mirroring the batch oracle's abort.
     """
     import numpy as np
 
-    c = np.sign(v) * np.floor(np.abs(v) * 100 + 0.5)
-    arr = np.asarray(c, dtype="float64")
+    arr = spark_round(np.asarray(v, dtype="float64") * CENTS)
     bad = ~np.isfinite(arr) | (np.abs(arr) >= float(2**63))
     if bad.any():
         raise ValueError(

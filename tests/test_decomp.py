@@ -21,7 +21,7 @@ def vec_df(spark):
 
 def test_covariance_matches_numpy(spark, vec_df):
     df, base = vec_df
-    out = covariance_matrix(df, "v", dim=4, scale_bits=20)
+    out = covariance_matrix(df, "v", dim=4)
     got = {(r.i, r.j): r.cov for r in out.collect()}
     ref = np.cov(base, rowvar=False, ddof=1)
     assert len(got) == 10  # upper triangle of 4x4

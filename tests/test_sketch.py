@@ -95,6 +95,27 @@ def test_quantile_sketch_within_bucket_interpolation(spark):
     assert 1.28 <= est <= 2.56
 
 
+def test_quantile_sketch_rejects_negative_values(spark):
+    import pytest
+
+    from hybridbackend_spark.operators.sketch import quantile_sketch_build
+
+    # bin() of a negative BIGINT is its two's complement: (-5, -3, -1, 2)
+    # used to land in bucket 63 and estimate q50 as -6.1e16
+    neg = spark.createDataFrame(
+        [("g", v) for v in (-5.0, -3.0, -1.0, 2.0)], "g: string, v: double"
+    )
+    with pytest.raises(Exception, match="quantile_sketch_build: negative value"):
+        quantile_sketch_build(neg, ["g"], "v").collect()
+    # NULL passes the guard and keeps its NULL bucket
+    nul = spark.createDataFrame([("g", None), ("g", 2.0)], "g: string, v: double")
+    got = sorted(
+        (r.bucket is None, r.cnt)
+        for r in quantile_sketch_build(nul, ["g"], "v").collect()
+    )
+    assert got == [(False, 1), (True, 1)]
+
+
 def test_kmv_jaccard_estimates_overlap(spark):
     from pyspark.sql import functions as F
     from hybridbackend_spark.operators.sketch import kmv_build, kmv_jaccard
