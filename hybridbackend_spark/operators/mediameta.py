@@ -28,6 +28,9 @@ from __future__ import annotations
 
 import struct
 
+from .mp4 import _iter_boxes
+from .multimodal import _PPM_HEADER, _row_map, _schema
+
 __all__ = ["probe_media", "media_probe"]
 
 
@@ -69,8 +72,6 @@ def _probe_png(p: bytes):
 
 
 def _probe_gif(p: bytes):
-    import numpy as np  # noqa: F401 (parity with sibling probes)
-
     w, h, flags = struct.unpack("<HHB", p[6:11])
     pos = 13
     if flags & 0x80:
@@ -107,9 +108,7 @@ def _probe_gif(p: bytes):
 
 
 def _probe_ppm(p: bytes):
-    import re
-
-    m = re.match(rb"^P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s", p)
+    m = _PPM_HEADER.match(p)
     if not m:
         return None
     return {
@@ -183,55 +182,37 @@ def _probe_mp3(p: bytes):
 
 
 def _probe_mp4(p: bytes):
+    """ftyp brand, mvhd duration, trak count and the first visual tkhd's
+    dimensions. Boxes walk with mp4.py's ``_iter_boxes``, so a size-0
+    box runs to the end of its parent (ISO/IEC 14496-12 §4.2) and a bad
+    size raises ValueError."""
     if len(p) < 12 or p[4:8] != b"ftyp":
         return None
     brand = p[8:12].decode("latin1")
     out = {"format": "mp4", "extra": f"brand={brand}"}
     n_trak = 0
-
-    def walk(lo, hi, depth):
-        nonlocal n_trak
-        pos = lo
-        while pos + 8 <= hi:
-            (sz,) = struct.unpack(">I", p[pos : pos + 4])
-            typ = p[pos + 4 : pos + 8]
-            body = pos + 8
-            if sz == 1:  # 64-bit size
-                (sz,) = struct.unpack(">Q", p[pos + 8 : pos + 16])
-                body = pos + 16
-            if sz < 8 or pos + sz > hi:
-                raise ValueError("bad atom size")
-            if typ == b"moov" and depth == 0:
-                walk(body, pos + sz, 1)
-            elif typ == b"trak" and depth == 1:
-                n_trak += 1
-                walk(body, pos + sz, 2)
-            elif typ == b"mvhd" and depth == 1:
-                ver = p[body]
-                if ver == 1:
-                    ts, dur = struct.unpack(
-                        ">IQ", p[body + 20 : body + 32]
-                    )
+    for top, lo, hi in _iter_boxes(p, 0, len(p)):
+        if top != b"moov":
+            continue
+        for typ, body, end in _iter_boxes(p, lo, hi):
+            if typ == b"mvhd":
+                if p[body] == 1:
+                    ts, dur = struct.unpack(">IQ", p[body + 20 : body + 32])
                 else:
-                    ts, dur = struct.unpack(
-                        ">II", p[body + 12 : body + 20]
-                    )
+                    ts, dur = struct.unpack(">II", p[body + 12 : body + 20])
                 if ts:
                     out["duration_ms"] = dur * 1000 // ts
-            elif typ == b"tkhd" and depth == 2:
-                ver = p[body]
-                off = body + (96 if ver == 1 else 84)
-                w16, h16 = struct.unpack(">II", p[off - 8 : off])
-                # 16.16 fixed point; only meaningful for visual tracks
-                if w16 and h16:
-                    out["width"] = w16 >> 16
-                    out["height"] = h16 >> 16
-            pos += sz
-
-    try:
-        walk(0, len(p), 0)
-    except (ValueError, struct.error, IndexError):
-        return None
+            elif typ == b"trak":
+                n_trak += 1
+                for sub, at, _ in _iter_boxes(p, body, end):
+                    if sub != b"tkhd":
+                        continue
+                    off = at + (96 if p[at] == 1 else 84)
+                    w16, h16 = struct.unpack(">II", p[off - 8 : off])
+                    # 16.16 fixed point; only meaningful for visual tracks
+                    if w16 and h16:
+                        out["width"] = w16 >> 16
+                        out["height"] = h16 >> 16
     if n_trak:
         out["n_tracks"] = n_trak
     return out if "duration_ms" in out or n_trak else None
@@ -268,41 +249,26 @@ def probe_media(payload: bytes):
 
 
 def media_probe(df, payload_col: str = "payload", id_col: str = "media_id"):
-    """Spark operator: probe every payload's container structure via
-    mapInPandas (Arrow batches). Output one row per input:
+    """Spark operator: probe every payload's container structure, one
+    Arrow-batched pass. Output one row per input:
     (id, format, width, height, n_frames, n_tracks, channels,
     sample_rate, bitrate_kbps, duration_ms, extra) with NULLs where the
     container declares nothing — the triage table a media pipeline
     builds BEFORE spending decode cycles."""
     from pyspark.sql import types as T
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("format", T.StringType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("n_tracks", T.LongType()),
-            T.StructField("channels", T.LongType()),
-            T.StructField("sample_rate", T.LongType()),
-            T.StructField("bitrate_kbps", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("extra", T.StringType()),
-        ]
-    )
     fields = ["format", "width", "height", "n_frames", "n_tracks",
               "channels", "sample_rate", "bitrate_kbps", "duration_ms",
               "extra"]
 
-    def _batch(batches):
-        import pandas as pd
+    def _row(mid, p):
+        m = probe_media(p) or {}
+        return [(mid, *(m.get(f) for f in fields))]
 
-        for pdf in batches:
-            metas = [probe_media(p) or {} for p in pdf[payload_col]]
-            cols = {id_col: pdf[id_col]}
-            for f in fields:
-                cols[f] = [m.get(f) for m in metas]
-            yield pd.DataFrame(cols)
-
-    return df.select(id_col, payload_col).mapInPandas(_batch, out_schema)
+    out_schema = _schema(
+        id_col,
+        ("format", T.StringType()),
+        *fields[1:-1],
+        ("extra", T.StringType()),
+    )
+    return _row_map(df, [id_col, payload_col], out_schema, _row)

@@ -1,6 +1,6 @@
 """Multimodal column handling: opaque binary payloads + typed metadata,
-with Arrow-batched (mapInPandas) decode / feature-extract / resize /
-frame-sample operators.
+with Arrow-batched decode / feature-extract / resize / frame-sample
+operators.
 
 Design: media is carried as ``binary`` columns beside a typed metadata
 struct (mime, width/height, duration, sample_rate). All Spark-side
@@ -24,6 +24,19 @@ format x behavior matrix is pinned in COVERAGE.md ("Codec boundary")
 and asserted by tests/test_codec_boundary.py. Payload sniffing is by
 magic bytes, so one column can mix formats.
 
+One boundary: every operator here (and ``mediameta.media_probe``) is a
+per-row function over :func:`_row_map`, the family's single
+``mapInArrow`` site, and every decoding operator resolves a payload
+through :func:`_decode` (built-in parse, then registered codecs, then
+the operator's own hash fake or the strict raise).
+
+Codec contract: an operator snapshots the codec registry when it is
+called, so later registry edits don't mutate plans already built. The
+snapshot travels to the executors inside the row function, so each
+decoder must survive cloudpickle: a function from a worker-importable
+module (pickled by reference) or a nested/dynamic function (shipped by
+value) — never a method holding open resources.
+
 Scale notes: decode is the canonical Python-boundary operator — Arrow
 batches amortize serde; ``spark.sql.execution.arrow.maxRecordsPerBatch``
 and ``spark.sql.files.maxPartitionBytes`` bound per-task memory (media
@@ -36,7 +49,6 @@ from __future__ import annotations
 import hashlib
 import io
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
@@ -92,6 +104,11 @@ _STRICT_MSG = (
     "register_codec() or run with fake=True for the deterministic stub"
 )
 
+# extract_audio_features: analysis window of a decoded signal, and the
+# byte window its hash fake frames an undecodable payload into
+_FRAME_MS = 25
+_FAKE_FRAME_BYTES = 1024
+
 
 # ---------------------------------------------------------------------------
 # Pluggable codec registry: where real codec libraries exist, they slot in
@@ -102,13 +119,9 @@ _STRICT_MSG = (
 #          or None
 #   video: decode(payload: bytes) -> list of (h, w, 3) uint8 frames, or None
 # Returning None means "not mine after all" — the sniff falls through to
-# the next codec, then to the fake/strict fallback. Decoders are captured
-# into the mapInPandas closure at operator-call time (a snapshot, so later
-# registry edits don't mutate running plans) and must survive cloudpickle
-# to the executors: functions from worker-importable modules (pickled by
-# reference) or nested/dynamic functions (shipped by value) — never
-# methods holding open resources.
-# Built-in PPM/WAV/PPM-stream decoding always runs first.
+# the next codec, then to the fake/strict fallback. Snapshot and pickling
+# rules: see the module docstring. Built-in PPM/WAV/PPM-stream decoding
+# always runs first.
 # ---------------------------------------------------------------------------
 
 _CODECS: dict[str, list[tuple[str, bytes, object]]] = {
@@ -161,13 +174,15 @@ def with_media_meta(
 
 
 # ---------------------------------------------------------------------------
-# Real codecs for container-decodable formats
+# Real codecs for container-decodable formats. Each built-in decoder is a
+# module-level wrapper, so it pickles by reference and imports its codec
+# module lazily on the executor.
 # ---------------------------------------------------------------------------
 
 
 def _jpeg_decode(payload: bytes):
     """Built-in baseline JPEG decode (pure Python + numpy, operators/
-    jpeg.py) — module-level so it pickles by reference to executors."""
+    jpeg.py)."""
     from .jpeg import decode_jpeg
 
     return decode_jpeg(payload)
@@ -179,8 +194,7 @@ register_codec("image", "baseline-jpeg", b"\xff\xd8", _jpeg_decode)
 
 
 def _png_decode(payload: bytes):
-    """Built-in PNG decode (stdlib zlib + numpy, operators/png.py) —
-    module-level so it pickles by reference to executors."""
+    """Built-in PNG decode (stdlib zlib + numpy, operators/png.py)."""
     from .png import decode_png
 
     return decode_png(payload)
@@ -192,8 +206,7 @@ register_codec("image", "png", b"\x89PNG\r\n\x1a\n", _png_decode)
 
 
 def _gif_decode(payload: bytes):
-    """Built-in GIF decode (pure Python LZW, operators/gif.py) —
-    module-level so it pickles by reference to executors."""
+    """Built-in GIF decode (pure Python LZW, operators/gif.py)."""
     from .gif import decode_gif
 
     return decode_gif(payload)
@@ -205,8 +218,7 @@ register_codec("image", "gif", b"GIF8", _gif_decode)
 
 
 def _adpcm_decode(payload: bytes):
-    """Built-in IMA ADPCM WAV decode (pure Python, operators/adpcm.py)
-    — module-level so it pickles by reference to executors."""
+    """Built-in IMA ADPCM WAV decode (pure Python, operators/adpcm.py)."""
     from .adpcm import decode_adpcm_wav
 
     return decode_adpcm_wav(payload)
@@ -276,15 +288,15 @@ def encode_ppm(arr) -> bytes:
 
 def _split_ppm_stream(payload: bytes) -> list[bytes]:
     """Split a concatenated-P6 stream (the toy video container) into the
-    individual frame payloads; [] if the payload doesn't start with P6."""
+    individual frame payloads, each one :func:`_parse_ppm` decodes. The
+    split ends at the first frame it rejects (truncated body, maxval
+    other than 255): the byte offsets after it can't be trusted. [] if
+    the payload doesn't start with a decodable P6 frame."""
     frames, off = [], 0
-    while True:
-        m = _PPM_HEADER.match(payload[off:])
-        if not m:
-            break
+    while m := _PPM_HEADER.match(payload[off:]):
         w, h, _ = (int(g) for g in m.groups())
         end = off + m.end() + w * h * 3
-        if end > len(payload):
+        if _parse_ppm(payload[off:end]) is None:
             break
         frames.append(payload[off:end])
         off = end
@@ -347,6 +359,90 @@ def _fit_dim(feats: list[float], dim: int) -> list[float]:
 
 
 # ---------------------------------------------------------------------------
+# The shared boundary: one row map, one decode
+# ---------------------------------------------------------------------------
+
+
+def _schema(*fields) -> T.StructType:
+    """Output schema from ``(name, type)`` pairs; a bare name is a
+    nullable ``long`` field."""
+    return T.StructType(
+        [
+            T.StructField(f, T.LongType()) if isinstance(f, str) else T.StructField(*f)
+            for f in fields
+        ]
+    )
+
+
+def _row_map(
+    df: DataFrame, in_cols: list[str], out_schema: T.StructType, fn
+) -> DataFrame:
+    """Apply ``fn(*values)`` to each row of ``df``'s ``in_cols``; ``fn``
+    returns the zero or more output tuples of that row, laid out as
+    ``out_schema``. One ``mapInArrow`` over only ``in_cols``: values
+    reach ``fn`` as plain Python objects (binary as ``bytes``), and each
+    output column is built at its declared Arrow type, so no dtype is
+    inferred between ``fn`` and the schema."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _map_rows(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = [
+                out
+                for vals in zip(*(c.to_pylist() for c in batch.columns))
+                for out in fn(*vals)
+            ]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.select(*in_cols).mapInArrow(_map_rows, out_schema)
+
+
+def _decode(kind: str, raw: bytes, codecs: list, fake: bool):
+    """Decode one non-NULL payload: the built-in parse of ``kind``
+    (PPM image, PCM16 WAV, concatenated-PPM frames), then ``codecs``, the
+    operator's registry snapshot. Returns the (h, w, 3) image, the
+    (signal, rate) pair or the non-empty frame list. When nothing
+    decodes: None if ``fake`` (the caller substitutes its own hash
+    fake), else NotImplementedError."""
+    if kind == "video":
+        frames = [_parse_ppm(fr) for fr in _split_ppm_stream(raw)]
+        out = frames or list(_try_codecs(codecs, raw) or ()) or None
+    else:
+        out = (_parse_ppm if kind == "image" else _parse_wav)(raw)
+        if out is None:
+            out = _try_codecs(codecs, raw)
+    if out is None and not fake:
+        raise NotImplementedError(_STRICT_MSG.format(kind=kind))
+    return out
+
+
+_PIXEL_STATS = ("height", "width", "r_sum", "g_sum", "b_sum", "weighted")
+
+
+def _pixel_stats(img) -> tuple[int, ...]:
+    """``_PIXEL_STATS`` of an (h, w, 3) uint8 image, exact in int64:
+    ``weighted`` = sum over pixels of (r + 2g + 3b) * (1 + (x + y) % 7),
+    position-sensitive, so a pixel transposition or channel swap in a
+    codec changes it (overflow needs > 2^44 pixels)."""
+    import numpy as np
+
+    h, w = img.shape[:2]
+    px = img.astype(np.int64)
+    yy, xx = np.mgrid[0:h, 0:w]
+    lin = px[..., 0] + 2 * px[..., 1] + 3 * px[..., 2]
+    r, g, b = (int(px[..., c].sum()) for c in range(3))
+    return h, w, r, g, b, int((lin * (1 + (xx + yy) % 7)).sum())
+
+
+# ---------------------------------------------------------------------------
 # Operators
 # ---------------------------------------------------------------------------
 
@@ -358,8 +454,8 @@ def decode_image_features(
     dim: int = 64,
     fake: bool = True,
 ) -> DataFrame:
-    """Decode images and emit a feature vector per row via mapInPandas
-    (Arrow batches; the only sanctioned Python boundary). Output schema:
+    """Decode images and emit a feature vector per row (Arrow batches;
+    the only sanctioned Python boundary). Output schema:
     (id_col long, features array<float>).
 
     PPM payloads are decoded for real (4x4 grid of per-cell channel
@@ -367,36 +463,18 @@ def decode_image_features(
     :func:`register_codec`) handle compressed formats. Remaining
     formats: deterministic hash fake when ``fake=True``, else
     NotImplementedError."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
     codecs = _codec_snapshot("image")
 
-    def _one(p) -> list[float] | None:
+    def _row(mid, p):
         if p is None:
-            return None
-        raw = bytes(p)
-        img = _parse_ppm(raw)
+            return [(mid, None)]
+        img = _decode("image", p, codecs, fake)
         if img is None:
-            img = _try_codecs(codecs, raw)
-        if img is not None:
-            return _fit_dim(_grid_features(img), dim)
-        if not fake:
-            raise NotImplementedError(_STRICT_MSG.format(kind="image"))
-        return _fake_vector(raw, dim)
+            return [(mid, _fake_vector(p, dim))]
+        return [(mid, _fit_dim(_grid_features(img), dim))]
 
-    def _decode_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "features": [_one(p) for p in pdf[payload_col]]}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_decode_batch, out_schema)
+    out_schema = _schema(id_col, ("features", T.ArrayType(T.FloatType())))
+    return _row_map(df, [id_col, payload_col], out_schema, _row)
 
 
 def image_pixel_stats(
@@ -416,68 +494,18 @@ def image_pixel_stats(
     Strict by default (``fake=False``): an undecodable payload raises
     rather than contributing fabricated stats. All sums are int64 on
     uint8 pixels (overflow needs > 2^44 pixels per image)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("r_sum", T.LongType()),
-            T.StructField("g_sum", T.LongType()),
-            T.StructField("b_sum", T.LongType()),
-            T.StructField("weighted", T.LongType()),
-        ]
-    )
     codecs = _codec_snapshot("image")
 
-    def _one(p):
-        import numpy as np
-
+    def _row(mid, p):
         if p is None:
-            return None
-        raw = bytes(p)
-        img = _parse_ppm(raw)
+            return [(mid,) + (None,) * len(_PIXEL_STATS)]
+        img = _decode("image", p, codecs, fake)
         if img is None:
-            img = _try_codecs(codecs, raw)
-        if img is None:
-            if not fake:
-                raise NotImplementedError(_STRICT_MSG.format(kind="image"))
-            d = hashlib.sha256(raw).digest()
-            v = int.from_bytes(d[:6], "big")
-            return (0, 0, v, v, v, v)
-        h, w = img.shape[:2]
-        px = img.astype(np.int64)
-        yy, xx = np.mgrid[0:h, 0:w]
-        wt = 1 + (xx + yy) % 7
-        lin = px[..., 0] + 2 * px[..., 1] + 3 * px[..., 2]
-        return (
-            h,
-            w,
-            int(px[..., 0].sum()),
-            int(px[..., 1].sum()),
-            int(px[..., 2].sum()),
-            int((lin * wt).sum()),
-        )
+            v = int.from_bytes(hashlib.sha256(p).digest()[:6], "big")
+            return [(mid, 0, 0, v, v, v, v)]
+        return [(mid, *_pixel_stats(img))]
 
-    def _stats_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            stats = [_one(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "height": [s and s[0] for s in stats],
-                    "width": [s and s[1] for s in stats],
-                    "r_sum": [s and s[2] for s in stats],
-                    "g_sum": [s and s[3] for s in stats],
-                    "b_sum": [s and s[4] for s in stats],
-                    "weighted": [s and s[5] for s in stats],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats_batch, out_schema
-    )
+    return _row_map(df, [id_col, payload_col], _schema(id_col, *_PIXEL_STATS), _row)
 
 
 def audio_sample_stats(
@@ -496,62 +524,24 @@ def audio_sample_stats(
 
     Strict by default: an undecodable payload raises rather than
     contributing fabricated stats."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("rate", T.LongType()),
-            T.StructField("sum_abs", T.LongType()),
-            T.StructField("weighted", T.LongType()),
-        ]
-    )
     codecs = _codec_snapshot("audio")
 
-    def _one(p):
+    def _row(mid, p):
         import numpy as np
 
         if p is None:
-            return None
-        raw = bytes(p)
-        wav = _parse_wav(raw)
+            return [(mid, None, None, None, None)]
+        wav = _decode("audio", p, codecs, fake)
         if wav is None:
-            wav = _try_codecs(codecs, raw)
-        if wav is None:
-            if not fake:
-                raise NotImplementedError(_STRICT_MSG.format(kind="audio"))
-            d = hashlib.sha256(raw).digest()
-            v = int.from_bytes(d[:6], "big")
-            return (0, 0, v, v)
+            v = int.from_bytes(hashlib.sha256(p).digest()[:6], "big")
+            return [(mid, 0, 0, v, v)]
         x, rate = wav
-        s = np.rint(np.asarray(x, dtype=np.float64) * 32768.0).astype(
-            np.int64
-        )
+        s = np.rint(np.asarray(x, dtype=np.float64) * 32768.0).astype(np.int64)
         wt = 1 + np.arange(len(s), dtype=np.int64) % 7
-        return (
-            len(s),
-            int(rate),
-            int(np.abs(s).sum()),
-            int((s * wt).sum()),
-        )
+        return [(mid, len(s), int(rate), int(np.abs(s).sum()), int((s * wt).sum()))]
 
-    def _stats_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            stats = [_one(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_samples": [s and s[0] for s in stats],
-                    "rate": [s and s[1] for s in stats],
-                    "sum_abs": [s and s[2] for s in stats],
-                    "weighted": [s and s[3] for s in stats],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats_batch, out_schema
-    )
+    out_schema = _schema(id_col, "n_samples", "rate", "sum_abs", "weighted")
+    return _row_map(df, [id_col, payload_col], out_schema, _row)
 
 
 def video_frame_stats(
@@ -571,64 +561,21 @@ def video_frame_stats(
 
     Decodes concatenated-PPM streams and registered video codecs (e.g.
     PNG/MJPEG-in-MP4, operators/mp4.py). Strict by default."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("r_sum", T.LongType()),
-            T.StructField("g_sum", T.LongType()),
-            T.StructField("b_sum", T.LongType()),
-            T.StructField("weighted", T.LongType()),
-        ]
-    )
     codecs = _codec_snapshot("video")
 
-    def _frames(raw: bytes):
+    def _rows(mid, p):
         import numpy as np
 
-        real = _split_ppm_stream(raw)
-        if real:
-            return [_parse_ppm(fr) for fr in real]
-        decoded = _try_codecs(codecs, raw)
-        if decoded is not None:
-            return list(decoded)
-        if not fake:
-            raise NotImplementedError(_STRICT_MSG.format(kind="video"))
-        d = hashlib.sha256(raw).digest()
-        return [
-            np.full((1, 1, 3), d[i] % 256, dtype=np.uint8) for i in range(2)
-        ]
+        if p is None:
+            return []
+        frames = _decode("video", p, codecs, fake)
+        if frames is None:
+            d = hashlib.sha256(p).digest()
+            frames = [np.full((1, 1, 3), d[i] % 256, dtype=np.uint8) for i in range(2)]
+        return [(mid, fi, *_pixel_stats(img)) for fi, img in enumerate(frames)]
 
-    def _stats_batch(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in out_schema.fieldNames()}
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    continue
-                for fi, img in enumerate(_frames(bytes(p))):
-                    h, w = img.shape[:2]
-                    px = img.astype(np.int64)
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    wt = 1 + (xx + yy) % 7
-                    lin = px[..., 0] + 2 * px[..., 1] + 3 * px[..., 2]
-                    rows[id_col].append(mid)
-                    rows["frame_idx"].append(fi)
-                    rows["height"].append(h)
-                    rows["width"].append(w)
-                    rows["r_sum"].append(int(px[..., 0].sum()))
-                    rows["g_sum"].append(int(px[..., 1].sum()))
-                    rows["b_sum"].append(int(px[..., 2].sum()))
-                    rows["weighted"].append(int((lin * wt).sum()))
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats_batch, out_schema
-    )
+    out_schema = _schema(id_col, "frame_idx", *_PIXEL_STATS)
+    return _row_map(df, [id_col, payload_col], out_schema, _rows)
 
 
 def resize_images(
@@ -643,51 +590,31 @@ def resize_images(
     width, height). PPM payloads get a REAL nearest-neighbor resize
     (numpy index gather) re-encoded as PPM; other formats fall back to a
     deterministic pseudo-blob (or raise in strict mode)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-
     codecs = _codec_snapshot("image")
 
-    def _one(p):
+    def _row(mid, p):
         import numpy as np
 
         if p is None:
-            return None
-        raw = bytes(p)
-        img = _parse_ppm(raw)
+            return [(mid, None, width, height)]
+        img = _decode("image", p, codecs, fake)
         if img is None:
-            img = _try_codecs(codecs, raw)
-        if img is not None:
-            # custom-decoded images are re-encoded as PPM (the engine's
-            # uncompressed interchange format)
-            h, w = img.shape[:2]
-            rows = (np.arange(height) * h) // height
-            cols = (np.arange(width) * w) // width
-            return encode_ppm(img[rows][:, cols])
-        if not fake:
-            raise NotImplementedError(_STRICT_MSG.format(kind="image"))
-        return hashlib.sha256(raw + f"{width}x{height}".encode()).digest()
+            blob = hashlib.sha256(p + f"{width}x{height}".encode()).digest()
+            return [(mid, blob, width, height)]
+        # custom-decoded images are re-encoded as PPM (the engine's
+        # uncompressed interchange format)
+        h, w = img.shape[:2]
+        rows = (np.arange(height) * h) // height
+        cols = (np.arange(width) * w) // width
+        return [(mid, encode_ppm(img[rows][:, cols]), width, height)]
 
-    def _resize_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [_one(p) for p in pdf[payload_col]],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_resize_batch, out_schema)
+    out_schema = _schema(
+        id_col,
+        ("payload", T.BinaryType()),
+        ("width", T.IntegerType()),
+        ("height", T.IntegerType()),
+    )
+    return _row_map(df, [id_col, payload_col], out_schema, _row)
 
 
 def sample_video_frames(
@@ -703,50 +630,31 @@ def sample_video_frames(
     Concatenated-PPM streams are split and sampled for real (each
     emitted frame is itself a decodable PPM); other containers fall back
     to per-index payload hashes (or raise in strict mode)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
     codecs = _codec_snapshot("video")
 
-    def _sample_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _rows(mid, p):
+        if p is None:
+            return []
+        # a PPM stream's frames are emitted as the stream's own bytes, so
+        # the split runs before _decode (which returns decoded arrays)
+        frames = _split_ppm_stream(p)
+        if not frames:
+            decoded = _decode("video", p, codecs, fake)
+            if decoded is None:
+                return [
+                    (mid, i, hashlib.sha256(p + i.to_bytes(4, "little")).digest())
+                    for i in range(n_frames)
+                ]
+            # custom frames re-encode as PPM for the output
+            frames = [encode_ppm(fr) for fr in decoded]
+        # evenly spaced positions over the frame list
+        k = min(n_frames, len(frames))
+        return [(mid, i, frames[(i * len(frames)) // k]) for i in range(k)]
 
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    continue
-                raw = bytes(p)
-                real = _split_ppm_stream(raw)
-                if not real:
-                    decoded = _try_codecs(codecs, raw)
-                    if decoded:
-                        # custom frames re-encode as PPM for the output
-                        real = [encode_ppm(fr) for fr in decoded]
-                if real:
-                    # evenly spaced positions over the decoded frame list
-                    k = min(n_frames, len(real))
-                    for i in range(k):
-                        ids.append(mid)
-                        idxs.append(i)
-                        frames.append(real[(i * len(real)) // k])
-                    continue
-                if not fake:
-                    raise NotImplementedError(_STRICT_MSG.format(kind="video"))
-                for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(
-                        hashlib.sha256(raw + i.to_bytes(4, "little")).digest()
-                    )
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, payload_col).mapInPandas(_sample_batch, out_schema)
+    out_schema = _schema(
+        id_col, ("frame_idx", T.IntegerType()), ("frame", T.BinaryType())
+    )
+    return _row_map(df, [id_col, payload_col], out_schema, _rows)
 
 
 def extract_audio_features(
@@ -754,8 +662,6 @@ def extract_audio_features(
     payload_col: str = "payload",
     id_col: str = "media_id",
     dim: int = 32,
-    frame_ms: int = 25,
-    frame_bytes: int = 1024,
     fake: bool = True,
 ) -> DataFrame:
     """Audio feature extraction: frame the signal, compute per-frame RMS
@@ -764,71 +670,46 @@ def extract_audio_features(
     Output: (id, n_frames, features array<float>).
 
     PCM16 WAV payloads are decoded for real (stdlib ``wave``): frames
-    are ``frame_ms`` windows of the mono signal. Other formats frame the
-    raw bytes into ``frame_bytes`` windows with hashed pseudo-energies
-    (or raise in strict mode)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def _fake_energy(chunk: bytes, i: int) -> float:
-        h = hashlib.sha256(chunk + i.to_bytes(4, "little")).digest()
-        return sum(h[:8]) / (8 * 255.0)
-
+    are 25 ms windows of the mono signal. Other formats frame the raw
+    bytes into 1024-byte windows with hashed pseudo-energies (or raise
+    in strict mode)."""
     codecs = _codec_snapshot("audio")
 
-    def _energies(raw: bytes) -> list[float]:
+    def _row(mid, p):
         import numpy as np
 
-        wav = _parse_wav(raw)
+        if p is None:
+            return [(mid, 0, None)]
+        wav = _decode("audio", p, codecs, fake)
         if wav is None:
-            wav = _try_codecs(codecs, raw)
-        if wav is not None:
+            step = _FAKE_FRAME_BYTES
+            chunks = [p[o : o + step] for o in range(0, max(len(p), 1), step)]
+            energies = [
+                sum(hashlib.sha256(c + i.to_bytes(4, "little")).digest()[:8])
+                / (8 * 255.0)
+                for i, c in enumerate(chunks)
+            ]
+        else:
             x, rate = wav
-            flen = max(1, (rate * frame_ms) // 1000)
-            return [
+            flen = max(1, (rate * _FRAME_MS) // 1000)
+            energies = [
                 float(np.sqrt(np.mean(x[o : o + flen] ** 2)))
                 for o in range(0, max(len(x), 1), flen)
             ]
-        if not fake:
-            raise NotImplementedError(_STRICT_MSG.format(kind="audio"))
-        chunks = [
-            raw[o : o + frame_bytes]
-            for o in range(0, max(len(raw), 1), frame_bytes)
-        ]
-        return [_fake_energy(c, i) for i, c in enumerate(chunks)]
+        # pool per-frame energies into dim bands: band mean + first
+        # difference (delta), cycled to fill dim
+        n, vec = len(energies), []
+        for k in range(dim):
+            e = energies[k % n]
+            vec.append(e if k % 2 == 0 else e - energies[(k - 1) % n])
+        return [(mid, n, vec)]
 
-    def _extract_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, counts, feats = [], [], []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    ids.append(mid)
-                    counts.append(0)
-                    feats.append(None)
-                    continue
-                energies = _energies(bytes(p))
-                # pool per-frame energies into dim bands: band mean +
-                # first difference (delta), cycled to fill dim
-                vec = []
-                for k in range(dim):
-                    e = energies[k % len(energies)]
-                    prev = energies[(k - 1) % len(energies)]
-                    vec.append(float(e if k % 2 == 0 else e - prev))
-                ids.append(mid)
-                counts.append(len(energies))
-                feats.append(vec)
-            yield pd.DataFrame(
-                {id_col: ids, "n_frames": counts, "features": feats}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_extract_batch, out_schema)
+    out_schema = _schema(
+        id_col,
+        ("n_frames", T.IntegerType()),
+        ("features", T.ArrayType(T.FloatType())),
+    )
+    return _row_map(df, [id_col, payload_col], out_schema, _row)
 
 
 def _ahash64(img) -> int:
@@ -867,44 +748,18 @@ def image_ahash(
     PPM / registered codecs; deterministic fake fallback (strict mode
     raises) — same codec policy as :func:`decode_image_features`.
     One Arrow-batched pass, zero shuffle."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("ahash", T.LongType()),
-        ]
-    )
     codecs = _codec_snapshot("image")
 
-    def _one(p):
+    def _row(mid, p):
         if p is None:
-            return None
-        raw = bytes(p)
-        img = _parse_ppm(raw)
-        if img is None:
-            img = _try_codecs(codecs, raw)
+            return [(mid, None)]
+        img = _decode("image", p, codecs, fake)
         if img is not None:
-            return _ahash64(img)
-        if not fake:
-            raise NotImplementedError(_STRICT_MSG.format(kind="image"))
-        import hashlib
+            return [(mid, _ahash64(img))]
+        h = int.from_bytes(hashlib.md5(p).digest()[:8], "big")
+        return [(mid, h - (1 << 64) if h >= (1 << 63) else h)]
 
-        h = int.from_bytes(hashlib.md5(raw).digest()[:8], "big")
-        return h - (1 << 64) if h >= (1 << 63) else h
-
-    def _hash_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "ahash": pd.array(
-                        [_one(p) for p in pdf[payload_col]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_hash_batch, out_schema)
+    return _row_map(df, [id_col, payload_col], _schema(id_col, "ahash"), _row)
 
 
 def image_near_dup_pairs(
@@ -996,62 +851,30 @@ def detect_scene_cuts(
     deterministic fake diffs otherwise (strict mode raises).
 
     The shot-segmentation primitive of video curation pipelines — cuts
-    bound the clips later stages sample/caption. Arrow-batched
-    mapInPandas, zero shuffle."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("diff", T.DoubleType()),
-            T.StructField("is_cut", T.BooleanType()),
-        ]
-    )
+    bound the clips later stages sample/caption. Arrow-batched, zero
+    shuffle."""
     codecs = _codec_snapshot("video")
 
-    def _cuts_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _rows(mid, p):
+        if p is None:
+            return []
+        frames = _decode("video", p, codecs, fake)
+        if frames is None:
+            h = int.from_bytes(hashlib.sha256(p).digest()[:4], "big")
+            return [(mid, 1, float(h % 256), (h % 256) > threshold)]
+        out = []
+        for i in range(1, len(frames)):
+            a = frames[i - 1].mean(axis=2)
+            b = frames[i].mean(axis=2)
+            # a resolution change is a hard cut
+            d = 255.0 if a.shape != b.shape else float(abs(a - b).mean())
+            out.append((mid, i, round(d, 4), d > threshold))
+        return out
 
-        for pdf in batches:
-            ids, idxs, diffs, cuts = [], [], [], []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    continue
-                raw = bytes(p)
-                frames = [
-                    _parse_ppm(fp) for fp in _split_ppm_stream(raw)
-                ]
-                frames = [f for f in frames if f is not None]
-                if not frames:
-                    decoded = _try_codecs(codecs, raw)
-                    if decoded:
-                        frames = list(decoded)
-                if frames:
-                    for i in range(1, len(frames)):
-                        a = frames[i - 1].mean(axis=2)
-                        b = frames[i].mean(axis=2)
-                        if a.shape != b.shape:
-                            d = 255.0  # resolution change = hard cut
-                        else:
-                            d = float(abs(a - b).mean())
-                        ids.append(mid)
-                        idxs.append(i)
-                        diffs.append(round(d, 4))
-                        cuts.append(d > threshold)
-                    continue
-                if not fake:
-                    raise NotImplementedError(_STRICT_MSG.format(kind="video"))
-                h = int.from_bytes(hashlib.sha256(raw).digest()[:4], "big")
-                ids.append(mid)
-                idxs.append(1)
-                diffs.append(float(h % 256))
-                cuts.append((h % 256) > threshold)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": idxs,
-                    "diff": diffs,
-                    "is_cut": cuts,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_cuts_batch, out_schema)
+    out_schema = _schema(
+        id_col,
+        ("frame_idx", T.IntegerType()),
+        ("diff", T.DoubleType()),
+        ("is_cut", T.BooleanType()),
+    )
+    return _row_map(df, [id_col, payload_col], out_schema, _rows)

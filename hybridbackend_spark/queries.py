@@ -10003,6 +10003,18 @@ def stream_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(flags, mode="append")
 
 
+def _media_payloads(df: DataFrame, id_col: str, make) -> DataFrame:
+    """(id_col long, payload binary): ``make(id) -> bytes`` for each row of
+    ``df``'s ``id_col`` — the media queries' in-engine payload writer, on
+    the media operators' row map (``multimodal._row_map``)."""
+    from pyspark.sql import types as T
+
+    from .operators.multimodal import _row_map, _schema
+
+    schema = _schema(id_col, ("payload", T.BinaryType()))
+    return _row_map(df, [id_col], schema, lambda i: [(i, make(i))])
+
+
 @register(
     "multimodal_png_stats",
     """
@@ -10040,10 +10052,8 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     row order flips a sum. This is the driver-verifiable form of the
     multimodal family: the binary payloads live only inside the query,
     so no binary test table is needed. Scale: both the encode and the
-    stats are per-row mapInPandas over Arrow batches — embarrassingly
-    parallel, no shuffle until the final (tiny) stats table."""
-    import pandas as _pd
-
+    stats are per-row Arrow-batched maps — embarrassingly parallel, no
+    shuffle until the final (tiny) stats table."""
     from .operators.multimodal import image_pixel_stats
 
     docs = (
@@ -10052,31 +10062,23 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def _synth(batches):
+    def make(did):
         import numpy as np
 
         from .operators.png import encode_png_rgb
 
-        h, w = 12, 16
-        yy, xx = np.mgrid[0:h, 0:w]
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                img = np.stack(
-                    [
-                        (xx * 7 + yy * 3 + did * 11) % 256,
-                        (xx * 5 + yy * 13 + did * 17) % 256,
-                        (xx * 2 + yy * 23 + did * 29) % 256,
-                    ],
-                    -1,
-                ).astype(np.uint8)
-                payloads.append(encode_png_rgb(img))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+        yy, xx = np.mgrid[0:12, 0:16]
+        img = np.stack(
+            [
+                (xx * 7 + yy * 3 + did * 11) % 256,
+                (xx * 5 + yy * 13 + did * 17) % 256,
+                (xx * 2 + yy * 23 + did * 29) % 256,
+            ],
+            -1,
+        ).astype(np.uint8)
+        return encode_png_rgb(img)
 
-    media = docs.mapInPandas(_synth, "doc_id long, payload binary")
+    media = _media_payloads(docs, "doc_id", make)
     return image_pixel_stats(
         media, payload_col="payload", id_col="doc_id", fake=False
     )
@@ -10112,10 +10114,9 @@ def multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path in STRICT mode, and reduced to exact integer sample stats that
     DuckDB replays by pure arithmetic. PCM16 round-trips exactly
     (x/32768.0 is dyadic), so any sample loss, reorder, or scaling
-    defect flips a sum. Per-row mapInPandas both ways — embarrassingly
-    parallel, no shuffle until the final tiny stats table."""
-    import pandas as _pd
-
+    defect flips a sum. Per-row Arrow-batched maps both ways —
+    embarrassingly parallel, no shuffle until the final tiny stats
+    table."""
     from .operators.multimodal import audio_sample_stats
 
     docs = (
@@ -10124,31 +10125,23 @@ def multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def _synth(batches):
+    def make(did):
         import io as _io
         import wave as _wave
 
         import numpy as np
 
-        n = 512
-        i = np.arange(n, dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                s = ((i * i * 7 + i * 13 + did * 101) % 65536) - 32768
-                buf = _io.BytesIO()
-                with _wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(8000)
-                    wf.writeframes(s.astype("<i2").tobytes())
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+        i = np.arange(512, dtype=np.int64)
+        s = ((i * i * 7 + i * 13 + did * 101) % 65536) - 32768
+        buf = _io.BytesIO()
+        with _wave.open(buf, "wb") as wf:
+            wf.setnchannels(1)
+            wf.setsampwidth(2)
+            wf.setframerate(8000)
+            wf.writeframes(s.astype("<i2").tobytes())
+        return buf.getvalue()
 
-    media = docs.mapInPandas(_synth, "doc_id long, payload binary")
+    media = _media_payloads(docs, "doc_id", make)
     return audio_sample_stats(
         media, payload_col="payload", id_col="doc_id", fake=False
     )
@@ -10190,10 +10183,8 @@ def multimodal_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle replays the mu-law expansion by pure bit
     arithmetic (complement / segment shift / 0x84 bias), so a wrong
     table entry, a dropped chunk, or a sample reorder flips the
-    position-weighted sum. Per-row mapInPandas both ways — no shuffle
-    until the tiny final stats table."""
-    import pandas as _pd
-
+    position-weighted sum. Per-row Arrow-batched maps both ways — no
+    shuffle until the tiny final stats table."""
     from .operators.multimodal import audio_sample_stats
 
     docs = (
@@ -10202,25 +10193,13 @@ def multimodal_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def _synth(batches):
+    def make(did):
         from .operators.mp4 import encode_mp4_audio
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 64 + did % 17
-                codes = bytes((did * 31 + i * 7) % 256 for i in range(n))
-                payloads.append(
-                    encode_mp4_audio(
-                        codes, "ulaw", 8000, channels=1, chunk_frames=25
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+        codes = bytes((did * 31 + i * 7) % 256 for i in range(64 + did % 17))
+        return encode_mp4_audio(codes, "ulaw", 8000, channels=1, chunk_frames=25)
 
-    media = docs.mapInPandas(_synth, "doc_id long, payload binary")
+    media = _media_payloads(docs, "doc_id", make)
     return audio_sample_stats(
         media, payload_col="payload", id_col="doc_id", fake=False
     )
@@ -10263,10 +10242,8 @@ def multimodal_mp4_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassembly, per-frame PNG decode — into exact per-FRAME integer
     pixel stats (video_frame_stats). The DuckDB oracle replays every
     pixel by pure grid arithmetic, so a dropped frame, frame reorder,
-    chunk-offset slip, or filter bug flips a row. Per-row mapInPandas
-    both ways — no shuffle until the tiny final stats table."""
-    import pandas as _pd
-
+    chunk-offset slip, or filter bug flips a row. Per-row Arrow-batched
+    maps both ways — no shuffle until the tiny final stats table."""
     from .operators.multimodal import video_frame_stats
 
     docs = (
@@ -10275,40 +10252,25 @@ def multimodal_mp4_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def _synth(batches):
+    def make(did):
         import numpy as _np
 
         from .operators.mp4 import encode_mp4_video
         from .operators.png import encode_png_rgb
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = []
-                for f in range(2 + did % 3):
-                    base = (
-                        did * 5
-                        + f * 47
-                        + _np.arange(8)[:, None, None] * 13
-                        + _np.arange(8)[None, :, None] * 7
-                        + _np.arange(3)[None, None, :] * 29
-                    )
-                    frames.append((base % 256).astype(_np.uint8))
-                payloads.append(
-                    encode_mp4_video(
-                        [encode_png_rgb(im) for im in frames],
-                        8,
-                        8,
-                        "png ",
-                        chunk_samples=2,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
+        frames = []
+        for f in range(2 + did % 3):
+            base = (
+                did * 5
+                + f * 47
+                + _np.arange(8)[:, None, None] * 13
+                + _np.arange(8)[None, :, None] * 7
+                + _np.arange(3)[None, None, :] * 29
             )
+            frames.append(encode_png_rgb((base % 256).astype(_np.uint8)))
+        return encode_mp4_video(frames, 8, 8, "png ", chunk_samples=2)
 
-    media = docs.mapInPandas(_synth, "doc_id long, payload binary")
+    media = _media_payloads(docs, "doc_id", make)
     return video_frame_stats(
         media, payload_col="payload", id_col="doc_id", fake=False
     )
@@ -10347,9 +10309,8 @@ def media_probe_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     that derives every declared field (dimensions, durations, track
     counts) by pure arithmetic — proving the parsers read the real
     container structure, including the formats whose sample data the
-    engine does not decode (MP3/MP4). Per-row mapInPandas, no shuffle."""
-    import pandas as _pd
-
+    engine does not decode (MP3/MP4). Per-row Arrow-batched maps, no
+    shuffle."""
     from .operators.mediameta import media_probe
 
     docs = (
@@ -10358,7 +10319,7 @@ def media_probe_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def _synth(batches):
+    def make(did):
         import io as _io
         import struct as _struct
         import wave as _wave
@@ -10370,55 +10331,42 @@ def media_probe_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         def atom(typ, body):
             return _struct.pack(">I", len(body) + 8) + typ + body
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                kind = did % 4
-                if kind == 0:
-                    w, h = 8 + did % 5, 6 + did % 3
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    img = np.stack(
-                        [(xx + did) % 256, (yy * 3) % 256,
-                         (xx + yy) % 256], -1
-                    ).astype(np.uint8)
-                    payloads.append(encode_png_rgb(img))
-                elif kind == 1:
-                    n = 100 + did % 50
-                    buf = _io.BytesIO()
-                    with _wave.open(buf, "wb") as wf:
-                        wf.setnchannels(1)
-                        wf.setsampwidth(2)
-                        wf.setframerate(8000)
-                        wf.writeframes(bytes(n * 2))
-                    payloads.append(buf.getvalue())
-                elif kind == 2:
-                    dur, traks = 1000 + did % 500, 1 + did % 2
-                    mvhd = bytes(4) + bytes(8) + _struct.pack(
-                        ">II", 1000, dur
-                    ) + bytes(80)
-                    tk = b""
-                    for i in range(traks):
-                        body = bytes(4) + bytes(72) + _struct.pack(
-                            ">II",
-                            (320 << 16) if i == 0 else 0,
-                            (240 << 16) if i == 0 else 0,
-                        )
-                        tk += atom(b"trak", atom(b"tkhd", body))
-                    payloads.append(
-                        atom(b"ftyp", b"isom\x00\x00\x02\x00")
-                        + atom(b"moov", atom(b"mvhd", mvhd) + tk)
-                        + atom(b"mdat", bytes(16))
-                    )
-                else:
-                    f = 5 + did % 5
-                    hdr = bytes([0xFF, 0xFB, (9 << 4) | 0, 0x00])
-                    payloads.append((hdr + bytes(417 - 4)) * f)
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
+        kind = did % 4
+        if kind == 0:
+            w, h = 8 + did % 5, 6 + did % 3
+            yy, xx = np.mgrid[0:h, 0:w]
+            img = np.stack(
+                [(xx + did) % 256, (yy * 3) % 256, (xx + yy) % 256], -1
+            ).astype(np.uint8)
+            return encode_png_rgb(img)
+        if kind == 1:
+            buf = _io.BytesIO()
+            with _wave.open(buf, "wb") as wf:
+                wf.setnchannels(1)
+                wf.setsampwidth(2)
+                wf.setframerate(8000)
+                wf.writeframes(bytes((100 + did % 50) * 2))
+            return buf.getvalue()
+        if kind == 2:
+            dur, traks = 1000 + did % 500, 1 + did % 2
+            mvhd = bytes(4) + bytes(8) + _struct.pack(">II", 1000, dur) + bytes(80)
+            tk = b""
+            for i in range(traks):
+                body = bytes(4) + bytes(72) + _struct.pack(
+                    ">II",
+                    (320 << 16) if i == 0 else 0,
+                    (240 << 16) if i == 0 else 0,
+                )
+                tk += atom(b"trak", atom(b"tkhd", body))
+            return (
+                atom(b"ftyp", b"isom\x00\x00\x02\x00")
+                + atom(b"moov", atom(b"mvhd", mvhd) + tk)
+                + atom(b"mdat", bytes(16))
             )
+        hdr = bytes([0xFF, 0xFB, (9 << 4) | 0, 0x00])
+        return (hdr + bytes(417 - 4)) * (5 + did % 5)
 
-    media = docs.mapInPandas(_synth, "doc_id long, payload binary")
+    media = _media_payloads(docs, "doc_id", make)
     return media_probe(media, payload_col="payload", id_col="doc_id").select(
         "doc_id", "format", "width", "height", "duration_ms", "n_tracks"
     )
@@ -10467,8 +10415,6 @@ def image_ahash_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison cannot flip). Brings the perceptual-hash/near-dup family
     under the driver's value-hash gate; the banded near-dup join over
     these hashes is covered by pytest pigeonhole proofs."""
-    import pandas as _pd
-
     from .operators.multimodal import image_ahash
 
     docs = (
@@ -10477,30 +10423,23 @@ def image_ahash_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def _synth(batches):
+    def make(did):
         import numpy as np
 
         from .operators.png import encode_png_rgb
 
         yy, xx = np.mgrid[0:8, 0:8]
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                img = np.stack(
-                    [
-                        (xx * 31 + yy * 7 + did * 11) % 256,
-                        (xx * 13 + yy * 17 + did * 5) % 256,
-                        (xx * 3 + yy * 29 + did * 23) % 256,
-                    ],
-                    -1,
-                ).astype(np.uint8)
-                payloads.append(encode_png_rgb(img))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+        img = np.stack(
+            [
+                (xx * 31 + yy * 7 + did * 11) % 256,
+                (xx * 13 + yy * 17 + did * 5) % 256,
+                (xx * 3 + yy * 29 + did * 23) % 256,
+            ],
+            -1,
+        ).astype(np.uint8)
+        return encode_png_rgb(img)
 
-    media = docs.mapInPandas(_synth, "doc_id long, payload binary")
+    media = _media_payloads(docs, "doc_id", make)
     return image_ahash(
         media, payload_col="payload", id_col="doc_id", fake=False
     )
@@ -14714,8 +14653,6 @@ def image_neardup_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact Hamming distance by pure arithmetic. Candidate volume is
     band-bucket bounded, never all pairs. See
     operators/multimodal.py::image_near_dup_pairs."""
-    import pandas as _pd
-
     from .operators.multimodal import image_near_dup_pairs
 
     media_ids = (
@@ -14728,35 +14665,27 @@ def image_neardup_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _synth(batches):
+    def make(m):
         import numpy as np
 
         from .operators.png import encode_png_rgb
 
         yy, xx = np.mgrid[0:8, 0:8]
-        for pdf in batches:
-            payloads = []
-            for m in pdf["media_id"]:
-                m = int(m)
-                d, pert = m // 2, m % 2
-                r = (xx * 31 + yy * 7 + d * 11) % 256
-                if pert:
-                    r = r.copy()
-                    r[0, 0] = (r[0, 0] + 8) % 256
-                img = np.stack(
-                    [
-                        r,
-                        (xx * 13 + yy * 17 + d * 5) % 256,
-                        (xx * 3 + yy * 29 + d * 23) % 256,
-                    ],
-                    -1,
-                ).astype(np.uint8)
-                payloads.append(encode_png_rgb(img))
-            yield _pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+        d, pert = m // 2, m % 2
+        r = (xx * 31 + yy * 7 + d * 11) % 256
+        if pert:
+            r[0, 0] = (r[0, 0] + 8) % 256
+        img = np.stack(
+            [
+                r,
+                (xx * 13 + yy * 17 + d * 5) % 256,
+                (xx * 3 + yy * 29 + d * 23) % 256,
+            ],
+            -1,
+        ).astype(np.uint8)
+        return encode_png_rgb(img)
 
-    media = media_ids.mapInPandas(_synth, "media_id long, payload binary")
+    media = _media_payloads(media_ids, "media_id", make)
     return image_near_dup_pairs(
         media, "payload", "media_id", max_hamming=6, bands=8, fake=False
     ).select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))

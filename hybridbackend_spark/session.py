@@ -43,6 +43,21 @@ DEFAULT_CONF = {
 }
 
 
+def _local_defaults() -> tuple[str, str]:
+    """``(cores, driver memory)`` for local mode, sized from the host:
+    ``$SPARK_GRAFT_CPUS`` or the size of this process's CPU affinity
+    set, and half of physical memory in whole GiB (1g to 48g). A 32-core
+    local master and a 48g heap on a 4-core, 15 GB host lose the JVM
+    mid-run."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+        if hasattr(os, "sched_getaffinity")
+        else os.cpu_count() or 1
+    )
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return cpus, f"{min(48, max(1, phys // 2 // (1 << 30)))}g"
+
+
 def get_session(
     app_name: str = "hybridbackend-spark",
     master: str | None = None,
@@ -51,12 +66,15 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; pass an
-    explicit master for cluster deployment. ``shuffle_partitions`` defaults
-    to the local parallelism (cores) — on a cluster, set it to 2-3x total
-    executor cores or rely on AQE coalescing from a higher initial value.
+    ``master`` defaults to ``local[n]`` with n = ``$SPARK_GRAFT_CPUS`` or
+    the cores this process may run on, and local mode's driver heap to
+    half of physical memory, at most 48g (:func:`_local_defaults`);
+    ``extra_conf`` overrides either. Pass an explicit master for cluster
+    deployment. ``shuffle_partitions`` defaults to the local parallelism
+    (cores) — on a cluster, set it to 2-3x total executor cores or rely
+    on AQE coalescing from a higher initial value.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_memory = _local_defaults()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -66,7 +84,7 @@ def get_session(
     conf = dict(DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
-        conf.setdefault("spark.driver.memory", "48g")
+        conf["spark.driver.memory"] = driver_memory
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

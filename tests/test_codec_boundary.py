@@ -186,13 +186,27 @@ def test_excluded_variants_fall_through():
     assert decode_gif(b"GIF89a") is None
 
 
-def test_strict_raises_and_fake_substitutes(spark):
+DECODING_OPERATORS = [
+    "decode_image_features",
+    "image_pixel_stats",
+    "audio_sample_stats",
+    "video_frame_stats",
+    "resize_images",
+    "sample_video_frames",
+    "extract_audio_features",
+    "image_ahash",
+    "detect_scene_cuts",
+]
+
+
+@pytest.mark.parametrize("op", DECODING_OPERATORS)
+def test_strict_raises_and_fake_substitutes(spark, op):
     """fake=False -> NotImplementedError for an unclaimed format;
     fake=True -> deterministic hash stub (runs end-to-end)."""
     rows = [(1, bytearray(_mp3_frame()))]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
+    run = getattr(mm, op)
     with pytest.raises(Exception, match="NotImplementedError|no codec"):
-        mm.decode_image_features(df, fake=False).collect()
-    out = mm.decode_image_features(df, fake=True).collect()
-    out2 = mm.decode_image_features(df, fake=True).collect()
-    assert out[0].features == out2[0].features  # deterministic
+        run(df, fake=False).collect()
+    out = sorted(run(df, fake=True).collect())
+    assert out and out == sorted(run(df, fake=True).collect())  # deterministic

@@ -78,6 +78,15 @@ def test_probe_mp4_atoms():
     assert m["n_tracks"] == 2
     assert m["duration_ms"] == 7000
     assert "isom" in m["extra"]
+    # a top-level box of size 0 runs to the end of the file (ISO/IEC
+    # 14496-12 §4.2): the trailing mdat written that way probes the same
+    blob = _mp4_bytes(w=320, h=240, dur_ms=1500, n_trak=1)
+    mdat = len(_atom(b"mdat", bytes(64)))
+    zero = blob[:-mdat] + struct.pack(">I", 0) + blob[-mdat + 4 :]
+    assert probe_media(zero) == probe_media(blob)
+    assert (probe_media(zero)["duration_ms"], probe_media(zero)["width"],
+            probe_media(zero)["height"], probe_media(zero)["n_tracks"]) == (
+        1500, 320, 240, 1)
 
 
 def test_probe_images_and_wav():

@@ -132,6 +132,34 @@ def test_ppm_video_stream_real_frames(spark):
         assert (got == want).all()
 
 
+def test_video_operators_agree_on_a_stream_with_a_bad_frame(spark):
+    """A P6 stream whose second header declares maxval 65535 (which
+    _parse_ppm rejects) ends at that frame for all three video
+    operators: they see the same one-frame list in strict and fake
+    mode, and the good frame after the bad one is not picked up."""
+    import numpy as np
+
+    from hybridbackend_spark.operators.multimodal import (
+        detect_scene_cuts,
+        encode_ppm,
+        sample_video_frames,
+        video_frame_stats,
+    )
+
+    first = encode_ppm(np.arange(12, dtype=np.uint8).reshape(2, 2, 3))
+    after = encode_ppm(np.full((2, 2, 3), 200, dtype=np.uint8))
+    stream = first + b"P6\n2 2\n65535\n" + bytes(12) + after
+    df = spark.createDataFrame([(7, bytearray(stream))], "media_id long, payload binary")
+    for fake in (False, True):
+        stats = video_frame_stats(df, fake=fake).collect()
+        assert [(r.frame_idx, r.height, r.width, r.r_sum) for r in stats] == [
+            (0, 2, 2, 0 + 3 + 6 + 9)
+        ]
+        frames = sample_video_frames(df, fake=fake).collect()
+        assert [(r.frame_idx, bytes(r.frame)) for r in frames] == [(0, first)]
+        assert detect_scene_cuts(df, fake=fake).collect() == []
+
+
 def test_wav_decode_real_rms(spark):
     import io
     import math
@@ -153,7 +181,7 @@ def test_wav_decode_real_rms(spark):
     df = spark.createDataFrame(
         [(1, bytearray(buf.getvalue()))], ["media_id", "payload"]
     )
-    out = extract_audio_features(df, dim=8, frame_ms=25, fake=False).collect()[0]
+    out = extract_audio_features(df, dim=8, fake=False).collect()[0]
     # 1s / 25ms = 40 frames; sine RMS = amplitude / sqrt(2) ~= 0.3536
     assert out["n_frames"] == 40
     assert abs(out["features"][0] - 0.5 / math.sqrt(2)) < 0.01
