@@ -30,7 +30,9 @@ Every iterative operator is the same skeleton:
   did; each caller decides what exhaustion means (BFS returns, shortest
   paths checks its ``max_dist`` certificate, the rest raise). Labels and
   distances only ever decrease, so an exact ``(count, sum)`` pair is a
-  strictly monotone measure (:func:`_count_sum`). Fixed-round operators
+  strictly monotone measure (:func:`_count_sum`). Star contraction
+  instead tests its exact fixed point (a depth-1 star forest) before
+  each round, so a converged input costs no round. Fixed-round operators
   (PageRank, label propagation, k-core, HyperBall) run a plain ``for``.
 - **Where lineage is cut, and why.** Each cut is a job boundary, and
   the round-12 A/B notes beside them show that moving one moves wall
@@ -303,29 +305,40 @@ def connected_components_star(
     large-star: every node's higher-id neighbors re-attach to the
     minimum of its neighborhood (including itself). small-star: every
     node and its lower-id neighbors re-attach to that minimum. Each is
-    one groupBy(min) + one join on the node id; both strictly shrink
-    star depth, and at the fixed point the edge set is a star forest
-    rooted at each component's minimum id. Lineage is cut per round with
-    an eager localCheckpoint, as in the propagation variant.
+    one groupBy(min) + one join on the node id; both preserve
+    connectivity and the node set and strictly shrink star depth. Before
+    each round one aggregate tests the exact fixed point — the canonical
+    ``(hi, lo)`` edge set is a depth-1 star forest, so ``hi -> lo`` is
+    the labeling — and ``max_iter`` bounds the contraction rounds run
+    while it fails (an input already in star form needs none). Lineage
+    is cut per round with an eager localCheckpoint, as in the
+    propagation variant.
     """
     # round-12: partition-local union-find contraction FIRST (see
     # _local_contract) — connectivity-preserving, zero-shuffle, and it
     # flattens any depth that is co-located within a partition, which is
     # most of it when edges come off a window/groupBy. The star loop
-    # then only has to close the cross-partition remainder (measured on
-    # the per-user event-chain graph: the contracted edge set is already
-    # a star forest, so the loop runs ONE verification round instead of
-    # ~6 contraction rounds; cc_star_event_chains 9.8 -> 3.0 s).
-    # Then canonical (hi, lo) representation, self-loops dropped.
+    # then only has to close the cross-partition remainder: on the
+    # per-user event-chain graph the contracted edge set is already a
+    # star forest, so the predicate holds before the first round and
+    # none runs. Then canonical (hi, lo) representation, self-loops
+    # dropped.
     e = _canonical_edges(_local_contract(edges, src, dst), "_ln", "_lm").select(
         F.col("b").alias("_hi"), F.col("a").alias("_lo")
     )
-    nodes = (
-        e.select(F.col("_hi").alias("id"))
-        .union(e.select(F.col("_lo").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+
+    def _is_star_forest(ed: DataFrame) -> bool:
+        # every _hi on exactly one edge and no _lo also a _hi: per node,
+        # (#edges as _hi) + (1 if ever a _lo) must stay <= 1
+        deg = (
+            ed.select(
+                F.col("_hi").alias("_v"), F.lit(1).alias("_h"), F.lit(0).alias("_l")
+            )
+            .union(ed.select("_lo", F.lit(0), F.lit(1)))
+            .groupBy("_v")
+            .agg((F.sum("_h") + F.max("_l")).alias("_k"))
+        )
+        return deg.filter(F.col("_k") > 1).isEmpty()
 
     def _large_star(ed: DataFrame) -> DataFrame:
         sym = ed.select(
@@ -366,36 +379,21 @@ def connected_components_star(
             .distinct()
         )
 
-    def _sig(ed: DataFrame):
-        # cheap fixed-point check: count + order-insensitive hash-sum
-        row = ed.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.col("_hi"), F.col("_lo")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    e, done = _fixed_point(
-        e,
-        lambda ed: _small_star(_large_star(ed)).localCheckpoint(eager=True),
-        _sig,
-        max_iter,
-    )
-    if not done:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "large-star/small-star rounds"
-        )
-    # fixed point is a star forest: every non-root points at its
-    # component min; roots (and only roots) never appear as _hi (the
-    # min-agg is defensive — at the fixed point each _hi is unique)
-    stars = e.groupBy(F.col("_hi").alias("id")).agg(
-        F.min("_lo").alias("_c")
-    )
-    return nodes.join(stars, "id", "left").select(
-        "id", F.coalesce(F.col("_c"), F.col("id")).alias("component")
-    )
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds >= max_iter:
+            raise RuntimeError(
+                f"connected_components_star did not converge in {max_iter} "
+                "large-star/small-star rounds"
+            )
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        rounds += 1
+    # star forest: each non-root points at its component min, which
+    # labels itself
+    roots = e.select(F.col("_lo").alias("id"), F.col("_lo").alias("component"))
+    return e.select(
+        F.col("_hi").alias("id"), F.col("_lo").alias("component")
+    ).union(roots.distinct())
 
 
 def pagerank(

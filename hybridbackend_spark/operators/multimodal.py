@@ -258,7 +258,7 @@ def _mp4_video_decode(payload: bytes):
 # Same empty-prefix registration as mp4-audio (magic at offset 4).
 register_codec("video", "mp4-video", b"", _mp4_video_decode)
 
-_PPM_HEADER = re.compile(rb"^P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s")
+_PPM_HEADER = re.compile(rb"P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s")
 
 
 def _parse_ppm(payload: bytes):
@@ -293,13 +293,13 @@ def _split_ppm_stream(payload: bytes) -> list[bytes]:
     other than 255): the byte offsets after it can't be trusted. [] if
     the payload doesn't start with a decodable P6 frame."""
     frames, off = [], 0
-    while m := _PPM_HEADER.match(payload[off:]):
+    while m := _PPM_HEADER.match(payload, off):
         w, h, _ = (int(g) for g in m.groups())
-        end = off + m.end() + w * h * 3
-        if _parse_ppm(payload[off:end]) is None:
+        frame = payload[off : m.end() + w * h * 3]
+        if _parse_ppm(frame) is None:
             break
-        frames.append(payload[off:end])
-        off = end
+        frames.append(frame)
+        off += len(frame)
     return frames
 
 
@@ -694,8 +694,10 @@ def extract_audio_features(
             flen = max(1, (rate * _FRAME_MS) // 1000)
             energies = [
                 float(np.sqrt(np.mean(x[o : o + flen] ** 2)))
-                for o in range(0, max(len(x), 1), flen)
+                for o in range(0, len(x), flen)
             ]
+            if not energies:  # a signal with no samples: no frames
+                return [(mid, 0, None)]
         # pool per-frame energies into dim bands: band mean + first
         # difference (delta), cycled to fill dim
         n, vec = len(energies), []

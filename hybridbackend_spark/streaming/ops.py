@@ -15,6 +15,7 @@ is also the replay/backfill story at scale.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 from typing import Sequence
@@ -221,15 +222,20 @@ def run_available_now(
     rely on drop semantics."""
     qname = name or f"hb_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix=f"hbq_{qname}_ckpt_")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(mode or _output_mode(stream_df))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(mode or _output_mode(stream_df))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # the checkpoint only serves this one run; the memory-sink table
+        # the result reads stays
+        shutil.rmtree(ckpt, ignore_errors=True)
     _record_progress(qname, q)
     return stream_df.sparkSession.table(qname)
 

@@ -273,6 +273,53 @@ def test_star_contraction_partition_layout_invariant(spark):
         )
 
 
+def test_star_contraction_flat_input_runs_no_round(spark, checkpointed_plans):
+    """A chain co-located in one partition is already a star forest after
+    the local contraction: the fixed-point predicate holds before any
+    round, so the only cut is the canonical edge set and even
+    ``max_iter=0`` returns."""
+    from hybridbackend_spark.operators.graph import connected_components_star
+
+    chain = [(i, i + 1) for i in range(200)]
+    df = spark.createDataFrame(chain, "id_a: long, id_b: long").coalesce(1)
+    out = {
+        r["id"]: r["component"]
+        for r in connected_components_star(df, max_iter=0).collect()
+    }
+    assert out == {i: 0 for i in range(201)}
+    assert len(checkpointed_plans) == 1
+
+
+def test_star_contraction_max_iter_counts_contraction_rounds(spark):
+    import pytest
+
+    from hybridbackend_spark.operators.graph import connected_components_star
+
+    chain = [(i, i + 1) for i in range(200)]
+    df = spark.createDataFrame(chain, "id_a: long, id_b: long").repartition(16)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(df, max_iter=0)
+    out = connected_components_star(df).collect()
+    assert len(out) == 201 and {r["component"] for r in out} == {0}
+
+
+def test_cc_star_event_chains_job_count(spark, sf001_dir, jobs_of):
+    """Build plus one write of the query at the benchmark scale: the
+    per-user event chains contract locally to a star forest, so the
+    operator runs no contraction round, no verification round and no
+    separate node-set checkpoint."""
+    from hybridbackend_spark.queries import _t, cc_star_event_chains
+
+    _t(spark, sf001_dir, "events")  # the schema memo's one inference job
+
+    def run():
+        df = cc_star_event_chains(spark, sf001_dir)
+        df.write.format("noop").mode("overwrite").save()
+
+    _, jobs = jobs_of("cc_star_event_chains", run)
+    assert len(jobs) <= 7, jobs
+
+
 def test_mad_outliers_robust_to_extremes(spark):
     from hybridbackend_spark.operators.profile import mad_outliers
 

@@ -132,6 +132,44 @@ def test_ppm_video_stream_real_frames(spark):
         assert (got == want).all()
 
 
+def test_split_ppm_stream_frames():
+    """Frames of different sizes, one header carrying a comment, then a
+    truncated tail: the split returns each whole frame's bytes, in order,
+    and stops at the tail; a header not at offset 0 is not a frame."""
+    from hybridbackend_spark.operators.multimodal import (
+        _parse_ppm,
+        _split_ppm_stream,
+    )
+
+    frames = [_ppm(4 + s, 3 + 2 * s, s)[1] for s in range(5)]
+    frames[2] = b"P6\n# frame two\n" + frames[2][3:]
+    stream = b"".join(frames)
+    assert _split_ppm_stream(stream) == frames
+    assert _split_ppm_stream(stream + frames[0][:-1]) == frames
+    assert _split_ppm_stream(b" " + stream) == []
+    assert _parse_ppm(b" " + frames[0]) is None
+
+
+def test_extract_audio_features_empty_wav(spark):
+    import io
+    import wave
+
+    from hybridbackend_spark.operators.multimodal import extract_audio_features
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(8000)
+        wf.writeframes(b"")
+    df = spark.createDataFrame(
+        [(1, bytearray(buf.getvalue())), (2, None)], "media_id long, payload binary"
+    )
+    out = extract_audio_features(df, dim=8, fake=False).collect()
+    # no samples: the row a NULL payload gets, not a NaN vector
+    assert sorted(tuple(r) for r in out) == [(1, 0, None), (2, 0, None)]
+
+
 def test_video_operators_agree_on_a_stream_with_a_bad_frame(spark):
     """A P6 stream whose second header declares maxval 65535 (which
     _parse_ppm rejects) ends at that frame for all three video

@@ -1,7 +1,6 @@
 """Plan-shape regression gates: the scale properties the engine promises
 (pushdown, pruning, broadcast, bounded shuffles) asserted on real plans."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from hybridbackend_spark.plans.inspect import (
@@ -75,26 +74,6 @@ def test_filter_pushdown_reaches_parquet(spark, sf_dir):
     assert "o_totalprice" in pushed_filters(df)
     # pruning: only the two referenced columns read
     assert set(scan_read_schema(df)) == {"o_orderkey", "o_totalprice"}
-
-
-@pytest.fixture
-def checkpointed_plans(monkeypatch):
-    """Physical plans of every frame passed to ``localCheckpoint``,
-    recorded before the original checkpoint runs: the eagerly cut
-    lineage of a production call stays inspectable."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from hybridbackend_spark.plans.inspect import physical_plan
-
-    plans = []
-    original = DataFrame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        plans.append(physical_plan(self))
-        return original(self, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-    return plans
 
 
 def _assert_range_prefix_plan(plan):

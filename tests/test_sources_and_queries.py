@@ -288,19 +288,6 @@ def test_raw_sql_interface_matches_dataframe(spark, sf_dir):
 # --- the loader's per-session schema memo (sources.tabular._load) ---------
 
 
-def _jobs_of(spark, group, fn):
-    """Run ``fn`` in its own job group; return (result, job ids), read
-    after the listener bus has drained so a job cannot be missed."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write_table(path, **cols):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -308,12 +295,12 @@ def _write_table(path, **cols):
     pq.write_table(pa.table(cols), path)
 
 
-def test_load_memo_second_load_submits_no_job(spark, sf_dir):
+def test_load_memo_second_load_submits_no_job(spark, sf_dir, jobs_of):
     from hybridbackend_spark.queries import _event_ts, _t
 
     for name in ("lineitem", "events"):
         _t(spark, sf_dir, name)
-        df, jobs = _jobs_of(spark, f"memo_hit_{name}", lambda: _t(spark, sf_dir, name))
+        df, jobs = jobs_of(f"memo_hit_{name}", lambda: _t(spark, sf_dir, name))
         assert jobs == []
         fresh = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events":
@@ -338,13 +325,13 @@ def test_load_memo_self_join_keeps_distinct_relations(spark, sf_dir):
     assert pairs(_t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "lineitem")) == want
 
 
-def test_load_memo_sees_rewritten_file(spark, tmp_path):
+def test_load_memo_sees_rewritten_file(spark, tmp_path, jobs_of):
     from hybridbackend_spark.sources.tabular import _load
 
     p = str(tmp_path / "t.parquet")
     _write_table(p, a=[1, 2, 3])
     assert _load(spark, p).columns == ["a"]
-    df, jobs = _jobs_of(spark, "memo_tmp_hit", lambda: _load(spark, p))
+    df, jobs = jobs_of("memo_tmp_hit", lambda: _load(spark, p))
     assert jobs == [] and df.columns == ["a"]
 
     _write_table(p, a=[1, 2, 3], b=["x", "y", "z"])
@@ -353,13 +340,13 @@ def test_load_memo_sees_rewritten_file(spark, tmp_path):
     assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
 
 
-def test_load_memo_bypasses_directories(spark, tmp_path):
+def test_load_memo_bypasses_directories(spark, tmp_path, jobs_of):
     from hybridbackend_spark.sources.tabular import _FOOTERS, _load
 
     d = str(tmp_path / "dir")
     spark.range(3).write.parquet(d)
     _load(spark, d)
-    df, jobs = _jobs_of(spark, "memo_dir", lambda: _load(spark, d))
+    df, jobs = jobs_of("memo_dir", lambda: _load(spark, d))
     assert jobs != [] and df.count() == 3
     assert not any(k.startswith(d) for k in _FOOTERS.get(spark, {}))
 

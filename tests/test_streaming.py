@@ -47,6 +47,18 @@ def test_tumbling_agg_matches_batch(spark, event_stream, events_batch):
     assert got == want and len(got) > 0
 
 
+def test_run_available_now_removes_its_checkpoint(
+    spark, event_stream, events_batch, tmp_path, monkeypatch
+):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = run_available_now(tumbling_agg(event_stream, "ts", "1 hour"))
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith("hbq_")] == []
+    # the memory-sink table the result reads outlives the checkpoint
+    assert sum(r["n_events"] for r in out.collect()) == events_batch.count()
+
+
 def test_sliding_agg_runs(spark, event_stream):
     out = run_available_now(
         sliding_agg(event_stream, "ts", "1 hour", "30 minutes")
