@@ -24,6 +24,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .._materialize import materialize
 from .feature import impute, log1p_feature, mod_bucket, normalize
 
 __all__ = ["EmbeddingSpec", "FeatureSpec", "DataSpec", "CorpusSpec"]
@@ -243,11 +244,9 @@ class CorpusSpec:
         # semi-joins — the scoring work of each stage runs exactly once.
         out = spread_small_scan(df)
 
-        def _cut(ids: DataFrame) -> DataFrame:
-            return ids.localCheckpoint(eager=False)
-
         for st in self.stages:
             op = st["op"]
+            keep = None  # the ids a filtering stage keeps
             if op == "quality_filter":
                 out = out.filter(
                     quality_score(F.col(text_col)) >= st["min_score"]
@@ -259,19 +258,18 @@ class CorpusSpec:
                 if "max_tokens" in st:
                     out = out.filter(n <= st["max_tokens"])
             elif op == "exact_dedup":
-                keep = _cut(exact_dedup(out, text_col, id_col).select(id_col))
-                out = out.join(keep, id_col, "left_semi")
+                keep = exact_dedup(out, text_col, id_col).select(id_col)
             elif op == "minhash_dedup":
-                keep = _cut(minhash_lsh_dedup(
+                keep = minhash_lsh_dedup(
                     out, text_col, id_col,
                     threshold=st.get("threshold", 0.8),
                     keep=st.get("keep", "min_id"),
-                ))
-                out = out.join(keep, id_col, "left_semi")
+                )
             elif op == "boilerplate_prune":
-                pruned = _cut(boilerplate_prune(
+                pruned = boilerplate_prune(
                     out, id_col, text_col, max_df=st.get("max_df", 2)
-                ).select(id_col, F.col("pruned_text").alias(text_col)))
+                ).select(id_col, F.col("pruned_text").alias(text_col))
+                pruned = materialize(pruned, eager=False)
                 out = out.drop(text_col).join(pruned, id_col)
             elif op == "hash_split":
                 out = hash_split(
@@ -303,7 +301,7 @@ class CorpusSpec:
                     )
                 else:
                     kept = scored.filter("selected")
-                out = out.join(_cut(kept.select(id_col)), id_col, "left_semi")
+                keep = kept.select(id_col)
             elif op == "decontaminate":
                 from ..operators.corpus import decontaminate_spans
 
@@ -315,10 +313,9 @@ class CorpusSpec:
                 rep = decontaminate_spans(
                     out, tables[name], text_col, id_col, n=st.get("n", 3)
                 )
-                keep = _cut(rep.filter(
+                keep = rep.filter(
                     F.col("frac_covered") <= float(st.get("max_frac", 0.0))
-                ).select(id_col))
-                out = out.join(keep, id_col, "left_semi")
+                ).select(id_col)
             elif op == "token_budget":
                 from pyspark.sql import Window
 
@@ -354,4 +351,7 @@ class CorpusSpec:
                 )
             else:
                 raise ValueError(f"unknown corpus stage op: {op!r}")
+            if keep is not None:
+                keep = materialize(keep, eager=False)
+                out = out.join(keep, id_col, "left_semi")
         return out

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._fixed import CENTS, MICRO, grid, grid_nonneg, grid_sum, ungrid
+from .._materialize import materialize
 from .structural import _group_prefix, merge_partial_aggregates
 
 __all__ = [
@@ -230,10 +231,10 @@ def percentile_bounds_dist(
     # pass re-executes the child plan once, so without the cut the
     # scan + partial agg run twice (sample + real exchange). Bounded:
     # one row per DISTINCT value.
-    cnt = (
+    cnt = materialize(
         vals.groupBy("_v")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("_c")),
+        eager=False,
     )
     rng = cnt.repartitionByRange(F.col("_v"))
     w_run = (
@@ -241,13 +242,13 @@ def percentile_bounds_dist(
         .orderBy("_v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    loc = (
+    # read twice below (range totals + the rank join); cut so the scan
+    # -> agg -> range subtree runs once (bounded: one row per DISTINCT
+    # value)
+    loc = materialize(
         rng.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_lcum", F.sum("_c").over(w_run))
-        # read twice below (range totals + the rank join); cut so the
-        # scan -> agg -> range subtree runs once (bounded: one row per
-        # DISTINCT value)
-        .localCheckpoint(eager=False)
+        .withColumn("_lcum", F.sum("_c").over(w_run)),
+        eager=False,
     )
     ptot = loc.groupBy("_pid").agg(F.sum("_c").alias("_pc"))
     # offsets: sum of all STRICTLY-LOWER range totals — a triangular
@@ -469,7 +470,7 @@ def chi_square(
     if max_cells is not None:
         # materialize the (tiny) contingency table once: the guard and
         # the statistic both read it without re-scanning the input
-        cells = cells.localCheckpoint(eager=True)
+        cells = materialize(cells)
         nr, nc = cells.agg(
             F.count_distinct("r"), F.count_distinct("c")
         ).first()
@@ -674,7 +675,7 @@ def _risk_table(
     )
     if max_durations is not None:
         # materialize the per-duration table once: guard + curve share it
-        counts = counts.localCheckpoint(eager=True)
+        counts = materialize(counts)
         n_dur = counts.count()
         if n_dur > max_durations:
             raise ValueError(
@@ -1776,9 +1777,9 @@ def assoc_rules(
     # self-join — which otherwise each re-evaluate the caller's join +
     # distinct. Two narrow columns, same discipline as the setsim index
     # cut (change 14). Building this DataFrame therefore RUNS a job.
-    bi = df.select(
+    bi = materialize(df.select(
         F.col(basket_col).alias("_b"), F.col(item_col).alias("_i")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     if max_basket_items is not None:
         big = (
             bi.groupBy("_b")
@@ -1971,7 +1972,7 @@ def logrank_test(
         F.count(F.lit(1)).alias("r"),
     )
     if max_durations is not None:
-        counts = counts.localCheckpoint(eager=True)
+        counts = materialize(counts)
         n_dur = counts.groupBy("_g").count().agg(F.max("count")).collect()[0][0]
         if n_dur is not None and n_dur > max_durations:
             raise ValueError(

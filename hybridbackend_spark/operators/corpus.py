@@ -29,6 +29,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._fixed import CENTS, MICRO, grid, grid_moments, ungrid
+from .._materialize import materialize
 from .structural import _range_prefix
 from .text import _c, spread_small_scan, tokens, word_shingles
 
@@ -634,19 +635,17 @@ def distribution_drift(
     with |groups x vocab|, independent of document bytes.
 
     Eager materialization: building this DataFrame RUNS a Spark job —
-    the (group, token) counts feed four consumers and are
-    localCheckpoint(eager=True)-ed at build time; the checkpointed
-    blocks hold executor storage until the returned DataFrame is
-    garbage-collected.
+    the (group, token) counts feed four consumers and are cut with
+    ``_materialize.materialize`` at build time; the cut's blocks or
+    files are held until the returned DataFrame is garbage-collected.
     """
     w = df.select(F.col(group_col), F.explode(tokens(text_col)).alias("_tok"))
     # (group, token) counts feed FOUR consumers (corpus counts, group
     # totals, grand total, and the scoring join) — materialize once so
     # the corpus explode doesn't re-run per branch.
-    gt = (
+    gt = materialize(
         w.groupBy(group_col, "_tok")
         .agg(F.count(F.lit(1)).alias("_cg"))
-        .localCheckpoint(eager=True)
     )
     corpus = gt.groupBy("_tok").agg(F.sum("_cg").alias("_cc"))
     totals = gt.groupBy(group_col).agg(F.sum("_cg").alias("_tg"))
@@ -836,11 +835,11 @@ def substring_dedup(
     # guide §2.5 input skew), project to (id, tokens) only, and
     # lazily materialize (guide §1.2 remove passes: one tokenize pass
     # + one ~corpus-sized materialization beats three corpus passes).
-    base = (
+    base = materialize(
         spread_small_scan(df)
         .select(F.col(id_col), toks.alias("_toks"))
-        .filter(F.size("_toks") > 0)
-        .localCheckpoint(eager=False)
+        .filter(F.size("_toks") > 0),
+        eager=False,
     )
     tok_rows = base.select(
         F.col(id_col), F.posexplode("_toks").alias("_pos", "_tok")
@@ -935,7 +934,7 @@ def bpe_train(
 
     Returns the ordered merge list [(a, b), ...].
     """
-    words = (
+    words = materialize(
         df.select(F.explode(tokens(_c(text_col))).alias("_w"))
         .groupBy("_w")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -943,7 +942,6 @@ def bpe_train(
             "_sym",
             F.expr("transform(sequence(1, length(_w)), i -> substring(_w, i, 1))"),
         )
-        .localCheckpoint(eager=True)
     )
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
@@ -968,9 +966,9 @@ def bpe_train(
             break
         top = pairs[0]
         merges.append((top["a"], top["b"]))
-        words = words.withColumn(
+        words = materialize(words.withColumn(
             "_sym", _bpe_apply_merge(F.col("_sym"), top["a"], top["b"])
-        ).localCheckpoint(eager=True)
+        ))
     return merges
 
 
@@ -1239,10 +1237,10 @@ def dsir_importance(
     # tokenize+md5 pass over the corpus runs ONCE instead of once per
     # consumer (round-12, guide §1.2/§2.3; sums regroup exactly —
     # integer addition is associative)
-    grouped = (
+    grouped = materialize(
         toks.groupBy(id_col, "_is_t", "_b")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("_cnt")),
+        eager=False,
     )
     lm = grouped.groupBy("_b").agg(
         F.sum("_cnt").alias("_r"),
@@ -1452,14 +1450,13 @@ def token_budget_mix(
     # lineage cut the corpus tokenize pass replays ~2^(rounds+2) times
     # (round-12, guide §1.2; same cut ipf_rake_weights already applies
     # to its state). <= |groups| rows, trivially materialized.
-    counts = (
+    counts = materialize(
         df.select(
             F.col(group_col).alias("_g"),
             F.size(tokens(_c(text_col))).alias("_nt"),
         )
         .groupBy("_g")
         .agg(F.sum("_nt").cast("long").alias("n_tokens"))
-        .localCheckpoint(eager=True)
     )
     total = counts.agg(F.sum("n_tokens").alias("_tot"))
     alloc = counts.crossJoin(F.broadcast(total)).select(
@@ -1558,12 +1555,12 @@ def ipf_rake_weights(
     # state: per-cell weighted mass in integer units, start at n * 1.0.
     # The state is consumed TWICE per round (margin agg + rescale join),
     # so without a lineage cut each round re-evaluates the whole chain
-    # and the DAG cost doubles per round — localCheckpoint the
+    # and the DAG cost doubles per round — materialize the
     # aggregate-sized (|rows| x |cols|) state instead, the same cut the
     # iterative graph operators apply.
-    state = cells.select(
+    state = materialize(cells.select(
         "_r", "_c", "_n", (F.col("_n") * MICRO).alias("_wu")
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(rounds):
         rm = state.groupBy("_r").agg(F.sum("_wu").alias("_rm"))
         state = (
@@ -1593,7 +1590,7 @@ def ipf_rake_weights(
                 ).alias("_wu"),
             )
         )
-        state = state.localCheckpoint(eager=True)
+        state = materialize(state)
     rm = state.groupBy("_r").agg(F.sum("_wu").alias("_rmf"))
     cm = state.groupBy("_c").agg(F.sum("_wu").alias("_cmf"))
     out = (
@@ -1657,7 +1654,7 @@ def slice_overlap_matrix(
     labels = df.select(
         index_col.cast("int").alias("_i"), F.col(group_col).alias("_src")
     ).distinct()
-    labels = labels.localCheckpoint(eager=True)
+    labels = materialize(labels)
     n_lab = labels.count()
     if n_lab == 0:
         return labels.select(
@@ -1889,9 +1886,9 @@ def decontaminate_spans(
     # the tokenized corpus feeds BOTH the positional-shingle pass and
     # the per-doc length readout: spread past a single-file scan and cut
     # the lineage so tokenization runs once (round-12, guide §1.2/§2.5)
-    toked = spread_small_scan(corpus).select(
+    toked = materialize(spread_small_scan(corpus).select(
         F.col(id_col).alias("_id"), tokens(_c(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     ev_grams = (
         eval_df.select(
             F.explode(word_shingles(_c(text_col), n)).alias("_g")

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .._fixed import DYADIC, grid, spark_round
+from .._materialize import materialize
 
 __all__ = ["covariance_matrix", "pca_project", "power_pca_project"]
 
@@ -53,7 +54,7 @@ def _gramian_stats(q: DataFrame, dim: int) -> DataFrame:
     associative, so the merged cells are bit-identical to the previous
     per-row explode regardless of partitioning or batch boundaries.
 
-    The returned frame is localCheckpoint(eager=False)-ed: it is tiny
+    The returned frame is a lazy ``materialize`` cut: it is tiny
     (d*(d+1)/2 + d + 1 rows) and its consumers read it up to three times
     (cells / sums / count) — without the cut each read would re-run the
     scan.
@@ -138,7 +139,7 @@ def _gramian_stats(q: DataFrame, dim: int) -> DataFrame:
         .groupBy("i", "j")
         .agg(F.sum("p").alias("p"))
     )
-    return stats.localCheckpoint(eager=False)
+    return materialize(stats, eager=False)
 
 
 def covariance_matrix(

@@ -27,6 +27,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._materialize import materialize
 from .text import spread_small_scan, tokens, word_shingles
 
 __all__ = [
@@ -247,10 +248,10 @@ def minhash_lsh_candidates(
 
     The self-join references the signature subtree twice, so signatures
     are persisted for the duration of ONE eager computation of the
-    candidate pairs (localCheckpoint), then unpersisted — no cached
+    candidate pairs (``materialize``), then unpersisted — no cached
     blocks outlive the call, and the returned DataFrame is a
-    materialized, lineage-free pair list (its checkpoint blocks are
-    released by the ContextCleaner when the DataFrame is dropped).
+    materialized, lineage-free pair list (the ContextCleaner releases
+    its checkpoint when the DataFrame is dropped).
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
@@ -284,7 +285,7 @@ def minhash_lsh_candidates(
             )
             .distinct()
         )
-        return pairs.localCheckpoint(eager=True)
+        return materialize(pairs)
     finally:
         sig.unpersist()
 
@@ -638,16 +639,15 @@ def prefix_setsim_join(
         raise ValueError("strategy must be auto|prefix|index")
     if strategy == "auto":
         strategy = "prefix" if 10 * n >= 7 * d else "index"
-    tok = (
+    # the inverted index is read 4-5x (bucket guard, sizes, both join
+    # sides / dfreq+ranked+tsets): materialize it once instead of
+    # re-tokenizing the corpus per reference (round-12, guide §1.2; the
+    # guard's collect is an action anyway, so the eager cut adds no
+    # extra job)
+    tok = materialize(
         spread_small_scan(df)
         .select(F.col(id_col), F.explode(tokens_col).alias("_t"))
         .distinct()
-        # the inverted index is read 4-5x (bucket guard, sizes, both
-        # join sides / dfreq+ranked+tsets): materialize it once instead
-        # of re-tokenizing the corpus per reference (round-12, guide
-        # §1.2; the guard's collect is an action anyway, so the eager
-        # cut adds no extra job)
-        .localCheckpoint(eager=True)
     )
     sizes = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("_sz"))
 
@@ -833,7 +833,7 @@ def _int8_sketch(vecs: DataFrame, *keep: str) -> DataFrame:
     # into q's per-element lambda — a dim^2 blowup per row — and
     # re-evaluates the sketch on both sides of the pair join. Bounded:
     # n x (dim + ~40) bytes.
-    return lite.select(*keep, "_s", q.alias("_q")).localCheckpoint(eager=True)
+    return materialize(lite.select(*keep, "_s", q.alias("_q")))
 
 
 def _int8_bound(
@@ -1242,10 +1242,10 @@ def semantic_dedup(
     exactly once.
 
     Eager materialization: building this DataFrame RUNS Spark jobs
-    (verified pairs are localCheckpoint(eager=True)-ed before the
+    (verified pairs are cut with ``_materialize.materialize`` before the
     connected-components loop, which is itself iterative and eager), so
-    plan construction is not lazy here and the checkpointed blocks hold
-    executor storage until the returned DataFrame is garbage-collected.
+    plan construction is not lazy here and the cut's blocks or files are
+    held until the returned DataFrame is garbage-collected.
     Callers that separate plan-build from execution pay the compute at
     build time.
 
@@ -1372,7 +1372,7 @@ def _semantic_dedup_cells(
         .withColumn("_nrm", l2_norm(F.col("_v")))
     )
     cells = _md5_shards(cells, "_cell", id_col, max_cell_rows)
-    cells = cells.localCheckpoint(eager=True)
+    cells = materialize(cells)
 
     def blocked_pairs(side: DataFrame):
         lo = side.withColumn(
@@ -1445,7 +1445,7 @@ def _semantic_dedup_cells(
         # consume cand, and without this the quadratic blocked-pair
         # scan would run twice (16-17 bytes/row, so the checkpoint is
         # small even when most in-cell pairs are candidates)
-        cand = cand.localCheckpoint(eager=True)
+        cand = materialize(cand)
         band = (
             _exact_cos(
                 cand.filter(~F.col("_sure")).select("id_a", "id_b"), cells, id_col
@@ -1544,11 +1544,11 @@ def minhash_lsh_join(
         rb = rb.join(combined, ["band", "bucket"])
     # the pair list is read three times below (join + two member-id
     # semi-joins): cut its lineage so the banded join runs once
-    cands = (
+    cands = materialize(
         lb.join(rb, ["band", "bucket"])
         .select("id_left", "id_right")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
 
     # only candidate-pair members need exact shingles: semi-join each

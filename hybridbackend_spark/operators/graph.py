@@ -24,7 +24,7 @@ Every iterative operator is the same skeleton:
   used by the triangle, clustering and link-prediction statistics and by
   star contraction.
 - **Loop.** One state-to-state step per round, each step ending in an
-  eager ``localCheckpoint`` so the plan does not grow with the round
+  eager ``materialize`` cut so the plan does not grow with the round
   count. :func:`_fixed_point` runs the steps until a cheap scalar
   measure (one aggregate job) stops changing and reports whether it
   did; each caller decides what exhaustion means (BFS returns, shortest
@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .._fixed import RANK
+from .._materialize import materialize
 
 __all__ = [
     "connected_components",
@@ -83,22 +84,21 @@ def _sym_edges(
     cols = [F.col(src).alias("_n"), F.col(dst).alias("_m")]
     if weight is not None:
         cols.append(F.col(weight).cast("long").alias("_w"))
-    e = edges.select(*cols).localCheckpoint(eager=True)
+    e = materialize(edges.select(*cols))
     if not directed:
         rev = [F.col("_m").alias("_n"), F.col("_n").alias("_m"), *e.columns[2:]]
         e = e.union(e.select(*rev))
-    return e.distinct().localCheckpoint(eager=True)
+    return materialize(e.distinct())
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected simple-graph edges ``(a, b)`` with ``a < b``:
     reversals and duplicates collapse, self-loops drop. Materialized."""
     a, b = F.col(src), F.col(dst)
-    return (
+    return materialize(
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") < F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -164,11 +164,10 @@ def connected_components(
     sym = _sym_edges(edges, src, dst)
 
     # one-pass tentative labeling: min(node, neighbors(node))
-    labels = (
+    labels = materialize(
         sym.groupBy(F.col("_n").alias("id"))
         .agg(F.min("_m").alias("_nbr"))
         .select("id", F.least(F.col("id"), F.col("_nbr")).alias("component"))
-        .localCheckpoint(eager=True)
     )
     la = labels.select(F.col("id").alias("_n"), F.col("component").alias("_ca"))
     lb = labels.select(F.col("id").alias("_m"), F.col("component").alias("_cb"))
@@ -206,7 +205,7 @@ def connected_components(
     # other step can at most do one redundant round
     labels, done = _fixed_point(
         labels,
-        lambda lbl: _propagate(_propagate(lbl)).localCheckpoint(eager=True),
+        lambda lbl: materialize(_propagate(_propagate(lbl))),
         lambda lbl: _count_sum(lbl, "component"),
         max_iter,
     )
@@ -311,7 +310,7 @@ def connected_components_star(
     ``(hi, lo)`` edge set is a depth-1 star forest, so ``hi -> lo`` is
     the labeling — and ``max_iter`` bounds the contraction rounds run
     while it fails (an input already in star form needs none). Lineage
-    is cut per round with an eager localCheckpoint, as in the
+    is cut per round with an eager ``materialize``, as in the
     propagation variant.
     """
     # round-12: partition-local union-find contraction FIRST (see
@@ -386,7 +385,7 @@ def connected_components_star(
                 f"connected_components_star did not converge in {max_iter} "
                 "large-star/small-star rounds"
             )
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e = materialize(_small_star(_large_star(e)))
         rounds += 1
     # star forest: each non-root points at its component min, which
     # labels itself
@@ -415,7 +414,7 @@ def pagerank(
     and one partial-agg groupBy on the destination id — both shuffles on
     the node key, combined map-side, so shuffled bytes scale with
     |edges| not iterations x corpus. Lineage is cut with an eager
-    localCheckpoint every 4th iteration (round-12: each rank state is
+    ``materialize`` every 4th iteration (round-12: each rank state is
     consumed exactly once by the next iteration, so the un-checkpointed
     plan grows LINEARLY — 3 operators per iteration — and the typical
     3-5 iteration call runs as ONE job instead of paying a
@@ -475,11 +474,11 @@ def _pagerank(
     frequent-bigram graph. 16 bytes/row, and the cut folds into the
     jobs the prologue runs anyway — same rationale as :func:`_sym_edges`.
     """
-    e = edges.select(
+    e = materialize(edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=True)
+    ))
     deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    ed = e.join(deg, "_s").localCheckpoint(eager=True)
+    ed = materialize(e.join(deg, "_s"))
     nodes = (
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
@@ -492,7 +491,7 @@ def _pagerank(
             seed_nodes.select("node", F.lit(1).alias("_seed")), "node", "left"
         ).select("node", F.coalesce("_seed", F.lit(0)).alias("_seed"))
         seed = F.col("_seed")
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = materialize(nodes)
     base = (100 - damping_pct) * RANK // 100
     ranks = nodes.select("node", (seed.cast("long") * RANK).alias("rank"))
     for it in range(iterations):
@@ -512,7 +511,7 @@ def _pagerank(
             .alias("rank"),
         )
         if (it + 1) % 4 == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -553,10 +552,10 @@ def triangle_count(
         fwd = (F.col("_da") < F.col("_db")) | (
             (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
         )
-        e = ed.select(
+        e = materialize(ed.select(
             F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("a"),
             F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("b"),
-        ).localCheckpoint(eager=True)
+        ))
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     wedges = e1.join(e2, F.col("e2.a") == F.col("e1.b")).select(
         F.col("e1.a").alias("x"), F.col("e1.b").alias("y"), F.col("e2.b").alias("z")
@@ -590,7 +589,7 @@ def label_propagation(
     identical winner — row_number ordered by (c DESC, lab ASC) picks
     exactly the struct minimum — but the aggregate partial-combines
     map-side and skips the window's per-partition sort. Lineage is cut
-    per round (localCheckpoint) so ``iters`` stays a cost, not a
+    per round (``materialize``) so ``iters`` stays a cost, not a
     plan-depth explosion.
 
     Returns (id, community).
@@ -598,11 +597,11 @@ def label_propagation(
     # not _sym_edges: votes count every parallel edge, so the adjacency
     # stays a multiset (unionAll, no distinct), and both cuts are lazy.
     # The edge plan is still cut once before the two-direction union.
-    e0 = edges.select(
+    e0 = materialize(edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     sym = e0.unionAll(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.localCheckpoint(eager=False)
+    sym = materialize(sym, eager=False)
     labels = sym.select(F.col("a").alias("v")).distinct().select(
         "v", F.col("v").alias("lab")
     )
@@ -613,15 +612,15 @@ def label_propagation(
             .groupBy("v", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        labels = materialize(
             votes.groupBy("v")
             .agg(
                 F.min(
                     F.struct((-F.col("c")).alias("nc"), F.col("lab").alias("l"))
                 ).alias("_w")
             )
-            .select("v", F.col("_w.l").alias("lab"))
-            .localCheckpoint(eager=False)
+            .select("v", F.col("_w.l").alias("lab")),
+            eager=False,
         )
     return labels.select(F.col("v").alias("id"), F.col("lab").alias("community"))
 
@@ -650,13 +649,12 @@ def transitive_closure(
     so the fixed point exists for any graph. Raises only if the closure
     hasn't converged in ``max_rounds`` — i.e. diameter > 2^max_rounds.
     """
-    paths = (
+    paths = materialize(
         edges.select(
             F.col(src).alias("a"), F.col(dst).alias("b"), F.lit(1).alias("d")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _double(p: DataFrame) -> DataFrame:
@@ -665,11 +663,10 @@ def transitive_closure(
         doubled = l.join(r, "_m").select(
             "a", "b", (F.col("_dl") + F.col("_dr")).alias("d")
         )
-        return (
+        return materialize(
             p.unionAll(doubled)
             .groupBy("a", "b")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
         )
 
     paths, done = _fixed_point(paths, _double, lambda p: p.count(), max_rounds)
@@ -701,7 +698,7 @@ def bfs_distances(
     Min-plus label propagation: each round joins the frontier's
     distances to the adjacency list and keeps the per-node minimum —
     the same join + partial-agg shape as :func:`connected_components`,
-    with lineage cut per round via ``localCheckpoint``. Distances are
+    with lineage cut per round via ``materialize``. Distances are
     monotone non-increasing and bounded below, so the exact (count,
     sum) pair is a convergence measure; the loop stops early once a
     round changes nothing. Rounds needed = eccentricity of the seed set,
@@ -738,10 +735,9 @@ def _min_plus_paths(
     (dropping relaxations beyond ``max_dist``) and cuts lineage. The
     literal types of ``zero`` and ``cost`` fix the ``dist`` type (INT
     for BFS, BIGINT for weighted paths). Returns ``(dist, converged)``."""
-    dist = (
+    dist = materialize(
         seeds.distinct()
         .select("id", zero.alias("dist"))
-        .localCheckpoint(eager=True)
     )
 
     def _relax(d: DataFrame) -> DataFrame:
@@ -754,11 +750,10 @@ def _min_plus_paths(
         )
         if max_dist is not None:
             relaxed = relaxed.filter(F.col("dist") <= max_dist)
-        return (
+        return materialize(
             d.unionByName(relaxed)
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
 
     return _fixed_point(dist, _relax, lambda d: _count_sum(d, "dist"), max_rounds)
@@ -871,10 +866,9 @@ def kcore(
             .filter(F.col("_d") >= k)
             .select("_n")
         )
-        sym = (
+        sym = materialize(
             sym.join(keep, "_n", "left_semi")
             .join(keep.select(F.col("_n").alias("_m")), "_m", "left_semi")
-            .localCheckpoint(eager=True)
         )
     return sym.groupBy(F.col("_n").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
@@ -952,7 +946,7 @@ def hyperball_reach(
     # 5.7-6.1 s in every arm because the cost is the serial job chain
     # (~13 jobs/run), while per-task overhead (~0.17 s on this box)
     # made the extra partitions a net loss in task-seconds.
-    state = (
+    state = materialize(
         nodes
         .selectExpr(
             "id",
@@ -961,7 +955,6 @@ def hyperball_reach(
             f"else 17 - length(bin({v16})) end) as _rho",
         )
         .selectExpr("id", *init)
-        .localCheckpoint(eager=True)
     )
 
     bcols = [f"_b{j}" for j in range(n_longs)]
@@ -977,7 +970,7 @@ def hyperball_reach(
         if r + 1 < k:
             # the final round's state has a single consumer (the
             # readout) — no checkpoint needed there
-            state = state.localCheckpoint(eager=True)
+            state = materialize(state)
 
     # readout: fold the 256 lanes per NODE ROW — no Generate, no
     # |V| x 256 intermediate rows, no per-lane groupBy. (History: a

@@ -22,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._materialize import materialize
 from .text import tokens
 
 __all__ = ["bm25_topk", "item_similarity", "rrf_fuse"]
@@ -69,8 +70,8 @@ def bm25_topk(
     # postings feeds BOTH the score join and the document-frequency
     # agg; without materialization Spark evaluates the corpus scan +
     # explode twice. The filtered postings set is small (query terms
-    # only), so an eager localCheckpoint halves the corpus passes.
-    postings = postings.localCheckpoint(eager=True)
+    # only), so an eager cut halves the corpus passes.
+    postings = materialize(postings)
     df_per_term = postings.groupBy("_term").agg(
         F.count(F.lit(1)).alias("_df")
     )

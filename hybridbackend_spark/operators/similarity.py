@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._fixed import MICRO, grid
+from .._materialize import materialize
 
 __all__ = [
     "dot",
@@ -776,14 +777,14 @@ def kmeans_train_tree(
             < int(train_frac * 1_000_000)
         )
     coarse = kmeans_train(df, vec_col, k=k1, iters=iters, id_col=id_col)
-    a = ivf_assign(
+    a = materialize(ivf_assign(
         df.select(
             F.col(id_col).alias("_id"), _as_double_vec(vec_col).alias("_v")
         ),
         "_v",
         coarse,
         "_c1",
-    ).localCheckpoint(eager=True)  # coarse routing reused every iteration
+    ))  # coarse routing reused every iteration
     w = Window.partitionBy("_c1").orderBy("_id")
     seeds = (
         a.withColumn("_rn", F.row_number().over(w))
@@ -1080,9 +1081,7 @@ def kcenter_select(
         d2 = F.expr(_sqdist_sql("`_v`", [float(x) for x in cent]))
         return grid(F.sqrt(d2), MICRO)
 
-    cur = base.withColumn("_mind", qdist_to(center_vec)).localCheckpoint(
-        eager=True
-    )
+    cur = materialize(base.withColumn("_mind", qdist_to(center_vec)))
     for _ in range(k - 1):
         far = cur.orderBy(F.col("_mind").desc(), "_id").take(1)
         if not far or far[0]["_mind"] == 0:
@@ -1091,7 +1090,7 @@ def kcenter_select(
         next_vec = list(
             base.filter(F.col("_id") == far[0]["_id"]).take(1)[0]["_v"]
         )
-        cur = cur.withColumn(
+        cur = materialize(cur.withColumn(
             "_mind", F.least(F.col("_mind"), qdist_to(next_vec))
-        ).localCheckpoint(eager=True)
+        ))
     return selected

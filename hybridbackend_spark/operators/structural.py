@@ -21,6 +21,7 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._materialize import materialize
 from ..schema import Field
 
 __all__ = [
@@ -156,13 +157,13 @@ def _range_prefix(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
     )
-    # Eager localCheckpoint, not persist: the offsets collected below must
-    # see the exact partition layout the downstream plan reads (range
-    # sampling could differ on recompute), and checkpoint blocks are freed
-    # with the DataFrame (cache entries leak for the session lifetime).
-    local = ranged.withColumn(
+    # An eager cut, not persist: the offsets collected below must see the
+    # exact partition layout the downstream plan reads (range sampling
+    # could differ on recompute), and a checkpoint is freed with the
+    # DataFrame (cache entries leak for the session lifetime).
+    local = materialize(ranged.withColumn(
         "_local", F.coalesce(F.sum(value).over(w_local), F.lit(0))
-    ).localCheckpoint(eager=True)
+    ))
     totals = dict(local.groupBy("_pid").agg(F.sum(value)).collect())
     offsets, acc = {}, 0
     for pid in sorted(totals):

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from .._materialize import materialize
+
 __all__ = [
     "tokens",
     "token_count",
@@ -359,7 +361,7 @@ def hashing_vectorize(
         # the lineage so the corpus is tokenized+hashed ONCE instead of
         # once per reference (round-12, guide §1.2; previously dfs was
         # a second full explode+md5 pass)
-        cells = cells.localCheckpoint(eager=False)
+        cells = materialize(cells, eager=False)
         n_docs = df.select(F.col(id_col)).distinct().count()
         dfs = cells.groupBy("_b").agg(F.count(F.lit(1)).alias("_df"))
         bits_n = len(bin(n_docs)) - 3  # floor(log2 n_docs): '0b1...'

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._fixed import CENTS, MICRO, grid, ungrid
+from .._materialize import materialize
 
 __all__ = ["resample_fill", "transition_matrix", "sequence_pattern_match", "ewma", "seasonal_dow", "cusum_changepoint", "forecast_backtest", "holt_linear", "theil_sen", "mann_kendall", "kendall_tau_b"]
 
@@ -516,7 +517,7 @@ def _enforce_max_obs(pts: DataFrame, max_obs: int | None, what: str) -> DataFram
     so the guard semantics cannot drift."""
     if max_obs is None:
         return pts
-    pts = pts.localCheckpoint(eager=True)
+    pts = materialize(pts)
     biggest = (
         pts.groupBy("_k")
         .agg(F.count(F.lit(1)).alias("_m"))

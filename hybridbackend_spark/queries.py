@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ._fixed import CENTS, DYADIC, MICRO, grid, grid_moments, grid_sum, ungrid
+from ._materialize import materialize
 from .functions.feature import log1p_feature, mod_bucket
 from .functions.metrics import auc as _auc
 from .functions.metrics import gauc as _gauc
@@ -1122,7 +1123,10 @@ def stream_minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as ``minhash_lsh_dedup_docs`` value-checks the whole
     incremental path end-to-end. Prefix-parity (equality after every
     batch, including a survivor retracted by a later bridging doc) is
-    pinned in tests/test_streaming.py."""
+    pinned in tests/test_streaming.py. The survivors are materialized
+    before the scratch directory (source copy, state, stream checkpoint)
+    is removed."""
+    import shutil
     import tempfile
 
     from .streaming.dedup_stream import (
@@ -1132,20 +1136,23 @@ def stream_minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     base = tempfile.mkdtemp(prefix="hb_stream_mhdedup_")
-    src = os.path.join(base, "src")
-    docs.repartition(3).write.parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    state = os.path.join(base, "state")
-    run_minhash_dedup_stream(
-        spark, stream, state, "text", "doc_id",
-        checkpoint_dir=os.path.join(base, "ckpt"),
-        threshold=0.8, portable=True,
-    )
-    return stream_survivors(spark, state, "doc_id")
+    try:
+        src = os.path.join(base, "src")
+        docs.repartition(3).write.parquet(src)
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        state = os.path.join(base, "state")
+        run_minhash_dedup_stream(
+            spark, stream, state, "text", "doc_id",
+            checkpoint_dir=os.path.join(base, "ckpt"),
+            threshold=0.8, portable=True,
+        )
+        return materialize(stream_survivors(spark, state, "doc_id"))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -1686,12 +1693,12 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale), and keep survivors with ONE content-hash window instead of
     # the dedup-groupBy + join-back (guide §2.4), which evaluated the
     # scoring twice (once per join side) and paid two extra exchanges.
-    # The lazy localCheckpoint is a predicate-pushdown barrier: without
-    # it Catalyst pushes the score>=0.5 filter through the repartition
-    # back into the single scan task, un-doing the spread (measured —
-    # the scoring then runs serially at ~0.5 s/rep).
-    docs = spread_small_scan(_t(spark, sf_dir, "documents")).localCheckpoint(
-        eager=False
+    # The lazy cut is a predicate-pushdown barrier: without it Catalyst
+    # pushes the score>=0.5 filter through the repartition back into
+    # the single scan task, un-doing the spread (measured — the scoring
+    # then runs serially at ~0.5 s/rep).
+    docs = materialize(
+        spread_small_scan(_t(spark, sf_dir, "documents")), eager=False
     )
     kept = docs.withColumn("q", quality_score(F.col("text"))).filter(
         F.col("q") >= 0.5
@@ -6491,7 +6498,7 @@ def t_closeness_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.lit(7), F.expr("(cents * 8) div (mc + 1)")).alias("bucket"),
     )
     gc = b.groupBy("grp", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    gc = gc.localCheckpoint(eager=True)  # tiny: |groups| x 8 cells
+    gc = materialize(gc)  # tiny: |groups| x 8 cells
     qc = gc.groupBy("bucket").agg(F.sum("c").alias("q"))
     gn = gc.groupBy("grp").agg(F.sum("c").alias("n"))
     tot = qc.agg(F.sum("q").alias("nn"))
@@ -7308,8 +7315,10 @@ def text_ann_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the projected frame feeds BOTH sides of the top-k join (query
     # rows + corpus): cut the lineage so TF-IDF + JL compute once
     # (round-12, guide §1.2)
-    jl = jl_project(dense, "vector", in_dim=64, out_dim=16, seed=7
-                    ).localCheckpoint(eager=False)
+    jl = materialize(
+        jl_project(dense, "vector", in_dim=64, out_dim=16, seed=7),
+        eager=False,
+    )
     q = jl.filter(F.col("doc_id") < 3)
     return cosine_topk(
         q, jl, "doc_id", "doc_id", "jl_vector", "jl_vector", k=5
@@ -11563,7 +11572,7 @@ def _daily_cents_series(
     its length: the series-decomposition queries run unpartitioned
     windows / lag joins over this table, which is calendar-bounded by
     construction — but that bound is enforced, not assumed. The agg
-    output is localCheckpoint'ed once so the guard count and the
+    output is materialized once so the guard count and the
     downstream query share one materialization (no second events
     scan), matching the chi_square/kaplan_meier guard discipline."""
     ev = _t(spark, sf_dir, "events")
@@ -11572,7 +11581,7 @@ def _daily_cents_series(
         .alias("v")
     )
     if max_days is not None:
-        daily = daily.localCheckpoint(eager=True)
+        daily = materialize(daily)
         n = daily.limit(max_days + 1).count()
         if n > max_days:
             raise ValueError(
@@ -11785,7 +11794,7 @@ def _skyline_2d(
     )
     g = p.groupBy("cents").agg(F.min("p_size").alias("_msize"))
     if max_price_groups is not None:
-        g = g.localCheckpoint(eager=True)
+        g = materialize(g)
         n = g.limit(max_price_groups + 1).count()
         if n > max_price_groups:
             raise ValueError(

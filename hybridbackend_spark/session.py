@@ -72,7 +72,10 @@ def get_session(
     ``extra_conf`` overrides either. Pass an explicit master for cluster
     deployment. ``shuffle_partitions`` defaults to the local parallelism
     (cores) — on a cluster, set it to 2-3x total executor cores or rely
-    on AQE coalescing from a higher initial value.
+    on AQE coalescing from a higher initial value. Setting
+    ``spark.checkpoint.dir`` (through ``extra_conf``) switches every
+    lineage cut from executor-local blocks to that reliable storage
+    (``_materialize.materialize``), so a cut survives executor loss.
     """
     cpus, driver_memory = _local_defaults()
     if master is None:
@@ -132,6 +135,11 @@ def cluster_conf(
       for single-key explosions use ``exchange.salted_join``.
     - shuffle compression + spill compression on (network and disk are
       the scarce resources at this scale).
+    - checkpoint cleanup on: with ``spark.checkpoint.dir`` set (the
+      deployment's reliable storage), every lineage cut is written there
+      (``_materialize.materialize``) and survives executor loss; the
+      cleaner deletes a cut's files once its DataFrame is dropped, so
+      an iterative operator does not leave one set per round.
     """
     est_shuffle_bytes = target_sf_tb * (1 << 40) * 0.2  # ~20% of scan
     by_size = int(est_shuffle_bytes / (256 * (1 << 20)))
@@ -150,6 +158,7 @@ def cluster_conf(
         "spark.shuffle.spill.compress": "true",
         "spark.executor.memory": f"{executor_mem_gb}g",
         "spark.memory.fraction": "0.6",
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     }
 
 

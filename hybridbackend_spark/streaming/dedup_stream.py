@@ -62,6 +62,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._materialize import materialize
+
 __all__ = [
     "minhash_dedup_batch_apply",
     "run_minhash_dedup_stream",
@@ -124,13 +126,11 @@ def minhash_dedup_batch_apply(
     # after the anti-join, a full extra materialization per batch): the
     # streaming source is consumed exactly once by this plan, and every
     # later reference (signatures, texts, labels) reads the cut.
-    batch = batch.localCheckpoint(eager=True)
+    batch = materialize(batch)
     sig = minhash_signatures(
         batch, "text", "id", num_hashes, shingle_n, seed, portable
     )
-    new_idx = minhash_band_rows(sig, "id", num_hashes, bands).localCheckpoint(
-        eager=True
-    )
+    new_idx = materialize(minhash_band_rows(sig, "id", num_hashes, bands))
 
     first = not os.path.isdir(docs_p)
     if first:
@@ -170,7 +170,7 @@ def minhash_dedup_batch_apply(
     # materialized: the verify references the pair list three times (the
     # candidate-id semi-filter + both shingle joins) — without the cut
     # the index self-join would re-run per reference
-    cands = cands.distinct().localCheckpoint(eager=True)
+    cands = materialize(cands.distinct())
 
     # contract to current component labels, CC over touched labels only
     if old_docs is None:

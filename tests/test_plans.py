@@ -633,6 +633,10 @@ def test_cluster_conf_scales_with_size_and_cores():
     assert int(big["spark.sql.autoBroadcastJoinThreshold"]) == 64 * (1 << 20)
     # AQE stays on in every profile
     assert big["spark.sql.adaptive.enabled"] == "true"
+    # reliable lineage cuts (spark.checkpoint.dir) are cleaned up with
+    # their DataFrames
+    assert small["spark.cleaner.referenceTracking.cleanCheckpoints"] == "true"
+    assert big["spark.cleaner.referenceTracking.cleanCheckpoints"] == "true"
 
 
 def test_sort_key_advisor_exact_run_bound(spark):

@@ -1008,3 +1008,32 @@ def test_stream_minhash_dedup_runner_equals_batch(spark, sf_dir, tmp_path):
         for r in minhash_lsh_dedup(docs, "text", "doc_id", threshold=0.8).collect()
     }
     assert inc == ref and len(inc) > 0
+
+
+def test_stream_minhash_dedup_docs_removes_its_scratch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The registered query's scratch directory (a Parquet copy of
+    documents, the dedup state, the stream checkpoint) is gone when it
+    returns, and the materialized survivors are still the batch
+    operator's."""
+    import tempfile
+
+    from hybridbackend_spark.operators.dedup import minhash_lsh_dedup
+    from hybridbackend_spark.queries import _t, stream_minhash_dedup_docs
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = stream_minhash_dedup_docs(spark, sf_dir)
+    assert [
+        p.name for p in tmp_path.iterdir()
+        if p.name.startswith("hb_stream_mhdedup_")
+    ] == []
+    got = sorted(r.doc_id for r in out.collect())
+    docs = _t(spark, sf_dir, "documents")
+    ref = sorted(
+        r.doc_id
+        for r in minhash_lsh_dedup(
+            docs, "text", "doc_id", threshold=0.8, portable=True
+        ).collect()
+    )
+    assert got == ref and len(got) > 0
