@@ -6,6 +6,19 @@ UTC session timezone (so timestamps compare exactly against external SQL
 oracles), and shuffle partitions sized to the local core count rather than
 Spark's default 200. On a real cluster the same builder is used with a
 different ``master`` and a larger ``shuffle_partitions``.
+
+Local sessions also write Structured Streaming checkpoints (offset,
+commit and file-source logs, and the state store's delta files) through
+Spark's FileSystem-based checkpoint manager. The pip PySpark has no
+native Hadoop library, so the default FileContext-based manager asks
+``org.apache.hadoop.util.Shell`` for file status and permissions: it
+forks a ``readlink`` per status lookup and a ``chmod`` per file it
+creates, on every micro-batch. The FileSystem API makes no such
+status fork. Hadoop's checksummed local file system still forks a
+``chmod`` per file it creates; swapping it for the raw one would drop
+the local ``.crc`` check, so it stays. Cluster sessions keep Spark's
+default, whose overwrite-rename is atomic on HDFS and which forks
+nothing there. ``extra_conf`` overrides the choice either way.
 """
 
 from __future__ import annotations
@@ -42,6 +55,12 @@ DEFAULT_CONF = {
     "spark.ui.enabled": "false",
 }
 
+# Local mode's stream checkpoint manager (module docstring).
+_FS_CHECKPOINTS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def _local_defaults() -> tuple[str, str]:
     """``(cores, driver memory)`` for local mode, sized from the host:
@@ -76,6 +95,11 @@ def get_session(
     ``spark.checkpoint.dir`` (through ``extra_conf``) switches every
     lineage cut from executor-local blocks to that reliable storage
     (``_materialize.materialize``), so a cut survives executor loss.
+    Local mode writes stream checkpoints through Spark's FileSystem-based
+    checkpoint manager: without native Hadoop, the FileContext default
+    forks a ``readlink``/``chmod`` process per checkpoint file. A
+    non-local master keeps that default, whose overwrite-rename is
+    atomic on HDFS (module docstring).
     """
     cpus, driver_memory = _local_defaults()
     if master is None:
@@ -88,6 +112,7 @@ def get_session(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
         conf["spark.driver.memory"] = driver_memory
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINTS
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -11,10 +11,19 @@ watermarks, tumbling/sliding/session windows, and stateful dedup.
 Every operator is defined on an unbounded DataFrame and works identically
 on a bounded one — tests drive them with availableNow over parquet, which
 is also the replay/backfill story at scale.
+
+:func:`run_available_now` keeps its checkpoint where the lineage cuts of
+``_materialize.materialize`` go: under the SparkContext's checkpoint dir
+when one is set (``spark.checkpoint.dir``), else in a local temp dir.
+On a multi-host cluster the executors write the state store's delta
+files under that checkpoint, so a partition that moves to another
+executor can load its state only from shared storage. Either way the
+checkpoint is deleted when the run ends.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 import uuid
@@ -58,14 +67,29 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
+def _probe_file(path: str) -> str:
+    """The file whose footer the events-schema probe reads: for a local
+    directory its first data file by name (names starting with ``_`` or
+    ``.`` are not data), else ``path`` itself. A directory without one
+    is probed whole, as a batch read of it would be."""
+    if os.path.isdir(path):
+        for name in sorted(os.listdir(path)):
+            full = os.path.join(path, name)
+            if not name.startswith(("_", ".")) and os.path.isfile(full):
+                return full
+    return path
+
+
 def _probed_events_schema(spark: SparkSession, path: str) -> T.StructType:
     """EVENTS_SCHEMA with the ``ts`` field typed as a batch read of
     ``path`` actually surfaces it on this Spark build (int64 nanos vs
     timestamp_ntz) — file-source streams require a declared schema, and
     declaring the wrong variant makes every batch unreadable. The probe
-    goes through the package loader, so a file ``queries._t`` already
-    loaded in this session costs no Spark job."""
-    probed = dict(_load(spark, path).dtypes).get("ts")
+    reads one file (:func:`_probe_file`; Spark's own directory inference
+    without mergeSchema also reads a single footer) through the package
+    loader, so a file already loaded in this session costs no Spark
+    job."""
+    probed = dict(_load(spark, _probe_file(path)).dtypes).get("ts")
     ts_type = T.LongType() if probed == "bigint" else T.TimestampNTZType()
     return T.StructType(
         [
@@ -113,8 +137,6 @@ def read_event_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # File-source streams require a directory; a concrete file path becomes
     # its parent dir + a glob filter on the file name.
-    import os
-
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
@@ -221,7 +243,7 @@ def run_available_now(
     late-data drop and evict closed state — use those to exercise or
     rely on drop semantics."""
     qname = name or f"hb_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"hbq_{qname}_ckpt_")
+    ckpt, remove = _run_checkpoint(stream_df.sparkSession, f"hbq_{qname}_ckpt_")
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -235,9 +257,23 @@ def run_available_now(
     finally:
         # the checkpoint only serves this one run; the memory-sink table
         # the result reads stays
-        shutil.rmtree(ckpt, ignore_errors=True)
+        remove()
     _record_progress(qname, q)
     return stream_df.sparkSession.table(qname)
+
+
+def _run_checkpoint(spark: SparkSession, prefix: str):
+    """``(location, remove)`` of a fresh checkpoint for one run (module
+    docstring): under the SparkContext's checkpoint dir when it has one,
+    removed through the Hadoop FileSystem API, else a local temp dir."""
+    root = spark.sparkContext.getCheckpointDir()
+    if root is None:
+        ckpt = tempfile.mkdtemp(prefix=prefix)
+        return ckpt, lambda: shutil.rmtree(ckpt, ignore_errors=True)
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(root, prefix + uuid.uuid4().hex[:8])
+    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return path.toString(), lambda: fs.delete(path, True)
 
 
 # Per-process log of completed stream executions (query name + per-batch

@@ -1,5 +1,6 @@
 """Local-mode defaults of ``session.get_session`` follow the host (checked
-on the helper, so no second session starts)."""
+on the helper, so no second session starts), and local sessions write
+stream checkpoints through the FileSystem-based checkpoint manager."""
 
 from __future__ import annotations
 
@@ -25,3 +26,17 @@ def test_local_driver_memory_is_half_the_host_capped(monkeypatch):
     assert host(64) == "32g"
     assert host(512) == "48g"
     assert host(1) == "1g"
+
+
+def test_local_stream_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    got = manager.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert got.getClass().getName() == session._FS_CHECKPOINTS
+    # cluster sessions keep Spark's FileContext default
+    assert "spark.sql.streaming.checkpointFileManagerClass" not in (
+        session.cluster_conf(64)
+    )

@@ -59,6 +59,124 @@ def test_run_available_now_removes_its_checkpoint(
     assert sum(r["n_events"] for r in out.collect()) == events_batch.count()
 
 
+def test_run_available_now_checkpoints_under_the_checkpoint_dir(
+    event_stream, tmp_path, monkeypatch
+):
+    """With a SparkContext checkpoint dir, the run's checkpoint lives
+    under it (where the executors can share its state files) and is
+    deleted through the Hadoop FileSystem API afterwards."""
+    import tempfile
+
+    from pyspark import SparkContext
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    root, local = tmp_path / "reliable", tmp_path / "local"
+    root.mkdir()
+    local.mkdir()
+    want = sorted(map(tuple, run_available_now(
+        tumbling_agg(event_stream, "ts", "1 hour")).collect()))
+
+    during = []
+    wait = StreamingQuery.awaitTermination
+
+    def spy(self, *args, **kwargs):
+        out = wait(self, *args, **kwargs)
+        during.extend(
+            (p.name, (p / "commits").is_dir()) for p in root.iterdir()
+        )
+        return out
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    monkeypatch.setattr(SparkContext, "getCheckpointDir", lambda sc: str(root))
+    monkeypatch.setattr(tempfile, "tempdir", str(local))
+    out = run_available_now(tumbling_agg(event_stream, "ts", "1 hour"))
+    assert len(during) == 1
+    name, committed = during[0]
+    assert name.startswith("hbq_") and committed
+    assert list(root.iterdir()) == [] and list(local.iterdir()) == []
+    assert sorted(map(tuple, out.collect())) == want
+
+
+def _events_file(sf_dir, path, rows):
+    """Write the ``rows`` slice of the events table to ``path`` as one
+    Parquet file (ts stays TIMESTAMP(NANOS))."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    pq.write_table(t.slice(rows.start, len(rows)), path)
+
+
+def test_run_available_now_resumes_state_from_its_checkpoint(
+    spark, sf_dir, events_batch, tmp_path, monkeypatch
+):
+    """A second run on the same checkpoint reads only the new file and
+    reloads the first run's window state from the state store's delta
+    files, so its complete output is the batch aggregate over both."""
+    from hybridbackend_spark.streaming import ops
+
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    n = events_batch.count()
+    _events_file(sf_dir, str(src / "part-0.parquet"), range(0, n // 2))
+    monkeypatch.setattr(
+        ops, "_run_checkpoint", lambda spark, prefix: (ckpt, lambda: None)
+    )
+
+    def run():
+        stream = read_event_stream(spark, str(src))
+        return sorted(map(tuple, run_available_now(
+            tumbling_agg(stream, "ts", "1 hour", keys=["event_type"])
+        ).collect()))
+
+    first = run()
+    assert sum(r[3] for r in first) == n // 2
+    deltas = [
+        f for _, _, files in os.walk(f"{ckpt}/state") for f in files
+        if f.endswith(".delta")
+    ]
+    assert deltas
+    _events_file(sf_dir, str(src / "part-1.parquet"), range(n // 2, n))
+    want = sorted(map(tuple, tumbling_agg(
+        events_batch, "ts", "1 hour", keys=["event_type"]).collect()))
+    assert run() == want
+
+
+def test_event_stream_probe_reads_one_memoized_file(
+    spark, sf_dir, tmp_path, jobs_of
+):
+    """A directory's schema probe reads its first data file through the
+    loader memo: the second stream over it submits no Spark job, and it
+    declares the ts type a batch read of the directory surfaces."""
+    from pyspark.sql import types as T
+
+    from hybridbackend_spark.streaming.ops import _probed_events_schema
+
+    d = tmp_path / "events"
+    d.mkdir()
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / ".part-0.parquet.crc").write_bytes(b"")
+    _events_file(sf_dir, str(d / "part-0.parquet"), range(0, 100))
+    read_event_stream(spark, str(d))
+    _, jobs = jobs_of("stream_probe_hit", lambda: read_event_stream(spark, str(d)))
+    assert jobs == []
+    raw = dict(spark.read.parquet(str(d)).dtypes)["ts"]
+    want = T.LongType() if raw == "bigint" else T.TimestampNTZType()
+    assert _probed_events_schema(spark, str(d))["ts"].dataType == want
+
+
+def test_event_stream_probe_of_a_dir_without_data_reads_the_dir(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    d = tmp_path / "empty"
+    d.mkdir()
+    (d / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(AnalysisException) as plain:
+        spark.read.parquet(str(d))
+    with pytest.raises(AnalysisException) as probed:
+        read_event_stream(spark, str(d))
+    assert probed.value.getCondition() == plain.value.getCondition()
+
+
 def test_sliding_agg_runs(spark, event_stream):
     out = run_available_now(
         sliding_agg(event_stream, "ts", "1 hour", "30 minutes")
