@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
 
 __all__ = [
@@ -55,11 +56,16 @@ DEFAULT_CONF = {
     "spark.ui.enabled": "false",
 }
 
-# Local mode's stream checkpoint manager (module docstring).
-_FS_CHECKPOINTS = (
-    "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager"
-)
+
+def _fs_checkpoints(version: str = pyspark.__version__) -> str:
+    """Local mode's stream checkpoint manager class (module docstring)
+    on Spark ``version``: Spark 4.1 moved it into the ``checkpointing``
+    package."""
+    major, minor = (int(x) for x in version.split(".")[:2])
+    package = "org.apache.spark.sql.execution.streaming."
+    if (major, minor) >= (4, 1):
+        package += "checkpointing."
+    return package + "FileSystemBasedCheckpointFileManager"
 
 
 def _local_defaults() -> tuple[str, str]:
@@ -96,10 +102,7 @@ def get_session(
     lineage cut from executor-local blocks to that reliable storage
     (``_materialize.materialize``), so a cut survives executor loss.
     Local mode writes stream checkpoints through Spark's FileSystem-based
-    checkpoint manager: without native Hadoop, the FileContext default
-    forks a ``readlink``/``chmod`` process per checkpoint file. A
-    non-local master keeps that default, whose overwrite-rename is
-    atomic on HDFS (module docstring).
+    checkpoint manager (module docstring).
     """
     cpus, driver_memory = _local_defaults()
     if master is None:
@@ -112,7 +115,7 @@ def get_session(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
         conf["spark.driver.memory"] = driver_memory
-        conf["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINTS
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = _fs_checkpoints()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -14,17 +14,19 @@ is also the replay/backfill story at scale.
 
 :func:`run_available_now` keeps its checkpoint where the lineage cuts of
 ``_materialize.materialize`` go: under the SparkContext's checkpoint dir
-when one is set (``spark.checkpoint.dir``), else in a local temp dir.
+when one is set (``spark.checkpoint.dir``), else in the local temp dir.
 On a multi-host cluster the executors write the state store's delta
 files under that checkpoint, so a partition that moves to another
 executor can load its state only from shared storage. Either way the
-checkpoint is deleted when the run ends.
+checkpoint is deleted when the run ends. The incremental dedup
+(``dedup_stream``) is the exception: its state is a directory on the
+driver's local disk, whose parts it renames with ``os``, so its callers
+keep their stream checkpoint beside that state.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 from typing import Sequence
@@ -265,11 +267,11 @@ def run_available_now(
 def _run_checkpoint(spark: SparkSession, prefix: str):
     """``(location, remove)`` of a fresh checkpoint for one run (module
     docstring): under the SparkContext's checkpoint dir when it has one,
-    removed through the Hadoop FileSystem API, else a local temp dir."""
-    root = spark.sparkContext.getCheckpointDir()
-    if root is None:
-        ckpt = tempfile.mkdtemp(prefix=prefix)
-        return ckpt, lambda: shutil.rmtree(ckpt, ignore_errors=True)
+    else under the local temp dir; removed through the Hadoop FileSystem
+    API."""
+    root = spark.sparkContext.getCheckpointDir() or (
+        "file:" + tempfile.gettempdir()
+    )
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(root, prefix + uuid.uuid4().hex[:8])
     fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())

@@ -4,6 +4,7 @@ stream checkpoints through the FileSystem-based checkpoint manager."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 from hybridbackend_spark import session
@@ -30,13 +31,24 @@ def test_local_driver_memory_is_half_the_host_capped(monkeypatch):
 
 def test_local_stream_checkpoints_use_the_filesystem_manager(spark, tmp_path):
     jvm = spark._jvm
-    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
-    got = manager.CheckpointFileManager.create(
+    want = session._fs_checkpoints(spark.version)
+    package = functools.reduce(getattr, want.split(".")[:-1], jvm)
+    got = package.CheckpointFileManager.create(
         jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}"),
         spark._jsparkSession.sessionState().newHadoopConf(),
     )
-    assert got.getClass().getName() == session._FS_CHECKPOINTS
+    assert got.getClass().getName() == want
+    assert session._fs_checkpoints() == want
     # cluster sessions keep Spark's FileContext default
     assert "spark.sql.streaming.checkpointFileManagerClass" not in (
         session.cluster_conf(64)
     )
+
+
+def test_filesystem_manager_class_follows_the_spark_version():
+    old = "org.apache.spark.sql.execution.streaming."
+    name = "FileSystemBasedCheckpointFileManager"
+    assert session._fs_checkpoints("3.5.1") == old + name
+    assert session._fs_checkpoints("4.0.0") == old + name
+    assert session._fs_checkpoints("4.1.2") == old + "checkpointing." + name
+    assert session._fs_checkpoints("4.2.0.dev0") == old + "checkpointing." + name
