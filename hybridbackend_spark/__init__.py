@@ -35,7 +35,6 @@ from .schema import (
     SchemaMismatchError,
     fields_to_struct,
     infer_fields,
-    struct_to_fields,
     validate_files,
 )
 from .session import get_session
@@ -66,7 +65,6 @@ __all__ = [
     "Field",
     "SchemaMismatchError",
     "fields_to_struct",
-    "struct_to_fields",
     "infer_fields",
     "validate_files",
     "get_session",

@@ -31,7 +31,18 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from .._fixed import CENTS, MICRO, grid, grid_moments, ungrid
 from .._materialize import materialize
 from .structural import _range_prefix
-from .text import _c, spread_small_scan, tokens, word_shingles
+from .text import (
+    _bigram_pairs,
+    _c,
+    _in_order,
+    _let,
+    _lines,
+    _ngrams,
+    _widths,
+    spread_small_scan,
+    tokens,
+    word_shingles,
+)
 
 __all__ = [
     "hash_bucket",
@@ -56,7 +67,6 @@ __all__ = [
     "dsir_importance",
     "hashed_linear_classifier",
     "distinct_ngram_diversity",
-    "word_shingles_list",
     "token_budget_mix",
     "ipf_rake_weights",
     "slice_overlap_matrix",
@@ -117,39 +127,22 @@ def repetition_signals(
     word ratio, top-word fraction, duplicate-bigram fraction. High
     repetition marks boilerplate/spam for corpus filtering.
 
-    One explode of tagged grams -> count per (doc, kind, gram) ->
-    aggregate per doc. Both aggregations partial-combine map-side.
-
-    The token array is LET-BOUND (outer transform over a one-element
-    array, same trick as ``text.word_shingles``): lambda closures
-    re-evaluate embedded expressions per element, so referencing
-    ``tokens(col)`` directly inside the bigram lambda would re-run the
-    regex split once per bigram — measured ~6x slower on this query.
+    One explode of tagged words and :func:`text._ngrams` bigrams (over
+    the :func:`text._let`-bound token array) -> count per (doc, kind,
+    gram) -> aggregate per doc. Both aggregations partial-combine
+    map-side.
     """
-    empty = F.array().cast("array<struct<kind:int,g:string>>")
-    tagged = F.element_at(
-        F.transform(
-            F.array(tokens(_c(text_col))),
-            lambda ws: F.concat(
-                F.transform(
-                    ws, lambda w: F.struct(F.lit(1).alias("kind"), w.alias("g"))
-                ),
-                F.when(F.size(ws) < 2, empty).otherwise(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(ws) - 2),
-                        lambda i: F.struct(
-                            F.lit(2).alias("kind"),
-                            F.concat_ws(
-                                " ",
-                                F.element_at(ws, i + 1),
-                                F.element_at(ws, i + 2),
-                            ).alias("g"),
-                        ),
-                    )
-                ),
+    tagged = _let(
+        tokens(_c(text_col)),
+        lambda ws: F.concat(
+            F.transform(
+                ws, lambda w: F.struct(F.lit(1).alias("kind"), w.alias("g"))
+            ),
+            F.transform(
+                _ngrams(ws, 2),
+                lambda g: F.struct(F.lit(2).alias("kind"), g.alias("g")),
             ),
         ),
-        1,
     )
     grams = df.select(F.col(id_col), F.explode(tagged).alias("t")).select(
         id_col, F.col("t.kind").alias("kind"), F.col("t.g").alias("g")
@@ -238,6 +231,7 @@ def chunk_documents(
 
     Pure per-row array expressions + one explode: no shuffle.
     """
+    _widths(chunk_tokens=chunk_tokens, stride=stride)
     toks = tokens(_c(text_col))
     bound = df.withColumn("_toks", toks).filter(F.size("_toks") > 0)
     starts = F.sequence(F.lit(0), F.size("_toks") - 1, F.lit(stride))
@@ -379,23 +373,7 @@ def line_dedup(
     one struct per DISTINCT line per map partition, not the corpus; (2)
     group by doc id to reassemble. No windows, no driver data.
     """
-    toks = tokens(_c(text_col))
-    bound = df.withColumn("_toks", toks).filter(F.size("_toks") > 0)
-    starts = F.sequence(F.lit(0), F.size("_toks") - 1, F.lit(line_tokens))
-    n_lines = F.expr(f"(size(_toks) + {line_tokens - 1}) div {line_tokens}")
-    lines = bound.select(
-        F.col(id_col),
-        n_lines.cast("long").alias("_n_lines"),
-        F.explode(starts).alias("_start"),
-        "_toks",
-    ).select(
-        id_col,
-        "_n_lines",
-        F.expr(f"_start div {line_tokens}").alias("_pos"),
-        F.array_join(
-            F.slice(F.col("_toks"), F.col("_start") + 1, line_tokens), " "
-        ).alias("_line"),
-    )
+    _, lines = _lines(df, id_col, text_col, line_tokens)
     winners = lines.groupBy("_line").agg(
         F.min(F.struct(id_col, "_pos", "_n_lines")).alias("_w")
     )
@@ -408,13 +386,7 @@ def line_dedup(
     return kept.groupBy(id_col).agg(
         F.max("_n_lines").alias("n_lines"),
         F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
-                lambda s: s["_line"],
-            ),
-            " ",
-        ).alias("dedup_text"),
+        F.array_join(_in_order("_pos", "_line"), " ").alias("dedup_text"),
     )
 
 
@@ -554,10 +526,7 @@ def vocab_encode(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_toks"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_id"))),
-                lambda s: s["_id"],
-            ).alias("token_ids"),
+            _in_order("_pos", "_id").alias("token_ids"),
         )
     )
 
@@ -692,23 +661,7 @@ def boilerplate_prune(
     boilerplate survive with empty text, so downstream length filters
     see them.
     """
-    toks = tokens(_c(text_col))
-    bound = df.withColumn("_toks", toks).filter(F.size("_toks") > 0)
-    starts = F.sequence(F.lit(0), F.size("_toks") - 1, F.lit(line_tokens))
-    n_lines = F.expr(f"(size(_toks) + {line_tokens - 1}) div {line_tokens}")
-    lines = bound.select(
-        F.col(id_col),
-        n_lines.cast("long").alias("_n_lines"),
-        F.explode(starts).alias("_start"),
-        "_toks",
-    ).select(
-        id_col,
-        "_n_lines",
-        F.expr(f"_start div {line_tokens}").alias("_pos"),
-        F.array_join(
-            F.slice(F.col("_toks"), F.col("_start") + 1, line_tokens), " "
-        ).alias("_line"),
-    )
+    docs, lines = _lines(df, id_col, text_col, line_tokens)
     # document frequency per line (distinct docs, two partial-agg rounds)
     df_counts = (
         lines.select(id_col, "_line")
@@ -722,17 +675,12 @@ def boilerplate_prune(
         .select(id_col, "_n_lines", "_pos", "_line")
     )
     return (
-        bound.select(id_col, n_lines.cast("long").alias("_n_lines"))
-        .join(
+        docs.join(
             kept.groupBy(id_col).agg(
                 F.count(F.lit(1)).alias("n_kept"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
-                        lambda s: s["_line"],
-                    ),
-                    " ",
-                ).alias("pruned_text"),
+                F.array_join(_in_order("_pos", "_line"), " ").alias(
+                    "pruned_text"
+                ),
             ),
             id_col,
             "left",
@@ -769,19 +717,9 @@ def bigram_surprisal(
 
     Returns (id, n_pairs, avg_bits).
     """
-    toks = tokens(_c(text_col))
-    pairs = df.select(
-        F.col(id_col),
-        F.explode(
-            F.zip_with(
-                F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("_p"),
-    ).select(id_col, F.col("_p.w1").alias("_w1"), F.col("_p.w2").alias("_w2"))
+    pairs = _bigram_pairs(df, text_col, id_col)
     uni = (
-        df.select(F.explode(toks).alias("_w1"))
+        df.select(F.explode(tokens(_c(text_col))).alias("_w1"))
         .groupBy("_w1")
         .agg(F.count(F.lit(1)).alias("_n1"))
     )
@@ -827,6 +765,7 @@ def substring_dedup(
     Returns (id, n_tokens, n_masked, dedup_text).
     """
     k = window_tokens
+    _widths(window_tokens=k)
     toks = tokens(_c(text_col))
     # Tokenize ONCE: `base` feeds three consumers (token rows, window
     # texts, the final length readout), so without a cut the tokenize
@@ -844,14 +783,9 @@ def substring_dedup(
     tok_rows = base.select(
         F.col(id_col), F.posexplode("_toks").alias("_pos", "_tok")
     )
-    windows = base.filter(F.size("_toks") >= k).select(
+    windows = base.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("_toks") - k + 1),
-                lambda i: F.array_join(F.slice(F.col("_toks"), i, k), " "),
-            )
-        ).alias("_pos", "_win"),
+        F.posexplode(_ngrams(F.col("_toks"), k)).alias("_pos", "_win"),
     )
     first = windows.groupBy("_win").agg(
         F.min(F.struct(id_col, "_pos")).alias("_first"),
@@ -874,13 +808,7 @@ def substring_dedup(
     kept = tok_rows.join(mask, [id_col, "_pos"], "left_anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_tok"))),
-                lambda s: s["_tok"],
-            ),
-            " ",
-        ).alias("dedup_text"),
+        F.array_join(_in_order("_pos", "_tok"), " ").alias("dedup_text"),
     )
     return (
         base.select(id_col, F.size("_toks").cast("long").alias("n_tokens"))
@@ -1062,21 +990,6 @@ def neyman_sample(
         .filter(F.col("_rn") <= F.col("_quota"))
         .drop("_rn", "_quota")
     )
-
-
-def _bigram_pairs(df: DataFrame, text_col: str) -> DataFrame:
-    """Exploded adjacent token pairs (_w1, _w2) — shared by the bigram
-    LM family (surprisal / PMI / Kneser-Ney)."""
-    toks = tokens(_c(text_col))
-    return df.select(
-        F.explode(
-            F.zip_with(
-                F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("_p")
-    ).select(F.col("_p.w1").alias("_w1"), F.col("_p.w2").alias("_w2"))
 
 
 def pmi_bigrams(
@@ -1363,7 +1276,7 @@ def distinct_ngram_diversity(
         F.countDistinct("_t").alias("n_types"),
     )
     grams = toked.select(
-        "_g", F.explode(word_shingles_list(F.col("_toks"), n)).alias("_gr")
+        "_g", F.explode(_ngrams(F.col("_toks"), n)).alias("_gr")
     )
     gram_stats = grams.groupBy("_g").agg(
         F.count(F.lit(1)).alias("n_grams"),
@@ -1395,22 +1308,6 @@ def distinct_ngram_diversity(
             ),
         ).alias("distinct_n"),
     )
-
-
-def word_shingles_list(toks: Column, n: int) -> Column:
-    """Word n-grams from an ALREADY-TOKENIZED array column (space-joined
-    strings); [] when fewer than n tokens. Shared by
-    :func:`distinct_ngram_diversity` and callers that tokenize once for
-    several consumers."""
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(-1)))
-    return F.when(F.size(toks) >= n,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def token_budget_mix(
@@ -1878,6 +1775,8 @@ def decontaminate_spans(
     the broadcast join; covered-token counting explodes only HIT
     windows (n rows per hit). No corpus shuffle before the match
     filter, no pairwise stage.
+    Both sides' grams are :func:`text._ngrams` (the eval side through
+    ``word_shingles``), so the join matches on one spelling.
 
     Returns per corpus doc: (id, n_tokens, n_gram_hits,
     n_tokens_covered, frac_covered) — every corpus doc reported,
@@ -1897,9 +1796,7 @@ def decontaminate_spans(
     )
     posgrams = toked.select(
         "_id",
-        F.posexplode(word_shingles_list(F.col("_toks"), n)).alias(
-            "_p", "_g"
-        ),
+        F.posexplode(_ngrams(F.col("_toks"), n)).alias("_p", "_g"),
     )
     hits = posgrams.join(F.broadcast(ev_grams), "_g").select("_id", "_p")
     cov = (

@@ -17,7 +17,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "partition_by_modulo",
-    "partition_by_hash",
     "partition_by_dual_modulo_keys",
     "partition_sizes",
     "key_skew_report",
@@ -33,12 +32,6 @@ def partition_by_modulo(df: DataFrame, key: str, num_partitions: int) -> DataFra
     with key % n == i), so a following per-partition op sees the same
     grouping."""
     return df.repartition(num_partitions, F.pmod(F.col(key), F.lit(num_partitions)))
-
-
-def partition_by_hash(df: DataFrame, num_partitions: int, *keys: str) -> DataFrame:
-    """General hash exchange on arbitrary key columns (murmur-based; the
-    reference's GPU murmur3 analog)."""
-    return df.repartition(num_partitions, *[F.col(k) for k in keys])
 
 
 def partition_by_dual_modulo_keys(

@@ -30,7 +30,6 @@ __all__ = [
     "dot",
     "l2_norm",
     "cosine",
-    "normalize_vec",
     "random_hyperplane_key",
     "cosine_topk",
     "cosine_topk_lsh",
@@ -88,14 +87,6 @@ def _cos6(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """The score every cosine top-k and near-dup verify emits:
     :func:`_cos` rounded to 6 dp."""
     return F.round(_cos(a, b, na, nb), 6)
-
-
-def normalize_vec(a: Column) -> Column:
-    """L2-normalize (pre-normalizing the corpus once turns cosine top-k
-    into dot top-k — do this before repeated queries). A zero vector
-    normalizes to itself (ANSI-safe; no defined direction exists)."""
-    n = l2_norm(a)
-    return F.transform(a, lambda x: F.when(n != 0, x / n).otherwise(x * 0.0))
 
 
 def _as_double_vec(col: Column | str) -> Column:

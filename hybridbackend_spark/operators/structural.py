@@ -35,7 +35,6 @@ __all__ = [
     "arrow_training_feed",
     "unbatch",
     "validate_fixed_shape",
-    "assert_fixed_shape",
     "changelog_compact",
     "merge_partial_aggregates",
     "incremental_join_update",
@@ -315,13 +314,6 @@ def validate_fixed_shape(df: DataFrame, col: str, k: int) -> DataFrame:
     ``size(col) == k`` (reference shape validation,
     ``tensorflow/common/arrow.cc:138-184``)."""
     return df.filter(F.size(F.col(col)) != k)
-
-
-def assert_fixed_shape(df: DataFrame, col: str, k: int) -> None:
-    """Raise if any row violates ``size(col) == k``."""
-    bad = validate_fixed_shape(df, col, k).limit(1).count()
-    if bad:
-        raise ValueError(f"column {col!r} violates fixed shape [{k}]")
 
 
 def block_dedup_encode(

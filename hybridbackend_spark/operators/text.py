@@ -6,11 +6,18 @@ per-row Python UDF here would dominate the pipeline, so none are used.
 Driver north-star ops (not in the reference, which handles only tabular
 features); the shapes follow standard LLM-corpus curation practice
 (C4/Gopher-style quality signals).
+
+Every operator here and in corpus.py that cuts a token array into
+windows goes through one private kernel: ``_let`` (evaluate the token
+array once), ``_ngrams`` (the one word n-gram spelling),
+``_bigram_pairs``, ``_lines`` (the fixed-width line cut) and
+``_in_order`` (rebuild a document from positioned pieces). Window sizes
+below 1 raise on the driver (``_widths``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .._materialize import materialize
 
@@ -94,30 +101,101 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(pieces) + punct
 
 
+def _widths(**sizes: int) -> None:
+    """Raise on the driver for a token-window size below 1: a zero or
+    negative width otherwise yields the empty gram for every document,
+    blanks documents, or dies in a task (``sequence`` step 0, a zero
+    divisor)."""
+    for name, size in sizes.items():
+        if size < 1:
+            raise ValueError(f"{name} must be >= 1, got {size}")
+
+
+def _let(col: Column, fn) -> Column:
+    """``fn(col)`` with ``col`` evaluated once per row.
+
+    Closures inside ``transform`` re-evaluate embedded expressions per
+    element, so a ``tokens(col)`` referenced inside a per-gram lambda
+    re-runs the regex split once per gram — measured at ~1000x slower
+    for :func:`word_shingles` and ~6x for ``repetition_signals``. A
+    bound lambda variable is evaluated once, so ``col`` is bound as one:
+    ``fn`` runs inside a transform over the one-element array
+    ``[col]``."""
+    return F.element_at(F.transform(F.array(col), fn), 1)
+
+
+def _ngrams(toks: Column, n: int, distinct: bool = False) -> Column:
+    """The space-joined word ``n``-grams of the token array ``toks`` in
+    start order, with repeats unless ``distinct`` (``[]`` when there are
+    fewer than ``n`` tokens). The one gram spelling: grams built on two
+    sides of a join (``corpus.decontaminate_spans``) match because both
+    come from here. ``toks`` is referenced per gram, so pass a column
+    or a :func:`_let` variable, never an expression."""
+    _widths(n=n)
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+    )
+    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
+        F.array_distinct(grams) if distinct else grams
+    )
+
+
+def _bigram_pairs(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    """One row per adjacent token pair ``(_w1, _w2)`` of ``text_col``,
+    after the ``keep`` columns — the event stream of the bigram family
+    (surprisal, PMI, Kneser-Ney, TextRank)."""
+    toks = tokens(_c(text_col))
+    pairs = F.zip_with(
+        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
+        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+    return df.select(*keep, F.explode(pairs).alias("_p")).select(
+        *keep, F.col("_p.w1").alias("_w1"), F.col("_p.w2").alias("_w2")
+    )
+
+
+def _lines(
+    df: DataFrame, id_col: str, text_col: str, line_tokens: int
+) -> tuple[DataFrame, DataFrame]:
+    """Cut every non-empty document into consecutive ``line_tokens``-token
+    "lines" (the last may be short). Returns ``(docs, lines)``: ``docs``
+    is (id, _n_lines) per document, ``lines`` is (id, _n_lines, _pos,
+    _line) with ``_pos`` the 0-based line index."""
+    _widths(line_tokens=line_tokens)
+    bound = df.withColumn("_toks", tokens(_c(text_col))).filter(
+        F.size("_toks") > 0
+    )
+    starts = F.sequence(F.lit(0), F.size("_toks") - 1, F.lit(line_tokens))
+    n_lines = F.expr(
+        f"(size(_toks) + {line_tokens - 1}) div {line_tokens}"
+    ).cast("long").alias("_n_lines")
+    lines = bound.select(
+        F.col(id_col), n_lines, F.explode(starts).alias("_start"), "_toks"
+    ).select(
+        id_col,
+        "_n_lines",
+        F.expr(f"_start div {line_tokens}").alias("_pos"),
+        F.array_join(
+            F.slice(F.col("_toks"), F.col("_start") + 1, line_tokens), " "
+        ).alias("_line"),
+    )
+    return bound.select(id_col, n_lines), lines
+
+
+def _in_order(pos: str, val: str) -> Column:
+    """Aggregate: the group's ``val`` values ordered by ``pos`` — how a
+    document is rebuilt from its exploded pieces."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(pos, val))), lambda s: s[val]
+    )
+
+
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-grams (shingles) — the unit set for Jaccard/MinHash
-    dedup. Expression-only: slice the token array at each start position.
-
-    The token array is LET-BOUND as a lambda variable (outer transform over
-    a single-element array): closures inside ``transform`` re-evaluate
-    embedded expressions per element, so referencing ``tokens(col)``
-    directly would re-run the regex split once per shingle — measured at
-    ~1000x slowdown. Bound lambda variables are evaluated once.
-    """
-    bound = F.transform(
-        F.array(tokens(col)),
-        lambda toks: F.when(
-            F.size(toks) < n, F.array().cast("array<string>")
-        ).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - n),
-                    lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-                )
-            )
-        ),
-    )
-    return F.element_at(bound, 1)
+    dedup: :func:`_ngrams` of the :func:`_let`-bound token array."""
+    return _let(tokens(col), lambda toks: _ngrams(toks, n, distinct=True))
 
 
 def char_shingles(col: Column | str, n: int = 5) -> Column:
@@ -133,23 +211,12 @@ def char_shingles(col: Column | str, n: int = 5) -> Column:
 
 def ngram_repetition(col: Column | str, n: int = 3) -> dict[str, Column]:
     """Intra-document repetition signals: total and distinct word
-    n-gram counts (NON-distinct shingling, unlike :func:`word_shingles`)
-    — the Gopher-rule "fraction of duplicate n-grams" quality filter
-    for LLM corpus curation. Expression-only (same let-binding trick as
-    word_shingles); the duplicate fraction is the single division
-    (total - distinct) / total, exact cross-engine."""
-    bound = F.transform(
-        F.array(tokens(col)),
-        lambda toks: F.when(
-            F.size(toks) < n, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            )
-        ),
-    )
-    grams = F.element_at(bound, 1)
+    n-gram counts (NON-distinct :func:`_ngrams`, unlike
+    :func:`word_shingles`) — the Gopher-rule "fraction of duplicate
+    n-grams" quality filter for LLM corpus curation. The duplicate
+    fraction is the single division (total - distinct) / total, exact
+    cross-engine."""
+    grams = _let(tokens(col), lambda toks: _ngrams(toks, n))
     return {
         f"ngram{n}_total": F.size(grams).cast("long"),
         f"ngram{n}_distinct": F.size(F.array_distinct(grams)).cast("long"),

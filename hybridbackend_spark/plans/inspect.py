@@ -90,12 +90,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _scan_lines(df: DataFrame) -> list[str]:
-    return [
-        ln for ln in physical_plan(df).splitlines() if "FileScan" in ln or "Scan " in ln
-    ]
-
-
 def scan_read_schema(df: DataFrame) -> list[str]:
     """Column names appearing in the scan's ReadSchema (what is actually
     read off disk after pruning)."""

@@ -12232,8 +12232,8 @@ def intra_doc_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard LLM-corpus quality rule for boilerplate/spam ("fraction of
     characters in duplicate n-grams", Rae et al. 2021 §A1.1), here in
     exact integers with a single-division fraction. Expression-only
-    shingling (let-bound token array, no explode, no shuffle); the scan
-    is the whole cost at 100 TB."""
+    shingling (the token array bound once by operators/text.py::_let,
+    no explode, no shuffle); the scan is the whole cost at 100 TB."""
     from .operators.text import ngram_repetition, token_count
 
     docs = _t(spark, sf_dir, "documents")
@@ -14913,9 +14913,8 @@ def textrank_keywords_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency filter, and the graph kernel are the same primitives as
     pmi_bigrams and pagerank_customer_supplier. Graph size is bounded
     by the frequent vocabulary, never corpus bytes."""
-    from .operators.corpus import _bigram_pairs
     from .operators.graph import pagerank
-    from .operators.text import spread_small_scan, tokens as _tokens
+    from .operators.text import _bigram_pairs, spread_small_scan, tokens as _tokens
 
     # spread the single-file corpus before the two tokenize passes
     # (vocab counts + bigram stream) so they parallelize; partitioning

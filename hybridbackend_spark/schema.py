@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 __all__ = [
     "Field",
     "fields_to_struct",
-    "struct_to_fields",
     "infer_fields",
     "validate_files",
     "SchemaMismatchError",
@@ -103,28 +102,6 @@ def fields_to_struct(fields: Sequence[Field], nullable: bool = True) -> T.Struct
     if len(set(names)) != len(names):
         raise SchemaMismatchError(f"duplicate field names in {names}")
     return T.StructType([f.to_struct_field(nullable) for f in fields])
-
-
-def _spark_type_to_parts(dt: T.DataType) -> tuple[str, int]:
-    """Return (dtype_name, ragged_rank) for a Spark type."""
-    rank = 0
-    while isinstance(dt, T.ArrayType):
-        rank += 1
-        dt = dt.elementType
-    for name, st in _DTYPE_TO_SPARK.items():
-        if st == dt:
-            return name, rank
-    if isinstance(dt, T.DecimalType):
-        return "uint64", rank
-    raise ValueError(f"unsupported Spark type {dt}")
-
-
-def struct_to_fields(schema: T.StructType) -> list[Field]:
-    out = []
-    for sf in schema.fields:
-        dtype, rank = _spark_type_to_parts(sf.dataType)
-        out.append(Field(sf.name, dtype, ragged_rank=rank))
-    return out
 
 
 def infer_fields(path: str) -> list[Field]:

@@ -1,11 +1,11 @@
 """Per-stage profiler for registered queries (optimization rounds).
 
-Runs each named query with the noop sink (guide §1.4) on a UI-enabled
-session, then reads the Spark UI REST API for the stages executed by
-that query: wall time, task count, shuffle read/write bytes, input
-bytes, spill. Prints a per-query stage table plus the exchange count
-from the formatted plan, and optionally writes the formatted plan to a
-file (for plans/r12/<q>_before.txt / _after.txt).
+Runs each named query with the noop sink (guide §1.4), then reads the
+jobs and stages of its timed reps from Spark's status store through
+``perfbench/tracing.py``'s ``SparkCounters``, which stays live with the
+UI off: wall time, task count, shuffle read/write bytes, input bytes,
+spill. Prints a per-query stage table, and optionally writes the
+formatted plan to a file (for plans/r12/<q>_before.txt / _after.txt).
 
 Usage:
   python tools/profile_query.py [--plans-dir DIR] [--suffix before] \
@@ -18,21 +18,14 @@ bench.py remains the only source of recorded before/after seconds.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
-import urllib.request
+
+from py4j.protocol import Py4JJavaError
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def _api(port: int, path: str):
-    with urllib.request.urlopen(
-        f"http://localhost:{port}/api/v1/{path}", timeout=10
-    ) as r:
-        return json.load(r)
 
 
 def main() -> None:
@@ -49,18 +42,13 @@ def main() -> None:
 
     from hybridbackend_spark.queries import get_queries
     from hybridbackend_spark.session import get_session
+    from perfbench.tracing import SparkCounters
 
     spark = get_session(
-        "profile",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.showConsoleProgress": "false",
-        },
+        "profile", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
-    app_id = spark.sparkContext.applicationId
     queries = get_queries()
-    sc = spark.sparkContext
+    counters = SparkCounters(spark)
 
     for name in args.queries:
         fn = queries[name]
@@ -80,25 +68,22 @@ def main() -> None:
             ) as f:
                 f.write(plan)
 
-        # timed reps under a job group so stages are attributable
-        jobs_before = {j["jobId"] for j in _api(port, f"applications/{app_id}/jobs")}
+        # timed reps: the jobs since the warm-up are theirs
+        counters.drain()
+        counters.new_jobs()
         best = None
         for i in range(args.reps):
-            sc.setJobGroup(f"prof-{name}", name)
             t0 = time.perf_counter()
             fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            sc.setJobGroup(None, None)
             best = dt if best is None or dt < best else best
 
-        jobs = [
-            j
-            for j in _api(port, f"applications/{app_id}/jobs")
-            if j["jobId"] not in jobs_before and j.get("jobGroup") == f"prof-{name}"
-        ]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        stages = _api(port, f"applications/{app_id}/stages?status=complete")
-        smap = {s["stageId"]: s for s in stages}
+        counters.drain()
+        jobs = counters.new_jobs()
+        stage_ids = sorted(
+            {int(j.stageIds().apply(i)) for j in jobs
+             for i in range(j.stageIds().size())}
+        )
         n_reps_jobs = len(jobs)
         print(f"\n=== {name}: best wall {best:.3f}s over {args.reps} reps, "
               f"{n_reps_jobs} jobs, {len(stage_ids)} stages (all reps) ===")
@@ -106,20 +91,22 @@ def main() -> None:
               f"{'shR_MB':>8} {'shW_MB':>8} {'spill_MB':>9}  name")
         rows = []
         for sid in stage_ids:
-            s = smap.get(sid)
-            if not s:
+            try:
+                s = counters.store.lastStageAttempt(sid)
+            except Py4JJavaError:  # stage evicted or never attempted
                 continue
-            wall = (s.get("executorRunTime") or 0) / 1000.0
+            if str(s.status().toString()) != "COMPLETE":
+                continue
             rows.append(
                 (
                     sid,
-                    wall,
-                    s.get("numCompleteTasks", 0),
-                    (s.get("inputBytes") or 0) / 1e6,
-                    (s.get("shuffleReadBytes") or 0) / 1e6,
-                    (s.get("shuffleWriteBytes") or 0) / 1e6,
-                    (s.get("diskBytesSpilled") or 0) / 1e6,
-                    (s.get("name") or "")[:70],
+                    s.executorRunTime() / 1000.0,
+                    s.numCompleteTasks(),
+                    s.inputBytes() / 1e6,
+                    s.shuffleReadBytes() / 1e6,
+                    s.shuffleWriteBytes() / 1e6,
+                    s.diskBytesSpilled() / 1e6,
+                    (s.name() or "")[:70],
                 )
             )
         rows.sort(key=lambda r: -r[1])
