@@ -16,8 +16,8 @@ dgemm and the three statistics come out of the same scan.)
 
 The eigendecomposition runs on the driver over the d x d matrix (bounded
 by dimension, not data — 64x64 here), like every distributed PCA does;
-the resulting eigenvectors are broadcast back as array literals and the
-projection is an expression-level dot product (zero shuffle).
+the resulting eigenvectors are broadcast back as one array literal and
+the projection is an expression-level dot product (zero shuffle).
 
 Determinism: input floats are quantized to an integer grid (exact
 DECIMAL sums, any partitioning/order), and eigenvector signs are
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .._fixed import DYADIC, grid, spark_round
 from .._materialize import materialize
+from .similarity import _as_double_vec, _consts, _fit, dot
 
 __all__ = ["covariance_matrix", "pca_project", "power_pca_project"]
 
@@ -219,10 +220,10 @@ def pca_project(
 
     Covariance via :func:`covariance_matrix` (exact, distributed),
     eigendecomposition on the driver (d x d, bounded by dimension),
-    sign-canonicalized eigenvectors broadcast as literals, projection
+    sign-canonicalized eigenvectors broadcast as one literal, projection
     as an expression dot product — no shuffle, no Python in the row
     path. Appends ``out_col`` (array<double> length k) and keeps all
-    input columns.
+    input columns. A non-NULL vector must be ``dim`` long.
 
     ``dim`` is capped at 512 here (tighter than covariance_matrix's own
     bound): this function collects dim^2 covariance cells on the driver
@@ -249,22 +250,9 @@ def pca_project(
             v = -v
         comps.append([float(x) for x in v])
 
-    x = F.col(vec_col)
-    projections = [
-        F.aggregate(
-            F.zip_with(
-                x,
-                F.array(*[F.lit(c) for c in comp]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        for comp in comps
-    ]
-    return df.withColumn(
-        out_col, F.array(*[F.round(p, dp) for p in projections])
-    )
+    x = _as_double_vec(vec_col)
+    proj = F.transform(_consts(comps), lambda c: F.round(dot(x, c), dp))
+    return df.withColumn(out_col, _fit(x, dim, "pca_project", proj))
 
 
 def power_pca_project(
@@ -379,22 +367,19 @@ def power_pca_project(
         comps.append(_power(cur))
 
     # zero-shuffle projection: exact integer dot products as expressions
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("comp"),
-                F.aggregate(
-                    F.zip_with(
-                        F.col("_xq"),
-                        F.array(*[F.lit(x) for x in comps[c]]),
-                        lambda a, b: a * b.cast("long"),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, t: acc + t,
-                ).alias("p"),
-            )
-            for c in range(k)
-        ]
+    xq = F.col("_xq")
+    structs = F.transform(
+        _consts(comps),
+        lambda comp, c: F.struct(
+            c.alias("comp"),
+            F.aggregate(
+                F.zip_with(xq, comp, lambda a, b: a * b),
+                F.lit(0).cast("long"),
+                lambda acc, t: acc + t,
+            ).alias("p"),
+        ),
     )
     keep = [c for c in df.columns if c != vec_col]
-    return q.select(*keep, F.inline(structs))
+    return q.select(
+        *keep, F.inline(_fit(xq, dim, "power_pca_project", structs))
+    )

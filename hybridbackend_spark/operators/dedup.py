@@ -1009,7 +1009,7 @@ def cosine_near_dup_pairs(
                 )
             keyed = v.select(
                 F.col(id_col),
-                F.explode(_ivf_probe("`_v`", centroids, n_probe)).alias("_bkt"),
+                F.explode(_ivf_probe(F.col("_v"), centroids, n_probe)).alias("_bkt"),
             )
             keyed = _md5_shards(keyed, "_bkt", id_col, max_cell_rows)
         else:

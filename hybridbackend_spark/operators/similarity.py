@@ -14,12 +14,34 @@ The kernels every top-k here (and the vector near-dup operators in
   precomputed norms, and its 6-dp rounded score;
 - :func:`_topk_per_query`: the ``exclude_self`` filter, ``row_number``
   window over the query id and ``rnk <= k`` projection;
-- :func:`_ivf_probe`: the ``n_probe`` nearest-centroid probe list as one
-  parsed SQL expression;
+- :func:`_ivf_probe`: the ``n_probe`` nearest-centroid probe list;
 - :func:`_as_double_vec`: the ``array<double>`` cast prologue.
+
+Driver-side constant matrices — LSH hyperplanes, IVF/k-means centroids,
+PQ codebooks, k-center centers, and the PCA and JL projections of
+:mod:`.decomp` and :mod:`.text` — enter a plan through one kernel:
+
+- :func:`_consts` renders the nested list as ONE parsed SQL array
+  literal (doubles as ``CAST('<repr>' AS DOUBLE)``, which round-trips
+  them exactly; integers as BIGINT). Built per coefficient with
+  ``F.lit``, a k x d matrix costs k*d py4j round trips of driver time:
+  12-20 s of DataFrame construction per ``cosine_topk_lsh`` call at 6
+  tables x 6 bits x dim 64, against ~0.1 s for one parse;
+- each row folds over that literal with higher-order functions:
+  :func:`_sqdist` is the one squared-L2 fold and :func:`_nearest` the
+  one ``(d, i)`` struct array an argmin takes ``array_min`` of (ties to
+  the lower row) and a probe list sorts. A broadcast
+  ``array<array<double>>`` column (:func:`_sub_argmin`) folds the same
+  way, so a name and a Column input take the same single path;
+- :func:`_fit` is the one width guard: a non-NULL vector whose length
+  is not the matrix width raises on the executor, naming the operator
+  (zipped against the rows it would pad with NULLs and give a silently
+  wrong answer); a NULL vector passes to the fold unchanged.
 """
 
 from __future__ import annotations
+
+import numbers
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -94,6 +116,55 @@ def _as_double_vec(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def _consts(values: list) -> Column:
+    """The nested list ``values`` as one parsed array literal: floats as
+    ``CAST('<repr>' AS DOUBLE)``, integers as BIGINT."""
+
+    def sql(x) -> str:
+        if isinstance(x, (list, tuple)):
+            return f"array({', '.join(map(sql, x))})"
+        if isinstance(x, numbers.Integral):
+            return f"CAST({int(x)} AS BIGINT)"
+        return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+    return F.expr(sql(values))
+
+
+def _sqdist(v: Column, c: Column) -> Column:
+    """Squared L2 between two array<double> columns, a left fold from
+    0.0 — the same reduction tree as the oracles'
+    ``list_sum(list_transform(list_zip(...)))``, so distances are
+    bit-equal across engines."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _nearest(v: Column, rows: Column) -> Column:
+    """One ``(d, i)`` struct per row of the matrix ``rows``: its squared
+    distance to ``v`` and its 0-based index. ``array_min`` of it is the
+    argmin, ties to the lower index; ``array_sort`` ranks nearest
+    first."""
+    return F.transform(
+        rows, lambda c, i: F.struct(_sqdist(v, c).alias("d"), i.alias("i"))
+    )
+
+
+def _fit(v: Column, width: int, op: str, out: Column) -> Column:
+    """``out`` when the vector ``v`` is NULL or ``width`` long; any other
+    length raises on the executor, naming ``op``."""
+    return F.when(v.isNull() | (F.size(v) == width), out).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"{op}: expected dim={width}, got "),
+                F.size(v).cast("string"),
+            )
+        )
+    )
+
+
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
     """Deterministic pseudo-random unit hyperplanes (driver-side constants,
     folded into the plan as literals)."""
@@ -118,74 +189,18 @@ def random_hyperplane_key(
     ``dim`` must equal the vectors' length: raises at runtime on mismatch
     (a shorter/longer vector would zip to null dots and silently send
     everything to bucket 0, degenerating the scale path to all-pairs).
-
-    Round-12 optimization (guide §1.2 step 2 / §7.3 "planning time
-    itself can become the bottleneck"): when ``vec`` is a column NAME,
-    the whole key expression — ``bits`` plane dots of ``dim`` literal
-    coefficients each — is rendered as ONE SQL string and parsed with a
-    single ``F.expr`` call. The Column-builder form issued thousands of
-    py4j round trips (one per ``F.lit`` coefficient): measured 12-20 s
-    of driver-side DataFrame construction per ``cosine_topk_lsh`` call
-    at 6 tables x 6 bits x dim 64, vs ~0.1 s for the parsed form. The
-    parsed expression tree is the SAME tree (same aggregate/zip_with
-    fold, same literals via repr round-trip, same guards), so keys are
-    bit-identical — pinned by test_random_hyperplane_key_sql_parity.
-    Column inputs keep the original builder path.
+    A NULL vector gets a NULL key: the row can't hash anywhere, and
+    downstream equi-joins drop it, SQL-style.
     """
-    if isinstance(vec, str):
-        return F.expr(_hyperplane_key_sql(vec, bits, seed, dim))
     v = _as_double_vec(vec)
-    key = F.lit(0).cast("long")
-    for i, plane in enumerate(_hyperplanes(dim, bits, seed)):
-        p = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(dot(v, p) >= 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        key = key + bit
-    # NULL vector -> NULL key (the row can't hash anywhere; downstream
-    # equi-joins drop it, SQL-style) — it must NOT fall through to the
-    # raise, whose concat-with-NULL message would read as 'null'
-    return (
-        F.when(F.size(v) == dim, key)
-        .when(v.isNull(), F.lit(None).cast("long"))
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"random_hyperplane_key: expected dim={dim}, got "),
-                    F.size(v).cast("string"),
-                )
-            ).cast("long")
-        )
+    # Horner over the planes, last first: plane i's bit lands at 1 << i
+    planes = _consts(_hyperplanes(dim, bits, seed)[::-1])
+    key = F.aggregate(
+        planes,
+        F.lit(0).cast("long"),
+        lambda acc, p: acc * 2 + F.when(dot(v, p) >= 0, 1).otherwise(0),
     )
-
-
-def _hyperplane_key_sql(name: str, bits: int, seed: int, dim: int) -> str:
-    """SQL-string form of :func:`random_hyperplane_key` for a named
-    column — semantically the identical expression (same
-    ``aggregate(zip_with(...))`` left fold with the same 0.0 seed, same
-    double literals via repr round-trip through ``CAST(.. AS DOUBLE)``,
-    same size/NULL/raise guards), built in one driver call instead of
-    ~``bits * dim`` py4j round trips."""
-    v = f"transform(`{name}`, x -> CAST(x AS DOUBLE))"
-    dots = []
-    for i, plane in enumerate(_hyperplanes(dim, bits, seed)):
-        arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in plane)
-        d = (
-            f"aggregate(zip_with({v}, array({arr}), (x, y) -> x * y), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        dots.append(
-            f"(CASE WHEN {d} >= 0 THEN CAST({1 << i} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END)"
-        )
-    key = " + ".join(["CAST(0 AS BIGINT)"] + dots)
-    return (
-        f"CASE WHEN size({v}) = {dim} THEN ({key}) "
-        f"WHEN {v} IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE CAST(raise_error(concat("
-        f"'random_hyperplane_key: expected dim={dim}, got ', "
-        f"CAST(size({v}) AS STRING))) AS BIGINT) END"
-    )
+    return _fit(v, dim, "random_hyperplane_key", F.when(v.isNotNull(), key))
 
 
 def cosine_topk(
@@ -318,109 +333,35 @@ def cosine_topk_lsh(
     return _topk_per_query(scored, query_id, k, exclude_self)
 
 
-def _dvec_sql(name: str) -> str:
-    """SQL form of :func:`_as_double_vec` for a named column."""
-    return f"transform(`{name}`, x -> CAST(x AS DOUBLE))"
-
-
-def _sqdist_sql(vexpr: str, cent: list[float]) -> str:
-    """SQL form of the squared-L2 fold between a vector expression and a
-    literal centroid — the identical ``aggregate(zip_with(...))`` tree as
-    the Column-builder form (same 0.0 seed, doubles via repr round-trip
-    through ``CAST(.. AS DOUBLE)``, the change-1 convention), rendered as
-    a string so ``dim`` literals cost ZERO py4j round trips."""
-    arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in cent)
-    return (
-        f"aggregate(zip_with({vexpr}, array({arr}), "
-        "(a, b) -> (a - b) * (a - b)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-
-
-def _const_mat_sql(mat: list[list[float]]) -> str:
-    """A literal list-of-vectors as ONE SQL array-of-arrays expression
-    (repr round-trip doubles) — zero py4j round trips."""
-    return (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in row)
-            + ")"
-            for row in mat
-        )
-        + ")"
-    )
-
-
-def _argmin_pairs_sql(vexpr: str, centroids: list[list[float]]) -> str:
-    """SQL form of the (d, i) struct array the argmin assignments sort /
-    min over — bit-identical comparator to the Column-builder
-    ``F.struct(d, i)`` (field order d then i, i an INT literal)."""
-    pairs = ", ".join(
-        f"named_struct('d', {_sqdist_sql(vexpr, cent)}, 'i', {i})"
-        for i, cent in enumerate(centroids)
-    )
-    return f"array({pairs})"
-
-
-def _ivf_probe(vexpr: str, centroids: list[list[float]], n_probe: int) -> Column:
-    """Ids of the ``n_probe`` centroids nearest to the vector SQL
-    expression ``vexpr``, nearest first. Rendered as ONE parsed SQL
-    expression (the :func:`ivf_assign` argmin struct array, sorted and
-    sliced): the Column-builder form issued ~k*dim py4j round trips of
-    driver time."""
+def _ivf_probe(v: Column, centroids: list[list[float]], n_probe: int) -> Column:
+    """Ids of the ``n_probe`` centroids nearest to the array<double>
+    vector ``v``, nearest first (the :func:`ivf_assign` argmin structs,
+    sorted and sliced)."""
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    return F.expr(
-        "transform(slice(array_sort("
-        f"{_argmin_pairs_sql(vexpr, centroids)}"
-        f"), 1, {int(n_probe)}), s -> s.i)"
-    )
+    ranked = F.array_sort(_nearest(v, _consts(centroids)))
+    probes = F.transform(F.slice(ranked, 1, n_probe), lambda s: s["i"])
+    return _fit(v, len(centroids[0]), "ivf_probe", probes)
 
 
 def ivf_assign(
-    df: DataFrame, vec_col: str, centroids: list[list[float]], out_col: str = "ivf_cell"
+    df: DataFrame,
+    vec_col: Column | str,
+    centroids: list[list[float]],
+    out_col: str = "ivf_cell",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (IVF coarse quantizer).
     ``centroids`` are driver-side constants (train offline / sample);
-    assignment is a per-row argmin over literal arrays — no shuffle.
+    assignment is a per-row argmin over one literal matrix — no shuffle.
 
-    Round-12 session 4 (guide §7.3 planning time; the change-1 pattern):
-    for a named ``vec_col`` the whole k x dim argmin tree is rendered as
-    ONE SQL string parsed by a single ``F.expr`` — the Column-builder
-    form issued ~k*dim py4j round trips (one per ``F.lit`` coefficient),
-    which dominated the WALL time of the driver-bound IVF/PQ queries.
-    Identical expression tree (same fold, same repr-round-trip
-    literals), pinned bit-identical by
-    ``tests/test_dedup_similarity.py::test_ivf_pq_sql_parity``; Column
-    inputs keep the builder path."""
-    if isinstance(vec_col, str):
-        return df.withColumn(
-            out_col,
-            F.expr(
-                f"array_min({_argmin_pairs_sql(_dvec_sql(vec_col), centroids)}).i"
-            ),
-        )
+    A column name and a Column take the same path, the
+    :func:`_nearest` fold over the :func:`_consts` literal:
+    ``tests/test_dedup_similarity.py::test_ivf_pq_sql_parity`` pins the
+    two inputs to identical cells. A non-NULL vector of another width
+    than the centroids raises; a NULL vector lands in cell 0."""
     v = _as_double_vec(vec_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(x) for x in cent]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, cent in enumerate(centroids)
-        ]
-    )
-    best = F.array_min(pairs)
-    return df.withColumn(out_col, best["i"])
+    best = F.array_min(_nearest(v, _consts(centroids)))["i"]
+    return df.withColumn(out_col, _fit(v, len(centroids[0]), "ivf_assign", best))
 
 
 def cosine_topk_ivf(
@@ -458,9 +399,7 @@ def cosine_topk_ivf(
     q_probed = queries.select(
         F.col(query_id).alias("_qid"),
         v.alias("_qv"),
-        F.explode(
-            _ivf_probe(_dvec_sql(query_vec), centroids, n_probe)
-        ).alias("_cell"),
+        F.explode(_ivf_probe(v, centroids, n_probe)).alias("_cell"),
     )
     scored = c_assigned.join(F.broadcast(q_probed), "_cell").select(
         "_qid", "_cid", F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cos")
@@ -575,7 +514,8 @@ def kmeans_train(
     consume the result) instead of requiring offline centroids.
 
     Each iteration is one Spark round trip, all heavy work distributed:
-    assignment is a per-row argmin over centroid literals (zero shuffle),
+    assignment is :func:`ivf_assign`'s per-row argmin over one centroid
+    literal (zero shuffle),
     the update is posexplode -> groupBy(cell, dim) partial+final sums ->
     a driver collect bounded by k x dim rows (centroids must fit on the
     driver by definition). Empty cells keep their previous centroid.
@@ -639,33 +579,18 @@ def _sub_argmin(
     out_col: str = "_j",
 ) -> DataFrame:
     """Argmin over each row's coarse cell's sub-centroids, shipped as ONE
-    broadcast row per coarse cell holding an array<struct<j, cv>> — the
-    argmin is a higher-order-function fold per row, so the whole stage is
+    broadcast row per coarse cell holding an array<array<double>> — the
+    argmin is the :func:`_nearest` fold per row, so the whole stage is
     join-free-shuffle (broadcast) and produces zero extra rows. Rows in a
     coarse cell with no sub-centroids get ``out_col = 0``."""
-    spark = assigned.sparkSession
-    vv = _as_double_vec(vec_col)
     rows = [
-        (int(c1), [(j, [float(x) for x in cv]) for j, cv in enumerate(cvs)])
+        (int(c1), [[float(x) for x in cv] for cv in cvs])
         for c1, cvs in sub.items()
     ]
-    scdf = spark.createDataFrame(
-        rows, "_c1 int, _subs array<struct<j: int, cv: array<double>>>"
+    scdf = assigned.sparkSession.createDataFrame(
+        rows, "_c1 int, _subs array<array<double>>"
     )
-
-    def d2(s):
-        return F.aggregate(
-            F.zip_with(vv, s["cv"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    best = F.array_min(
-        F.transform(
-            F.col("_subs"),
-            lambda s: F.struct(d2(s).alias("d"), s["j"].alias("i")),
-        )
-    )
+    best = F.array_min(_nearest(_as_double_vec(vec_col), F.col("_subs")))
     return (
         assigned.join(F.broadcast(scdf), "_c1", "left")
         .withColumn(out_col, F.coalesce(best["i"], F.lit(0)))
@@ -682,12 +607,13 @@ def ivf_assign_tree(
 ) -> DataFrame:
     """Two-level IVF assignment for LARGE K — the K∝n growth path.
 
-    Flat :func:`ivf_assign` inlines every centroid as literals: O(n*K*d)
-    work (QUADRATIC once K scales with n) and a plan tree that stops
-    being practical long before K=800. This routes each vector through a
-    k1-way literal argmin (whole-stage codegen) to a coarse cell, then an
-    argmin over that cell's k2 sub-centroids shipped as a broadcast
-    array column — O(n*(k1+k2)*d) with k1 ~ k2 ~ sqrt(K), zero shuffle.
+    Flat :func:`ivf_assign` folds every row over all K centroids of its
+    plan literal: O(n*K*d) work (QUADRATIC once K scales with n) and a
+    K x d literal that stops being practical long before K=800. This
+    routes each vector through a k1-way argmin to a coarse cell, then
+    the same argmin fold over that cell's k2 sub-centroids shipped as a
+    broadcast array<array<double>> column — O(n*(k1+k2)*d) with k1 ~ k2
+    ~ sqrt(K), zero shuffle.
     The standard IVF answer to "more data needs more cells" (SemDeDup /
     FAISS coarse-quantizer practice, arXiv:2303.09540).
 
@@ -894,58 +820,27 @@ def pq_train(
     return books
 
 
-def _subspace_sqdist(v_sub: Column, cent: list[float]) -> Column:
-    """Sequential-fold squared L2 between a sliced subvector and a literal
-    centroid — the same reduction tree as DuckDB's
-    list_sum(list_transform(list_zip(...))), so distances are bit-equal
-    across engines."""
-    return F.aggregate(
-        F.zip_with(
-            v_sub,
-            F.array(*[F.lit(x) for x in cent]),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_encode(
     df: DataFrame,
-    vec_col: str,
+    vec_col: Column | str,
     codebooks: list[list[list[float]]],
     out_col: str = "pq_code",
 ) -> DataFrame:
     """Encode vectors to PQ codes: per subspace, argmin over the codebook
     (ties break to the lowest code). Pure projection — zero shuffle, zero
-    Python; the codebooks fold into the plan as literals. For a named
-    ``vec_col`` the whole m x k_sub x dsub code array is rendered as ONE
-    parsed SQL expression (round-12 session 4 — the builder form's
-    per-literal py4j round trips dominated the query's wall time);
-    Column inputs keep the builder path, parity pinned by test."""
-    m = len(codebooks)
+    Python; the codebooks fold into the plan as one literal. A non-NULL
+    vector must be ``m * dsub`` long."""
     dsub = len(codebooks[0][0])
-    if isinstance(vec_col, str):
-        dv = _dvec_sql(vec_col)
-        per_sub = []
-        for j, book in enumerate(codebooks):
-            sub = f"slice({dv}, {j * dsub + 1}, {dsub})"
-            per_sub.append(f"array_min({_argmin_pairs_sql(sub, book)}).i")
-        return df.withColumn(out_col, F.expr(f"array({', '.join(per_sub)})"))
     v = _as_double_vec(vec_col)
-    codes = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(v, j * dsub + 1, dsub)
-        pairs = F.array(
-            *[
-                F.struct(
-                    _subspace_sqdist(sub, cent).alias("d"), F.lit(c).alias("i")
-                )
-                for c, cent in enumerate(book)
-            ]
-        )
-        codes.append(F.array_min(pairs)["i"])
-    return df.withColumn(out_col, F.array(*codes))
+    codes = F.transform(
+        _consts(codebooks),
+        lambda book, j: F.array_min(
+            _nearest(F.slice(v, j * dsub + 1, dsub), book)
+        )["i"],
+    )
+    return df.withColumn(
+        out_col, _fit(v, len(codebooks) * dsub, "pq_encode", codes)
+    )
 
 
 def pq_decode(code_col: Column | str, codebooks: list[list[list[float]]]) -> Column:
@@ -953,14 +848,8 @@ def pq_decode(code_col: Column | str, codebooks: list[list[list[float]]]) -> Col
     codebook centroids) — the dequantizer, used by tests to bound
     reconstruction error."""
     c = F.col(code_col) if isinstance(code_col, str) else code_col
-    books = F.array(
-        *[
-            F.array(*[F.array(*[F.lit(x) for x in cent]) for cent in book])
-            for book in codebooks
-        ]
-    )
     return F.flatten(
-        F.zip_with(c, books, lambda cd, bk: F.element_at(bk, cd + 1))
+        F.zip_with(c, _consts(codebooks), lambda cd, bk: F.element_at(bk, cd + 1))
     )
 
 
@@ -969,7 +858,7 @@ def pq_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    query_vec: str,
+    query_vec: Column | str,
     codebooks: list[list[list[float]]],
     code_col: str = "pq_code",
     k: int = 10,
@@ -982,38 +871,15 @@ def pq_topk(
     (with LUTs) is broadcast; the corpus side carries only (id, code).
     Returns (query_id, neighbor_id, adist, rnk), adist rounded to 6dp.
     """
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
-    if isinstance(query_vec, str):
-        # the m x k_sub LUT as ONE parsed SQL expression (round-12
-        # session 4 — same py4j-round-trip removal as ivf_assign)
-        dv = _dvec_sql(query_vec)
-        lut = F.expr(
-            "array("
-            + ", ".join(
-                "array("
-                + ", ".join(
-                    _sqdist_sql(f"slice({dv}, {j * dsub + 1}, {dsub})", cent)
-                    for cent in book
-                )
-                + ")"
-                for j, book in enumerate(codebooks)
-            )
-            + ")"
-        )
-    else:
-        qv = _as_double_vec(query_vec)
-        lut = F.array(
-            *[
-                F.array(
-                    *[
-                        _subspace_sqdist(F.slice(qv, j * dsub + 1, dsub), cent)
-                        for cent in book
-                    ]
-                )
-                for j, book in enumerate(codebooks)
-            ]
-        )
+    qv = _as_double_vec(query_vec)
+    lut = F.transform(
+        _consts(codebooks),
+        lambda book, j: F.transform(
+            book, lambda c: _sqdist(F.slice(qv, j * dsub + 1, dsub), c)
+        ),
+    )
+    lut = _fit(qv, len(codebooks) * dsub, "pq_topk", lut)
     q = queries.select(F.col(query_id).alias("_qid"), lut.alias("_lut"))
     c = corpus.select(F.col(corpus_id).alias("_cid"), F.col(code_col).alias("_code"))
     # adist folds subspaces j = 0..m-1 in order — same tree as the
@@ -1063,14 +929,11 @@ def kcenter_select(
         return []
     selected = [first[0]["_id"]]
     center_vec = list(first[0]["_v"])
+    v = F.col("_v")
 
     def qdist_to(cent: list) -> Column:
-        # one parsed SQL expression per round instead of ``dim`` F.lit
-        # round trips (round-12 session 4, same pattern as ivf_assign);
-        # identical fold/seed/literals, so the quantized distances are
-        # bit-equal and the selection unchanged
-        d2 = F.expr(_sqdist_sql("`_v`", [float(x) for x in cent]))
-        return grid(F.sqrt(d2), MICRO)
+        d = grid(F.sqrt(_sqdist(v, _consts(cent))), MICRO)
+        return _fit(v, len(center_vec), "kcenter_select", d)
 
     cur = materialize(base.withColumn("_mind", qdist_to(center_vec)))
     for _ in range(k - 1):

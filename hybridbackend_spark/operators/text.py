@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .._materialize import materialize
+from .similarity import _as_double_vec, _consts, _fit, dot
 
 __all__ = [
     "tokens",
@@ -199,13 +200,19 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
 
 
 def char_shingles(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams of the lowercased text."""
+    """Distinct character n-grams of the lowercased, trimmed text: the
+    whole text when shorter than ``n``, ``[]`` when empty or all
+    whitespace."""
+    _widths(n=n)
     t = F.lower(F.trim(_c(col)))
-    return F.array_distinct(
+    grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length(t) - n + 1, F.lit(1))),
             lambda i: F.substr(t, i, F.lit(n)),
         )
+    )
+    return F.when(t.rlike(r"^\s*$"), F.array().cast("array<string>")).otherwise(
+        grams
     )
 
 
@@ -460,7 +467,7 @@ def jl_project(
     out_dim: int = 16,
     seed: int = 7,
     dp: int = 6,
-) -> Column | DataFrame:
+) -> DataFrame:
     """Johnson-Lindenstrauss random projection: dense ``in_dim`` vectors
     compress to ``out_dim`` via a seeded +-1 Rademacher matrix scaled by
     1/sqrt(out_dim) — pairwise distances preserved within (1 +- eps)
@@ -468,9 +475,10 @@ def jl_project(
     sparse TF-IDF space and the ANN/k-means operators (which cost
     O(dim) per comparison).
 
-    The matrix folds into the plan as literals (deterministic from
+    The matrix folds into the plan as one literal (deterministic from
     ``seed`` — any engine re-derives it); projection is a per-row
-    expression, zero shuffle, zero Python."""
+    expression, zero shuffle, zero Python. A non-NULL vector must be
+    ``in_dim`` long."""
     import random
 
     rng = random.Random(seed)
@@ -479,20 +487,9 @@ def jl_project(
         for _ in range(out_dim)
     ]
     inv = 1.0 / (out_dim ** 0.5)
-    v = F.col(vec_col)
-    comps = []
-    for r in rows:
-        dot = F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(x) for x in r]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        comps.append(F.round(dot * inv, dp))
-    return df.withColumn("jl_vector", F.array(*comps))
+    v = _as_double_vec(vec_col)
+    proj = F.transform(_consts(rows), lambda r: F.round(dot(v, r) * inv, dp))
+    return df.withColumn("jl_vector", _fit(v, in_dim, "jl_project", proj))
 
 
 def top_keywords(

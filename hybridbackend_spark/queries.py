@@ -2411,16 +2411,13 @@ def ivf_train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); each update is one bounded groupBy(cell, dim). The oracle
     unrolls identical iterations in SQL — centroids and assignments are
     bit-checked, not spot-checked."""
-    from .operators.similarity import _const_mat_sql, ivf_assign, kmeans_train
+    from .operators.similarity import _consts, ivf_assign, kmeans_train
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = kmeans_train(emb, "embedding", k=8, iters=2, id_col="vec_id")
     assigned = ivf_assign(emb, "embedding", cents, "cell")
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_members"))
-    # one parsed SQL literal matrix instead of k*dim F.lit round trips
-    cent_lookup = F.element_at(
-        F.expr(_const_mat_sql(cents)), F.col("cell") + 1
-    )
+    cent_lookup = F.element_at(_consts(cents), F.col("cell") + 1)
     return counts.select(
         "cell",
         "n_members",

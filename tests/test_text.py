@@ -42,6 +42,14 @@ def test_word_shingles(spark):
 
 def test_char_shingles(spark):
     assert _one(spark, "abcd", char_shingles("text", 3)) == ["abc", "bcd"]
+    # shorter than n: the whole (trimmed) text is the one shingle
+    assert _one(spark, " Ab ", char_shingles("text", 3)) == ["ab"]
+    # no text: no shingles, not one empty shingle
+    assert _one(spark, "", char_shingles("text", 3)) == []
+    assert _one(spark, " \t ", char_shingles("text", 3)) == []
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n must be >= 1"):
+            char_shingles("text", n)
 
 
 def test_quality_signals_and_score(spark):
